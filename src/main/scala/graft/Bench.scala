@@ -73,43 +73,22 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     GraftMetrics.install(spark)
 
-    val watchdog = new java.util.Timer("bench-watchdog", true)
-    val mainThread = Thread.currentThread()
-    // Returns None on success, Some(reason) on failure/timeout. The body
-    // runs on the calling (main) thread; the watchdog unblocks it by
-    // stopping streams (covers awaitTermination/processAllAvailable),
-    // cancelling jobs (covers actions), then interrupting (backstop).
-    def runGuarded(body: => Unit): Option[String] = {
-      val timedOut = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val task = new java.util.TimerTask {
-        def run(): Unit = {
-          timedOut.set(true)
-          try spark.streams.active.foreach(q =>
-            try q.stop() catch { case _: Throwable => () })
-          catch { case _: Throwable => () }
-          try spark.sparkContext.cancelAllJobs() catch { case _: Throwable => () }
-          mainThread.interrupt()
-        }
-      }
-      watchdog.schedule(task, queryTimeoutSec * 1000L)
-      try { body; None }
-      catch {
-        case e: Throwable =>
-          Some(
-            if (timedOut.get) s"timed out after ${queryTimeoutSec}s"
-            else String.valueOf(e.getMessage))
-      } finally {
-        task.cancel()
-        // a late-firing watchdog may have interrupted between the catch
-        // and here; clear the flag so harness bookkeeping is unaffected
-        Thread.interrupted()
-        // stop any stream a failed query left running so it cannot leak
-        // into the next entry's window
-        try spark.streams.active.foreach(q =>
-          try q.stop() catch { case _: Throwable => () })
-        catch { case _: Throwable => () }
-      }
-    }
+    def stopStreams(): Unit =
+      try spark.streams.active.foreach(q =>
+        try q.stop() catch { case _: Throwable => () })
+      catch { case _: Throwable => () }
+    // The watchdog unblocks a wedged body by stopping streams (covers
+    // awaitTermination/processAllAvailable) and cancelling jobs (covers
+    // actions), then interrupting (backstop).
+    val watchdog = new QueryWatchdog(queryTimeoutSec * 1000L, () => {
+      stopStreams()
+      try spark.sparkContext.cancelAllJobs() catch { case _: Throwable => () }
+    })
+    // Returns None on success, Some(reason) on failure/timeout. Any
+    // stream a failed query left running is stopped so it cannot leak
+    // into the next entry's window.
+    def runGuarded(body: => Unit): Option[String] =
+      try watchdog.run(body) finally stopStreams()
 
     // JIT/classloading warmup on the tiny sf so per-query numbers
     // reflect the engine, not first-touch costs.
@@ -224,5 +203,48 @@ object Bench {
       println(stdoutLine)
       System.out.flush()
     }
+  }
+}
+
+/** Bounds one query's wall time for [[Bench]]. `run` executes the body
+  * on the calling thread; if it is still running after `timeoutMs`, a
+  * timer thread calls `abort` (which should unblock the body — stop its
+  * streams, cancel its jobs) and interrupts the caller.
+  *
+  * Two guarantees make a timeout count and keep it contained:
+  *   - a body that returns normally after the watchdog fired (a stopped
+  *     stream's awaitTermination does) is still reported as timed out;
+  *   - the timer acts only under a lock and only while the body runs,
+  *     and `run` takes that lock before returning, so a late-firing
+  *     timer can never abort or interrupt whatever the caller does next.
+  */
+private[graft] final class QueryWatchdog(timeoutMs: Long, abort: () => Unit) {
+  private val timer = new java.util.Timer("bench-watchdog", true)
+
+  /** None on success, Some(reason) on failure or timeout. */
+  def run(body: => Unit): Option[String] = {
+    val caller = Thread.currentThread()
+    val lock = new Object
+    var finished = false // guarded by lock
+    var timedOut = false // guarded by lock
+    val task = new java.util.TimerTask {
+      def run(): Unit = lock.synchronized {
+        if (!finished) {
+          timedOut = true
+          try abort() catch { case _: Throwable => () }
+          caller.interrupt()
+        }
+      }
+    }
+    timer.schedule(task, timeoutMs)
+    val failure =
+      try { body; None }
+      catch { case e: Throwable => Some(String.valueOf(e.getMessage)) }
+    lock.synchronized { finished = true }
+    task.cancel()
+    // an interrupt the timer delivered before `finished` is spent here
+    Thread.interrupted()
+    if (lock.synchronized(timedOut)) Some(s"timed out after ${timeoutMs / 1000}s")
+    else failure
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * streaming surface: deterministic records fanned over `partitions`
   * logical partitions with per-partition monotone sequence numbers
   * (the consumer-visible shape of a partitioned log), admission-capped
-  * by `rowsPerTrigger` exactly like the snapshot source's
+  * by `rowsPerTrigger` like the snapshot stream's
   * maxVersionsPerTrigger (and Kafka's maxOffsetsPerTrigger): a long
   * backlog drains as bounded micro-batches, and the planned position
   * persists through [[HighWaterMark]] so a restarted source never
@@ -97,9 +97,9 @@ private[graft] class GraftRateSource(
 
   override val schema: StructType = GraftRateSourceProvider.schema
 
-  // the same persisted admission cursor as the snapshot sources: the
-  // reported offset must never fall below the committed position after
-  // a recovery (empty metadataPath = in-memory only, no FS touch)
+  // persisted admission cursor (see HighWaterMark): the reported
+  // offset must never fall below the committed position after a
+  // recovery (empty metadataPath = in-memory only, no FS touch)
   private val hwm =
     new HighWaterMark(metadataPath, sqlContext.sparkSession.sessionState.newHadoopConf())
   @volatile private var planned = hwm.load()
@@ -147,4 +147,44 @@ private[graft] class GraftRateSource(
   }
 
   override def stop(): Unit = ()
+}
+
+/** The planned-offset HIGH-WATER MARK, persisted beside Spark's own
+  * checkpoint state under the source's metadataPath. Why it must
+  * persist: the admission cursor (`planned`) caps getOffset at
+  * `planned + rowsPerTrigger`, and after a restart where the
+  * last batch was already committed Spark calls getOffset BEFORE any
+  * getBatch — a cursor re-seeded at 0 would report an offset BELOW the
+  * committed position, MicroBatchExecution would see the offset
+  * regress, and already-processed slices would be redelivered
+  * as NEW batch ids (appendBatch's replay guard keys on batch id, so
+  * the duplicates would land). One small file, rewritten per planned
+  * batch, read once at source construction. */
+private[sources] final class HighWaterMark(metadataPath: String, conf: org.apache.hadoop.conf.Configuration) {
+  // an empty metadataPath (direct construction in tests / embedding)
+  // means NO persistence at all — the cursor is purely in-memory and
+  // the filesystem is never touched. Without this guard the write path
+  // would be "/graft-highwater": the filesystem root.
+  private val persistent = metadataPath.nonEmpty
+  private lazy val io = new HadoopSnapshotIO(conf)
+  private val path = s"$metadataPath/graft-highwater"
+  /** Last persisted planned offset; 0 when nothing was persisted. A
+    * truncated/garbled file (crash mid-write under a pre-atomic layout)
+    * degrades to 0 with a warning rather than wedging the source at
+    * construction — under-reporting `planned` only re-plans a batch,
+    * which the offset WAL already dedupes. */
+  def load(): Long =
+    if (!persistent || !io.exists(path)) 0L
+    else try io.readString(path).trim.toLong
+    catch {
+      case _: NumberFormatException =>
+        System.err.println(
+          s"[graft] WARN unparseable high-water mark at $path — treating as 0 (a batch may be re-planned)")
+        0L
+    }
+  def advance(to: Long, current: Long): Long = {
+    val n = math.max(current, to)
+    if (n > current && persistent) io.writeStringAtomic(path, n.toString)
+    n
+  }
 }

@@ -1,12 +1,46 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
+
+/** The `graft-snapshot-cdc` streaming format —
+  * `spark.readStream.format(SnapshotCdcSourceProvider.format)
+  * .option("path", root).option("key", k)` — an alias serving the
+  * table's [[SnapshotChangesTable]], the same change feed (and schema)
+  * as `readStream.table("g.t.changes")`. */
+class SnapshotCdcSourceProvider extends TableProvider with DataSourceRegister {
+
+  override def shortName(): String = "graft-snapshot-cdc"
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    SnapshotCdcSourceProvider.tableOf(options).schema()
+
+  override def getTable(
+      schema: StructType,
+      partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table =
+    SnapshotCdcSourceProvider.tableOf(new CaseInsensitiveStringMap(properties))
+}
+
+object SnapshotCdcSourceProvider {
+  private def tableOf(options: CaseInsensitiveStringMap): SnapshotChangesTable =
+    new SnapshotChangesTable(Option(options.get("path")).getOrElse(
+      throw new IllegalArgumentException(
+        "snapshot CDC source needs .option(\"path\", <table root>)")))
+
+  /** `spark.readStream.format(...)` needs the provider CLASS name. */
+  val format: String = classOf[SnapshotCdcSourceProvider].getName
+}
 
 /** The CHANGES TABLE — the incremental change feed addressable through
   * the catalog (Iceberg's `cat.t.changes` / Delta's `table_changes`
@@ -32,11 +66,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `insert` rows — deletion vectors applied — and every later batch is
   * the per-commit incremental diff at O(touched files).
   *
-  * Each planned slice is MATERIALIZED deterministically under
-  * `_cdc_staging/` (a WAL replay overwrites identical content from the
-  * same immutable manifests) and served as an ordinary distributed
-  * parquet scan; `commit(offset)` reclaims drained staging exactly like
-  * the V1 CDC source (vacuum sweeps undrained leftovers). A REAL table
+  * The initial state batch reads straight from the table's files,
+  * deletes applied, with nothing staged. Every later slice is
+  * MATERIALIZED deterministically under `_cdc_staging/` (a WAL replay
+  * overwrites identical content from the same immutable manifests) and
+  * served as an ordinary distributed parquet scan; `commit(offset)`
+  * reclaims drained staging (vacuum sweeps undrained leftovers). A REAL table
   * or metadata view named `changes` wins the name — this view only
   * resolves when nothing else does.
   */
@@ -65,7 +100,7 @@ private[sources] class SnapshotChangesTable(tablePath: String)
     val from = Option(options.get("fromVersion")).map(_.toLong)
     val to = Option(options.get("toVersion")).map(_.toLong)
     val maxV = Option(options.get("maxVersionsPerTrigger")).map(_.toLong)
-    () => new SnapshotChangesScan(tablePath, schema(), key, from, to, maxV)
+    () => new SnapshotChangesScan(tablePath, m, key, from, to, maxV)
   }
 }
 
@@ -77,24 +112,14 @@ private[sources] object SnapshotChanges {
         table.fields.toSeq :+
         StructField("_commit_version", LongType, nullable = true))
 
-  /** Materialize a deterministic change slice into `staging` and list
-    * its files. The path is keyed by the range, so a replay overwrites
-    * identical content (immutable manifests) before reading. */
+  /** Materialize the deterministic change slice `(from, to]`, `from >=
+    * 1`, into `staging` and list its files. The path is keyed by the
+    * range, so a replay overwrites identical content (immutable
+    * manifests) before reading. */
   private[sources] def materialize(
       table: String, key: String, from: Long, to: Long, staging: String): Seq[String] = {
-    val spark = SparkSession.active
-    val df =
-      if (from == 0L) {
-        // attach-time STATE as insert rows (deletion vectors applied by
-        // the read path), stamped with the state's version
-        import org.apache.spark.sql.functions.{col, lit}
-        val m = SnapshotTable.manifest(table, to)
-        SnapshotTable.read(spark, table, Some(to)).select(
-          lit("insert").as("_change_type") +:
-            m.schema.fieldNames.toSeq.map(col) :+
-            lit(to).as("_commit_version"): _*)
-      } else SnapshotTable.changeFeedIncremental(spark, table, from, to, key)
-    df.write.mode("overwrite").parquet(staging)
+    SnapshotTable.changeFeedIncremental(SparkSession.active, table, from, to, key)
+      .write.mode("overwrite").parquet(staging)
     LocalSnapshotIO.list(staging).filter(_.endsWith(".parquet")).sorted
       .map(n => s"$staging/$n")
   }
@@ -102,11 +127,13 @@ private[sources] object SnapshotChanges {
 
 private[sources] class SnapshotChangesScan(
     table: String,
-    cdcSchema: StructType,
+    m: SnapshotTable.Manifest,
     key: String,
     fromOpt: Option[Long],
     toOpt: Option[Long],
     maxVersionsPerTrigger: Option[Long]) extends Scan {
+
+  private val cdcSchema = SnapshotChanges.cdcSchema(m.schema)
 
   override def readSchema(): StructType = cdcSchema
 
@@ -147,45 +174,24 @@ private[sources] class SnapshotChangesScan(
       checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new SnapshotChangesMicroBatchStream(
-      table, cdcSchema, key, fromOpt, maxVersionsPerTrigger)
+      table, m, key, fromOpt, maxVersionsPerTrigger)
 }
 
 /** Streaming arm: offsets are snapshot versions (same contract as
-  * [[SnapshotMicroBatchStream]]); each batch materializes its slice
+  * [[SnapshotMicroBatchStream]]); the initial state batch is a
+  * [[SnapshotV2Scan]] of its end version whose rows are stamped as
+  * inserts reader-side, every later batch materializes its slice
   * deterministically and serves the files; `commit` reclaims drained
   * staging. `fromVersion` (optional) starts the feed mid-chain —
   * offset fromVersion means "changes after it", so the initial batch
   * is (fromVersion, next] incremental rather than full-state inserts. */
 private[sources] class SnapshotChangesMicroBatchStream(
     table: String,
-    cdcSchema: StructType,
+    m: SnapshotTable.Manifest,
     key: String,
     startAfter: Option[Long],
     maxVersionsPerTrigger: Option[Long])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-
-  import org.apache.spark.sql.connector.read.streaming.{Offset => V2Offset, ReadLimit}
-
-  @volatile private var availableNowTarget: Long = Long.MaxValue
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = SnapshotTable.currentVersion(table)
-
-  override def initialOffset(): V2Offset = VersionOffset(startAfter.getOrElse(0L))
-
-  override def deserializeOffset(json: String): V2Offset =
-    VersionOffset(json.trim.toLong)
-
-  private def latest(from: Long): V2Offset = {
-    val head = math.min(SnapshotTable.currentVersion(table), availableNowTarget)
-    VersionOffset(maxVersionsPerTrigger.fold(head)(n => math.min(head, from + n)))
-  }
-
-  override def latestOffset(): V2Offset = latest(startAfter.getOrElse(0L))
-
-  override def latestOffset(start: V2Offset, limit: ReadLimit): V2Offset =
-    latest(start.asInstanceOf[VersionOffset].version)
+    extends VersionStream(table, startAfter.getOrElse(0L), maxVersionsPerTrigger) {
 
   // one materialization per range per stream instance —
   // planInputPartitions can be invoked several times for one batch
@@ -194,12 +200,29 @@ private[sources] class SnapshotChangesMicroBatchStream(
   private val staged =
     scala.collection.concurrent.TrieMap.empty[(Long, Long), Seq[String]]
 
-  override def planInputPartitions(start: V2Offset, end: V2Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[VersionOffset].version
-    val to = end.asInstanceOf[VersionOffset].version
+  private val cdcSchema = SnapshotChanges.cdcSchema(m.schema)
+
+  /** The state scan and its version, when the slice planned last was the
+    * initial one (the engine plans a batch's partitions before asking
+    * for its reader factory). */
+  @volatile private var state: Option[(SnapshotV2Scan, Long)] = None
+
+  override protected def plan(from: Long, to: Long): Array[InputPartition] = {
+    state = None
     if (to == 0L || from >= to) return Array.empty
-    // streaming slices share the table's _cdc_staging root and range
-    // naming with the V1 CDC source (one CDC consumer per table — the
+    if (from == 0L) {
+      // the state at `to` as inserts: the batch read of that version,
+      // deletes applied per file, with the query's columns under their
+      // names at `to` — nothing to stage
+      val mTo = SnapshotTable.manifest(table, to)
+      val at = SnapshotV2.renamedTo(m, mTo)
+      val scan = new SnapshotV2Scan(
+        table, mTo, StructType(m.schema.map(f => f.copy(name = at(f.name)))), Array.empty)
+      state = Some((scan, to))
+      return scan.planInputPartitions()
+    }
+    // streaming slices stage under the table's _cdc_staging root, one
+    // `<from>_<to>` range dir each (one CDC consumer per table — the
     // existing convention), so the stream's own commit() AND vacuum's
     // sweep reclaim them
     val files = staged.getOrElseUpdate((from, to),
@@ -211,17 +234,42 @@ private[sources] class SnapshotChangesMicroBatchStream(
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    Bridge.parquetReaderFactory(
+  override def createReaderFactory(): PartitionReaderFactory = state match {
+    case Some((scan, to)) => new InsertStampReaderFactory(scan.createReaderFactory(), to)
+    case None => Bridge.parquetReaderFactory(
       SparkSession.active, cdcSchema, cdcSchema, Array.empty)
-
-  /** Offset `end` is durable in the WAL: every staged range it covers
-    * is drained — reclaim, exactly like the V1 CDC source. */
-  override def commit(end: V2Offset): Unit = {
-    SnapshotTable.purgeStaging(s"$table/_cdc_staging",
-      end.asInstanceOf[VersionOffset].version)
-    ()
   }
 
-  override def stop(): Unit = ()
+  /** Offset `end` is durable in the WAL: every staged range it covers
+    * is drained and never planned again — reclaim its files and its
+    * memo entry. This bounds a long-lived stream's staging footprint
+    * to the in-flight batch instead of the table's change history. */
+  override def commit(end: org.apache.spark.sql.connector.read.streaming.Offset): Unit = {
+    val v = end.asInstanceOf[VersionOffset].version
+    SnapshotTable.purgeStaging(s"$table/_cdc_staging", v)
+    staged.keys.filter(_._2 <= v).foreach(staged.remove)
+  }
+}
+
+/** Serves an inner reader's data rows as change rows: `_change_type` =
+  * `insert` before the data columns, `_commit_version` = `version`
+  * after them. */
+private[sources] class InsertStampReaderFactory(
+    inner: PartitionReaderFactory,
+    version: Long) extends PartitionReaderFactory {
+
+  override def supportColumnarReads(p: InputPartition): Boolean = false
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val in = inner.createReader(p)
+    val changeType = InternalRow(UTF8String.fromString("insert"))
+    val commitVersion = InternalRow(version)
+    val data = new JoinedRow
+    val row = new JoinedRow
+    new PartitionReader[InternalRow] {
+      override def next(): Boolean = in.next()
+      override def get(): InternalRow = row(data(changeType, in.get()), commitVersion)
+      override def close(): Unit = in.close()
+    }
+  }
 }

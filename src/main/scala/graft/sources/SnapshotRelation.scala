@@ -22,9 +22,10 @@ import org.apache.spark.sql.types.{LongType, IntegerType, StringType, StructType
   *
   * Options: `path` (table root), `versionAsOf` (time travel),
   * `timestampAsOf` (readAsOf's stamp resolution — version order
-  * authoritative). The three provider arms — this batch relation, the
-  * append streaming source, the CDC streaming source — give the table
-  * the full read surface Spark users expect from a format.
+  * authoritative). With the V2 arms — [[SnapshotV2Provider]] (batch),
+  * [[SnapshotSourceProvider]] (streaming) and [[SnapshotCdcSourceProvider]]
+  * (streaming change feed) — this gives the table the read surface
+  * Spark users expect from a format.
   */
 class SnapshotRelationProvider extends RelationProvider
     with CreatableRelationProvider with DataSourceRegister {

@@ -3785,9 +3785,9 @@ object SnapshotTable {
     // staging), and once versions <= `to` age past retention the
     // manifests a replay would need are gone anyway — so reclaiming
     // these ranges cannot break anything retention hasn't already.
-    // Live-stream steady-state reclamation is the SOURCE's own
-    // post-commit purge (SnapshotCdcSource.commit); this arm is the
-    // offline sweep for streams that died without draining.
+    // Live-stream steady-state reclamation is the STREAM's own
+    // post-commit purge (SnapshotChangesMicroBatchStream.commit); this
+    // arm is the offline sweep for streams that died without draining.
     purgeStaging(s"$table/_cdc_staging", keep.head - 1, io)
     (mDel, fDel)
   }

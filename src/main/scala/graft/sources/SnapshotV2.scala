@@ -52,11 +52,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * DSv2 BatchWrite/StreamingWrite in SnapshotCatalog.scala), streams
   * ([[SnapshotMicroBatchStream]]), and takes metadata-only DELETE /
   * TRUNCATE — the full four-quadrant V2 surface, usually consumed
-  * through [[SnapshotCatalog]]'s SQL front.
-  *
-  * One deliberate non-goal (refused loudly, not wrong): outstanding
-  * deletion vectors — the DV anti-join is a PLAN transform, not a scan
-  * property; read through the V1/API paths or compact first.
+  * through [[SnapshotCatalog]]'s SQL front. Outstanding deletion
+  * vectors and position deletes apply reader-side, per file.
   */
 class SnapshotV2Provider extends TableProvider with DataSourceRegister {
 
@@ -101,6 +98,55 @@ object SnapshotV2Provider {
       }).getOrElse(SnapshotTable.currentVersion(table))
     (table, SnapshotTable.manifest(table, version))
   }
+}
+
+/** The `graft-snapshot` streaming format —
+  * `spark.readStream.format(SnapshotSourceProvider.format)
+  * .option("path", root)` — an alias of [[SnapshotV2Provider]]: it
+  * serves the same [[SnapshotV2Table]], so the stream is the
+  * [[SnapshotMicroBatchStream]] that `readStream.table` also runs.
+  * Options: `path`, `maxVersionsPerTrigger`. A query may attach before
+  * the table's first commit when it gives the table's schema with
+  * `.schema(...)`; on a published table a given schema must match. */
+class SnapshotSourceProvider extends SnapshotV2Provider {
+
+  override def supportsExternalMetadata(): Boolean = true
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val table = SnapshotSourceProvider.tableOf(options)
+    require(SnapshotTable.currentVersion(table) > 0,
+      s"snapshot table $table has no published version yet — pass an explicit schema")
+    super.inferSchema(options)
+  }
+
+  override def getTable(
+      schema: StructType,
+      partitioning: Array[Transform],
+      properties: JMap[String, String]): Table = {
+    val table = SnapshotSourceProvider.tableOf(new CaseInsensitiveStringMap(properties))
+    if (SnapshotTable.currentVersion(table) == 0L)
+      // nothing published: an empty version-0 table of the given
+      // schema, which the stream follows from the first commit on
+      new SnapshotV2Table(table,
+        SnapshotTable.Manifest(0L, schema, Nil, Nil, Map.empty)(LocalSnapshotIO))
+    else {
+      val t = super.getTable(schema, partitioning, properties)
+      def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
+      require(schema == null || shape(schema) == shape(t.schema()),
+        s"the given schema ${schema.simpleString} differs from table $table's " +
+          s"${t.schema().simpleString} — drop .schema(...) and select columns instead")
+      t
+    }
+  }
+}
+
+object SnapshotSourceProvider {
+  private def tableOf(options: CaseInsensitiveStringMap): String =
+    Option(options.get("path")).getOrElse(throw new IllegalArgumentException(
+      "snapshot source needs .option(\"path\", <table root>)"))
+
+  /** `spark.readStream.format(...)` needs the provider CLASS name. */
+  val format: String = classOf[SnapshotSourceProvider].getName
 }
 
 private[sources] class SnapshotV2Table(
@@ -597,7 +643,8 @@ private[graft] class SnapshotV2Scan(
     onPlanned: (Seq[SnapshotTable.FileEntry], Boolean) => Unit = (_, _) => (),
     rowLevel: Boolean = false,
     limit: Option[Int] = None,
-    topN: Option[SnapshotV2.TopN] = None)
+    topN: Option[SnapshotV2.TopN] = None,
+    only: Option[Set[String]] = None)
     extends Scan with Batch
     with SupportsReportPartitioning with SupportsReportStatistics
     with SupportsReportOrdering with SupportsRuntimeV2Filtering {
@@ -681,15 +728,33 @@ private[graft] class SnapshotV2Scan(
     s"graft-snapshot v${m.version} (${m.fileCount} files$c$l$tn$g$rn)"
   }
 
+  /** The files a selection `only` names — a micro-batch slice. */
+  private lazy val onlyFiles: Option[Seq[SnapshotTable.FileEntry]] =
+    only.map(paths => m.files.filter(f => paths(f.path)))
+
   /** Outstanding deletion-vector sidecars — when non-empty, rows are
     * filtered READER-side against the broadcast delete set (the
-    * Iceberg equality-delete application shape). */
-  private lazy val dv: Seq[SnapshotTable.DvRef] = SnapshotTable.dvRefs(m)
+    * Iceberg equality-delete application shape). Under a selection,
+    * only refs that can hit one of its files: a ref kills rows of
+    * files with a LOWER seq, so a clean append slice plans as a plain
+    * columnar scan instead of loading every sidecar per micro-batch. */
+  private lazy val dv: Seq[SnapshotTable.DvRef] = {
+    val all = SnapshotTable.dvRefs(m)
+    onlyFiles.fold(all) { fs =>
+      val lowest = fs.map(f => math.max(f.seq, 0L)).foldLeft(Long.MaxValue)(math.min)
+      all.filter(_.seq > lowest)
+    }
+  }
 
   /** Outstanding POSITION-delete sidecars (Iceberg v2's second delete
     * format): rows drop by raw file ordinal; each ref carries the path
-    * range of the data files it names (the scoped path's prune key). */
-  private lazy val posDv: Seq[SnapshotTable.PosDvRef] = SnapshotTable.posDvRefs(m)
+    * range of the data files it names (the scoped path's prune key).
+    * Under a selection, only refs whose range covers one of its files
+    * (a rangeless legacy ref may name any file and always stays). */
+  private lazy val posDv: Seq[SnapshotTable.PosDvRef] = {
+    val all = SnapshotTable.posDvRefs(m)
+    onlyFiles.fold(all)(fs => all.filter(r => fs.exists(f => SnapshotV2.covers(r, f.path))))
+  }
 
   /** Any delete format outstanding — the condition that opts the scan
     * out of key grouping, limit/TopN truncation, and (for positions)
@@ -777,18 +842,24 @@ private[graft] class SnapshotV2Scan(
     rs.nonEmpty && entries.exists(f => math.max(f.seq, 0L) < rs.map(_._1).max)
   }
 
+  /** The file selection `only` names (all of `m`'s files when unset) —
+    * a micro-batch slice plans through here, so it reads its files with
+    * the same delete and rename handling as a batch scan of `m`. */
+  private def selected(es: Seq[SnapshotTable.FileEntry]): Seq[SnapshotTable.FileEntry] =
+    only.fold(es)(paths => es.filter(f => paths(f.path)))
+
   /** Manifest-pruned survivors of the STATIC filters — what the
     * reported partitioning and the CBO estimate derive from (both are
     * consumed before any runtime filter exists). */
   private lazy val entries: Seq[SnapshotTable.FileEntry] =
-    bucketPrune(ManifestPruning.prunedEntries(m, m.schema, filters), filters)
+    selected(bucketPrune(ManifestPruning.prunedEntries(m, m.schema, filters), filters))
 
   /** Survivors of static AND runtime filters — what actually plans. */
   private def activeEntries: Seq[SnapshotTable.FileEntry] =
     if (runtime.isEmpty) entries
-    else bucketPrune(
+    else selected(bucketPrune(
       ManifestPruning.prunedEntries(m, m.schema, filters ++ runtime),
-      filters ++ runtime)
+      filters ++ runtime))
 
   /** File groups by exact cluster-key value, when the manifest proves
     * one: the table declares a cluster column AND every surviving file
@@ -1177,15 +1248,9 @@ private[graft] class SnapshotV2Scan(
             r.path -> PartitionedFile(InternalRow.empty,
               SparkPath.fromPathString(r.path), 0L, len, Array.empty, 0L, len)
           }.toMap
-          // a rangeless (legacy) ref may name any file — always attached
-          def relevant(r: SnapshotTable.PosDvRef, path: String): Boolean =
-            r.range.forall { case (lo, hi) =>
-              SnapshotTable.FileEntry.bytesLe(lo, path) &&
-                SnapshotTable.FileEntry.bytesLe(path, hi)
-            }
           val byFile: Map[String, Array[PartitionedFile]] =
             entries.map { f =>
-              f.path -> posDv.filter(relevant(_, f.path))
+              f.path -> posDv.filter(SnapshotV2.covers(_, f.path))
                 .map(r => sidecarPf(r.path)).toArray
             }.toMap
           lastScopedAttach = byFile.valuesIterator.map(_.length.toLong).sum
@@ -1337,19 +1402,40 @@ private[graft] class SnapshotV2Scan(
     }
   }
 
-  /** Streaming read (`spark.readStream.table(...)` — MICRO_BATCH_READ):
-    * the same version-diff contract as the V1 `SnapshotSourceProvider`
-    * (initial batch = the full current snapshot, steady state = the
-    * manifest diff per version range), with column pruning and static
-    * filter file-pruning riding the V2 scan, plus REAL
-    * `Trigger.AvailableNow` support (the V1 Source API cannot express
-    * it — MicroBatchExecution logs a single-batch fallback there). */
+  /** Streaming read (`spark.readStream.table(...)`, or the
+    * `SnapshotSourceProvider` format — MICRO_BATCH_READ): initial batch
+    * = the full snapshot, steady state = the manifest diff per version
+    * range, each slice read by this scan's own delete- and rename-aware
+    * readers, with real `Trigger.AvailableNow` support. */
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new SnapshotMicroBatchStream(table, m, requiredSchema, filters, maxVersionsPerTrigger)
 }
 
 private[graft] object SnapshotV2 {
+
+  /** Can position-delete ref `r` name data file `path`? Its recorded
+    * path range decides; a rangeless (legacy) ref may name any file. */
+  def covers(r: SnapshotTable.PosDvRef, path: String): Boolean =
+    r.range.forall { case (lo, hi) =>
+      SnapshotTable.FileEntry.bytesLe(lo, path) &&
+        SnapshotTable.FileEntry.bytesLe(path, hi)
+    }
+
+  /** A streaming query resolves its columns against `start`, the
+    * manifest at query start; a column renamed since keeps its ordinal,
+    * so at `to` it goes by the name at the same position. A synthetic
+    * start (version 0: a schema given before the first commit) has no
+    * ordinals to trust, so its names map as given. */
+  def renamedTo(start: SnapshotTable.Manifest, to: SnapshotTable.Manifest): String => String = {
+    val was = start.schema.fieldNames
+    val now = to.schema.fieldNames
+    if (start.version == 0L) identity
+    else { n =>
+      val i = was.indexOf(n)
+      if (i >= 0 && i < now.length) now(i) else n
+    }
+  }
 
   /** A pushed `ORDER BY col LIMIT n` (first sort key only). */
   private[graft] case class TopN(col: String, ascending: Boolean, n: Int)
@@ -1848,29 +1934,26 @@ private[sources] class DvScopedReaderFactory(
   }
 }
 
-/** Stream offsets are manifest VERSIONS — the same contract the V1
-  * source's LongOffset carries, serialized as the bare number. */
+/** Stream offsets are manifest VERSIONS, serialized as the bare
+  * number. */
 private[graft] case class VersionOffset(version: Long)
     extends org.apache.spark.sql.connector.read.streaming.Offset {
   override def json(): String = version.toString
 }
 
-/** The snapshot table as a V2 micro-batch SOURCE: each batch is the
-  * manifest difference between two versions (pure-append validated by
-  * [[SnapshotTable.incrementalFiles]] — overwrite/merge/delete
-  * boundaries refuse loudly; metadata-only segment rewrites pass via
-  * the path-set diff), version 0 → v = the full initial snapshot.
-  * Planning is manifest-only and the partitions ARE the data files —
-  * nothing is staged, so there is nothing to reclaim on commit.
-  * Implements [[SupportsTriggerAvailableNow]]: the target version is
-  * pinned at prepare time and the reported offset never passes it, so
-  * AvailableNow drains exactly the history that existed at start. */
-private[graft] class SnapshotMicroBatchStream(
+/** What both snapshot streams share: offsets are manifest versions,
+  * starting after `startAfter`; each trigger admits at most
+  * `maxVersionsPerTrigger` versions (Delta's maxFilesPerTrigger shape
+  * at version granularity: a long backlog, or the initial history,
+  * drains as bounded micro-batches); and, per
+  * [[org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow]],
+  * the head is pinned at prepare time and the reported offset never
+  * passes it, so AvailableNow drains exactly the history that existed
+  * at start. Subclasses plan `(from, to]` slices. */
+private[sources] abstract class VersionStream(
     table: String,
-    m: SnapshotTable.Manifest,
-    readSchema: StructType,
-    filters: Array[Filter],
-    maxVersionsPerTrigger: Option[Long] = None)
+    startAfter: Long,
+    maxVersionsPerTrigger: Option[Long])
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
@@ -1881,61 +1964,86 @@ private[graft] class SnapshotMicroBatchStream(
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowTarget = SnapshotTable.currentVersion(table)
 
-  override def initialOffset(): V2Offset = VersionOffset(0L)
+  override def initialOffset(): V2Offset = VersionOffset(startAfter)
 
   override def deserializeOffset(json: String): V2Offset =
     VersionOffset(json.trim.toLong)
 
   private def latest(from: Long): V2Offset = {
     val head = math.min(SnapshotTable.currentVersion(table), availableNowTarget)
-    // Delta's maxFilesPerTrigger shape at version granularity: a long
-    // backlog (or the initial history) drains as bounded micro-batches
-    // — under AvailableNow the engine keeps asking until the pinned
-    // target is reached, each batch capped here
     VersionOffset(maxVersionsPerTrigger.fold(head)(n => math.min(head, from + n)))
   }
 
-  override def latestOffset(): V2Offset = latest(0L)
+  override def latestOffset(): V2Offset = latest(startAfter)
 
   override def latestOffset(start: V2Offset, limit: ReadLimit): V2Offset =
     latest(start.asInstanceOf[VersionOffset].version)
 
-  override def planInputPartitions(start: V2Offset, end: V2Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[VersionOffset].version
-    val to = end.asInstanceOf[VersionOffset].version
-    if (to == 0L || from >= to) return Array.empty
-    val mTo = SnapshotTable.manifest(table, to)
-    require(SnapshotTable.dvPaths(mTo).isEmpty && SnapshotTable.posDvPaths(mTo).isEmpty,
-      s"table $table carries outstanding deletion vectors / position deletes — " +
-        "the v2 stream reads data files raw; stream through " +
-        "SnapshotSourceProvider (DV-applied) or compact first")
-    val entries =
-      if (from == 0L) mTo.files
-      else {
-        val paths = SnapshotTable.incrementalFiles(table, from, to).toSet
-        mTo.files.filter(f => paths(f.path))
-      }
-    // static filter pruning is as sound on a streaming slice as on a
-    // batch scan: stats prove absence, the engine re-applies residuals
-    entries.filter(f => filters.forall(ManifestPruning.keeps(mTo.schema, f, _)))
-      .zipWithIndex.map { case (f, i) =>
-        FilePartition(i, Array(SnapshotV2.partitionedFile(f))): InputPartition
-      }.toArray
-  }
+  /** The `(from, to]` slice's partitions; empty when `from >= to`. */
+  protected def plan(from: Long, to: Long): Array[InputPartition]
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // metadata columns (`_file`/`_pos`) are a BATCH feature: Spark's
-    // micro-batch planning resolves a table's metadata columns in
-    // analysis but has no hook that tells the stream's scan they were
-    // requested (column pruning never carries metadataOutput here), so
-    // no streaming source can serve them — project provenance in batch
-    val names = m.schema.fieldNames.toSet
-    Bridge.parquetReaderFactory(
-      SparkSession.active, m.schema, readSchema,
-      filters.filter(_.references.forall(names)))
-  }
-
-  override def commit(end: V2Offset): Unit = () // nothing staged, nothing to reclaim
+  override def planInputPartitions(start: V2Offset, end: V2Offset): Array[InputPartition] =
+    plan(start.asInstanceOf[VersionOffset].version, end.asInstanceOf[VersionOffset].version)
 
   override def stop(): Unit = ()
+}
+
+/** The snapshot table as a V2 micro-batch SOURCE: each batch is the
+  * manifest difference between two versions (pure-append validated by
+  * [[SnapshotTable.incrementalFiles]] — overwrite/merge/delete
+  * boundaries refuse loudly; metadata-only segment and property
+  * commits pass via the path-set diff), version 0 → v = the full
+  * snapshot at v. Each slice plans as a [[SnapshotV2Scan]] over the end
+  * version's manifest limited to the slice's files, so a stream reads
+  * exactly what a batch scan of that version reads: equality deletion
+  * vectors and position deletes apply per file, scoped by the file's
+  * commit seq, and files written before a column rename read through
+  * their name epoch. Nothing is staged, so there is nothing to reclaim
+  * on commit. */
+private[graft] class SnapshotMicroBatchStream(
+    table: String,
+    m: SnapshotTable.Manifest,
+    readSchema: StructType,
+    filters: Array[Filter],
+    maxVersionsPerTrigger: Option[Long] = None)
+    extends VersionStream(table, 0L, maxVersionsPerTrigger) {
+
+  /** The scan of the slice planned last (also a spec hook). The engine
+    * asks for a batch's partitions before its reader factory, and plans
+    * batches one at a time, so the factory always pairs with the
+    * partitions it reads. */
+  @volatile private[graft] var slice: Option[SnapshotV2Scan] = None
+
+  override protected def plan(from: Long, to: Long): Array[InputPartition] = {
+    slice = None
+    if (to == 0L || from >= to) return Array.empty
+    val only =
+      if (from == 0L) None
+      else Some(SnapshotTable.incrementalFiles(table, from, to).toSet)
+    val mTo = SnapshotTable.manifest(table, to)
+    // the query resolved its columns at start: read each under its name
+    // at `to`
+    val at = SnapshotV2.renamedTo(m, mTo)
+    val cols = StructType(readSchema.map(f => f.copy(name = at(f.name))))
+    // static filter pruning is as sound on a streaming slice as on a
+    // batch scan: stats prove absence, the engine re-applies residuals.
+    // A filter names the query's columns; a renamed one's old name
+    // matches no column at `to` (no commit may take a name the rename
+    // log holds), so it prunes nothing
+    val scan = new SnapshotV2Scan(table, mTo, cols, filters, only = only)
+    slice = Some(scan)
+    scan.planInputPartitions()
+  }
+
+  // metadata columns (`_file`/`_pos`) are a BATCH feature: Spark's
+  // micro-batch planning resolves a table's metadata columns in
+  // analysis but has no hook that tells the stream's scan they were
+  // requested (column pruning never carries metadataOutput here), so
+  // no streaming source can serve them — project provenance in batch
+  override def createReaderFactory(): PartitionReaderFactory =
+    slice.fold(Bridge.parquetReaderFactory(
+      SparkSession.active, m.schema, readSchema, Array.empty))(_.createReaderFactory())
+
+  override def commit(end: org.apache.spark.sql.connector.read.streaming.Offset): Unit =
+    () // nothing staged, nothing to reclaim
 }

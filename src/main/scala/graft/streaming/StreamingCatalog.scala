@@ -121,8 +121,7 @@ object StreamingCatalog extends QueryModule {
     * just a spec). Output is the per-partition profile of the streamed
     * rows; the record law is pure arithmetic, so the oracle recomputes
     * the entire stream from range(). Round16Spec pins the restart
-    * contract (persisted admission cursor, same HighWaterMark as the
-    * snapshot sources). */
+    * contract (persisted admission cursor, HighWaterMark). */
   private def rateSourceStream(s: SparkSession, dir: String): DataFrame = withStatePartitions(s) { ss =>
     val ckpt = graft.Stage.dir("graft_rateck_", dir).getPath
     val out = graft.Stage.dir("graft_rateout_", dir).getPath
@@ -346,8 +345,9 @@ object StreamingCatalog extends QueryModule {
         .orderBy("event_type")
     }
 
-  /** The snapshot table as a streaming SOURCE (SnapshotSourceProvider)
-    * — the other half of the landing-table loop: three commits land in
+  /** The snapshot table as a streaming SOURCE (the SnapshotSourceProvider
+    * format, served by the V2 micro-batch stream) — the other half of
+    * the landing-table loop: three commits land in
     * the source table one at a time, and between each the stream
     * drains (shared checkpoint, AvailableNow), so Spark's offset log
     * records the version chain 1→2→3 and each micro-batch is exactly
@@ -431,7 +431,7 @@ object StreamingCatalog extends QueryModule {
             val data = batch
               .filter(col("_change_type") =!= "update_preimage")
               .withColumn("_del", col("_change_type") === "delete")
-              .drop("_change_type")
+              .drop("_change_type", "_commit_version")
             if (graft.sources.SnapshotTable.currentVersion(out) == 0)
               graft.sources.SnapshotTable.appendBatch(
                 data.filter(!col("_del")).drop("_del"), out, id)

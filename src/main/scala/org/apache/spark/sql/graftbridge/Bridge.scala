@@ -34,28 +34,6 @@ object Bridge {
   def checkpointRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collect { case l: execution.LogicalRDD => l.rdd }
 
-  /** A batch DataFrame over parquet `paths` whose plan is flagged
-    * isStreaming=true — what a V1 streaming Source must hand back from
-    * getBatch (FileStreamSource's own construction): the scan stays a
-    * declarative file relation (pushdown, pruning intact) while
-    * satisfying MicroBatchExecution's streaming-leaf assertion. */
-  def streamingParquetBatch(
-      spark: SparkSession,
-      paths: Seq[String],
-      schema: types.StructType): DataFrame = {
-    val ss = spark.asInstanceOf[classic.SparkSession]
-    if (paths.isEmpty)
-      ss.internalCreateDataFrame(
-        ss.sparkContext.emptyRDD[catalyst.InternalRow], schema, isStreaming = true)
-    else {
-      val ds = execution.datasources.DataSource(
-        ss, className = "parquet", paths = paths, userSpecifiedSchema = Some(schema))
-      classic.Dataset.ofRows(ss,
-        execution.datasources.LogicalRelation(
-          ds.resolveRelation(checkFilesExist = false), isStreaming = true))
-    }
-  }
-
   /** Wrap a DETERMINISTIC batch frame as the micro-batch a V1 streaming
     * Source hands back from getBatch: the frame's physical RDD under an
     * isStreaming=true leaf (the construction MemoryStream and the V1

@@ -180,25 +180,25 @@ class Round14Spec extends AnyFunSuite {
   }
 
   test("streaming source: maxVersionsPerTrigger drains a backlog as bounded batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
     val table = tmpTable()
     val o = ordersNarrow
     for (m <- 0 to 2)
       SnapshotTable.commit(o.filter(col("o_orderkey") % 3 === m), table, append = m > 0)
-    val src = new graft.sources.SnapshotSourceProvider().createSource(
-      spark.sqlContext, "", None, "",
+    val s = SnapshotStreams.of(new graft.sources.SnapshotSourceProvider(),
       Map("path" -> table, "maxVersionsPerTrigger" -> "1"))
+    def off(v: Long) = s.deserializeOffset(v.toString)
+    def latest(from: Long) = s.latestOffset(off(from), ReadLimit.allAvailable()).json
     // the 3-version backlog is admitted one version per trigger
-    assert(src.getOffset === Some(LongOffset(1L)))
-    assert(filesOf(src.getBatch(None, LongOffset(1L)))
+    assert(latest(0L) === "1")
+    assert(SnapshotStreams.files(s.planInputPartitions(off(0L), off(1L)))
       === SnapshotTable.manifest(table, 1L).files.map(_.path).toSet)
-    assert(src.getOffset === Some(LongOffset(2L)))
-    assert(filesOf(src.getBatch(Some(LongOffset(1L)), LongOffset(2L)))
+    assert(latest(1L) === "2")
+    assert(SnapshotStreams.files(s.planInputPartitions(off(1L), off(2L)))
       === SnapshotTable.incrementalFiles(table, 1L, 2L).toSet)
-    assert(src.getOffset === Some(LongOffset(3L)))
-    src.getBatch(Some(LongOffset(2L)), LongOffset(3L))
+    assert(latest(2L) === "3")
     // caught up: the offset stops at the head, no phantom versions
-    assert(src.getOffset === Some(LongOffset(3L)))
+    assert(latest(3L) === "3")
   }
 
   // ---- schema evolution -------------------------------------------
@@ -401,42 +401,34 @@ class Round14Spec extends AnyFunSuite {
 
   // ---- snapshot table as a streaming source -----------------------
 
-  // relation file listing straight off the UNANALYZED plan — a
-  // streaming-flagged batch refuses batch actions (inputFiles included)
-  private def filesOf(df: org.apache.spark.sql.DataFrame): Set[String] =
-    df.queryExecution.logical.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.inputFiles.toSeq
-    }.flatten.map(f => f.substring(f.indexOf("/tmp"))).toSet
-
   test("snapshot streaming source: offsets are versions, batches are exact manifest slices") {
-    import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
     val table = tmpTable()
     val o = ordersNarrow
     SnapshotTable.commit(o.filter(col("o_orderkey") % 3 === 0), table, append = false)
     SnapshotTable.commit(o.filter(col("o_orderkey") % 3 === 1), table, append = true)
-    val src = new graft.sources.SnapshotSourceProvider().createSource(
-      spark.sqlContext, "", None, "", Map("path" -> table))
-    assert(src.schema.fieldNames.toSeq === Seq("o_orderkey", "o_orderpriority", "o_totalprice"))
+    val provider = new graft.sources.SnapshotSourceProvider()
+    assert(provider.inferSchema(new CaseInsensitiveStringMap(
+      java.util.Map.of("path", table))).fieldNames.toSeq ===
+      Seq("o_orderkey", "o_orderpriority", "o_totalprice"))
+    val s = SnapshotStreams.of(provider, Map("path" -> table))
+    def off(v: Long) = s.deserializeOffset(v.toString)
     // the offset IS the snapshot version
-    assert(src.getOffset === Some(LongOffset(2L)))
-    // initial load: the full snapshot at the end offset, streaming-flagged
-    val init = src.getBatch(None, LongOffset(2L))
-    assert(init.isStreaming, "V1 getBatch must return a streaming-flagged plan")
-    assert(filesOf(init) === SnapshotTable.manifest(table, 2L).files.map(_.path).toSet)
+    assert(s.latestOffset(s.initialOffset(), ReadLimit.allAvailable()).json === "2")
+    // initial load: the full snapshot at the end offset
+    assert(SnapshotStreams.files(s.planInputPartitions(off(0L), off(2L)))
+      === SnapshotTable.manifest(table, 2L).files.map(_.path).toSet)
     // steady state: exactly the files the new version added
     SnapshotTable.commit(o.filter(col("o_orderkey") % 3 === 2), table, append = true)
-    assert(src.getOffset === Some(LongOffset(3L)))
-    val inc = src.getBatch(Some(LongOffset(2L)), LongOffset(3L))
-    assert(inc.isStreaming)
-    assert(filesOf(inc) === SnapshotTable.incrementalFiles(table, 2L, 3L).toSet)
-    // a restart hands offsets back as SerializedOffset — same slice
-    val rep = src.getBatch(Some(SerializedOffset("2")), SerializedOffset("3"))
-    assert(filesOf(rep) === filesOf(inc))
-    // nothing new: an empty (but still streaming) batch
-    val empty = src.getBatch(Some(LongOffset(3L)), LongOffset(3L))
-    assert(empty.isStreaming && filesOf(empty).isEmpty)
+    assert(s.latestOffset(off(2L), ReadLimit.allAvailable()).json === "3")
+    val inc = SnapshotStreams.files(s.planInputPartitions(off(2L), off(3L)))
+    assert(inc === SnapshotTable.incrementalFiles(table, 2L, 3L).toSet)
+    // a restart hands offsets back as their checkpointed json — same slice
+    assert(SnapshotStreams.files(s.planInputPartitions(
+      s.deserializeOffset(off(2L).json), s.deserializeOffset(" 3\n"))) === inc)
+    // nothing new: an empty batch
+    assert(s.planInputPartitions(off(3L), off(3L)).isEmpty)
   }
 
   test("hadoop IO: merge runs end to end through the hadoop primitives") {

@@ -30,78 +30,74 @@ class Round16Spec extends AnyFunSuite {
 
   private def hconf = spark.sessionState.newHadoopConf()
 
-  // ---- HighWaterMark: the admission cursor's persistence contract --
+  // ---- restart recovery: offsets never regress ---------------------
 
-  test("hwm restart recovery: a fresh source on a used metadataPath never regresses the offset") {
-    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+  test("restart recovery: a second capped drain on one checkpoint redelivers no slice") {
+    import org.apache.spark.sql.streaming.Trigger
     val table = tmpTable()
-    val meta = tmpDir()
+    val ckpt = tmpDir()
     val o = ordersNarrow
-    for (m <- 0 to 2)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
+    def drain(): Unit = {
+      val q = spark.readStream
+        .format(graft.sources.SnapshotSourceProvider.format)
+        .option("path", table)
+        .option("maxVersionsPerTrigger", "1")
+        .load()
+        .writeStream
+        .foreachBatch { (b: DataFrame, id: Long) => seen.synchronized { seen += id -> keys(b) }; () }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
+    def slice(m: Int) = keys(o.filter(col("o_orderkey") % 3 === m))
+    for (m <- 0 to 1)
       SnapshotTable.commit(o.filter(col("o_orderkey") % 3 === m), table, append = m > 0)
-    val provider = new graft.sources.SnapshotSourceProvider()
-    val a = provider.createSource(
-      spark.sqlContext, meta, None, "",
-      Map("path" -> table, "maxVersionsPerTrigger" -> "1"))
-    // plan through version 2: the cursor (and its persisted mark) is 2
-    assert(a.getOffset === Some(LongOffset(1L)))
-    a.getBatch(None, LongOffset(1L))
-    assert(a.getOffset === Some(LongOffset(2L)))
-    a.getBatch(Some(LongOffset(1L)), LongOffset(2L))
-    // RESTART: a fresh source on the same metadataPath recovers the
-    // planned position — a re-seeded cursor would report offset 1,
-    // BELOW the committed position 2, and MicroBatchExecution would
-    // redeliver already-processed slices under new batch ids
-    val b = provider.createSource(
-      spark.sqlContext, meta, None, "",
-      Map("path" -> table, "maxVersionsPerTrigger" -> "1"))
-    assert(b.getOffset === Some(LongOffset(3L)),
-      "restarted source re-seeded its admission cursor below the committed position")
+    drain() // one version per batch: v1, then v2
+    assert(seen.toSeq === Seq(0L -> slice(0), 1L -> slice(1)))
+    SnapshotTable.commit(o.filter(col("o_orderkey") % 3 === 2), table, append = true)
+    // RESTART on the same checkpoint: the engine resumes from the
+    // committed offset, so only the new version's slice arrives, under
+    // the next batch id — a regressed offset would redeliver v1/v2
+    drain()
+    assert(seen.toSeq === Seq(0L -> slice(0), 1L -> slice(1), 2L -> slice(2)),
+      "a restarted capped drain redelivered an already-processed slice")
   }
+
+  // ---- HighWaterMark: the rate source's persisted admission cursor --
 
   test("hwm: empty metadataPath never touches the filesystem (no /graft-highwater at the root)") {
     import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-    val table = tmpTable()
-    val o = ordersNarrow
-    for (m <- 0 to 1)
-      SnapshotTable.commit(o.filter(col("o_orderkey") % 2 === m), table, append = m > 0)
     // direct construction with the empty default — the embedding/test
-    // shape Round14Spec uses; before the fix the first getBatch wrote
-    // the literal path "/graft-highwater"
-    val src = new graft.sources.SnapshotSourceProvider().createSource(
+    // shape; before the fix the first getBatch wrote the literal path
+    // "/graft-highwater"
+    val src = new graft.sources.GraftRateSourceProvider().createSource(
       spark.sqlContext, "", None, "",
-      Map("path" -> table, "maxVersionsPerTrigger" -> "1"))
-    assert(src.getOffset === Some(LongOffset(1L)))
-    src.getBatch(None, LongOffset(1L))
-    assert(src.getOffset === Some(LongOffset(2L)),
+      Map("totalRows" -> "10", "rowsPerTrigger" -> "4"))
+    assert(src.getOffset === Some(LongOffset(4L)))
+    src.getBatch(None, LongOffset(4L))
+    assert(src.getOffset === Some(LongOffset(8L)),
       "in-memory admission cursor must still advance without persistence")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get("/graft-highwater")),
       "empty metadataPath wrote the high-water mark at the filesystem root")
-    // CDC source shares the HighWaterMark — same contract
-    val cdc = new graft.sources.SnapshotCdcSourceProvider().createSource(
-      spark.sqlContext, "", None, "",
-      Map("path" -> table, "key" -> "o_orderkey", "maxVersionsPerTrigger" -> "1"))
-    cdc.getBatch(None, LongOffset(1L))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get("/graft-highwater")))
   }
 
   test("hwm: unparseable mark degrades to 0 instead of wedging the source; write is atomic") {
     import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-    val table = tmpTable()
     val meta = tmpDir()
-    val o = ordersNarrow
-    SnapshotTable.commit(o, table, append = false)
     // a truncated/empty mark is what a crash mid-write under a
     // non-atomic layout leaves behind — construction must not throw
     // NumberFormatException (under-reporting only re-plans a batch)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$meta/graft-highwater"), "".getBytes)
-    val src = new graft.sources.SnapshotSourceProvider().createSource(
-      spark.sqlContext, meta, None, "", Map("path" -> table))
-    assert(src.getOffset === Some(LongOffset(1L)))
-    src.getBatch(None, LongOffset(1L)) // rewrites the mark, atomically
+    val src = new graft.sources.GraftRateSourceProvider().createSource(
+      spark.sqlContext, meta, None, "",
+      Map("totalRows" -> "5", "rowsPerTrigger" -> "2"))
+    assert(src.getOffset === Some(LongOffset(2L)))
+    src.getBatch(None, LongOffset(2L)) // rewrites the mark, atomically
     assert(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$meta/graft-highwater"))).trim === "1")
+      java.nio.file.Paths.get(s"$meta/graft-highwater"))).trim === "2")
     // the atomic write leaves no temp debris beside the mark
     assert(!new java.io.File(meta).list().exists(_.endsWith(".tmp")),
       "writeStringAtomic left its temp file behind")

@@ -50,35 +50,34 @@ class Round17Spec extends AnyFunSuite {
   // ---- CDC source: post-commit purge, source-level contract ---------
 
   test("cdc source: commit(offset) reclaims drained staging, keeps ranges above it") {
-    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
     val table = tmpTable()
     val o = ordersNarrow.filter(col("o_orderkey") % 7 === 0)
     for (m <- 0 to 2)
       SnapshotTable.commit(o.filter(col("o_orderkey") % 3 === m.toLong), table,
         append = m > 0, statsColumns = Seq("o_orderkey"))
-    val src = new graft.sources.SnapshotCdcSourceProvider().createSource(
-      spark.sqlContext, tmpDir(), None, "",
+    def stream() = SnapshotStreams.of(new graft.sources.SnapshotCdcSourceProvider(),
       Map("path" -> table, "key" -> "o_orderkey", "maxVersionsPerTrigger" -> "1"))
+    val src = stream()
+    def off(v: Long) = src.deserializeOffset(v.toString)
     // initial load (no start) serves off manifests — no staging
-    src.getBatch(None, LongOffset(1L))
+    src.planInputPartitions(off(0L), off(1L))
     assert(stagingRanges(table).isEmpty, "initial load must not materialize staging")
     // two steady-state slices materialize their range dirs
-    src.getBatch(Some(LongOffset(1L)), LongOffset(2L))
-    src.getBatch(Some(LongOffset(2L)), LongOffset(3L))
+    for (v <- 1L to 2L) src.planInputPartitions(off(v), off(v + 1))
     assert(stagingRanges(table) === Seq("1_2", "2_3"))
     // Spark durably committed through 2: (1,2] is dead weight, (2,3]
     // is still in flight and must survive
-    src.commit(LongOffset(2L))
+    src.commit(off(2L))
     assert(stagingRanges(table) === Seq("2_3"),
       "post-commit purge must reclaim exactly the drained ranges")
-    src.commit(LongOffset(3L))
+    // a restart replays the uncommitted (2,3]: planning re-materializes
+    // it from the immutable manifests before reading
+    val replay = stream()
+    assert(replay.planInputPartitions(off(2L), off(3L)).nonEmpty)
+    assert(stagingRanges(table) === Seq("2_3"), "replay re-materialized its slice")
+    replay.commit(off(3L))
     assert(!LocalSnapshotIO.exists(s"$table/_cdc_staging"),
       "a fully drained stream leaves zero staging behind")
-    // a replay ABOVE any committed offset still works: getBatch
-    // re-materializes from the immutable manifests before reading
-    val replay = src.getBatch(Some(LongOffset(2L)), LongOffset(3L))
-    assert(replay.isStreaming)
-    assert(stagingRanges(table) === Seq("2_3"), "replay re-materialized its slice")
   }
 
   test("cdc source: a REAL multi-batch drain leaves at most the final in-flight range") {
