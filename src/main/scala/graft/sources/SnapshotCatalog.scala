@@ -163,9 +163,8 @@ class SnapshotCatalog extends TableCatalog
     * authoritative. Tables committed without stamps refuse loudly. */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val p = pathOf(ident)
-    val v = (1L to SnapshotTable.currentVersion(p)).reverse.find { v =>
-      SnapshotTable.manifest(p, v).extra.get("ts").exists(_.toLong <= timestamp)
-    }.getOrElse(throw new NoSuchTableException(ident))
+    val v = SnapshotTable.versionAsOf(p, timestamp)
+      .getOrElse(throw new NoSuchTableException(ident))
     new SnapshotV2Table(p, SnapshotTable.manifest(p, v))
   }
 

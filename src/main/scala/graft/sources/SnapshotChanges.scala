@@ -162,7 +162,7 @@ private[sources] class SnapshotChangesScan(
     override def planInputPartitions(): Array[InputPartition] =
       files.zipWithIndex.map { case (p, i) =>
         FilePartition(i, Array(SnapshotV2.partitionedFile(
-          SnapshotTable.FileEntry(p, Map.empty)))): InputPartition
+          SnapshotTable.FileEntry(p, Map.empty), LocalSnapshotIO))): InputPartition
       }.toArray
 
     override def createReaderFactory(): PartitionReaderFactory =
@@ -230,7 +230,7 @@ private[sources] class SnapshotChangesMicroBatchStream(
         s"$table/_cdc_staging/${from}_$to"))
     files.zipWithIndex.map { case (p, i) =>
       FilePartition(i, Array(SnapshotV2.partitionedFile(
-        SnapshotTable.FileEntry(p, Map.empty)))): InputPartition
+        SnapshotTable.FileEntry(p, Map.empty), LocalSnapshotIO))): InputPartition
     }.toArray
   }
 

@@ -1,31 +1,30 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Row, SQLContext, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{LongType, IntegerType, StringType, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** The snapshot table through Spark's PUBLIC batch data-source API —
-  * `spark.read.format(SnapshotRelationProvider.format)` — so manifest
-  * pruning happens INSIDE Catalyst's scan planning instead of behind a
-  * library call: the `PrunedFilteredScan` contract hands the query's
-  * pushed-down predicates to [[SnapshotRelation.buildScan]], which
-  * routes them through the manifest's per-file stats (integer AND
-  * string bounds) before any parquet footer is opened, then serves the
-  * surviving files through the shared DV-applied read path. Column
-  * pruning rides the same contract. Spark re-applies every filter
-  * row-wise downstream (stats prove file-level ABSENCE only — the
-  * residual row filter is still required, same as readPruned's
-  * documented contract), so pruning can only ever skip provably-empty
-  * files, never change results.
+/** The snapshot table through Spark's V1 batch data-source API —
+  * `spark.read.format(SnapshotRelationProvider.format)`. The
+  * `PrunedFilteredScan` contract hands the query's pushed-down
+  * predicates to [[SnapshotRelation.buildScan]], which prunes files by
+  * the manifest's per-file stats (integer AND string bounds) and then
+  * reads the survivors through the one batch reader every snapshot
+  * read shares: the V2 scan, which applies deletion vectors, position
+  * deletes and rename epochs per file. Column pruning rides the same
+  * contract. Spark re-applies every filter row-wise downstream (stats
+  * prove file-level ABSENCE only), so pruning can only ever skip
+  * provably-empty files, never change results.
   *
-  * Options: `path` (table root), `versionAsOf` (time travel),
-  * `timestampAsOf` (readAsOf's stamp resolution — version order
-  * authoritative). With the V2 arms — [[SnapshotV2Provider]] (batch),
-  * [[SnapshotSourceProvider]] (streaming) and [[SnapshotCdcSourceProvider]]
-  * (streaming change feed) — this gives the table the read surface
-  * Spark users expect from a format.
+  * Options are parsed as by [[SnapshotV2Provider]]: `path` (table
+  * root), `versionAsOf` (a version or tag), `timestampAsOf` (the
+  * newest retained version stamped at or before it). The relation also
+  * takes writes (`df.write.format(...).save()`).
   */
 class SnapshotRelationProvider extends RelationProvider
     with CreatableRelationProvider with DataSourceRegister {
@@ -65,23 +64,8 @@ class SnapshotRelationProvider extends RelationProvider
   override def createRelation(
       sqlContext: SQLContext,
       parameters: Map[String, String]): BaseRelation = {
-    val table = parameters.getOrElse("path",
-      throw new IllegalArgumentException("snapshot relation needs .option(\"path\", <table root>)"))
-    require(!(parameters.contains("versionAsOf") && parameters.contains("timestampAsOf")),
-      "versionAsOf and timestampAsOf are mutually exclusive")
-    // a non-numeric versionAsOf resolves as a TAG name (Iceberg refs)
-    val version = parameters.get("versionAsOf")
-      .map(SnapshotTable.resolveVersionRef(table, _)).orElse(
-      parameters.get("timestampAsOf").map { ts =>
-        // resolve once at relation construction (readAsOf's rule:
-        // newest STAMPED version at or before ts, version order
-        // authoritative) — the scan then pins that version
-        (1L to SnapshotTable.currentVersion(table)).reverse.find { v =>
-          SnapshotTable.manifest(table, v).extra.get("ts").exists(_.toLong <= ts.toLong)
-        }.getOrElse(throw new IllegalArgumentException(
-          s"no snapshot of $table at or before ts=$ts"))
-      })
-    new SnapshotRelation(sqlContext.sparkSession, table, version)
+    val (table, m) = SnapshotV2Provider.resolve(new CaseInsensitiveStringMap(parameters.asJava))
+    new SnapshotRelation(sqlContext.sparkSession, table, Some(m.version))
   }
 }
 
@@ -230,8 +214,7 @@ class SnapshotRelation(
     ManifestPruning.prunedEntries(m, schema, filters)
 
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val entries = prunedEntries(filters)
-    val base = SnapshotTable.readFiles(spark, m, _ => entries)
+    val base = SnapshotTable.readFiles(spark, table, m, Some(prunedEntries(filters)))
     val projected =
       if (requiredColumns.isEmpty) base else base.select(requiredColumns.map(col).toSeq: _*)
     // needConversion = true (default): hand back external Rows

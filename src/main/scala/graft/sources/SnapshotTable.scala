@@ -6,7 +6,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, ShortType, StringType, StructType, TimestampType}
 
 /** Storage primitives the snapshot protocol needs — everything else in
@@ -367,7 +369,7 @@ object SnapshotTable {
       segments: Seq[SegmentRef],
       inline: Seq[FileEntry],
       extra: Map[String, String],
-      stripLong: Set[String] = Set.empty)(io: SnapshotIO) {
+      stripLong: Set[String] = Set.empty)(val io: SnapshotIO) {
 
     /** Drop unit-AMBIGUOUS long stats from an entry loaded out of an
       * UNMARKED segment: a segment ref without the `u:` unit token
@@ -624,7 +626,7 @@ object SnapshotTable {
     }
     val factory = new SnapshotDataWriterFactory(
       dataDir, tracked, cluster = None, bucket = None,
-      org.apache.spark.sql.graftbridge.Bridge.parquetRowWriter(spark, schema),
+      Bridge.parquetRowWriter(spark, schema),
       ndv = statsColumns.nonEmpty)
     df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
       if (!it.hasNext) Iterator.empty
@@ -1108,10 +1110,9 @@ object SnapshotTable {
     val touchedIdx = statless ++ hitOf(ranged)
     val touched = candidates.zipWithIndex.collect { case (f, i) if touchedIdx(i) => f }
     val survivors = candidates.zipWithIndex.collect { case (f, i) if !touchedIdx(i) => f }
-    val touchedRows =
-      if (touched.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), m.schema)
-      else spark.read.schema(m.schema).parquet(touched.map(_.path): _*)
+    // through the table's reader: files written before a column rename
+    // read under their own names
+    val touchedRows = readFiles(spark, table, m, Some(touched))
     // survivors of the touched files: rows whose key the batch does not
     // carry (updates and deletes both remove the old row here)
     // structural shuffle hint on the batch-derived side: a CDC batch
@@ -1379,17 +1380,31 @@ object SnapshotTable {
       table: String,
       ts: Long,
       io: SnapshotIO = LocalSnapshotIO): DataFrame = {
-    val cur = currentVersion(table, io)
-    require(cur > 0, s"cannot read non-existent table $table")
-    val stamped = (1L to cur).flatMap { v =>
-      if (!io.exists(manifestPath(table, v))) None // vacuumed
-      else manifest(table, v, io).extra.get("ts").map(t => (v, t.toLong))
-    }
-    require(stamped.nonEmpty, s"no commit of $table carries a ts stamp")
-    val eligible = stamped.filter(_._2 <= ts)
-    require(eligible.nonEmpty,
-      s"no snapshot of $table at or before ts=$ts (earliest is ${stamped.head._2})")
-    read(spark, table, Some(eligible.maxBy(_._1)._1), io)
+    require(currentVersion(table, io) > 0, s"cannot read non-existent table $table")
+    val v = versionAsOf(table, ts, io).fold(
+      why => throw new IllegalArgumentException(why), identity)
+    read(spark, table, Some(v), io)
+  }
+
+  /** The version a timestamp reads: the newest RETAINED snapshot whose
+    * commit stamp is ≤ `ts` (version order authoritative; vacuumed and
+    * unstamped versions are skipped). Left(reason) when none
+    * qualifies — each front end raises it as its own error type
+    * ([[readAsOf]], the `timestampAsOf` read option, SQL
+    * `TIMESTAMP AS OF`). */
+  def versionAsOf(
+      table: String,
+      ts: Long,
+      io: SnapshotIO = LocalSnapshotIO): Either[String, Long] = {
+    // (version, stamp), newest first
+    def stamped = (currentVersion(table, io) to 1L by -1).iterator
+      .filter(v => io.exists(manifestPath(table, v)))
+      .flatMap(v => manifest(table, v, io).extra.get("ts").map(t => (v, t.toLong)))
+    stamped.find(_._2 <= ts).map(_._1).toRight(stamped.toSeq.lastOption match {
+      case None => s"no retained commit of $table carries a ts stamp"
+      case Some((_, earliest)) =>
+        s"no snapshot of $table at or before ts=$ts (earliest retained is $earliest)"
+    })
   }
 
   /** Read a snapshot: the latest by default, any published version for
@@ -1401,26 +1416,8 @@ object SnapshotTable {
       spark: SparkSession,
       table: String,
       version: Option[Long] = None,
-      io: SnapshotIO = LocalSnapshotIO): DataFrame = {
-    val v = version.getOrElse(currentVersion(table, io))
-    val m = manifest(table, v, io)
-    // outstanding POSITION deletes apply reader-side only (physical
-    // ordinals — a DataFrame join can't address them): route the full
-    // read through the V2 scan, which applies both delete formats.
-    // Subset readers (readPruned/readIncremental/changeFeed) refuse
-    // instead — readFiles' guard.
-    if (posDvPaths(m).nonEmpty) {
-      // the V2 provider resolves paths through LocalSnapshotIO — a
-      // caller's non-local io would silently read the wrong filesystem
-      // on this route, so refuse loudly rather than mis-read
-      require(io eq LocalSnapshotIO,
-        s"$table carries position-delete sidecars: the read routes through " +
-          "the V2 scan, which reads the local filesystem only — a custom " +
-          "SnapshotIO is not honored here; compactSnapshot first")
-      spark.read.format(SnapshotV2Provider.format)
-        .option("path", table).option("versionAsOf", v.toString).load()
-    } else readFiles(spark, m, m => m.files)
-  }
+      io: SnapshotIO = LocalSnapshotIO): DataFrame =
+    readFiles(spark, table, manifest(table, version.getOrElse(currentVersion(table, io)), io))
 
   /** Manifest-level file pruning: load only the files whose recorded
     * [min, max] for `column` intersects [lo, hi] (files without stats
@@ -1435,8 +1432,8 @@ object SnapshotTable {
       hi: Long,
       version: Option[Long] = None,
       io: SnapshotIO = LocalSnapshotIO): DataFrame = {
-    val v = version.getOrElse(currentVersion(table, io))
-    readFiles(spark, manifest(table, v, io), _.filesFor(column, lo, hi))
+    val m = manifest(table, version.getOrElse(currentVersion(table, io)), io)
+    readFiles(spark, table, m, Some(m.filesFor(column, lo, hi)))
   }
 
   /** String-key variant of [[readPruned]] — date strings, ID prefixes:
@@ -1449,8 +1446,8 @@ object SnapshotTable {
       hi: String,
       version: Option[Long] = None,
       io: SnapshotIO = LocalSnapshotIO): DataFrame = {
-    val v = version.getOrElse(currentVersion(table, io))
-    readFiles(spark, manifest(table, v, io), _.filesForString(column, lo, hi))
+    val m = manifest(table, version.getOrElse(currentVersion(table, io)), io)
+    readFiles(spark, table, m, Some(m.filesForString(column, lo, hi)))
   }
 
   /** NULL-membership pruning off the manifest's (nullCount, rowCount)
@@ -1466,179 +1463,23 @@ object SnapshotTable {
       wantNull: Boolean,
       version: Option[Long] = None,
       io: SnapshotIO = LocalSnapshotIO): DataFrame = {
-    val v = version.getOrElse(currentVersion(table, io))
-    readFiles(spark, manifest(table, v, io),
-      m => if (wantNull) m.filesForNull(column) else m.filesForNotNull(column))
+    val m = manifest(table, version.getOrElse(currentVersion(table, io)), io)
+    readFiles(spark, table, m,
+      Some(if (wantNull) m.filesForNull(column) else m.filesForNotNull(column)))
   }
 
+  /** Every batch read of a snapshot: ONE V2 scan of manifest `m`
+    * (all of its files, or the `files` subset), which applies the
+    * outstanding deletion vectors (seq-scoped), position deletes and
+    * rename epochs per file, reading through `m`'s own [[SnapshotIO]].
+    * The `_file`/`_pos` metadata columns resolve on the result. */
   private[sources] def readFiles(
       spark: SparkSession,
+      table: String,
       m: Manifest,
-      select: Manifest => Seq[FileEntry],
-      applyPositions: Boolean = false): DataFrame = {
-    val entries = select(m)
-    // subset reads under outstanding POSITION deletes: allowed iff every
-    // selected file is PROVABLY un-named by every sidecar — its path
-    // falls outside the sidecar's recorded named-file byte range (a
-    // manifest-only proof; rangeless legacy refs prove nothing). This
-    // is what keeps incremental readers, the streaming source, and the
-    // change feed's append arms serving through a trickle-positions
-    // epoch: files appended AFTER a sidecar can never be named by it,
-    // and usually sit outside its range. Unprovable subsets refuse as
-    // before — UNLESS the caller opted into `applyPositions`, the
-    // selective-rewrite read shape: the subset then reads with its
-    // TRUE per-file ordinals (`_metadata.row_index`, computed by the
-    // parquet reader from file metadata — exact regardless of
-    // row-group scheduling; the scan pushes no filters here) and
-    // anti-joins the overlapping sidecars' (_file,_pos) pairs, so the
-    // rewrite materializes exactly the outstanding deletes. Only the
-    // sidecars whose recorded range may name a selected file load;
-    // rows naming unselected files simply never match.
-    val posRefs = posDvRefs(m)
-    val posHit: Seq[PosDvRef] =
-      if (posRefs.isEmpty) Nil
-      else posRefs.filter(r => entries.exists(f =>
-        r.range.forall { case (lo, hi) =>
-          FileEntry.bytesLe(lo, f.path) && FileEntry.bytesLe(f.path, hi)
-        }))
-    if (posHit.nonEmpty && !applyPositions) {
-      val unprovable = entries.filter(f => posRefs.exists(r =>
-        r.range.forall { case (lo, hi) =>
-          FileEntry.bytesLe(lo, f.path) && FileEntry.bytesLe(f.path, hi)
-        }))
-      require(unprovable.isEmpty,
-        s"${posRefs.size} outstanding position-delete sidecar(s) may name " +
-          s"${unprovable.size} of the ${entries.size} selected file(s) — this " +
-          "read path cannot apply physical-ordinal deletes; read the full " +
-          "table (position-aware V2 route) or compactSnapshot first")
-    }
-    val posApply = applyPositions && posHit.nonEmpty
-    def freshName(stem: String): String = Iterator.from(0)
-      .map(i => if (i == 0) stem else s"$stem$i")
-      .find(n => !m.schema.fieldNames.contains(n)).get
-    val pFileC = freshName("__graft_pfile")
-    val pPosC = freshName("__graft_ppos")
-    // scheme-normalize a file-source `_metadata.file_path` URI to the
-    // raw local path the manifest (and the sidecars' `_file` column)
-    // record: `file:/x`, `file://x`, `file:///x` all become `/x`
-    def normPath(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      regexp_replace(c, "^file:/*", "/")
-    // RAW load of a file subset: files group by their NAME EPOCH (the
-    // column names they were physically written under — renames are
-    // metadata-only, so an old file reads under its own names and maps
-    // back to the current ones POSITIONALLY), and the pos-applying
-    // variant rides its true per-file ordinals out of the same select
-    // (metadata columns resolve only on the scan itself, never through
-    // a union). One read per distinct epoch over disjoint file sets —
-    // same total I/O as one scan; epochs are bounded by renames, not
-    // files.
-    val renames = renamesOf(m)
-    def loadRaw(fs: Seq[FileEntry], pathCol: Option[String] = None): DataFrame = {
-      val byEpoch: Seq[(Seq[String], Seq[FileEntry])] =
-        if (renames.isEmpty) Seq(m.schema.fieldNames.toSeq -> fs)
-        else fs.groupBy(f => namesAt(m, math.max(f.seq, 0L))).toSeq
-          .sortBy(_._1.mkString("|"))
-      byEpoch.map { case (names, group) =>
-        val epochSchema = StructType(m.schema.fields.zip(names).map {
-          case (f, n) => f.copy(name = n)
-        })
-        val dataCols = names.zip(m.schema.fieldNames).map {
-          case (old, cur) => col(old).as(cur)
-        }
-        val ordCols =
-          if (!posApply) Nil
-          else Seq(
-            normPath(col("_metadata.file_path")).as(pFileC),
-            col("_metadata.row_index").as(pPosC))
-        // extra scan-normalized path column (the DV arm's seq attach):
-        // metadata columns resolve only on the scan itself, so it must
-        // ride this select, never a later one
-        val pathCols = pathCol.toSeq.map(c =>
-          normPath(col("_metadata.file_path")).as(c))
-        spark.read.schema(epochSchema).parquet(group.map(_.path): _*)
-          .select(dataCols ++ ordCols ++ pathCols: _*)
-      }.reduce(_.unionByName(_))
-    }
-    def stripPositions(df: DataFrame): DataFrame =
-      if (!posApply) df
-      else {
-        // explicit sidecar schema: no footer-inference job per build
-        val del = posHit.map(r => spark.read
-            .schema(SnapshotV2.PosSidecarSchema).parquet(r.path).select(
-            col("_file").cast("string").as(s"${pFileC}_d"),
-            col("_pos").cast("long").as(s"${pPosC}_d")))
-          .reduce(_.unionByName(_))
-        // delete-batch-derived side: structural shuffle hint, never a
-        // size-estimate broadcast (the r8 rule)
-        df.join(del.hint("shuffle_hash"),
-            df(pFileC) === col(s"${pFileC}_d") &&
-              df(pPosC) === col(s"${pPosC}_d"), "left_anti")
-          .drop(pFileC, pPosC)
-      }
-    def empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), m.schema)
-    // merge-on-read: apply the manifest's accumulated deletion vectors,
-    // SEQUENCE-scoped — a DV stamped at commit s deletes only rows from
-    // files added BEFORE s (fileseq < s), so a mergeMoR commit's own
-    // appended post-images survive the very DV that kills their
-    // pre-images. EVERY read path flows through here (read /
-    // readPruned / time travel / changeFeed / compactSnapshot), so
-    // deleted rows are invisible everywhere without a rewrite; the
-    // anti-join side is delete-batch-derived, hence the structural
-    // shuffle hint (the r8 rule: corpus-derived sides never broadcast
-    // on an estimate).
-    dvRefs(m) match {
-      case Nil =>
-        if (entries.isEmpty) empty
-        else stripPositions(loadRaw(entries))
-      case refs =>
-        val key = m.extra(DvKeyK)
-        def fresh(stem: String): String = Iterator.from(0)
-          .map(i => if (i == 0) stem else s"$stem$i")
-          .find(n => !m.schema.fieldNames.contains(n)).get
-        val fseq = fresh("__graft_fseq")
-        val dvk = fresh("__graft_dvk")
-        val dvq = fresh("__graft_dvq")
-        // tag rows with their file's commit sequence. ONE scan
-        // regardless of outstanding commit count (r19): rows attach
-        // their file's seq through a broadcast (path -> seq) inner join
-        // on the scan-normalized path — the V1 analog of the V2 route's
-        // per-file FileSeqMetaKey constant — instead of one scan per
-        // distinct seq unioned, whose plan width grew with commits
-        // since the last compaction. INNER join: a path mismatch loses
-        // rows loudly (oracle) instead of null-fseq'ing the DV scope
-        // silently. Single-seq tables (fresh/compacted) keep the
-        // constant tag — no join at all.
-        val seqs = entries.map(f => math.max(f.seq, 0L)).distinct
-        val base0 =
-          if (entries.isEmpty) empty.withColumn(fseq, lit(0L))
-          else if (seqs.size == 1) loadRaw(entries).withColumn(fseq, lit(seqs.head))
-          else {
-            val pathC = fresh("__graft_fpath")
-            val seqDf = spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](
-                entries.map(f => org.apache.spark.sql.Row(
-                  f.path, math.max(f.seq, 0L))).asJava),
-              StructType(Seq(
-                org.apache.spark.sql.types.StructField(s"${pathC}_m", StringType),
-                org.apache.spark.sql.types.StructField(fseq, LongType))))
-            loadRaw(entries, pathCol = Some(pathC))
-              .join(broadcast(seqDf), col(pathC) === col(s"${pathC}_m"))
-              .drop(pathC, s"${pathC}_m")
-          }
-        val base = stripPositions(base0)
-        // explicit sidecar schema (the manifest knows the key type):
-        // no footer-inference job per ref per build
-        val kf0 = m.schema(m.schema.fieldIndex(key)).copy(nullable = true)
-        val dv = refs.map { r =>
-          spark.read.schema(StructType(Seq(kf0))).parquet(r.path)
-            .select(col(key).as(dvk), lit(r.seq).as(dvq))
-        }.reduce(_.unionByName(_))
-        base.join(dv.hint("shuffle_hash"),
-            base(key) === col(dvk) && col(dvq) > col(fseq), "left_anti")
-          .drop(fseq)
-    }
-  }
+      files: Option[Seq[FileEntry]] = None): DataFrame =
+    Bridge.ofRows(spark, DataSourceV2Relation.create(
+      new SnapshotV2Table(table, m, files.map(_.map(_.path).toSet)), None, None))
 
   // ---- merge-on-read deletion vectors --------------------------------
 
@@ -2103,12 +1944,13 @@ object SnapshotTable {
   private def requireNoDv(m: Manifest, table: String, op: String): Unit = {
     require(dvPaths(m).isEmpty,
       s"$table carries ${dvPaths(m).size} outstanding deletion-vector file(s) — " +
-        s"$op reads data files raw and would resurrect deleted rows; run " +
-        "compactSnapshot (which materializes the deletes) first")
+        s"$op does not carry delete state into its commit and would resurrect " +
+        "deleted rows; run compactSnapshot (which materializes the deletes) first")
     require(posDvPaths(m).isEmpty,
       s"$table carries ${posDvPaths(m).size} outstanding position-delete " +
-        s"sidecar(s) — $op reads data files raw and would resurrect deleted " +
-        "rows; run compactSnapshot (which materializes the deletes) first")
+        s"sidecar(s) — $op does not carry delete state into its commit and would " +
+        "resurrect deleted rows; run compactSnapshot (which materializes the " +
+        "deletes) first")
   }
 
   /** MERGE-ON-READ DELETE BY POSITION — the Iceberg-v2 position-delete
@@ -2152,39 +1994,13 @@ object SnapshotTable {
       .find(n => !m.schema.fieldNames.contains(n)).get
     val cf = freshName("__graft_cf")
     val cp = freshName("__graft_cp")
-    // Named files read EPOCH-AWARE: a file written before a column
-    // rename holds the OLD physical name, and a by-name read under the
-    // current schema would silently capture that column as NULL (the
-    // r17 advisory). Files group by their name epoch exactly like
-    // readFiles.loadRaw — positional alias back to current names, the
-    // metadata columns out of the SAME select (they only resolve on
-    // the scan itself, never through a union). The no-rename path is
-    // byte-identical to before (one scan, current schema).
-    val renames = renamesOf(m)
-    val base =
-      if (renames.isEmpty)
-        spark.read.schema(m.schema).parquet(named: _*)
-          .select(col("*"),
-            regexp_replace(col("_metadata.file_path"), "^file:/*", "/").as(cf),
-            col("_metadata.row_index").as(cp))
-      else {
-        val seqOf: Map[String, Long] =
-          m.files.map(f => f.path -> math.max(f.seq, 0L)).toMap
-        named.groupBy(p => namesAt(m, seqOf.getOrElse(p, Long.MaxValue)))
-          .toSeq.sortBy(_._1.mkString("|"))
-          .map { case (names, paths) =>
-            val epochSchema = StructType(m.schema.fields.zip(names).map {
-              case (f, n) => f.copy(name = n)
-            })
-            val dataCols = names.zip(m.schema.fieldNames).map {
-              case (old, cur) => col(old).as(cur)
-            }
-            spark.read.schema(epochSchema).parquet(paths: _*)
-              .select(dataCols ++ Seq(
-                regexp_replace(col("_metadata.file_path"), "^file:/*", "/").as(cf),
-                col("_metadata.row_index").as(cp)): _*)
-          }.reduce(_.unionByName(_))
-      }
+    // the named files through the table's reader, with their `_file`/
+    // `_pos` provenance — the raw ordinals the batch was scanned with;
+    // files written before a column rename read under their own names
+    val live = named.toSet
+    val base = readFiles(spark, table, m, Some(m.files.filter(f => live(f.path))))
+      .select(m.schema.fieldNames.map(col).toSeq ++
+        Seq(col("_file").as(cf), col("_pos").as(cp)): _*)
     // batch-derived side: structural shuffle hint, never an estimate
     val pre = base.join(batch.hint("shuffle_hash"),
         base(cf) === batch("_file") && base(cp) === batch("_pos"), "left_semi")
@@ -2231,7 +2047,7 @@ object SnapshotTable {
       .map(n => s"$dir/$n")
     var cnt = 0L
     SnapshotV2.foreachSidecarRow(
-      pos.sparkSession, SnapshotV2.PosSidecarSchema, sidecarFiles)(_ => cnt += 1)
+      pos.sparkSession, SnapshotV2.PosSidecarSchema, sidecarFiles, io)(_ => cnt += 1)
     // the ref carries the byte-wise path range of the files this batch
     // names (free — `named` is already in hand): the scoped reader's
     // per-file attachment prunes on it
@@ -2284,7 +2100,7 @@ object SnapshotTable {
           .map(n => s"$dir/$n")
         var cnt = 0L
         SnapshotV2.foreachSidecarRow(
-          pos.sparkSession, SnapshotV2.PosSidecarSchema, sidecarFiles)(_ => cnt += 1)
+          pos.sparkSession, SnapshotV2.PosSidecarSchema, sidecarFiles, io)(_ => cnt += 1)
         val fLo = named.reduce((a, b) => if (FileEntry.bytesLe(a, b)) a else b)
         val fHi = named.reduce((a, b) => if (FileEntry.bytesLe(a, b)) b else a)
         val refs = sidecarFiles.map(p => PosDvRef(p, cnt, Some((fLo, fHi))))
@@ -2323,8 +2139,8 @@ object SnapshotTable {
 
   /** Merge-on-read DELETE — the Delta deletion-vector shape: record the
     * keys to delete as a small parquet sidecar and a manifest pointer,
-    * touching ZERO data files. Every read path anti-joins the
-    * accumulated delete keys, so the rows vanish immediately at head
+    * touching ZERO data files. Every read path drops the rows whose
+    * key a later-sequenced delete names, so they vanish immediately at head
     * (and at every later snapshot) while the delete itself costs
     * O(batch) regardless of how many 100 TB files hold the rows — the
     * exact trade against [[merge]]'s copy-on-write (O(touched files)
@@ -2332,7 +2148,7 @@ object SnapshotTable {
     * accumulate; [[compactSnapshot]] materializes them (its rewrite
     * reads through the DV-applied path and the overwrite commit drops
     * the DV state), re-zeroing the read cost. [[merge]] refuses while
-    * DVs are outstanding (it reads files raw). Appends/rollback/
+    * DVs are outstanding (its commit does not carry them). Appends/rollback/
     * branches carry the DV state forward verbatim; overwrite clears it.
     * mode=delete breaks new-files == new-rows, so incremental readers
     * refuse to scan across it, like overwrite/merge/rollback.
@@ -2482,7 +2298,7 @@ object SnapshotTable {
     var mnL = Long.MaxValue; var mxL = Long.MinValue
     var mnS: String = null; var mxS: String = null
     SnapshotV2.foreachSidecarRow(
-      spark, StructType(Seq(keyField.copy(nullable = true))), files) { row =>
+      spark, StructType(Seq(keyField.copy(nullable = true))), files, io) { row =>
       cnt += 1
       if (!row.isNullAt(0)) keyType match {
         case StringType =>
@@ -2515,7 +2331,7 @@ object SnapshotTable {
     * trickle-update CDC stream against a 100 TB table: ONE commit
     * writes (a) a deletion-vector sidecar holding every batch key
     * (update pre-images and deletes both vanish through the read-time
-    * anti-join) and (b) the post-image rows as ordinary appended data
+    * delete filter) and (b) the post-image rows as ordinary appended data
     * files, so the commit cost is O(batch) and ZERO existing data
     * files are opened or rewritten — the exact trade against
     * [[merge]]'s copy-on-write (O(touched files) per batch, zero
@@ -2621,7 +2437,7 @@ object SnapshotTable {
         var cnt = 0L
         var mnF: String = null; var mxF: String = null
         SnapshotV2.foreachSidecarRow(
-          spark, SnapshotV2.PosSidecarSchema, parts) { row =>
+          spark, SnapshotV2.PosSidecarSchema, parts, io) { row =>
           cnt += 1
           if (!row.isNullAt(0)) {
             val v = row.getUTF8String(0).toString
@@ -2722,7 +2538,7 @@ object SnapshotTable {
       io: SnapshotIO = LocalSnapshotIO): DataFrame = {
     val m = manifest(table, toVersion, io)
     val paths = incrementalFiles(table, fromVersion, toVersion, io).toSet
-    readFiles(spark, m, _ => m.files.filter(f => paths(f.path)))
+    readFiles(spark, table, m, Some(m.files.filter(f => paths(f.path))))
   }
 
   /** The file paths added in versions (from, to] — the metadata half of
@@ -2973,7 +2789,7 @@ object SnapshotTable {
     var rCnt = 0L
     var rMn: String = null; var rMx: String = null
     SnapshotV2.foreachSidecarRow(
-      spark, SnapshotV2.PosSidecarSchema, parts0) { row =>
+      spark, SnapshotV2.PosSidecarSchema, parts0, io) { row =>
       rCnt += 1
       if (!row.isNullAt(0)) {
         val v = row.getUTF8String(0).toString
@@ -3050,15 +2866,12 @@ object SnapshotTable {
     val scope = only.getOrElse(m.files)
     val bytes = scope.map(f => if (f.size >= 0) f.size else io.size(f.path)).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    // DV-applied read (deletes materialize; the FULL rewrite's
+    // delete-applied read (deletes materialize; the FULL rewrite's
     // overwrite then drops the chain, a SELECTIVE rewrite carries it
     // for the untouched files), re-grouped so each group lands whole
     // in one task — the rolling writer then cuts one stamped file per
     // group (maxRowsPerFile still splits hot groups)
-    val base = (only match {
-      case Some(frag) => readFiles(spark, m, _ => frag, applyPositions = true)
-      case None       => read(spark, table, Some(cur), io)
-    }).select(schema.fieldNames.map(col).toSeq: _*)
+    val base = readFiles(spark, table, m, only)
     val laid =
       if (zorderBy.isEmpty)
         base.repartition(n, groupCols: _*).sortWithinPartitions(groupCols: _*)
@@ -3089,7 +2902,7 @@ object SnapshotTable {
     val stage = s"$table/data/v${cur + 1}_w$token"
     val factory = new SnapshotDataWriterFactory(stage, tracked, None,
       bucket.map { case (c, bn) => (schema.fieldIndex(c), schema(c).dataType, bn) },
-      org.apache.spark.sql.graftbridge.Bridge.parquetRowWriter(spark, schema),
+      Bridge.parquetRowWriter(spark, schema),
       None, maxRowsPerFileOf(m),
       trunc.map { case (c, w) => (schema.fieldIndex(c), schema(c).dataType, w) },
       temporal.map { case (c, u) =>
@@ -3594,9 +3407,9 @@ object SnapshotTable {
     // unattributable after the fact. The commit therefore captured the
     // pre-images at WRITE time ([[writeChangePre]]): serve the deletes
     // from that per-commit change sidecar, O(delta). A commit without
-    // one (changeCapture='none', or legacy) still refuses loudly — with
-    // the readFiles range proof admitting append subsets, it would
-    // otherwise read as a pure append and SILENTLY miss the deletes.
+    // one (changeCapture='none', or legacy) still refuses loudly: it
+    // adds and removes no file, so it would otherwise read as an empty
+    // append and SILENTLY miss the deletes.
     val newPos = posDvRefs(mv).map(_.path).toSet -- posDvRefs(mp).map(_.path).toSet
     val chPre: Option[DataFrame] =
       if (newPos.isEmpty) None
@@ -3616,11 +3429,11 @@ object SnapshotTable {
     val removed = mp.files.filterNot(f => vPaths(f.path))
     val oldDv = dvRefs(mp).map(_.path).toSet
     val dvNew = dvRefs(mv).filterNot(r => oldDv(r.path))
-    // position-applied subset reads throughout: rows a PRIOR trickle
+    // delete-applied subset reads throughout: rows a PRIOR trickle
     // sidecar already killed must not resurface as this commit's
     // pre-images (and added files can never be named by this commit's
     // own sidecar — deletes target rows that existed before it)
-    val post = readFiles(spark, mv, _ => added, applyPositions = true)
+    val post = readFiles(spark, table, mv, Some(added))
     if (removed.isEmpty && dvNew.isEmpty && chPre.isEmpty)
       // pure append: the added files ARE the inserts — no diff join
       return post.select(lit("insert").as("_change_type") +: cols.map(col): _*)
@@ -3628,7 +3441,7 @@ object SnapshotTable {
       s"commit $v stamps deletion vectors keyed on ${dvKeyNameOf(mv)} — the " +
         s"change feed must diff on that identity, got $key")
     val preRemoved =
-      padToV(readFiles(spark, mp, _ => removed, applyPositions = true))
+      padToV(readFiles(spark, table, mp, Some(removed)))
     val preKept =
       if (dvNew.isEmpty) preRemoved.limit(0)
       else {
@@ -3685,7 +3498,7 @@ object SnapshotTable {
             }
           case _ => kept // unprunable key type: read carried files (sound)
         }
-        padToV(readFiles(spark, mp, _ => hit, applyPositions = true))
+        padToV(readFiles(spark, table, mp, Some(hit)))
           .join(dvk.hint("shuffle_hash"), Seq(key), "left_semi")
       }
     val pre = chPre.foldLeft(preRemoved.unionByName(preKept))(_.unionByName(_))

@@ -91,10 +91,8 @@ object SnapshotV2Provider {
     val version = Option(options.get("versionAsOf"))
       .map(SnapshotTable.resolveVersionRef(table, _)).orElse(
       Option(options.get("timestampAsOf")).map { ts =>
-        (1L to SnapshotTable.currentVersion(table)).reverse.find { v =>
-          SnapshotTable.manifest(table, v).extra.get("ts").exists(_.toLong <= ts.toLong)
-        }.getOrElse(throw new IllegalArgumentException(
-          s"no snapshot of $table at or before ts=$ts"))
+        SnapshotTable.versionAsOf(table, ts.toLong).fold(
+          why => throw new IllegalArgumentException(why), identity)
       }).getOrElse(SnapshotTable.currentVersion(table))
     (table, SnapshotTable.manifest(table, version))
   }
@@ -151,7 +149,8 @@ object SnapshotSourceProvider {
 
 private[sources] class SnapshotV2Table(
     table: String,
-    m: SnapshotTable.Manifest) extends Table
+    m: SnapshotTable.Manifest,
+    only: Option[Set[String]] = None) extends Table
     with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -230,7 +229,7 @@ private[sources] class SnapshotV2Table(
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new SnapshotScanBuilder(table, m,
-      Option(options.get("maxVersionsPerTrigger")).map(_.toLong))
+      Option(options.get("maxVersionsPerTrigger")).map(_.toLong), only = only)
 
   /** DSv2 INSERT / INSERT OVERWRITE (see [[SnapshotBatchWrite]]). A
     * clustered table's write declares RequiresDistributionAndOrdering,
@@ -351,7 +350,8 @@ private[sources] class SnapshotScanBuilder(
     m: SnapshotTable.Manifest,
     maxVersionsPerTrigger: Option[Long] = None,
     onPlanned: (Seq[SnapshotTable.FileEntry], Boolean) => Unit = (_, _) => (),
-    rowLevel: Boolean = false)
+    rowLevel: Boolean = false,
+    only: Option[Set[String]] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit with SupportsPushDownTopN {
 
@@ -360,6 +360,11 @@ private[sources] class SnapshotScanBuilder(
   private var aggResult: Option[(StructType, InternalRow)] = None
   private var limit: Option[Int] = None
   private var topN: Option[SnapshotV2.TopN] = None
+
+  /** The files the scan may read: all of `m`'s, or the selection
+    * `only` names. Limit, TopN and aggregate proofs range over these. */
+  private lazy val files: Seq[SnapshotTable.FileEntry] =
+    only.fold(m.files)(paths => m.files.filter(f => paths(f.path)))
 
   /** Accept everything for manifest pruning, return EVERYTHING as
     * residual: min/max/null-count stats prove a file can hold no
@@ -395,7 +400,7 @@ private[sources] class SnapshotScanBuilder(
   override def pushLimit(n: Int): Boolean = {
     val provable = pushed.isEmpty && SnapshotTable.dvPaths(m).isEmpty &&
       SnapshotTable.posDvPaths(m).isEmpty &&
-      m.files.forall(_.nstats.nonEmpty) && n >= 0
+      files.forall(_.nstats.nonEmpty) && n >= 0
     if (provable) limit = Some(n)
     provable
   }
@@ -428,7 +433,7 @@ private[sources] class SnapshotScanBuilder(
     // column's nullCount (topNSubset.nonNullRows), so a file whose
     // manifest entry lacks an `n:` tag for THIS column — legacy or
     // hand-migrated — must decline the push, not default to "no nulls"
-    val proven = m.files.forall(f => f.nstats.contains(colName) &&
+    val proven = files.forall(f => f.nstats.contains(colName) &&
       (f.stats.contains(colName) || f.sstats.contains(colName) ||
         f.nstats.get(colName).exists { case (nulls, rows) => nulls == rows }))
     if (supported && proven) {
@@ -461,7 +466,6 @@ private[sources] class SnapshotScanBuilder(
     if (pushed.nonEmpty || agg.groupByExpressions.nonEmpty ||
       SnapshotTable.dvPaths(m).nonEmpty ||
       SnapshotTable.posDvPaths(m).nonEmpty) return None
-    val files = m.files
     def columnOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
       e match {
         case nr: NamedReference if nr.fieldNames.length == 1 =>
@@ -552,7 +556,7 @@ private[sources] class SnapshotScanBuilder(
     case Some((schema, row)) => new SnapshotV2AggScan(m, schema, row)
     case None =>
       new SnapshotV2Scan(table, m, required, pushed, maxVersionsPerTrigger, onPlanned,
-        rowLevel, limit, topN)
+        rowLevel, limit, topN, only)
   }
 }
 
@@ -966,7 +970,7 @@ private[graft] class SnapshotV2Scan(
       .orElse(temporalGroups.map(_.map { case (t, fs) => (t: Any, fs) }))
 
   private def partitionedFile(f: SnapshotTable.FileEntry): PartitionedFile =
-    SnapshotV2.partitionedFile(f)
+    SnapshotV2.partitionedFile(f, m.io)
 
   /** CBO statistics from the manifest, AFTER pruning: row count from
     * the per-file (nullCount, rowCount) stats, bytes from the recorded
@@ -1226,7 +1230,7 @@ private[graft] class SnapshotV2Scan(
           // and a DML chain re-pays them on every scan (r18)
           val acc = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Long]]()
           SnapshotV2.foreachSidecarRow(
-            spark0, SnapshotV2.PosSidecarSchema, posDv.map(_.path)) { row =>
+            spark0, SnapshotV2.PosSidecarSchema, posDv.map(_.path), m.io) { row =>
             if (!row.isNullAt(0) && !row.isNullAt(1)) {
               val k = row.getUTF8String(0).toString
               var b = acc.get(k)
@@ -1244,7 +1248,7 @@ private[graft] class SnapshotV2Scan(
         } else {
           lastDvMode = "scoped"
           val sidecarPf: Map[String, PartitionedFile] = posDv.map { r =>
-            val len = LocalSnapshotIO.size(r.path)
+            val len = m.io.size(r.path)
             r.path -> PartitionedFile(InternalRow.empty,
               SparkPath.fromPathString(r.path), 0L, len, Array.empty, 0L, len)
           }.toMap
@@ -1338,7 +1342,7 @@ private[graft] class SnapshotV2Scan(
         val deletes = new java.util.HashMap[Any, java.lang.Long]()
         val kSchema = StructType(Seq(kf.copy(nullable = true)))
         dv.foreach { r =>
-          SnapshotV2.foreachSidecarRow(spark, kSchema, Seq(r.path)) { row =>
+          SnapshotV2.foreachSidecarRow(spark, kSchema, Seq(r.path), m.io) { row =>
             if (!row.isNullAt(0)) {
               val k: Any = kf.dataType match {
                 case StringType  => row.getUTF8String(0).toString
@@ -1382,7 +1386,7 @@ private[graft] class SnapshotV2Scan(
             }
           }
         val sidecarPf: Map[String, PartitionedFile] = dv.map { r =>
-          val len = LocalSnapshotIO.size(r.path)
+          val len = m.io.size(r.path)
           r.path -> PartitionedFile(InternalRow.empty,
             SparkPath.fromPathString(r.path), 0L, len, Array.empty, 0L, len)
         }.toMap
@@ -1574,10 +1578,11 @@ private[graft] object SnapshotV2 {
     * Parquet's own reader never consults unknown keys here. */
   private[sources] val FileSeqMetaKey = "__graft_fseq"
 
-  private[sources] def partitionedFile(f: SnapshotTable.FileEntry): PartitionedFile = {
+  private[sources] def partitionedFile(
+      f: SnapshotTable.FileEntry, io: SnapshotIO): PartitionedFile = {
     // manifest-recorded size; one fs stat per file only for legacy
     // entries committed before sizes rode the manifest
-    val len = if (f.size >= 0) f.size else LocalSnapshotIO.size(f.path)
+    val len = if (f.size >= 0) f.size else io.size(f.path)
     PartitionedFile(
       InternalRow.empty, SparkPath.fromPathString(f.path), 0L, len,
       Array.empty, 0L, len, Map(FileSeqMetaKey -> math.max(f.seq, 0L)))
@@ -1619,11 +1624,12 @@ private[graft] object SnapshotV2 {
   private[sources] def foreachSidecarRow(
       spark: SparkSession,
       schema: StructType,
-      paths: Seq[String])(f: InternalRow => Unit): Unit = {
+      paths: Seq[String],
+      io: SnapshotIO)(f: InternalRow => Unit): Unit = {
     if (paths.isEmpty) return
     val factory = Bridge.parquetReaderFactory(spark, schema, schema, Array.empty)
     paths.foreach { p =>
-      val len = LocalSnapshotIO.size(p)
+      val len = io.size(p)
       val pf = PartitionedFile(InternalRow.empty,
         SparkPath.fromPathString(p), 0L, len, Array.empty, 0L, len)
       val r = factory.createReader(FilePartition(0, Array(pf)))
@@ -1698,7 +1704,7 @@ private[sources] class MetadataAppendReaderFactory(
   * survive the DV that kills their pre-images. When the scan had to
   * force-read the key past column pruning, `projectTo` strips it back
   * off. NULL keys never match a DV (the key column's delete semantics
-  * are equality — same rule as the V1 anti-join). */
+  * are equality). */
 private[sources] class DvFilterReaderFactory(
     inner: PartitionReaderFactory,
     deletes: org.apache.spark.broadcast.Broadcast[java.util.HashMap[Any, java.lang.Long]],

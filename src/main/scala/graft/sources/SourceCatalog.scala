@@ -904,7 +904,7 @@ object SourceCatalog extends QueryModule {
       // batches land as small key sidecars + manifest pointers —
       // ZERO data files touched, O(batch) cost against a table of any
       // size — and every read path (head, time travel, pruned reads,
-      // change feed) anti-joins the accumulated keys, so the rows
+      // change feed) drops the rows the accumulated keys name, so the rows
       // vanish immediately. compactSnapshot then MATERIALIZES the
       // deletes (its rewrite reads through the DV-applied path; the
       // overwrite commit drops the DV state), re-zeroing read cost —

@@ -112,4 +112,27 @@ object PlanCheck {
   /** File scans (for pushdown / pruning / read-schema checks). */
   def fileScans(df: DataFrame): Seq[FileSourceScanExec] =
     collectNodes[FileSourceScanExec](df)
+
+  /** Leaves of the OPTIMIZED LOGICAL plan (AQE wraps the physical tree
+    * until execution), as (is a graft-snapshot V2 scan, leaf). */
+  def logicalLeaves(df: DataFrame)
+      : Seq[(Boolean, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)] =
+    df.queryExecution.optimizedPlan.collectLeaves().map {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        (r.relation.table.name().startsWith("graft_snapshot_"), r)
+      case other => (false, other)
+    }
+
+  /** The shape every snapshot batch read must plan: exactly `scans`
+    * graft-snapshot V2 scan leaves, no other leaf, and no join. Returns
+    * a failure description, empty when the shape holds. */
+  def snapshotScanShape(df: DataFrame, scans: Int = 1): Option[String] = {
+    val leaves = logicalLeaves(df)
+    val joins = df.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }
+    if (leaves.count(_._1) == scans && leaves.forall(_._1) && joins.isEmpty) None
+    else Some(s"want $scans graft-snapshot V2 scan(s), no other leaf, no join:\n" +
+      df.queryExecution.optimizedPlan)
+  }
 }

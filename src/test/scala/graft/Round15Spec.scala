@@ -516,6 +516,14 @@ class Round15Spec extends AnyFunSuite {
     // zero-copy rollback to the pre-branch version
     SnapshotTable.rollback(table, toVersion = 2L, io = io)
     assert(keys(SnapshotTable.read(spark, table, io = io)) === afterDelete)
+    // position deletes: the sidecar write and the read that applies it
+    // both run through the Hadoop arm
+    SnapshotTable.deletePositions(
+      SnapshotTable.read(spark, table, io = io)
+        .where(col("o_orderkey") % 7 === 0).select("_file", "_pos"),
+      table, io = io)
+    assert(keys(SnapshotTable.read(spark, table, io = io)) ===
+      afterDelete -- keys(o.filter(col("o_orderkey") % 7 === 0)))
   }
 
   test("rollback: out-of-range targets and empty tables are refused") {

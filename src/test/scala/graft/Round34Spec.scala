@@ -9,8 +9,8 @@ import graft.sources.{SnapshotCatalog, SnapshotTable, SnapshotV2}
   * src_snapshot_pos_delete carries the oracled lifecycle — provenance
   * scan → sidecar → head/time-travel/compaction arms). This spec pins
   * ordinal-exact application, composition with equality DVs, the
-  * stale-position and subset-reader refusals, vacuum keeping live
-  * sidecars, and the budget guard.
+  * stale-position refusal, subset readers applying positions, vacuum
+  * keeping live sidecars, and the budget guard.
   */
 class Round34Spec extends AnyFunSuite {
   import TestSpark._
@@ -65,8 +65,8 @@ class Round34Spec extends AnyFunSuite {
     assert(spark.table(s"$cat.t").count() === 16)
   }
 
-  test("refusals: stale positions, provenance reads under outstanding " +
-      "deletes, subset readers; over-budget loads fall back scoped") {
+  test("refusals: stale positions and non-provenance shapes; subset " +
+      "readers answer under position deletes; over-budget loads fall back scoped") {
     val (cat, wh) = freshCatalog()
     val table = s"$wh/t"
     SnapshotTable.commit(
@@ -85,10 +85,13 @@ class Round34Spec extends AnyFunSuite {
     val file = SnapshotTable.manifest(table, 1L).files.head.path
     SnapshotTable.deletePositions(
       Seq(3L, 4L, 5L).toDF("_pos").withColumn("_file", lit(file)), table)
-    val sub = intercept[Exception] {
-      SnapshotTable.readPruned(spark, table, "k", 0L, 10L).collect()
-    }
-    assert(sub.getMessage.contains("position-delete"))
+    // a subset reader applies the positions like the full read: its
+    // answer is `read` filtered to the same range
+    val pruned = SnapshotTable.readPruned(spark, table, "k", 0L, 10L)
+      .where(col("k").between(0L, 10L)).collect().map(_.getLong(0)).sorted.toSeq
+    assert(pruned === SnapshotTable.read(spark, table)
+      .where(col("k").between(0L, 10L)).collect().map(_.getLong(0)).sorted.toSeq)
+    assert(SnapshotTable.read(spark, table).count() === 47L)
     // over-budget loads no longer refuse (the r15 verdict's last read
     // cliff): the scan falls back to the SCOPED per-file attachment and
     // still answers exactly — Round41Spec pins the full path algebra

@@ -11,8 +11,8 @@ import graft.sources.{SnapshotCatalog, SnapshotTable, SnapshotV2}
   * Round33Spec's equality-DV fallback), plus the round's safety fixes:
   * the temporal stats-unit marker (unmarked manifests' timestamp/date
   * stats are served absent, never reinterpreted), the empty
-  * position-delete batch no-op, null-key DV consolidation, and the
-  * non-local-IO refusal on the position-aware read route.
+  * position-delete batch no-op, null-key DV consolidation, and
+  * position-delete reads through a non-local SnapshotIO.
   */
 class Round41Spec extends AnyFunSuite {
   import TestSpark._
@@ -230,8 +230,8 @@ class Round41Spec extends AnyFunSuite {
     assert(spark.table(s"$cat.t2").count() === 10)
   }
 
-  test("read() refuses a non-local SnapshotIO while position sidecars are " +
-      "outstanding (the V2 route reads the local filesystem only)") {
+  test("read() honours a non-local SnapshotIO while position sidecars are " +
+      "outstanding (the V2 scan reads through the manifest's io)") {
     val (_, wh) = freshCatalog()
     val table = s"$wh/t"
     val files = fill3(table)
@@ -240,11 +240,7 @@ class Round41Spec extends AnyFunSuite {
       Seq(0L).toDF("_pos").withColumn("_file", lit(files(0))), table)
     val hio = new graft.sources.HadoopSnapshotIO(
       spark.sparkContext.hadoopConfiguration)
-    val e = intercept[IllegalArgumentException] {
-      SnapshotTable.read(spark, table, io = hio)
-    }
-    assert(e.getMessage.contains("V2 scan"))
-    // the local route still serves
+    assert(SnapshotTable.read(spark, table, io = hio).count() === 59)
     assert(SnapshotTable.read(spark, table).count() === 59)
   }
 }

@@ -134,10 +134,10 @@ class Round44Spec extends AnyFunSuite {
     assert(got() === expect)
   }
 
-  test("subset readers under trickle positions: provably un-named files " +
-      "serve (append epochs keep flowing), named files still refuse, and " +
-      "the incremental change feed serves the pos commit from its " +
-      "write-time capture") {
+  test("subset readers under trickle positions: append epochs keep " +
+      "flowing, reads over named files apply the positions, and the " +
+      "incremental change feed serves the pos commit from its write-time " +
+      "capture") {
     val (cat, wh) = freshCatalog()
     posTable(cat)
     val table = s"$wh/t"
@@ -152,11 +152,13 @@ class Round44Spec extends AnyFunSuite {
     assert(SnapshotTable.readIncremental(spark, table, 3L, 4L).count() === 10)
     // a pruned read that only touches the new file serves too
     assert(SnapshotTable.readPruned(spark, table, "k", 100L, 200L).count() === 10)
-    // one that may touch a named file still refuses (ordinals unprovable)
-    val e = intercept[Exception] {
-      SnapshotTable.readPruned(spark, table, "k", 0L, 5L).collect()
-    }
-    assert(e.getMessage.contains("position-delete"))
+    // one over a named file applies the positions: it answers what the
+    // full read answers over the same range
+    def keysIn(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.where(col("k").between(0L, 5L)).select("k").collect().map(_.getLong(0)).sorted.toSeq
+    assert(keysIn(SnapshotTable.readPruned(spark, table, "k", 0L, 5L)) ===
+      keysIn(SnapshotTable.read(spark, table)))
+    assert(keysIn(SnapshotTable.read(spark, table)) === Seq(0L, 1L, 2L, 3L, 4L))
     // the incremental change feed SERVES the pos commit now — the
     // commit captured its delete pre-images at write time (Round48Spec
     // owns the capture anatomy; the refusal survives only for

@@ -1,28 +1,21 @@
 package graft
 
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.SnapshotTable
 
-/** Round-51 wave (r19 change 4): the V1 DV read tags rows with their
-  * file's commit seq through ONE scan + a broadcast (path -> seq)
-  * attach instead of one scan per distinct seq unioned — plan width
-  * must not grow with commits since the last compaction, and the
-  * attach must be row-for-row equivalent to the old per-seq tagging
-  * (same rows survive the seq-scoped DV anti-join).
+/** Round-51 wave, now on the one batch read path: a DV read over files
+  * of many commit seqs plans ONE graft-snapshot V2 scan — no per-seq
+  * union, no seq-attach join — and the reader scopes each deletion
+  * vector by the file's commit seq (a post-image survives its own
+  * deletion vector; a re-append after a deletion vector survives).
   */
 class Round51Spec extends AnyFunSuite {
   import TestSpark._
 
-  // count in the OPTIMIZED LOGICAL plan — AQE wraps the physical tree,
-  // so executedPlan.collect cannot see the scans. Data relations carry
-  // the value column; DV/sidecar relations are key-only.
-  private def dataScans(df: org.apache.spark.sql.DataFrame): Seq[LogicalRelation] =
-    df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation if l.schema.fieldNames.contains("v") => l
-    }
+  private def assertOneScan(df: org.apache.spark.sql.DataFrame): Unit =
+    PlanCheck.snapshotScanShape(df).foreach(fail(_))
 
   test("multi-seq DV read: ONE data scan regardless of commit count, " +
       "rows identical to the per-seq semantics") {
@@ -49,12 +42,11 @@ class Round51Spec extends AnyFunSuite {
       Seq((3L, 999L), (3L, 777L), (100L, 888L), (101L, 1010L))).sorted
     assert(got === want)
     // the structural pin: >= 3 distinct live seqs, still exactly ONE
-    // data scan (the broadcast seq attach replaced the per-seq union)
+    // data scan and no join
     val m = SnapshotTable.manifest(table, SnapshotTable.currentVersion(table))
     assert(m.files.map(f => math.max(f.seq, 0L)).distinct.size >= 3,
       "fixture must span several commit seqs or the pin is vacuous")
-    assert(dataScans(df).size === 1,
-      s"multi-seq DV read must plan ONE data scan")
+    assertOneScan(df)
   }
 
   test("single-seq DV table keeps the constant-tag path: one scan, " +
@@ -69,16 +61,11 @@ class Round51Spec extends AnyFunSuite {
     val df = SnapshotTable.read(spark, table)
     assert(df.select("k").collect().map(_.getLong(0)).sorted.toSeq ===
       Seq(0L, 1L, 3L, 4L, 5L))
-    assert(dataScans(df).size === 1)
-    // no LocalTableScan feeding a broadcast on the data side: the
-    // single-seq read tags with a literal, not a join
-    val hasSeqJoin = df.queryExecution.optimizedPlan.toString
-      .contains("__graft_fpath")
-    assert(!hasSeqJoin, "single-seq read must not build the seq-attach join")
+    assertOneScan(df)
   }
 
-  test("rename epoch x multi-seq: the per-epoch scans each carry the " +
-      "path column and the attach still scopes the DV correctly") {
+  test("rename epoch x multi-seq: one scan reads each epoch under its " +
+      "names and the DV still scopes by seq") {
     val root = java.nio.file.Files.createTempDirectory("graft51_c").toString
     val table = s"$root/t"
     import spark.implicits._
@@ -95,5 +82,6 @@ class Round51Spec extends AnyFunSuite {
     val want = (Seq(0L, 2L, 3L, 4L).map(k => (k, k * 10)) ++
       Seq((1L, 111L), (50L, 500L))).sorted
     assert(got === want)
+    assertOneScan(df)
   }
 }

@@ -9,21 +9,28 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{SnapshotSourceProvider, SnapshotTable, SnapshotV2Provider}
 
-/** Generated operation sequences against the snapshot table format.
+/** Generated operation sequences against the snapshot table format,
+  * checked against an in-memory model: one row multiset per version.
   * Each sequence starts from one base commit of (k, v) rows and applies
-  * up to five operations drawn from append, merge-on-read upsert, key
-  * delete, position delete, metadata-only value-column rename and
-  * compaction. The property: a fresh-checkpoint AvailableNow drain
-  * through the stream format holds exactly the rows (as a multiset) a
-  * batch read of the head holds. Fixed seed, bounded sizes; a failing
-  * sequence shrinks to a shorter one, printed in the failure.
+  * up to five operations drawn from append, merge-on-read upsert,
+  * copy-on-write merge, key delete, position delete, metadata-only
+  * value-column rename and compaction. The properties: `read` at every
+  * version holds exactly the model's rows (as a multiset),
+  * `readIncremental` over every append-only range holds exactly the
+  * rows appended in it, and a fresh-checkpoint AvailableNow drain holds
+  * the head's rows. A copy-on-write merge while deletes are outstanding
+  * must refuse. Fixed seed, bounded sizes; a failing sequence shrinks
+  * to a shorter one, printed in the failure.
   */
 class SnapshotModelSpec extends AnyFunSuite {
   import TestSpark._
 
+  type Rows = Seq[(Long, Option[Long])]
+
   sealed trait Op
   case class Append(rows: List[(Long, Long)]) extends Op
   case class MergeMoR(rows: List[(Long, Long)]) extends Op
+  case class MergeCoW(rows: List[(Long, Long)]) extends Op
   case class DeleteKeys(keys: List[Long]) extends Op
   case class DeletePositions(key: Long) extends Op
   case object RenameValue extends Op
@@ -35,20 +42,30 @@ class SnapshotModelSpec extends AnyFunSuite {
     rs <- Gen.listOfN(n, Gen.zip(key, Gen.choose(0L, 999L)))
   } yield rs.distinctBy(_._1)
   private val op: Gen[Op] = Gen.frequency(
-    3 -> rows.map(Append(_)),
-    3 -> rows.map(MergeMoR(_)),
-    2 -> Gen.nonEmptyListOf(key).map(ks => DeleteKeys(ks.distinct.take(3))),
-    2 -> key.map(DeletePositions(_)),
-    1 -> Gen.const(RenameValue),
-    1 -> Gen.const(Compact))
+    2 -> rows.map(Append(_)),
+    2 -> rows.map(MergeMoR(_)),
+    4 -> rows.map(MergeCoW(_)),
+    1 -> Gen.nonEmptyListOf(key).map(ks => DeleteKeys(ks.distinct.take(3))),
+    1 -> key.map(DeletePositions(_)),
+    3 -> Gen.const(RenameValue),
+    2 -> Gen.const(Compact))
   private val ops: Gen[List[Op]] = Gen.choose(1, 5).flatMap(Gen.listOfN(_, op))
 
   private def kv(r: Row): (Long, Option[Long]) =
     (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
 
-  /** Apply `ops` to a fresh table; returns its path and the value
-    * column's current name. */
-  private def build(root: String, ops: List[Op]): (String, String) = {
+  /** The model after each published version: its rows, and the rows
+    * the version appended when it only appended (Some(Nil) for a
+    * rename, which changes no rows; None for every other commit). */
+  private case class Version(rows: Rows, appended: Option[Rows])
+
+  /** Apply `ops` to a fresh table and to the model, version by version.
+    * Returns the table path, the value column's current name and the
+    * model per version (index 0 is version 1), or a mismatch between
+    * what the format did and what the model expects (a version that was
+    * not published, a refusal that did not come). */
+  private def build(root: String, ops: List[Op])
+      : Either[String, (String, String, Vector[Version])] = {
     import spark.implicits._
     val table = s"$root/t"
     SnapshotTable.commit(
@@ -56,25 +73,71 @@ class SnapshotModelSpec extends AnyFunSuite {
       table, append = false, statsColumns = Seq("k"))
     var value = "v"
     var renames = 0
+    var deletesOutstanding = false
+    var model = Vector(Version((0L until 8L).map(k => (k, Some(k * 10))), None))
     def frame(rs: List[(Long, Long)]): DataFrame = rs.toDF("k", value).coalesce(1)
-    ops.foreach {
-      case Append(rs)   => SnapshotTable.commit(frame(rs), table, append = true)
-      case MergeMoR(rs) => SnapshotTable.mergeMoR(frame(rs), table, "k")
-      case DeleteKeys(ks) => SnapshotTable.deleteKeys(ks.toDF("k"), table, "k")
-      case DeletePositions(k) =>
-        SnapshotTable.deletePositions(
-          spark.read.format(SnapshotV2Provider.format).option("path", table).load()
-            .where(col("k") === k).select("_file", "_pos"), table)
-      case RenameValue =>
-        renames += 1
-        SnapshotTable.renameColumn(table, value, s"v$renames")
-        value = s"v$renames"
-      case Compact => SnapshotTable.compactSnapshot(spark, table)
+    def head: Rows = model.last.rows
+    def without(ks: Set[Long]): Rows = head.filterNot(r => ks(r._1))
+    def some(rs: List[(Long, Long)]): Rows = rs.map { case (k, v) => (k, Some(v)) }
+    ops.foreach { o =>
+      val next: Option[Version] = o match {
+        case Append(rs) =>
+          SnapshotTable.commit(frame(rs), table, append = true)
+          Some(Version(head ++ some(rs), Some(some(rs))))
+        case MergeMoR(rs) =>
+          SnapshotTable.mergeMoR(frame(rs), table, "k")
+          deletesOutstanding = true
+          Some(Version(without(rs.map(_._1).toSet) ++ some(rs), None))
+        case MergeCoW(rs) =>
+          val refused =
+            try { SnapshotTable.merge(frame(rs), table, "k"); false }
+            catch { case _: IllegalArgumentException => true }
+          if (refused != deletesOutstanding)
+            return Left(s"$o: refused=$refused with deletes outstanding=$deletesOutstanding")
+          if (refused) None
+          else Some(Version(without(rs.map(_._1).toSet) ++ some(rs), None))
+        case DeleteKeys(ks) =>
+          SnapshotTable.deleteKeys(ks.toDF("k"), table, "k")
+          deletesOutstanding = true
+          Some(Version(without(ks.toSet), None))
+        case DeletePositions(k) =>
+          SnapshotTable.deletePositions(
+            spark.read.format(SnapshotV2Provider.format).option("path", table).load()
+              .where(col("k") === k).select("_file", "_pos"), table)
+          // a delete that matches no row publishes nothing
+          if (!head.exists(_._1 == k)) None
+          else {
+            deletesOutstanding = true
+            Some(Version(without(Set(k)), None))
+          }
+        case RenameValue =>
+          renames += 1
+          SnapshotTable.renameColumn(table, value, s"v$renames")
+          value = s"v$renames"
+          Some(Version(head, Some(Nil)))
+        case Compact =>
+          // an empty table has nothing to compact: not generated into
+          if (head.isEmpty) None
+          else {
+            SnapshotTable.compactSnapshot(spark, table)
+            deletesOutstanding = false
+            Some(Version(head, None))
+          }
+      }
+      model = model ++ next
+      val published = SnapshotTable.currentVersion(table)
+      if (published != model.size)
+        return Left(s"after $o: version $published, the model expects ${model.size}")
     }
-    (table, value)
+    Right((table, value, model))
   }
 
-  private def drain(table: String, value: String, ckpt: String): Seq[(Long, Option[Long])] = {
+  /** The (key, value) rows of a read, by position: the value column's
+    * name depends on the version read. */
+  private def rowsOf(df: DataFrame): Rows =
+    df.select(df.columns.take(2).map(col).toSeq: _*).collect().map(kv).toSeq.sorted
+
+  private def drain(table: String, value: String, ckpt: String): Rows = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Long])]
     val q = spark.readStream.format(SnapshotSourceProvider.format)
       .option("path", table).load()
@@ -90,17 +153,37 @@ class SnapshotModelSpec extends AnyFunSuite {
     buf.synchronized(buf.toSeq)
   }
 
+  // the drain and every version's read, incremental reads included,
+  // are each checked against the model, not against one another
   test("property: a fresh AvailableNow drain equals SnapshotTable.read at head") {
     val prop = Prop.forAll(ops) { seq =>
       val root = java.nio.file.Files.createTempDirectory("graft_model").toString
-      val (table, value) = build(root, seq)
-      val got = drain(table, value, s"$root/ck").sorted
-      val want = SnapshotTable.read(spark, table).select("k", value)
-        .collect().map(kv).toSeq.sorted
-      Prop(got == want) :| s"ops=$seq\nstream=$got\nread=$want"
+      build(root, seq) match {
+        case Left(why) => Prop.falsified :| s"ops=$seq\n$why"
+        case Right((table, value, model)) =>
+          def mismatch(what: String, got: Rows, want: Rows): Option[String] =
+            if (got == want.sorted) None else Some(s"$what=$got model=${want.sorted}")
+          val reads = model.indices.flatMap { i =>
+            mismatch(s"read v${i + 1}",
+              rowsOf(SnapshotTable.read(spark, table, Some(i + 1L))), model(i).rows)
+          }
+          // (from, to] where every version after `from` only appended
+          def appended(v: Long): Option[Rows] = model((v - 1).toInt).appended
+          val incs = for {
+            to <- 2L to model.size
+            from <- (to - 1) to 1L by -1
+            if ((from + 1) to to).forall(appended(_).isDefined)
+            bad <- mismatch(s"readIncremental ($from, $to]",
+              rowsOf(SnapshotTable.readIncremental(spark, table, from, to)),
+              ((from + 1) to to).flatMap(appended(_).get))
+          } yield bad
+          val bad = reads ++ incs ++
+            mismatch("drain", drain(table, value, s"$root/ck").sorted, model.last.rows)
+          Prop(bad.isEmpty) :| s"ops=$seq\n${bad.mkString("\n")}"
+      }
     }
     val params = Test.Parameters.default
-      .withMinSuccessfulTests(10)
+      .withMinSuccessfulTests(15)
       .withWorkers(1)
       .withInitialSeed(Seed(20261017L))
     val res = Test.check(params, prop)
