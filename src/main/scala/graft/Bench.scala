@@ -32,6 +32,12 @@ import org.apache.spark.sql.DataFrame
   * query's samples are spread across the whole bench duration and a
   * transient slow window degrades at most one of its runs — which the
   * median then rejects. bench.json records the per-pass orders.
+  *
+  * Timing a few queries while iterating:
+  *   SPARK_GRAFT_BENCH_RUNS=3 SPARK_GRAFT_BENCH_OUT=/tmp/b.json \
+  *     sbt "runMain graft.Bench q1 q2"
+  * runs only the named queries (medians of 3 interleaved passes, each
+  * against a cleared cache) and writes their full map to the given file.
   */
 object Bench {
 

@@ -19,23 +19,9 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor: Spark's 1m default, kept (r19). The r18
-      // round lowered it to 256k to keep per-row-CPU stages (file-
-      // cutting layout writes) parallel, but that was a harness-sized
-      // global never validated at the driver's conditions; a same-
-      // process ALTERNATING-pass A/B over the full 325-query map at 32
-      // cores (graft.tools.AbConf, min-of-3 per arm, both arms spanning
-      // the same wall-clock windows) read 1m at 0.969x of 256k overall
-      // and better on iterative small-shuffle queries (ann_hnsw 0.72x,
-      // wd_modularity 0.74x) — coalescing tiny shuffles is what the 1m
-      // floor is FOR (guide §2.2). The one workload the floor hurts —
-      // a skinny write into a many-group layout, whose per-group
-      // file-cut cost byte-based coalescing cannot see — declares its
-      // geometry per table (advisoryPartitionBytes) and scopes the
-      // floor to that write (src_snapshot_compound_spec), instead of
-      // resizing every stage of every query. Env-overridable for A/Bs.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"))
+      // AQE coalescing floor: Spark's own 1m default (not set here) — a
+      // same-process alternating A/B over the 325-query map at 32 cores
+      // read it at 0.969x of the 256k floor an earlier round had set.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // storage-partitioned joins: honor a DSv2 scan's reported
       // KeyGroupedPartitioning (the snapshot format's clustered arm) —

@@ -168,7 +168,7 @@ object MultimodalCatalog extends QueryModule {
       // kernel (graft's 5th codegen Expression — one flat loop over
       // the payload bytes, no per-sample lambda frames or 1-char
       // slices; measured ~2.7x the interpreted higher-order fold warm
-      // at sf0.1 (0.2 s vs 0.6 s, tools.ABFrameEnergy), equivalence +
+      // at sf0.1 (0.2 s vs 0.6 s), equivalence +
       // codegen residency spec-asserted, SQL-registered as
       // graft_frame_energy). The scan is Fan.out-spread
       // across cores first (a single-row-group local parquet scan

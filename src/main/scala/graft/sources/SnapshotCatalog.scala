@@ -360,7 +360,7 @@ class SnapshotCatalog extends TableCatalog
           require(sets.size == 1 && unsets.isEmpty,
             "evolveLayout must be the only change in its ALTER TABLE statement")
           val newLayout = SnapshotCatalog.parseLayoutSpec(specStr, m.schema)
-          val curLayout = m.extra.view.filterKeys(SnapshotTable.LayoutKeys).toMap
+          val curLayout = SnapshotTable.declaredLayout(m)
           require(newLayout != curLayout,
             s"evolveLayout: $ident already has exactly that layout")
           val hist = SnapshotTable.layoutHistOf(m) :+
@@ -574,148 +574,138 @@ private[sources] class SnapshotWriteBuilder(
     SnapshotWrites.build(table, m, info.schema(), overwrite, replaceScanned = None)
 }
 
-/** Shared Write construction for INSERTs and row-level rewrites: a
-  * CLUSTERED table's write declares its layout needs and lets SPARK
-  * provide them (the Iceberg write-distribution shape) — clustered
-  * distribution routes every value of k to one task, the ascending
-  * sort makes keys arrive contiguously, and the rolling writer cuts a
-  * new file at each key change, so the one-key-per-file invariant
-  * (min == max in the manifest, SPJ partition values recoverable)
-  * survives plain SQL INSERTs, streaming appends, AND UPDATE/MERGE
-  * rewrites alike. */
+/** The one WRITE LAYOUT of the snapshot format, derived from the
+  * declarations of the manifest a write is planned against — how rows
+  * are routed, where files are cut, how they are stamped and which
+  * stats they record. Every data-file writer goes through here: DSv2
+  * INSERTs, streaming appends, row-level rewrites, the API commit and
+  * every compaction. A layout-routed write declares its needs and lets
+  * SPARK provide them (the Iceberg write-distribution shape): the
+  * clustered distribution routes every group to one task, the
+  * ascending sort makes groups arrive contiguously, and the rolling
+  * writer cuts (and stamps) a new file at each group change — so the
+  * one-group-per-file invariant (min == max in the manifest, SPJ
+  * partition values recoverable) survives plain SQL INSERTs,
+  * streaming appends, UPDATE/MERGE rewrites and compaction alike. */
 private[sources] object SnapshotWrites {
+  import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+  import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, Expressions => E, SortDirection, SortOrder => V2SortOrder}
+
+  /** The routing keys of a layout, as catalog-resolved V2 transforms:
+    * the identity-cluster column, or else temporal ++ bucket ++
+    * truncate — period-major on the time x hash / time x truncate
+    * compounds [[SnapshotCatalog.requireSupportedCombination]] allows.
+    * A truncate width or temporal unit rides the FUNCTION NAME, not a
+    * literal child: Spark's clustering-satisfaction check
+    * (collectLeaves) can never match a literal against the join keys
+    * (GraftBucket.scala documents the trap). Empty = no layout. */
+  private def routingKeys(decls: Map[String, String]): Seq[V2Expression] =
+    decls.get(SnapshotTable.ClusterK) match {
+      case Some(k) => Seq(E.column(k))
+      case None =>
+        SnapshotTable.temporalSpecFromLayout(decls).map { case (c, u) =>
+          E.apply(u, E.column(c)) }.toSeq ++
+          SnapshotTable.bucketSpecFromLayout(decls).map { case (c, n) => E.bucket(n, c) } ++
+          SnapshotTable.truncSpecFromLayout(decls).map { case (c, w) =>
+            E.apply(s"truncate_$w", E.column(c)) }
+    }
+
   def build(
       table: String,
       m: SnapshotTable.Manifest,
       schema: StructType,
       overwrite: Boolean,
       replaceScanned: Option[() => Set[String]]): Write = {
-    val cluster = SnapshotTable.clusterKeyOf(m)
-    val bucket = SnapshotTable.bucketSpecOf(m)
-    val trunc = SnapshotTable.truncSpecOf(m)
-    val temporal = SnapshotTable.temporalSpecOf(m)
-    val stats = SnapshotTable.statsColumnsOf(m)
-    val maxRows = SnapshotTable.maxRowsPerFileOf(m)
-    // 0 = no declaration: Spark falls back to the session AQE advisory
-    val adv = SnapshotTable.advisoryPartitionBytesOf(m).getOrElse(0L)
-    import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-    import org.apache.spark.sql.connector.expressions.{Expressions => E, SortDirection, SortOrder => V2SortOrder}
-    (cluster, bucket, trunc, temporal) match {
-      case (Some(k), _, _, _) =>
-        new SnapshotWrite(table, schema, stats, Some(k), None, None, None, maxRows,
-          overwrite, replaceScanned) with RequiresDistributionAndOrdering {
-          override def advisoryPartitionSizeInBytes(): Long = adv
-          override def requiredDistribution(): Distribution =
-            Distributions.clustered(Array(E.column(k)))
-          override def requiredOrdering(): Array[V2SortOrder] =
-            Array(E.sort(E.column(k), SortDirection.ASCENDING))
-        }
-      case (None, None, Some((wc, w)), Some((tc, u))) =>
-        // COMPOUND time × truncate (`PARTITIONED BY (months(ts),
-        // truncate(1000, k))`): the order-preserving sibling of the
-        // time × hash compound — period-major, width group within
-        // period, one (period, group) file, both stamps recorded; the
-        // scan prunes on either dimension and SPJ-groups on the
-        // truncate stamp across periods.
-        val tf = E.apply(u, E.column(tc))
-        val wf = E.apply(s"truncate_$w", E.column(wc))
-        new SnapshotWrite(table, schema, stats, None, None, Some((wc, w)),
-          Some((tc, u)), maxRows, overwrite, replaceScanned)
-            with RequiresDistributionAndOrdering {
-          override def advisoryPartitionSizeInBytes(): Long = adv
-          override def requiredDistribution(): Distribution =
-            Distributions.clustered(Array(tf, wf))
-          override def requiredOrdering(): Array[V2SortOrder] =
-            Array(E.sort(tf, SortDirection.ASCENDING),
-              E.sort(wf, SortDirection.ASCENDING))
-        }
-      case (None, _, Some((c, w)), _) =>
-        // the order-preserving sibling of the bucket arm: routed and
-        // sorted by the catalog-served truncate function, rolled and
-        // stamped per width-w group
-        // the width rides the FUNCTION NAME, not a literal child —
-        // Spark's clustering-satisfaction check (collectLeaves) can
-        // never match a literal against the join keys (GraftBucket
-        // .scala documents the trap)
-        val tf = E.apply(s"truncate_$w", E.column(c))
-        new SnapshotWrite(table, schema, stats, None, None, Some((c, w)), None,
-          maxRows, overwrite, replaceScanned) with RequiresDistributionAndOrdering {
-          override def advisoryPartitionSizeInBytes(): Long = adv
-          override def requiredDistribution(): Distribution =
-            Distributions.clustered(Array(tf))
-          override def requiredOrdering(): Array[V2SortOrder] =
-            Array(E.sort(tf, SortDirection.ASCENDING))
-        }
-      case (None, Some((bc, n)), _, Some((tc, u))) =>
-        // COMPOUND time × hash layout (`PARTITIONED BY (days(ts),
-        // bucket(n, k))`): rows route and sort on BOTH transforms —
-        // period-major, bucket within period — so the rolling writer
-        // cuts one (period, bucket) group per file and stamps both;
-        // the scan then prunes on either dimension and SPJ-groups on
-        // the bucket stamp across periods.
-        val tf = E.apply(u, E.column(tc))
-        new SnapshotWrite(table, schema, stats, None, Some((bc, n)), None,
-          Some((tc, u)), maxRows, overwrite, replaceScanned)
-            with RequiresDistributionAndOrdering {
-          override def advisoryPartitionSizeInBytes(): Long = adv
-          override def requiredDistribution(): Distribution =
-            Distributions.clustered(Array(tf, E.bucket(n, bc)))
-          override def requiredOrdering(): Array[V2SortOrder] =
-            Array(E.sort(tf, SortDirection.ASCENDING),
-              E.sort(E.bucket(n, bc), SortDirection.ASCENDING))
-        }
-      case (None, Some((c, n)), _, None) =>
-        // Spark evaluates bucket(n, c) itself (resolved through the
-        // catalog's FunctionCatalog arm) to route rows, and the
-        // bucket-ASC ordering makes buckets arrive contiguously — the
-        // rolling writer cuts one file per bucket and stamps it.
-        new SnapshotWrite(table, schema, stats, None, Some((c, n)), None, None,
-          maxRows, overwrite, replaceScanned) with RequiresDistributionAndOrdering {
-          override def advisoryPartitionSizeInBytes(): Long = adv
-          override def requiredDistribution(): Distribution =
-            Distributions.clustered(Array(E.bucket(n, c)))
-          override def requiredOrdering(): Array[V2SortOrder] =
-            Array(E.sort(E.bucket(n, c), SortDirection.ASCENDING))
-        }
-      case (None, None, None, Some((c, u))) =>
-        // the temporal arm: routed and sorted by the catalog-served
-        // unit function (UTC period ordinal), rolled and stamped per
-        // period — literal-free like truncate_w, so SPJ matches it
-        val tf = E.apply(u, E.column(c))
-        new SnapshotWrite(table, schema, stats, None, None, None, Some((c, u)),
-          maxRows, overwrite, replaceScanned) with RequiresDistributionAndOrdering {
-          override def advisoryPartitionSizeInBytes(): Long = adv
-          override def requiredDistribution(): Distribution =
-            Distributions.clustered(Array(tf))
-          override def requiredOrdering(): Array[V2SortOrder] =
-            Array(E.sort(tf, SortDirection.ASCENDING))
-        }
-      case _ =>
-        new SnapshotWrite(table, schema, stats, None, None, None, None, maxRows,
-          overwrite, replaceScanned)
+    val keys = routingKeys(m.extra)
+    if (keys.isEmpty) new SnapshotWrite(table, m, schema, overwrite, replaceScanned)
+    else {
+      // 0 = no declaration: Spark falls back to the session AQE advisory
+      val adv = SnapshotTable.advisoryPartitionBytesOf(m).getOrElse(0L)
+      new SnapshotWrite(table, m, schema, overwrite, replaceScanned)
+          with RequiresDistributionAndOrdering {
+        override def advisoryPartitionSizeInBytes(): Long = adv
+        override def requiredDistribution(): Distribution =
+          Distributions.clustered(keys.toArray)
+        override def requiredOrdering(): Array[V2SortOrder] =
+          keys.map(E.sort(_, SortDirection.ASCENDING)).toArray
+      }
     }
   }
+
+  /** The stats every data file written under `decls` records, resolved
+    * against `schema`: the declared stats columns, every layout column
+    * (a cluster key's min == max is how the scan recovers SPJ partition
+    * values from the manifest; a bucket/truncate/temporal key's range
+    * adds free range pruning beside its stamp) and the caller's
+    * `extra` columns, which must exist. */
+  def trackedStats(
+      decls: Map[String, String],
+      schema: StructType,
+      extra: Seq[String] = Nil): Seq[(String, Int, DataType)] = {
+    extra.foreach(c => require(schema.fieldNames.contains(c),
+      s"stats column $c not in ${schema.simpleString}"))
+    val layoutCols = decls.get(SnapshotTable.ClusterK).toSeq ++
+      SnapshotTable.bucketSpecFromLayout(decls).map(_._1) ++
+      SnapshotTable.truncSpecFromLayout(decls).map(_._1) ++
+      SnapshotTable.temporalSpecFromLayout(decls).map(_._1)
+    val declared = decls.get(SnapshotTable.StatsColsK)
+      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+    (declared ++ layoutCols ++ extra).distinct.flatMap { c =>
+      schema.fields.zipWithIndex.find(_._1.name == c).map { case (f, i) => (c, i, f.dataType) }
+    }
+  }
+
+  /** The data-file writer factory for `decls`' layout: files land under
+    * `stage`, cut per group and stamped, capped at the declared
+    * maxRowsPerFile, folding [[trackedStats]] — plus a per-file HLL++
+    * distinct sketch when `sketch` is set and anything is tracked.
+    * `dropOpSchema` strips a row-level rewrite's leading op column. */
+  def dataWriterFactory(
+      stage: String,
+      decls: Map[String, String],
+      schema: StructType,
+      extraStats: Seq[String] = Nil,
+      sketch: Boolean = false,
+      dropOpSchema: Option[StructType] = None): SnapshotDataWriterFactory = {
+    val tracked = trackedStats(decls, schema, extraStats)
+    // a layout spec (column, argument) → (ordinal, type, argument)
+    def at[A](spec: (String, A)): (Int, DataType, A) = {
+      val i = schema.fieldIndex(spec._1)
+      (i, schema.fields(i).dataType, spec._2)
+    }
+    new SnapshotDataWriterFactory(stage, tracked,
+      decls.get(SnapshotTable.ClusterK).map { c => val (i, dt, _) = at((c, ())); (i, dt) },
+      SnapshotTable.bucketSpecFromLayout(decls).map(at),
+      Bridge.parquetRowWriter(SparkSession.active, schema), dropOpSchema,
+      decls.get(SnapshotTable.MaxRowsK).map(_.toLong),
+      SnapshotTable.truncSpecFromLayout(decls).map(at),
+      SnapshotTable.temporalSpecFromLayout(decls).map(at),
+      ndv = sketch && tracked.nonEmpty)
+  }
+
+  /** A fresh per-attempt staging dir for version `next`'s files (vacuum's
+    * in-flight rule protects it until the manifest publishes). */
+  def stageDir(table: String, next: Long): String =
+    s"$table/data/v${next}_w${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** The written files' entries, path-sorted. */
+  def entriesOf(messages: Array[WriterCommitMessage]): Seq[SnapshotTable.FileEntry] =
+    messages.collect { case SnapshotWriteMessage(es) => es }.flatten.sortBy(_.path).toSeq
 }
 
+/** A write planned against manifest `m`: it routes, cuts, stamps and
+  * tracks stats under `m`'s layout, and its commit refuses if the
+  * table's layout moved since (see SnapshotTable.requireLayoutUnmoved). */
 private[sources] class SnapshotWrite(
     table: String,
+    m: SnapshotTable.Manifest,
     schema: StructType,
-    statsCols: Seq[String],
-    clusterBy: Option[String],
-    bucketBy: Option[(String, Int)],
-    truncBy: Option[(String, Int)],
-    temporalBy: Option[(String, String)],
-    maxRows: Option[Long],
     overwrite: Boolean,
     replaceScanned: Option[() => Set[String]] = None) extends Write {
 
   override def toBatch: BatchWrite = replaceScanned match {
-    case Some(scanned) =>
-      new SnapshotGroupReplaceWrite(table, schema, statsCols, clusterBy, bucketBy,
-        truncBy, temporalBy, maxRows, scanned)
-    case None =>
-      new SnapshotBatchWrite(table, schema, statsCols, clusterBy, bucketBy, truncBy,
-        temporalBy, maxRows, overwrite)
+    case Some(scanned) => new SnapshotGroupReplaceWrite(table, m, schema, scanned)
+    case None          => new SnapshotBatchWrite(table, m, schema, overwrite)
   }
 
   /** Streaming append (`df.writeStream.toTable(...)`): per-epoch
@@ -729,20 +719,14 @@ private[sources] class SnapshotWrite(
     require(!overwrite,
       "streaming complete/truncate mode is refused — the snapshot sink is append-only " +
         "(use foreachBatch + mergeBatch for replace semantics)")
-    new SnapshotStreamingWrite(table, schema, statsCols, clusterBy, bucketBy, truncBy,
-      temporalBy, maxRows)
+    new SnapshotStreamingWrite(table, m, schema)
   }
 }
 
 private[sources] class SnapshotStreamingWrite(
     table: String,
-    schema: StructType,
-    statsCols: Seq[String],
-    clusterBy: Option[String],
-    bucketBy: Option[(String, Int)],
-    truncBy: Option[(String, Int)],
-    temporalBy: Option[(String, String)],
-    maxRows: Option[Long])
+    m: SnapshotTable.Manifest,
+    schema: StructType)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
   // one staging dir for the query's lifetime; epoch-prefixed file
@@ -750,48 +734,15 @@ private[sources] class SnapshotStreamingWrite(
   // retention): vacuum during a LIVE stream can see this dir's version
   // prefix age below current — run maintenance between epochs, or
   // accept that an in-flight epoch retries after reclaim
-  private val stage = {
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    s"$table/data/v${SnapshotTable.currentVersion(table) + 1}_w$token"
-  }
+  private val stage = SnapshotWrites.stageDir(table, SnapshotTable.currentVersion(table) + 1)
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
-    val tracked = (statsCols ++
-      (clusterBy.toSeq ++ bucketBy.map(_._1) ++ truncBy.map(_._1) ++
-        temporalBy.map(_._1))
-        .filterNot(statsCols.contains))
-      .distinct.flatMap { c =>
-        schema.fields.zipWithIndex.find(_._1.name == c).map {
-          case (f, i) => (c, i, f.dataType)
-        }
-      }
-    val cluster = clusterBy.map { k =>
-      val i = schema.fieldIndex(k)
-      (i, schema.fields(i).dataType)
-    }
-    val bucket = bucketBy.map { case (c, n) =>
-      val i = schema.fieldIndex(c)
-      (i, schema.fields(i).dataType, n)
-    }
-    val trunc = truncBy.map { case (c, w) =>
-      val i = schema.fieldIndex(c)
-      (i, schema.fields(i).dataType, w)
-    }
-    val temporal = temporalBy.map { case (c, u) =>
-      val i = schema.fieldIndex(c)
-      (i, schema.fields(i).dataType, u)
-    }
-    new SnapshotDataWriterFactory(stage, tracked, cluster, bucket,
-      Bridge.parquetRowWriter(SparkSession.active, schema), maxRows = maxRows,
-      trunc = trunc, temporal = temporal)
-  }
+      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
+    SnapshotWrites.dataWriterFactory(stage, m.extra, schema)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val entries = messages.collect {
-      case SnapshotWriteMessage(es) => es
-    }.flatten.sortBy(_.path).toSeq
+    val entries = SnapshotWrites.entriesOf(messages)
     val cur = SnapshotTable.currentVersion(table)
     val last =
       if (cur == 0) -1L
@@ -804,8 +755,7 @@ private[sources] class SnapshotStreamingWrite(
     } else {
       SnapshotTable.publishFiles(table, schema, entries, append = true,
         extra = Map("batchid" -> epochId.toString),
-        stampedLayout = Some(SnapshotTable.layoutOf(
-          clusterBy, bucketBy, truncBy, temporalBy)))
+        stampedLayout = Some(SnapshotTable.declaredLayout(m)))
     }
   }
 
@@ -823,19 +773,11 @@ private[sources] class SnapshotStreamingWrite(
   * deletes exactly this attempt's files. */
 private[sources] class SnapshotBatchWrite(
     table: String,
+    m: SnapshotTable.Manifest,
     schema: StructType,
-    statsCols: Seq[String],
-    clusterBy: Option[String],
-    bucketBy: Option[(String, Int)],
-    truncBy: Option[(String, Int)],
-    temporalBy: Option[(String, String)],
-    maxRows: Option[Long],
     overwrite: Boolean) extends BatchWrite {
 
-  private val stage = {
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    s"$table/data/v${SnapshotTable.currentVersion(table) + 1}_w$token"
-  }
+  private val stage = SnapshotWrites.stageDir(table, SnapshotTable.currentVersion(table) + 1)
 
   /** Row-level rewrites receive `[__row_operation, data...]` rows (the
     * ReplaceData plan prepends the op column; Spark's own projecting
@@ -843,49 +785,13 @@ private[sources] class SnapshotBatchWrite(
     * the replace subclass flips this so the writer strips it. */
   protected def dropOpColumn: Boolean = false
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // the cluster/bucket key is ALWAYS tracked: a cluster key's
-    // min == max stat is how the scan recovers SPJ partition values
-    // from the manifest; a bucket key's range adds free range pruning
-    // beside the __bucket stamp
-    val tracked = (statsCols ++
-      (clusterBy.toSeq ++ bucketBy.map(_._1) ++ truncBy.map(_._1) ++
-        temporalBy.map(_._1))
-        .filterNot(statsCols.contains))
-      .distinct.flatMap { c =>
-        schema.fields.zipWithIndex.find(_._1.name == c).map {
-          case (f, i) => (c, i, f.dataType)
-        }
-      }
-    val cluster = clusterBy.map { k =>
-      val i = schema.fieldIndex(k)
-      (i, schema.fields(i).dataType)
-    }
-    val bucket = bucketBy.map { case (c, n) =>
-      val i = schema.fieldIndex(c)
-      (i, schema.fields(i).dataType, n)
-    }
-    val trunc = truncBy.map { case (c, w) =>
-      val i = schema.fieldIndex(c)
-      (i, schema.fields(i).dataType, w)
-    }
-    val temporal = temporalBy.map { case (c, u) =>
-      val i = schema.fieldIndex(c)
-      (i, schema.fields(i).dataType, u)
-    }
-    new SnapshotDataWriterFactory(stage, tracked, cluster, bucket,
-      Bridge.parquetRowWriter(SparkSession.active, schema),
-      if (dropOpColumn) Some(schema) else None, maxRows, trunc, temporal)
-  }
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    SnapshotWrites.dataWriterFactory(stage, m.extra, schema,
+      dropOpSchema = if (dropOpColumn) Some(schema) else None)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val entries = messages.collect {
-      case SnapshotWriteMessage(es) => es
-    }.flatten.sortBy(_.path).toSeq
-    SnapshotTable.publishFiles(table, schema, entries, append = !overwrite,
-      stampedLayout = Some(SnapshotTable.layoutOf(
-        clusterBy, bucketBy, truncBy, temporalBy)))
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    SnapshotTable.publishFiles(table, schema, SnapshotWrites.entriesOf(messages),
+      append = !overwrite, stampedLayout = Some(SnapshotTable.declaredLayout(m)))
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     messages.foreach {
@@ -1359,27 +1265,16 @@ private[sources] class SnapshotRowLevelOperation(
   * tables), but commit swaps the scanned files for the written ones. */
 private[sources] class SnapshotGroupReplaceWrite(
     table: String,
+    m: SnapshotTable.Manifest,
     schema: StructType,
-    statsCols: Seq[String],
-    clusterBy: Option[String],
-    bucketBy: Option[(String, Int)],
-    truncBy: Option[(String, Int)],
-    temporalBy: Option[(String, String)],
-    maxRows: Option[Long],
     scanned: () => Set[String])
-    extends SnapshotBatchWrite(table, schema, statsCols, clusterBy, bucketBy, truncBy,
-      temporalBy, maxRows, overwrite = false) {
+    extends SnapshotBatchWrite(table, m, schema, overwrite = false) {
 
   override protected def dropOpColumn: Boolean = true
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val entries = messages.collect {
-      case SnapshotWriteMessage(es) => es
-    }.flatten.sortBy(_.path).toSeq
-    SnapshotTable.publishReplace(table, scanned(), entries,
-      stampedLayout = Some(SnapshotTable.layoutOf(
-        clusterBy, bucketBy, truncBy, temporalBy)))
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    SnapshotTable.publishReplace(table, scanned(), SnapshotWrites.entriesOf(messages),
+      stampedLayout = Some(SnapshotTable.declaredLayout(m)))
 }
 
 /** Commit message of a DELTA write: the post-image data-file entries
@@ -1454,22 +1349,11 @@ private[sources] class SnapshotDeltaBatchWrite(
     m: SnapshotTable.Manifest,
     key: String) extends DeltaBatchWrite {
 
-  private val stage = {
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    s"$table/data/v${m.version + 1}_w$token"
-  }
+  private val stage = SnapshotWrites.stageDir(table, m.version + 1)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     val schema = m.schema
-    val statsCols = {
-      val declared = SnapshotTable.statsColumnsOf(m)
-      if (declared.contains(key)) declared else declared :+ key
-    }
-    val tracked = statsCols.flatMap { c =>
-      schema.fields.zipWithIndex.find(_._1.name == c).map {
-        case (f, i) => (c, i, f.dataType)
-      }
-    }
+    val tracked = SnapshotWrites.trackedStats(m.extra, schema, Seq(key))
     val keyField = schema.fields(schema.fieldIndex(key))
     new SnapshotDeltaWriterFactory(stage, tracked,
       Bridge.parquetRowWriter(SparkSession.active, schema),
@@ -1564,18 +1448,11 @@ private[sources] class SnapshotPosDeltaBatchWrite(
     table: String,
     m: SnapshotTable.Manifest) extends DeltaBatchWrite {
 
-  private val stage = {
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    s"$table/data/v${m.version + 1}_w$token"
-  }
+  private val stage = SnapshotWrites.stageDir(table, m.version + 1)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     val schema = m.schema
-    val tracked = SnapshotTable.statsColumnsOf(m).flatMap { c =>
-      schema.fields.zipWithIndex.find(_._1.name == c).map {
-        case (f, i) => (c, i, f.dataType)
-      }
-    }
+    val tracked = SnapshotWrites.trackedStats(m.extra, schema)
     val posSchema = StructType(Seq(
       StructField("_file", StringType, nullable = false),
       StructField("_pos", LongType, nullable = false)))

@@ -598,36 +598,18 @@ object SnapshotTable {
     //    where write + footer-less re-read + stats-agg used to take
     //    three, and the just-written data is never read back (at scale,
     //    half the commit I/O; r18 guide §1.2/§5)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir = s"$table/data/v${next}_$token"
-    val newFiles: Vector[FileEntry] = writeWithStats(df, dataDir, statsColumns)
+    val newFiles = writeFiles(df, SnapshotWrites.dataWriterFactory(
+      SnapshotWrites.stageDir(table, next), Map.empty, df.schema, statsColumns, sketch = true))
     // 2–3. manifest assembly + atomic-exclusive publication
     publishManifest(table, next, current, publishSchema.getOrElse(df.schema),
       carriedSegments, carriedFiles ++ newFiles, mode, extra, io)
   }
 
-  /** Write `df` as parquet files under `dataDir` with every declared
-    * manifest stat folded task-side (the rolling writer's single pass):
-    * returns the path-sorted [[FileEntry]]s, exactly what the old
-    * write-then-re-aggregate pass recorded — same stat channels, same
-    * HLL++ estimator with the same relativeSD — minus the re-read.
-    * Empty input partitions leave no file (the lazy-open rule), where
-    * the old path could write an unreferenced empty file. */
-  private def writeWithStats(
-      df: DataFrame,
-      dataDir: String,
-      statsColumns: Seq[String]): Vector[FileEntry] = {
-    val spark = df.sparkSession
-    val schema = df.schema
-    val tracked = statsColumns.map { c =>
-      val i = schema.fields.indexWhere(_.name == c)
-      require(i >= 0, s"stats column $c not in ${schema.simpleString}")
-      (c, i, schema.fields(i).dataType)
-    }
-    val factory = new SnapshotDataWriterFactory(
-      dataDir, tracked, cluster = None, bucket = None,
-      Bridge.parquetRowWriter(spark, schema),
-      ndv = statsColumns.nonEmpty)
+  /** Write `df` through `factory`'s task-side rolling writers, every
+    * manifest stat folded over the same pass the bytes take (no
+    * re-read), and return the path-sorted [[FileEntry]]s. Empty input
+    * partitions leave no file (the lazy-open rule). */
+  private def writeFiles(df: DataFrame, factory: SnapshotDataWriterFactory): Vector[FileEntry] =
     df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
       if (!it.hasNext) Iterator.empty
       else {
@@ -642,7 +624,6 @@ object SnapshotTable {
         } catch { case t: Throwable => w.abort(); throw t }
       }
     }.collect().flatten.toVector.sortBy(_.path)
-  }
 
   /** Assemble a manifest for `next` — carried segments referenced
     * VERBATIM (no rewrite: this is what keeps commit cost O(new files +
@@ -804,37 +785,17 @@ object SnapshotTable {
       publishSchema = Some(publishSchema))
   }
 
-  /** Publish a commit from ALREADY-WRITTEN data files — the tail the
-    * DSv2 BatchWrite needs: executors wrote the files (and computed
-    * their stats) task-side, the driver holds only the file ENTRIES,
-    * and this turns them into an append/overwrite manifest under the
-    * same rules as [[commit]] (extend-only schema on append, parent
-    * segments carried by reference, DV state + table-level extras —
-    * cluster spec, declared stats columns — carried verbatim; one
-    * atomic publication, CME to the loser of a race). The files must
-    * already live under `$table/data/` (vacuum's in-flight rule
-    * protects `v<N>_<token>` dirs above the current version). */
-  /** The layout-declaration map a write ROUTES AND STAMPS under — what
-    * [[publishFiles]]/[[publishReplace]] compare against the CURRENT
-    * manifest at commit: a long-lived writer (a streaming epoch, a
-    * planned INSERT) built before an evolveLayout would otherwise
-    * publish files stamped under the OLD transforms at a sequence the
-    * generation rule reads as NEW-spec — silently poisoning SPJ
-    * grouping. Divergence refuses loudly: restart the writer. */
-  private[sources] def layoutOf(
-      cluster: Option[String],
-      bucket: Option[(String, Int)],
-      trunc: Option[(String, Int)],
-      temporal: Option[(String, String)]): Map[String, String] =
-    (cluster.map(ClusterK -> _) ++
-      bucket.map { case (c, n) => BucketK -> s"$c:$n" } ++
-      trunc.map { case (c, w) => TruncK -> s"$c:$w" } ++
-      temporal.map { case (c, u) => TemporalK -> s"$c:$u" }).toMap
-
+  /** A write carries the layout of the manifest it was planned against
+    * (its routing, cuts and stamps); [[publishFiles]]/[[publishReplace]]
+    * compare it with the CURRENT manifest at commit: a long-lived writer
+    * (a streaming epoch, a planned INSERT) built before an evolveLayout
+    * would otherwise publish files stamped under the OLD transforms at a
+    * sequence the generation rule reads as NEW-spec — silently poisoning
+    * SPJ grouping. Divergence refuses loudly: restart the writer. */
   private def requireLayoutUnmoved(
       m: Manifest, table: String, stamped: Option[Map[String, String]]): Unit =
     stamped.foreach { sl =>
-      val cur = m.extra.view.filterKeys(LayoutKeys).toMap
+      val cur = declaredLayout(m)
       require(cur == sl,
         s"$table's layout evolved mid-write (the writer routed/stamped under " +
           s"${if (sl.isEmpty) "no layout" else sl.mkString(", ")}, the table now " +
@@ -853,6 +814,16 @@ object SnapshotTable {
     publishFiles(table, schema, entries, append = true,
       stampedLayout = Some(stale))
 
+  /** Publish a commit from ALREADY-WRITTEN data files — the tail the
+    * DSv2 BatchWrite needs: executors wrote the files (and computed
+    * their stats) task-side, the driver holds only the file ENTRIES,
+    * and this turns them into an append/overwrite manifest under the
+    * same rules as [[commit]] (extend-only schema on append, parent
+    * segments carried by reference, DV state + table-level extras —
+    * cluster spec, declared stats columns — carried verbatim; one
+    * atomic publication, CME to the loser of a race). The files must
+    * already live under `$table/data/` (vacuum's in-flight rule
+    * protects `v<N>_<token>` dirs above the current version). */
   private[sources] def publishFiles(
       table: String,
       schema: StructType,
@@ -1496,7 +1467,7 @@ object SnapshotTable {
     * KeyGroupedPartitioning and a co-clustered join plan with ZERO
     * exchange (the Iceberg identity-partition + storage-partitioned-join
     * shape). Set via `commit(clusterBy = ...)`, carried forward on
-    * appends, cleared by overwrite. */
+    * appends and through compaction, cleared by an API overwrite. */
   private[sources] val ClusterK = "cluster"
 
   /** The identity-cluster column recorded at commit, if any. */
@@ -1557,10 +1528,14 @@ object SnapshotTable {
     m.extra.get(AdvisoryBytesK).map(_.toLong)
 
   /** The declared bucket layout (column, bucket count), if any. */
-  def bucketSpecOf(m: Manifest): Option[(String, Int)] =
-    m.extra.get(BucketK).map { s =>
+  def bucketSpecOf(m: Manifest): Option[(String, Int)] = bucketSpecFromLayout(m.extra)
+
+  /** A `<col>:<arg>` layout declaration under `key` of a declaration
+    * map (a manifest's extras or one past generation's layout). */
+  private def layoutArg(kv: Map[String, String], key: String): Option[(String, String)] =
+    kv.get(key).map { s =>
       val i = s.lastIndexOf(':')
-      (s.substring(0, i), s.substring(i + 1).toInt)
+      (s.substring(0, i), s.substring(i + 1))
     }
 
   /** Reserved manifest key: the table's TRUNCATE layout (`<col>:<w>`
@@ -1573,11 +1548,10 @@ object SnapshotTable {
   private[graft] val TruncStat = "__trunc"
 
   /** The declared truncate layout (column, width), if any. */
-  def truncSpecOf(m: Manifest): Option[(String, Int)] =
-    m.extra.get(TruncK).map { s =>
-      val i = s.lastIndexOf(':')
-      (s.substring(0, i), s.substring(i + 1).toInt)
-    }
+  def truncSpecOf(m: Manifest): Option[(String, Int)] = truncSpecFromLayout(m.extra)
+
+  private[sources] def truncSpecFromLayout(kv: Map[String, String]): Option[(String, Int)] =
+    layoutArg(kv, TruncK).map { case (c, w) => (c, w.toInt) }
 
   /** Reserved manifest key: the table's TEMPORAL layout (`<col>:<unit>`
     * at `CREATE TABLE ... PARTITIONED BY (days(ts))` — also months/
@@ -1592,15 +1566,19 @@ object SnapshotTable {
   private[graft] val TemporalStat = "__tpart"
 
   /** The declared temporal layout (column, unit), if any. */
-  def temporalSpecOf(m: Manifest): Option[(String, String)] =
-    m.extra.get(TemporalK).map { s =>
-      val i = s.lastIndexOf(':')
-      (s.substring(0, i), s.substring(i + 1))
-    }
+  def temporalSpecOf(m: Manifest): Option[(String, String)] = temporalSpecFromLayout(m.extra)
+
+  private[sources] def temporalSpecFromLayout(kv: Map[String, String]): Option[(String, String)] =
+    layoutArg(kv, TemporalK)
 
   /** The four layout-declaration keys — what PARTITION-SPEC EVOLUTION
     * swaps out as a unit. */
   private[graft] val LayoutKeys: Set[String] = Set(ClusterK, BucketK, TruncK, TemporalK)
+
+  /** The layout `m` declares (its [[LayoutKeys]] entries): what a write
+    * planned against `m` routes, cuts and stamps under. */
+  private[graft] def declaredLayout(m: Manifest): Map[String, String] =
+    m.extra.view.filterKeys(LayoutKeys).toMap
 
   /** Reserved manifest key: the version since which the CURRENT layout
     * keys apply — partition-spec evolution's generation boundary.
@@ -1774,16 +1752,13 @@ object SnapshotTable {
     * `seq`: the current keys when seq >= layoutsince, else the newest
     * past generation starting at or before seq. */
   def layoutForSeq(m: Manifest, seq: Long): Map[String, String] =
-    if (seq >= layoutSinceOf(m)) m.extra.view.filterKeys(LayoutKeys).toMap
+    if (seq >= layoutSinceOf(m)) declaredLayout(m)
     else layoutHistOf(m).filter(_._1 <= seq).lastOption.map(_._2)
       .getOrElse(Map.empty)
 
   /** Parse a bucket spec (`col:n`) out of a generation's layout map. */
   private[graft] def bucketSpecFromLayout(kv: Map[String, String]): Option[(String, Int)] =
-    kv.get(BucketK).map { s =>
-      val i = s.lastIndexOf(':')
-      (s.substring(0, i), s.substring(i + 1).toInt)
-    }
+    layoutArg(kv, BucketK).map { case (c, n) => (c, n.toInt) }
 
   /** Route every row of key `k` to the one partition owning that key —
     * an EXACT partitioner, not hash-modulo (two keys must never share a
@@ -1839,10 +1814,10 @@ object SnapshotTable {
     * post-images), and its recorded key count (-1 = unrecorded legacy;
     * counts let the V2 reader budget its in-memory delete set). Legacy
     * entries (bare hex path) read as seq = MaxValue: they predate
-    * sequencing and applied to every file — semantics preserved. */
-  /** One deletion-vector sidecar reference. `rangeL`/`rangeS` record
-    * the delete keys' observed [min, max] at write time (same pass as
-    * the count — integral keys widened to Long, string keys raw):
+    * sequencing and applied to every file — semantics preserved.
+    * `rangeL`/`rangeS` record the delete keys' observed [min, max] at
+    * write time (same pass as the count — integral keys widened to
+    * Long, string keys raw):
     * consumers that only need "which carried files CAN this DV hit"
     * (the incremental change feed's pre-image prune) answer from the
     * manifest line alone, zero sidecar reads. Absent on legacy refs —
@@ -2256,7 +2231,6 @@ object SnapshotTable {
       rangeL: Option[(Long, Long)] = None,
       rangeS: Option[(String, String)] = None)
 
-  /** Table-level declarations every metadata commit must carry. */
   /** Every table-level DECLARATION key a descendant commit must carry
     * forward verbatim: layout (cluster/bucket/trunc/temporal + the spec-
     * evolution generation markers), stats columns, MoR key, per-file row
@@ -2583,10 +2557,18 @@ object SnapshotTable {
     * writers need, done the snapshot way: rewrite the current
     * snapshot's many small files into ceil(bytes/targetBytes) files and
     * publish the result as a NEW snapshot (mode=overwrite, identical
-    * rows). Readers in flight keep their version; time travel still
-    * reaches the fragmented history; vacuum reclaims it later. Unlike
-    * GraftSinks.compact's in-place directory swap there is NO window
-    * where the table does not exist. Returns (filesBefore, version). */
+    * rows, every table declaration kept). Readers in flight keep their
+    * version; time travel still reaches the fragmented history; vacuum
+    * reclaims it later. Unlike GraftSinks.compact's in-place directory
+    * swap there is NO window where the table does not exist. The
+    * rewrite keeps the table's own layout ([[rewrite]]); `clusterBy` is
+    * Delta's OPTIMIZE cluster arm: the rewrite also range-clusters on
+    * the given columns so their recorded stats become disjoint and
+    * selective reads prune to ~1 file — appends fragment the clustering
+    * over time, this one call restores it transactionally.
+    * `statsColumns` adds recorded stats beside the declared ones.
+    * Transform-laid-out tables (bucket/truncate/temporal) refuse both
+    * overrides. Returns (filesBefore, version). */
   def compactSnapshot(
       spark: SparkSession,
       table: String,
@@ -2594,61 +2576,18 @@ object SnapshotTable {
       statsColumns: Seq[String] = Nil,
       clusterBy: Seq[String] = Nil,
       io: SnapshotIO = LocalSnapshotIO): (Int, Long) = {
-    val cur = currentVersion(table, io)
-    val m = manifest(table, cur, io)
-    // a transform-laid-out table (bucket/truncate/temporal) compacts
-    // through the LAYOUT-PRESERVING per-group rewrite — the rolling
-    // stamping writers, so every rewritten file keeps its group stamp
-    // and SPJ/pruning survive the maintenance pass
-    if (bucketSpecOf(m).nonEmpty || truncSpecOf(m).nonEmpty ||
-        temporalSpecOf(m).nonEmpty) {
-      require(clusterBy.isEmpty && statsColumns.isEmpty,
-        s"compactSnapshot on transform-laid-out $table rewrites under the " +
-          "table's OWN declared layout — clusterBy/statsColumns overrides refuse")
-      return compactLayout(spark, table, targetBytes, io)
-    }
-    require(m.files.nonEmpty, s"$table snapshot $cur has no files to compact")
-    val bytes = m.files.map(f => io.size(f.path)).sum
-    val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val cu = read(spark, table, Some(cur), io)
-    // clusterBy = Delta's OPTIMIZE ... ZORDER/cluster maintenance arm:
-    // instead of a plain coalesce, the rewrite range-clusters on the
-    // given columns so the recorded stats become disjoint and
-    // selective reads prune to ~1 file — appends fragment the
-    // clustering over time, this one call restores it transactionally
-    val rewritten =
-      if (clusterBy.isEmpty) cu.coalesce(n)
-      else cu.repartitionByRange(n, clusterBy.map(col): _*)
-        .sortWithinPartitions(clusterBy.map(col): _*)
-    val v = commit(
-      rewritten,
-      table,
-      append = false,
-      expectedCurrent = Some(cur),
-      statsColumns = if (statsColumns.isEmpty) clusterBy else statsColumns,
-      extra = Map("compacted-from" -> cur.toString),
-      io = io)
-    (m.files.size, v)
+    val m = manifest(table, currentVersion(table, io), io)
+    require(!transformLaidOut(m) || (clusterBy.isEmpty && statsColumns.isEmpty),
+      s"compactSnapshot on transform-laid-out $table rewrites under the " +
+        "table's OWN declared layout — clusterBy/statsColumns overrides refuse")
+    (m.files.size,
+      rewrite(spark, table, m, targetBytes, io, statsColumns ++ clusterBy, rangeBy = clusterBy))
   }
 
-  /** LAYOUT-PRESERVING compaction for transform-laid-out tables
-    * (bucket / truncate / temporal — and compound time×hash): the
-    * maintenance pass a streaming-append bucketed fact needs. Small
-    * files consolidate per GROUP: rows are re-grouped by the exact
-    * transform expressions the write path routes by (Catalyst-native —
-    * `hash()` IS the writer's Murmur3 seed-42 for widened-long/UTF-8
-    * keys; truncate/temporal via pmod-floored arithmetic, months/years
-    * through timezone-free DATE calendar functions), sorted group-
-    * contiguous within tasks, and rewritten task-side through the SAME
-    * rolling stamping writers the DSv2 INSERT uses — so every output
-    * file carries its `__bucket`/`__trunc`/`__tpart` min==max stamp
-    * and the table's SPJ grouping and pruning survive the rewrite
-    * (the property the old blanket refusal protected, now maintained
-    * instead of avoided). Reads flow DV-applied and the overwrite
-    * commit drops DV state — same materialization contract as
-    * [[compactSnapshot]]; the commit is PINNED at parent+1, so a
-    * racing writer turns into a loud CME, never silent row loss.
-    * Returns (filesBefore, publishedVersion). */
+  /** Does `m` declare a bucket, truncate or temporal transform? */
+  private def transformLaidOut(m: Manifest): Boolean =
+    bucketSpecOf(m).nonEmpty || truncSpecOf(m).nonEmpty || temporalSpecOf(m).nonEmpty
+
   /** SELECTIVE layout maintenance — Iceberg's filtered
     * rewrite_data_files: rewrite ONLY the fragmented groups (a layout
     * stamp tuple held by more than one file), carrying every
@@ -2677,8 +2616,7 @@ object SnapshotTable {
     val cur = currentVersion(table, io)
     require(cur > 0, s"cannot compact non-existent table $table")
     val m = manifest(table, cur, io)
-    require(bucketSpecOf(m).nonEmpty || truncSpecOf(m).nonEmpty ||
-      temporalSpecOf(m).nonEmpty,
+    require(transformLaidOut(m),
       s"compactFragmented needs a transform layout (bucket/truncate/temporal) " +
         s"on $table — group membership is the stamp; plain tables use " +
         "compactSnapshot")
@@ -2699,8 +2637,7 @@ object SnapshotTable {
       .groupBy(_._1).valuesIterator.filter(_.size > 1).flatMap(_.map(_._2)).toSeq
     if (frag.isEmpty) return (0, 0, cur)
     val groups = frag.flatMap(stampOf).distinct.size
-    val (_, v) = compactLayout(spark, table, targetBytes, io, only = Some(frag))
-    (groups, frag.size, v)
+    (groups, frag.size, rewrite(spark, table, m, targetBytes, io, only = Some(frag)))
   }
 
   /** GENERATION-TARGETED compaction — partition-spec evolution's day-2
@@ -2737,15 +2674,13 @@ object SnapshotTable {
     require(since > 0,
       s"$table records no partition-spec evolution (no generation boundary) — " +
         "compactSnapshot / compactFragmented are the maintenance passes here")
-    require(bucketSpecOf(m).nonEmpty || truncSpecOf(m).nonEmpty ||
-      temporalSpecOf(m).nonEmpty,
+    require(transformLaidOut(m),
       s"$table's current layout declares no transform (bucket/truncate/" +
         "temporal) to restamp the old generation under — a layout evolved to " +
         "'none' or an identity cluster re-unifies through compactSnapshot")
     val old = m.files.filter(_.seq < since)
     if (old.isEmpty) return (0, cur)
-    val (_, v) = compactLayout(spark, table, targetBytes, io, only = Some(old))
-    (old.size, v)
+    (old.size, rewrite(spark, table, m, targetBytes, io, only = Some(old)))
   }
 
   /** Split the outstanding position-delete sidecar set around a
@@ -2804,19 +2739,45 @@ object SnapshotTable {
     if (all.isEmpty) Map.empty else Map(PosDvFilesK -> posDvEncode(all))
   }
 
-  private def compactLayout(
+  /** The one LAYOUT-PRESERVING rewrite behind every compaction entry
+    * point — [[compactSnapshot]], [[compactZOrder]],
+    * [[compactFragmented]] and [[compactEvolved]]:
+    *
+    *  - READ: delete-applied, of the full snapshot or of the `only`
+    *    file selection (outstanding deletes materialize).
+    *  - LAY OUT: rows re-group by the exact transform expressions the
+    *    write path routes by (Catalyst-native — `hash()` IS the writer's
+    *    Murmur3 seed-42 for widened-long/UTF-8 keys; truncate/temporal
+    *    via pmod-floored arithmetic, months/years through timezone-free
+    *    DATE calendar functions; an identity cluster groups on its own
+    *    column), optionally range-clustered within groups on `rangeBy`
+    *    or on the Morton key of `zorderBy`, and sort group-contiguous
+    *    within tasks. A table with neither groups nor a key coalesces,
+    *    with no shuffle.
+    *  - WRITE: task-side through the table's write layout
+    *    ([[SnapshotWrites.dataWriterFactory]]) — the rolling writer cuts
+    *    one file per group and stamps it (`__bucket`/`__trunc`/`__tpart`
+    *    min == max, one key per identity-cluster file), maxRowsPerFile
+    *    splits hot groups, and the declared stats, layout columns and
+    *    `extraStats` record with an NDV sketch.
+    *  - PUBLISH: pinned at parent+1, so a racing writer turns into a
+    *    loud CME, never silent row loss. A full rewrite is mode=overwrite
+    *    carrying every table declaration and dropping the (now
+    *    materialized) DV state; a selective one is mode=merge (below).
+    *
+    * Returns the published version. */
+  private def rewrite(
       spark: SparkSession,
       table: String,
+      m: Manifest,
       targetBytes: Long,
       io: SnapshotIO,
+      extraStats: Seq[String] = Nil,
+      rangeBy: Seq[String] = Nil,
       zorderBy: Seq[String] = Nil,
-      only: Option[Seq[FileEntry]] = None): (Int, Long) = {
-    val cur = currentVersion(table, io)
-    val m = manifest(table, cur, io)
+      only: Option[Seq[FileEntry]] = None): Long = {
+    val cur = m.version
     require(m.files.nonEmpty, s"$table snapshot $cur has no files to compact")
-    val bucket = bucketSpecOf(m)
-    val trunc = truncSpecOf(m)
-    val temporal = temporalSpecOf(m)
     val schema = m.schema
     val DayM = 86400L * 1000000L
     val HourM = 3600L * 1000000L
@@ -2860,64 +2821,30 @@ object SnapshotTable {
       case other => throw new IllegalArgumentException(s"unknown temporal unit $other")
     }
     val groupCols: Seq[org.apache.spark.sql.Column] =
-      temporal.map { case (c, u) => temporalCol(c, u) }.toSeq ++
-        bucket.map { case (c, n) => bucketCol(c, n) } ++
-        trunc.map { case (c, w) => truncCol(c, w) }
+      clusterKeyOf(m).map(col).toSeq ++
+        temporalSpecOf(m).map { case (c, u) => temporalCol(c, u) } ++
+        bucketSpecOf(m).map { case (c, n) => bucketCol(c, n) } ++
+        truncSpecOf(m).map { case (c, w) => truncCol(c, w) }
     val scope = only.getOrElse(m.files)
     val bytes = scope.map(f => if (f.size >= 0) f.size else io.size(f.path)).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    // delete-applied read (deletes materialize; the FULL rewrite's
-    // overwrite then drops the chain, a SELECTIVE rewrite carries it
-    // for the untouched files), re-grouped so each group lands whole
-    // in one task — the rolling writer then cuts one stamped file per
-    // group (maxRowsPerFile still splits hot groups)
     val base = readFiles(spark, table, m, only)
+    // a Morton key range-partitions like a column key: on (groups, __z)
+    // a hot group splits across tasks at z boundaries, each task's files
+    // keeping the group stamp plus NARROW z-column bounds
+    val (keyed, rangeKey) =
+      if (zorderBy.isEmpty) (base, rangeBy.map(col))
+      else (withZKey(base, zorderBy), Seq(col("__z")))
+    val key = groupCols ++ rangeKey
     val laid =
-      if (zorderBy.isEmpty)
-        base.repartition(n, groupCols: _*).sortWithinPartitions(groupCols: _*)
-      else {
-        // per-period z-order: range-partitioning on (period, __z) keeps
-        // periods contiguous AND splits hot periods across tasks at z
-        // boundaries — each task's files carry the period stamp plus
-        // NARROW z-column bounds (disjoint z ranges across tasks), so
-        // intra-period reads prune to a strict file subset. The final
-        // projection back to the table schema is ordering-preserving,
-        // and the rolling writer still cuts at every period change.
-        val zc = groupCols :+ col("__z")
-        withZKey(base, zorderBy)
-          .repartitionByRange(n, zc: _*)
-          .sortWithinPartitions(zc: _*)
-          .select(schema.fieldNames.map(col).toSeq: _*)
-      }
-    val statsCols = statsColumnsOf(m)
-    val tracked = (statsCols ++
-      (bucket.map(_._1) ++ trunc.map(_._1) ++ temporal.map(_._1) ++ zorderBy)
-        .filterNot(statsCols.contains))
-      .distinct.flatMap { c =>
-        schema.fields.zipWithIndex.find(_._1.name == c).map {
-          case (f, i) => (c, i, f.dataType)
-        }
-      }
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val stage = s"$table/data/v${cur + 1}_w$token"
-    val factory = new SnapshotDataWriterFactory(stage, tracked, None,
-      bucket.map { case (c, bn) => (schema.fieldIndex(c), schema(c).dataType, bn) },
-      Bridge.parquetRowWriter(spark, schema),
-      None, maxRowsPerFileOf(m),
-      trunc.map { case (c, w) => (schema.fieldIndex(c), schema(c).dataType, w) },
-      temporal.map { case (c, u) =>
-        val i = schema.fieldIndex(c)
-        (i, schema.fields(i).dataType, u)
-      })
-    val messages = laid.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      val w = factory.createWriter(pid, pid.toLong)
-      try { it.foreach(w.write); Iterator.single(w.commit()) }
-      catch { case t: Throwable => w.abort(); throw t }
-    }.collect()
-    val entries = messages.collect { case SnapshotWriteMessage(es) => es }
-      .flatten.sortBy(_.path).toSeq
-    val v = only match {
-      case Some(frag) =>
+      if (key.isEmpty) base.coalesce(n)
+      else if (rangeKey.isEmpty) base.repartition(n, key: _*).sortWithinPartitions(key: _*)
+      else keyed.repartitionByRange(n, key: _*).sortWithinPartitions(key: _*)
+        .select(schema.fieldNames.map(col).toSeq: _*)
+    val entries = writeFiles(laid, SnapshotWrites.dataWriterFactory(
+      SnapshotWrites.stageDir(table, cur + 1), m.extra, schema, extraStats, sketch = true))
+    only match {
+      case Some(sel) =>
         // selective: untouched files ride VERBATIM (original entries,
         // original seq — their generation and DV scoping unchanged);
         // mode=merge, like every partial rewrite. The position-delete
@@ -2926,9 +2853,9 @@ object SnapshotTable {
         // not survive (their files leave the manifest), rows naming
         // kept files re-land as one consolidated sidecar, and sidecars
         // provably disjoint from the rewrite carry verbatim.
-        val fragPaths = frag.map(_.path).toSet
-        val kept = m.files.filterNot(f => fragPaths(f.path))
-        val posCarry = splitPosSidecars(spark, m, fragPaths, table, cur + 1, io)
+        val selPaths = sel.map(_.path).toSet
+        val kept = m.files.filterNot(f => selPaths(f.path))
+        val posCarry = splitPosSidecars(spark, m, selPaths, table, cur + 1, io)
         publishManifest(table, cur + 1, cur, schema, Vector.empty, kept ++ entries,
           "merge", tableDecls(m) ++
             (dvExtra(m) - PosDvFilesK) ++ posCarry ++
@@ -2937,31 +2864,15 @@ object SnapshotTable {
         publishManifest(table, cur + 1, cur, schema, Vector.empty, entries,
           "overwrite", tableDecls(m) ++ Map("compacted-from" -> cur.toString), io)
     }
-    (only.map(_.size).getOrElse(m.files.size), v)
   }
 
-  /** Z-ORDER compaction — the multi-dimensional arm of
-    * [[compactSnapshot]] (Delta's `OPTIMIZE ... ZORDER BY`), now also
-    * reachable from SQL via `CALL <cat>.system.compact('t',
-    * zorder_by => 'a,b')`: the rewrite clusters on the MORTON
-    * INTERLEAVE of up to 7 integral dimensions, each scaled to an
-    * 8-bit grid from its observed bounds (a 1-row broadcast), and
-    * records per-file stats on every RAW column — the curve co-locates
-    * all dimensions, so a selective read on ANY of them prunes at the
-    * manifest, where a single-column sort prunes one and scans for the
-    * rest (src_snapshot_zorder pins the subset property). Equal bit
-    * budget per dimension is what balances the curve. One column
-    * degenerates to the plain range-cluster (identical semantics,
-    * no interleave cost). Same transactional tail as compactSnapshot:
-    * reads flow DV-applied, the overwrite commit drops DV state.
-    * Returns (filesBefore, publishedVersion). */
   /** Append an observed-bounds Morton key column `__z` over the given
     * integral columns: each value grids to 8 bits inside its column's
     * observed [min, max] (one tiny broadcast agg), bits interleave into
     * a 63-bit key — rows close in z are close in EVERY dimension, so a
     * range-partitioned rewrite on `__z` leaves per-file min/max narrow
-    * on all the columns at once. Shared by the whole-table z-order and
-    * the per-period variant (which range-partitions on (period, __z)). */
+    * on all the columns at once. [[rewrite]] range-partitions on
+    * (layout groups, __z). */
   private def withZKey(cu: DataFrame, zorderBy: Seq[String]): DataFrame = {
     val nDims = zorderBy.size
     val bounds = cu.agg(
@@ -2990,6 +2901,26 @@ object SnapshotTable {
           "derive an integral key first (days(ts), hash bucket, grid cell)")
     }
 
+  /** Z-ORDER compaction — the multi-dimensional arm of
+    * [[compactSnapshot]] (Delta's `OPTIMIZE ... ZORDER BY`), also
+    * reachable from SQL via `CALL <cat>.system.compact('t',
+    * zorder_by => 'a,b')`: the rewrite clusters on the MORTON
+    * INTERLEAVE of up to 7 integral dimensions, each scaled to an
+    * 8-bit grid from its observed bounds (a 1-row broadcast), and
+    * records per-file stats on every RAW column — the curve co-locates
+    * all dimensions, so a selective read on ANY of them prunes at the
+    * manifest, where a single-column sort prunes one and scans for the
+    * rest (src_snapshot_zorder pins the subset property). Equal bit
+    * budget per dimension is what balances the curve. On a table with
+    * layout groups (identity cluster, bucket, truncate, temporal and
+    * their compounds) the curve clusters WITHIN each group — Delta's
+    * ZORDER scoped within partitions — and every stamp survives; a
+    * bucket/truncate key's raw COLUMN may be z-ordered (within a hash
+    * bucket the key still spans its whole domain), only the temporal
+    * key itself is a no-op and refuses. One column on a table with no
+    * transform layout degenerates to the plain range-cluster (no
+    * interleave cost). Same transactional tail as compactSnapshot.
+    * Returns (filesBefore, publishedVersion). */
   def compactZOrder(
       spark: SparkSession,
       table: String,
@@ -2998,53 +2929,19 @@ object SnapshotTable {
       io: SnapshotIO = LocalSnapshotIO): (Int, Long) = {
     require(zorderBy.nonEmpty && zorderBy.size <= 7,
       s"zorder takes 1..7 columns (8 grid bits each in a 63-bit key), got ${zorderBy.size}")
-    // PER-PERIOD z-order (Delta's OPTIMIZE ... ZORDER BY scoped within
-    // partitions): on a temporally-partitioned table the rewrite keeps
-    // the period layout — rows range-partition on (period, __z), so a
-    // hot period splits into several files at z boundaries, every file
-    // keeps its min==max period stamp (pruning + per-period maintenance
-    // survive), and the recorded per-file bounds on the z columns turn
-    // narrow WITHIN each period.
-    val cur0 = currentVersion(table, io)
-    require(cur0 > 0, s"cannot z-order non-existent table $table")
-    val m0 = manifest(table, cur0, io)
-    if (temporalSpecOf(m0).nonEmpty || bucketSpecOf(m0).nonEmpty ||
-        truncSpecOf(m0).nonEmpty) {
-      // PER-GROUP z-order — Delta's `OPTIMIZE ... ZORDER BY` scoped
-      // within partitions, on ANY transform layout: the rewrite key
-      // widens to (every layout stamp, __z) — (period, __z) on plain
-      // temporal, (period, bucket|trunc, __z) on compounds, (bucket,
-      // __z) / (trunc, __z) on hash- or width-grouped tables — so the
-      // curve clusters WITHIN each layout cell, every stamp survives
-      // the rolling stamping writer (pruning + SPJ untouched), and
-      // each cell's files carry narrow z-column bounds. Z-ordering a
-      // bucket/trunc key's raw COLUMN is allowed (within a hash bucket
-      // the key still spans its whole domain — the curve adds the
-      // range pruning the equality-only bucket stamp cannot); only the
-      // temporal key itself is a no-op.
-      requireZOrderable(m0, table, zorderBy)
-      temporalSpecOf(m0).foreach(t => require(!zorderBy.contains(t._1),
-        "z-ordering the temporal partition key itself is a no-op — files are " +
-          "already period-disjoint; pick the columns queries filter WITHIN a period"))
-      return compactLayout(spark, table, targetBytes, io, zorderBy)
-    }
-    if (zorderBy.size == 1)
-      return compactSnapshot(spark, table, targetBytes,
-        statsColumns = zorderBy, clusterBy = zorderBy, io = io)
     val cur = currentVersion(table, io)
+    require(cur > 0, s"cannot z-order non-existent table $table")
     val m = manifest(table, cur, io)
-    requireNotBucketed(m, table, "compactZOrder")
-    require(m.files.nonEmpty, s"$table snapshot $cur has no files to compact")
-    requireZOrderable(m, table, zorderBy)
-    val bytes = m.files.map(f => io.size(f.path)).sum
-    val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val cu = read(spark, table, Some(cur), io)
-    val rewritten = withZKey(cu, zorderBy)
-      .repartitionByRange(n, col("__z"))
-      .sortWithinPartitions("__z")
-      .select(m.schema.fieldNames.map(col).toSeq: _*)
-    val v = commit(rewritten, table, append = false, expectedCurrent = Some(cur),
-      statsColumns = zorderBy, extra = Map("compacted-from" -> cur.toString), io = io)
+    val v =
+      if (zorderBy.size == 1 && !transformLaidOut(m))
+        rewrite(spark, table, m, targetBytes, io, zorderBy, rangeBy = zorderBy)
+      else {
+        requireZOrderable(m, table, zorderBy)
+        temporalSpecOf(m).foreach(t => require(!zorderBy.contains(t._1),
+          "z-ordering the temporal partition key itself is a no-op — files are " +
+            "already period-disjoint; pick the columns queries filter WITHIN a period"))
+        rewrite(spark, table, m, targetBytes, io, zorderBy, zorderBy = zorderBy)
+      }
     (m.files.size, v)
   }
 

@@ -253,20 +253,14 @@ private[sources] class SnapshotV2Table(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
     () => SnapshotTable.morKeyOf(m) match {
-      case Some(k) if SnapshotTable.clusterKeyOf(m).isEmpty &&
-          SnapshotTable.bucketSpecOf(m).isEmpty &&
-          SnapshotTable.truncSpecOf(m).isEmpty &&
-          SnapshotTable.temporalSpecOf(m).isEmpty =>
+      case Some(k) if SnapshotTable.declaredLayout(m).isEmpty =>
         // transform-laid-out tables (bucket/truncate/temporal) prefer
         // CoW too: the group rewrite re-routes through the stamping
         // write path, so the layout survives DML; delta post-images
         // would land unstamped and demote it
         new SnapshotDeltaOperation(table, m, info.command(), k)
       case None if SnapshotTable.deleteModeOf(m).contains("positions") &&
-          SnapshotTable.clusterKeyOf(m).isEmpty &&
-          SnapshotTable.bucketSpecOf(m).isEmpty &&
-          SnapshotTable.truncSpecOf(m).isEmpty &&
-          SnapshotTable.temporalSpecOf(m).isEmpty =>
+          SnapshotTable.declaredLayout(m).isEmpty =>
         // the morKey-LESS merge-on-read: row identity is the metadata
         // pair (_file, _pos) — Iceberg's position-delta shape. UPDATE/
         // MERGE and the non-pushable DELETEs (canDeleteWhere declines

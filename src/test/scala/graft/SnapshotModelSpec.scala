@@ -14,7 +14,8 @@ import graft.sources.{SnapshotSourceProvider, SnapshotTable, SnapshotV2Provider}
   * Each sequence starts from one base commit of (k, v) rows and applies
   * up to five operations drawn from append, merge-on-read upsert,
   * copy-on-write merge, key delete, position delete, metadata-only
-  * value-column rename and compaction. The properties: `read` at every
+  * value-column rename, compaction and two-column Z-order compaction
+  * on (k, current value column). The properties: `read` at every
   * version holds exactly the model's rows (as a multiset),
   * `readIncremental` over every append-only range holds exactly the
   * rows appended in it, and a fresh-checkpoint AvailableNow drain holds
@@ -35,6 +36,7 @@ class SnapshotModelSpec extends AnyFunSuite {
   case class DeletePositions(key: Long) extends Op
   case object RenameValue extends Op
   case object Compact extends Op
+  case object ZOrder extends Op
 
   private val key = Gen.choose(0L, 11L)
   private val rows: Gen[List[(Long, Long)]] = for {
@@ -48,7 +50,8 @@ class SnapshotModelSpec extends AnyFunSuite {
     1 -> Gen.nonEmptyListOf(key).map(ks => DeleteKeys(ks.distinct.take(3))),
     1 -> key.map(DeletePositions(_)),
     3 -> Gen.const(RenameValue),
-    2 -> Gen.const(Compact))
+    2 -> Gen.const(Compact),
+    2 -> Gen.const(ZOrder))
   private val ops: Gen[List[Op]] = Gen.choose(1, 5).flatMap(Gen.listOfN(_, op))
 
   private def kv(r: Row): (Long, Option[Long]) =
@@ -115,11 +118,12 @@ class SnapshotModelSpec extends AnyFunSuite {
           SnapshotTable.renameColumn(table, value, s"v$renames")
           value = s"v$renames"
           Some(Version(head, Some(Nil)))
-        case Compact =>
+        case Compact | ZOrder =>
           // an empty table has nothing to compact: not generated into
           if (head.isEmpty) None
           else {
-            SnapshotTable.compactSnapshot(spark, table)
+            if (o == Compact) SnapshotTable.compactSnapshot(spark, table)
+            else SnapshotTable.compactZOrder(spark, table, Seq("k", value))
             deletesOutstanding = false
             Some(Version(head, None))
           }
