@@ -307,7 +307,8 @@ class SnapshotCatalog extends TableCatalog
         deleteMode.map(SnapshotTable.DeleteModeK -> _) ++
         changeCapture.map(SnapshotTable.ChangeCaptureK -> _) ++
         advisory.map(n => SnapshotTable.AdvisoryBytesK -> n.toString) ++ layout
-    SnapshotTable.createEmpty(p, schema, extra)
+    SnapshotTable.commitOn(p, SnapshotTable.versionOnly(0L),
+      SnapshotTable.Change("create", schema = Some(schema), sets = extra))
     new SnapshotV2Table(p, SnapshotTable.manifest(p, 1L))
   }
 
@@ -365,11 +366,11 @@ class SnapshotCatalog extends TableCatalog
             s"evolveLayout: $ident already has exactly that layout")
           val hist = SnapshotTable.layoutHistOf(m) :+
             (SnapshotTable.layoutSinceOf(m), curLayout)
-          SnapshotTable.publishProps(p, m,
+          SnapshotTable.commitOn(p, m, SnapshotTable.Change("props",
             sets = newLayout ++ Map(
               SnapshotTable.LayoutSinceK -> (v + 1).toString,
               SnapshotTable.LayoutHistK -> SnapshotTable.layoutHistEncode(hist)),
-            unsets = SnapshotTable.LayoutKeys)
+            unsets = SnapshotTable.LayoutKeys))
           return loadTable(ident)
         case None =>
       }
@@ -424,7 +425,8 @@ class SnapshotCatalog extends TableCatalog
             k -> c
         }
       }
-      SnapshotTable.publishProps(p, m, applied.toMap, unsets.map(keyOf).toSet)
+      SnapshotTable.commitOn(p, m, SnapshotTable.Change("props",
+        sets = applied.toMap, unsets = unsets.map(keyOf).toSet))
       return loadTable(ident)
     }
     // METADATA-ONLY RENAME COLUMN (Iceberg's field-ID move, ordinal-
@@ -451,7 +453,8 @@ class SnapshotCatalog extends TableCatalog
     }
     added.foreach(f => require(!m.schema.fieldNames.contains(f.name),
       s"column ${f.name} already exists"))
-    SnapshotTable.publishEvolve(p, m, StructType(m.schema.fields ++ added))
+    SnapshotTable.commitOn(p, m,
+      SnapshotTable.Change("append", schema = Some(StructType(m.schema.fields ++ added))))
     loadTable(ident)
   }
 
@@ -743,19 +746,17 @@ private[sources] class SnapshotStreamingWrite(
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val entries = SnapshotWrites.entriesOf(messages)
-    val cur = SnapshotTable.currentVersion(table)
-    val last =
-      if (cur == 0) -1L
-      else SnapshotTable.manifest(table, cur).extra.get("batchid")
-        .map(_.toLong).getOrElse(-1L)
-    if (epochId <= last) {
+    // the epoch publishes on the head it checked for a replay: a head
+    // that moved since refuses (ConcurrentModificationException)
+    val head = SnapshotTable.headOf(table)
+    if (epochId <= SnapshotTable.lastBatchId(head)) {
       // replayed epoch: the engine re-ran it, but the table already
       // holds it — drop the rewrite, publish nothing (exactly-once)
       entries.foreach(e => LocalSnapshotIO.delete(e.path))
     } else {
-      SnapshotTable.publishFiles(table, schema, entries, append = true,
-        extra = Map("batchid" -> epochId.toString),
-        stampedLayout = Some(SnapshotTable.declaredLayout(m)))
+      SnapshotTable.commitOn(table, head, SnapshotTable.Change("append", entries,
+        schema = Some(schema), extra = Map("batchid" -> epochId.toString),
+        plannedOn = Some(m)))
     }
   }
 
@@ -789,9 +790,18 @@ private[sources] class SnapshotBatchWrite(
     SnapshotWrites.dataWriterFactory(stage, m.extra, schema,
       dropOpSchema = if (dropOpColumn) Some(schema) else None)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    SnapshotTable.publishFiles(table, schema, SnapshotWrites.entriesOf(messages),
-      append = !overwrite, stampedLayout = Some(SnapshotTable.declaredLayout(m)))
+  /** One atomic publication on the head: an append under the extend-
+    * only schema rule, or an overwrite that keeps the table's
+    * declarations and drops its files and delete state. */
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val entries = SnapshotWrites.entriesOf(messages)
+    SnapshotTable.commitOn(table, SnapshotTable.headOf(table),
+      if (!overwrite) SnapshotTable.Change("append", entries, schema = Some(schema),
+        plannedOn = Some(m))
+      else SnapshotTable.Change("overwrite", entries, kept = Some((Nil, Nil)),
+        schema = Some(schema), eqDeletes = Some(Nil), posDeletes = Some(Nil),
+        plannedOn = Some(m)))
+  }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     messages.foreach {
@@ -1211,7 +1221,7 @@ private[sources] class SnapshotMetaTable(
   * it to the files that can hold matching rows), applies the
   * mutation, and writes every surviving row back; the commit then
   * REPLACES exactly the scanned files with the written ones
-  * ([[SnapshotTable.publishReplace]], mode=merge) — untouched files
+  * ([[SnapshotGroupReplaceWrite]], mode=merge) — untouched files
   * ride verbatim, so a selective UPDATE against a stats-clustered
   * table costs O(touched files + batch), the same contract as the API
   * [[SnapshotTable.merge]]. The scan and the write share this
@@ -1272,9 +1282,21 @@ private[sources] class SnapshotGroupReplaceWrite(
 
   override protected def dropOpColumn: Boolean = true
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    SnapshotTable.publishReplace(table, scanned(), SnapshotWrites.entriesOf(messages),
-      stampedLayout = Some(SnapshotTable.declaredLayout(m)))
+  /** The scanned files are replaced by the written ones; every
+    * unscanned file rides verbatim. Published as mode=merge (a rewrite
+    * breaks new-files == new-rows, so incremental readers refuse across
+    * it, exactly like the API merge). Soundness is the group-based
+    * copy-on-write contract: the write's rows are EVERYTHING the scan
+    * read, post-mutation — Spark's ReplaceData plan constructs exactly
+    * that. */
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val head = SnapshotTable.headOf(table)
+    SnapshotTable.requireNoDv(head, table, "a row-level rewrite")
+    val read = scanned()
+    SnapshotTable.commitOn(table, head, SnapshotTable.Change("merge",
+      SnapshotWrites.entriesOf(messages),
+      kept = Some((Nil, head.files.filterNot(f => read(f.path)))), plannedOn = Some(m)))
+  }
 }
 
 /** Commit message of a DELTA write: the post-image data-file entries
@@ -1282,7 +1304,7 @@ private[sources] class SnapshotGroupReplaceWrite(
   * counts (the V2 reader budgets its broadcast delete set from them). */
 private[sources] case class SnapshotDeltaMessage(
     entries: Seq[SnapshotTable.FileEntry],
-    dvFiles: Seq[SnapshotTable.DvSidecarInfo]) extends WriterCommitMessage
+    dvFiles: Seq[SnapshotTable.DvRef]) extends WriterCommitMessage
 
 /** MERGE-ON-READ row-level operation — [[SupportsDelta]], the
   * Iceberg-v2 alternative to [[SnapshotRowLevelOperation]]'s group
@@ -1365,8 +1387,13 @@ private[sources] class SnapshotDeltaBatchWrite(
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.collect { case m: SnapshotDeltaMessage => m }
     val entries = msgs.flatMap(_.entries).sortBy(_.path).toSeq
-    val dvFiles = msgs.flatMap(_.dvFiles).sortBy(_.path).toSeq
-    SnapshotTable.publishDeltaCommit(table, key, entries, dvFiles)
+    // the DV refs (built with seq = -1) are stamped at this commit's
+    // sequence by the tail, like the post-image entries
+    val head = SnapshotTable.headOf(table)
+    SnapshotTable.requireDvKey(head, table, key)
+    SnapshotTable.commitOn(table, head, SnapshotTable.Change("merge", entries,
+      dvKey = Some(key),
+      eqDeletes = Some(SnapshotTable.dvRefs(head) ++ msgs.flatMap(_.dvFiles).sortBy(_.path))))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -1647,7 +1674,7 @@ private[sources] class SnapshotDeltaWriter(
           w.write(row)
         }
         w.close()
-        Seq(SnapshotTable.DvSidecarInfo(dvPath, keys.size.toLong,
+        Seq(SnapshotTable.DvRef(dvPath, -1L, keys.size.toLong,
           if (loL <= hiL) Some((loL, hiL)) else None,
           if (loS != null) Some((loS, hiS)) else None))
       }

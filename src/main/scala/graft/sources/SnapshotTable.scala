@@ -570,41 +570,6 @@ object SnapshotTable {
     Manifest(version, schema, segs1, inline1, ex, temporal)(io)
   }
 
-  /** Write `df`'s data files for version `next`, collect their stats,
-    * assemble the manifest with `carried` parent files, and publish it
-    * atomically. The shared tail of commit / merge / compaction. */
-  private def publishVersion(
-      df: DataFrame,
-      table: String,
-      next: Long,
-      current: Long,
-      carriedSegments: Seq[SegmentRef],
-      carriedFiles: Seq[FileEntry],
-      mode: String,
-      statsColumns: Seq[String],
-      extra: Map[String, String],
-      io: SnapshotIO,
-      // append commits pass the nullability-MERGED schema (commit()'s
-      // rule) — carried files must keep answering for their own nulls
-      publishSchema: Option[StructType] = None): Long = {
-    // 1. data files first, under a per-attempt unique directory: racing
-    //    or crashed attempts can only ever orphan their own files.
-    //    The write runs through the SAME task-side rolling writer the
-    //    DSv2 catalog path uses, folding every manifest stat — min/max
-    //    (strings raw, timestamps as epoch MICROS, dates as epoch DAYS,
-    //    floating columns under the CAST(long) truncation the old agg
-    //    applied), nullCount/rowCount, and the HLL++ distinct estimate —
-    //    over the same pass the bytes take: ONE Spark job per commit
-    //    where write + footer-less re-read + stats-agg used to take
-    //    three, and the just-written data is never read back (at scale,
-    //    half the commit I/O; r18 guide §1.2/§5)
-    val newFiles = writeFiles(df, SnapshotWrites.dataWriterFactory(
-      SnapshotWrites.stageDir(table, next), Map.empty, df.schema, statsColumns, sketch = true))
-    // 2–3. manifest assembly + atomic-exclusive publication
-    publishManifest(table, next, current, publishSchema.getOrElse(df.schema),
-      carriedSegments, carriedFiles ++ newFiles, mode, extra, io)
-  }
-
   /** Write `df` through `factory`'s task-side rolling writers, every
     * manifest stat folded over the same pass the bytes take (no
     * re-read), and return the path-sorted [[FileEntry]]s. Empty input
@@ -625,14 +590,160 @@ object SnapshotTable {
       }
     }.collect().flatten.toVector.sortBy(_.path)
 
+  /** What one commit changes relative to the parent manifest it was
+    * planned on. Everything it does not name carries forward verbatim
+    * through [[commitOn]]: the parent's files (segments by reference),
+    * schema, table declarations ([[DeclKeys]]) and delete state. */
+  private[graft] final case class Change(
+      mode: String,
+      // new file entries; built in memory (seq = -1), they are stamped
+      // with the commit's sequence
+      added: Seq[FileEntry] = Nil,
+      // the parent files kept, when not all of them: the segments still
+      // by reference, the entries re-bundled with `added` into fresh
+      // segments. Some((Nil, Nil)) keeps none.
+      kept: Option[(Seq[SegmentRef], Seq[FileEntry])] = None,
+      // the schema written: an append's or a merge's must extend the
+      // parent's ([[extendSchema]]); any other commit's (create,
+      // overwrite, rename) publishes as given
+      schema: Option[StructType] = None,
+      // the delete state, per format: None carries the parent's; Some is
+      // the whole new set — the parent's plus new refs (a ref built with
+      // seq = -1 is stamped with the commit's sequence), a replacement,
+      // or Nil to clear. New equality refs name their key.
+      dvKey: Option[String] = None,
+      eqDeletes: Option[Seq[DvRef]] = None,
+      posDeletes: Option[Seq[PosDvRef]] = None,
+      sets: Map[String, String] = Map.empty,
+      unsets: Set[String] = Set.empty,
+      // per-commit extras (batchid, restored-from, compacted-from, ...);
+      // one never overrides a carried declaration
+      extra: Map[String, String] = Map.empty,
+      // a long-lived writer's planning manifest: the commit refuses when
+      // the parent no longer declares the layout the writer routed and
+      // stamped under ([[requireLayoutUnmoved]])
+      plannedOn: Option[Manifest] = None,
+      // publish on this version instead of the parent's: a rollback, fork
+      // or branch publish republishes another manifest's state on top
+      onto: Option[Long] = None)
+
+  /** A stand-in for a parent the commit does not read: version
+    * `version`, with no files, schema, declarations or delete state —
+    * the parent of a table's first commit (version 0), and of an API
+    * overwrite, which carries nothing forward. */
+  private[graft] def versionOnly(version: Long, io: SnapshotIO = LocalSnapshotIO): Manifest =
+    Manifest(version, new StructType(), Nil, Nil, Map.empty)(io)
+
+  /** The head manifest, or [[versionOnly]](0) when the table does not
+    * exist yet. */
+  private[graft] def headOf(table: String, io: SnapshotIO = LocalSnapshotIO): Manifest = {
+    val cur = currentVersion(table, io)
+    if (cur == 0) versionOnly(0L, io) else manifest(table, cur, io)
+  }
+
+  /** The one replay rule of the exactly-once writers ([[appendBatch]],
+    * [[mergeBatch]], the streaming sink): the last batch id `m`
+    * recorded, -1 when none — a batch at or below it is a replay. */
+  private[sources] def lastBatchId(m: Manifest): Long =
+    m.extra.get("batchid").map(_.toLong).getOrElse(-1L)
+
+  /** THE commit tail: every snapshot commit publishes through here, as
+    * version `parent.version + 1` (or `onto + 1`). It applies the one
+    * extend-only schema rule to appends and merges, carries the parent's files,
+    * declarations and delete state unless `c` says otherwise, and
+    * publishes exclusively — a racing writer that took the version
+    * first turns this commit into a ConcurrentModificationException.
+    * Reads no manifest and runs no Spark job. */
+  private[graft] def commitOn(
+      table: String,
+      parent: Manifest,
+      c: Change,
+      io: SnapshotIO = LocalSnapshotIO): Long = {
+    c.plannedOn.foreach(p => requireLayoutUnmoved(parent, table, p))
+    val base = c.onto.getOrElse(parent.version)
+    val next = base + 1
+    val schema = c.schema match {
+      case Some(s) if (c.mode == "append" || c.mode == "merge") && parent.version > 0 =>
+        extendSchema(parent, s)
+      case Some(s) => s
+      case None    => parent.schema
+    }
+    val eq = c.eqDeletes.fold(parent.extra.view.filterKeys(Set(DvKeyK, DvFilesK)).toMap) {
+      rs =>
+        if (rs.isEmpty) Map.empty
+        else Map(DvKeyK -> c.dvKey.orElse(dvKeyOf(parent)).get,
+          DvFilesK -> dvEncode(rs.map(r => if (r.seq < 0) r.copy(seq = next) else r)))
+    }
+    val pos = c.posDeletes.fold(parent.extra.view.filterKeys(_ == PosDvFilesK).toMap)(rs =>
+      if (rs.isEmpty) Map.empty else Map(PosDvFilesK -> posDvEncode(rs)))
+    val (segments, entries) = c.kept.getOrElse((parent.segments, parent.inline))
+    publishManifest(table, next, base, schema, segments, entries ++ c.added, c.mode,
+      c.extra ++ declsOf(parent, c) ++ eq ++ pos, io)
+  }
+
+  /** The declarations commit `c` publishes on `parent`: the parent's,
+    * less `unsets`, plus `sets`. A declaration key among the free
+    * extras (`commit(extra = Map("morkey" -> k))`) lands only where the
+    * parent does not declare it. */
+  private def declsOf(parent: Manifest, c: Change): Map[String, String] =
+    c.extra.view.filterKeys(DeclKeys).toMap ++
+      (parent.extra.view.filterKeys(DeclKeys).toMap -- c.unsets) ++ c.sets
+
+  /** The one extend-only schema rule of every commit that writes rows
+    * beside the parent's files (API, SQL and streaming appends, ADD
+    * COLUMN, the API merges): `written` keeps the parent's name and type
+    * at every ordinal and may only ADD columns at the end, never under a
+    * previous name of another column (a live file may still carry it
+    * physically, and one physical column must never resolve under two
+    * names). Nullability OR-merges across generations — a column any
+    * carried file holds nulls in stays nullable, or the vectorized
+    * reader silently serves zero for those nulls under the narrower
+    * declaration (hit live: an all-NULL first commit followed by a
+    * non-null append) — and added columns publish nullable: carried
+    * files read NULL there. */
+  private def extendSchema(parent: Manifest, written: StructType): StructType = {
+    val pf = parent.schema.fields
+    val nf = written.fields
+    require(
+      nf.length >= pf.length &&
+        pf.indices.forall(i => nf(i).name == pf(i).name && nf(i).dataType == pf(i).dataType),
+      s"written schema ${written.simpleString} does not extend " +
+        s"snapshot ${parent.version}'s ${parent.schema.simpleString} — appends may only " +
+        "ADD columns at the end (drop/reorder/retype refused; rename via " +
+        "renameColumn)")
+    nf.drop(pf.length).foreach(f =>
+      require(!historicalNames(parent).contains(f.name),
+        s"added column ${f.name} collides with a PREVIOUS name of another " +
+          "column — a live file may still carry it physically, and one " +
+          "physical column must never resolve under two names; pick a " +
+          "fresh name"))
+    StructType(pf.indices.map(i => pf(i).copy(nullable = pf(i).nullable || nf(i).nullable)) ++
+      nf.drop(pf.length).map(_.copy(nullable = true)))
+  }
+
+  /** Write `df` as the data files of commit `c` on `parent`, under the
+    * stats and row-cap declarations the commit publishes — not its
+    * layout keys: the API writers do not route rows (an API append to a
+    * bucketed table writes unstamped files and the scan degrades
+    * soundly; Round25Spec pins it). */
+  private def writeFor(
+      df: DataFrame,
+      table: String,
+      parent: Manifest,
+      c: Change,
+      stats: Seq[String]): Vector[FileEntry] =
+    writeFiles(df, SnapshotWrites.dataWriterFactory(
+      SnapshotWrites.stageDir(table, parent.version + 1),
+      declsOf(parent, c).view.filterKeys(Set(StatsColsK, MaxRowsK)).toMap,
+      df.schema, stats, sketch = true))
+
   /** Assemble a manifest for `next` — carried segments referenced
     * VERBATIM (no rewrite: this is what keeps commit cost O(new files +
     * segments) instead of O(total files)), new entries bundled into
     * fresh immutable segment file(s) — and publish it atomically
     * (exactly one racing writer wins; a loser's freshly-written
     * segments orphan exactly like its data files and are reclaimed by
-    * vacuum). Also the WHOLE of zero-copy operations (rollback, fork,
-    * fast-forward publish) that re-point at existing segments. */
+    * vacuum). Called by [[commitOn]] alone. */
   private def publishManifest(
       table: String,
       next: Long,
@@ -686,10 +797,11 @@ object SnapshotTable {
     * Old snapshots keep reading under their own recorded schema.
     *
     * `statsColumns` names columns whose per-file min/max are recorded
-    * in the manifest — integer-typed columns as Long ranges, string
-    * columns as raw-string ranges — ONE aggregation over the
-    * just-written files (grouped by input_file_name, map-side
-    * combined), the price of listing-free pruning forever after.
+    * in the manifest beside the table's declared stats columns —
+    * integer-typed columns as Long ranges, string columns as raw-string
+    * ranges — folded over the write pass itself, the price of
+    * listing-free pruning forever after; a declared maxRowsPerFile caps
+    * every file written.
     * Cluster the data on the column first (repartitionByRange + local
     * sort) and the ranges become disjoint — each selective read then
     * prunes to ~1 file at the manifest.
@@ -713,60 +825,33 @@ object SnapshotTable {
       clusterBy: Option[String] = None,
       io: SnapshotIO = LocalSnapshotIO): Long = {
     val current = expectedCurrent.getOrElse(currentVersion(table, io))
+    commitFrame(df, table,
+      if (append && current > 0) manifest(table, current, io) else versionOnly(current, io),
+      append, statsColumns, extra, clusterBy, io)
+  }
+
+  /** [[commit]] on an already-resolved parent (an overwrite's carries
+    * nothing, see [[versionOnly]]). Appends carry the parent's segments
+    * by reference — a 1M-file table appends at O(new files + segment
+    * count) — with its delete state (dropping it would resurrect the
+    * deleted rows) and its declarations: table properties, not
+    * per-commit choices. */
+  private def commitFrame(
+      df: DataFrame,
+      table: String,
+      parent: Manifest,
+      append: Boolean,
+      statsColumns: Seq[String],
+      extra: Map[String, String],
+      clusterBy: Option[String],
+      io: SnapshotIO): Long = {
     require(!extra.contains(DvKeyK) && !extra.contains(DvFilesK) && !extra.contains(ClusterK),
       s"$DvKeyK/$DvFilesK/$ClusterK are reserved manifest keys")
-    var dvCarry = Map.empty[String, String]
-    // append: the parent's SEGMENTS are carried by reference — the
-    // commit never re-lists existing files, so a 1M-file table appends
-    // at O(new files + segment count). Parent inline entries (legacy
-    // flat manifests) re-bundle into a segment once, migrating forward.
-    var parentCluster: Option[String] = None
-    var publishSchema: StructType = df.schema
-    val (carriedSegs, carriedFiles): (Seq[SegmentRef], Seq[FileEntry]) =
-      if (append && current > 0) {
-        val parent = manifest(table, current, io)
-        val pf = parent.schema.fields
-        val nf = df.schema.fields
-        require(
-          nf.length >= pf.length &&
-            pf.indices.forall(i => nf(i).name == pf(i).name && nf(i).dataType == pf(i).dataType),
-          s"append schema ${df.schema.simpleString} does not extend " +
-            s"snapshot $current's ${parent.schema.simpleString} — appends may only " +
-            "ADD columns at the end (drop/reorder/retype refused; rename via " +
-            "renameColumn)")
-        nf.drop(pf.length).foreach(f =>
-          require(!historicalNames(parent).contains(f.name),
-            s"added column ${f.name} collides with a PREVIOUS name of another " +
-              "column — a live file may still carry it physically, and one " +
-              "physical column must never resolve under two names; pick a " +
-              "fresh name"))
-        // outstanding deletion vectors ride every append verbatim — a
-        // commit that dropped them would resurrect the deleted rows.
-        // Table-level DECLARATIONS (declared stats columns, morKey,
-        // bucket layout) are table properties, not per-commit choices:
-        // an API append must not silently strip them (the catalog's
-        // publishFiles already carries them; r14 fix) — though an API
-        // append to a BUCKETED table writes unstamped files and costs
-        // the SPJ grouping until an overwrite re-buckets (the scan
-        // degrades soundly; Round25Spec pins it)
-        dvCarry = dvExtra(parent) ++ parent.extra.view.filterKeys(k =>
-          DeclKeys(k) && k != ClusterK).toMap
-        parentCluster = parent.extra.get(ClusterK)
-        // nullability MERGES (OR) across generations: a column any
-        // carried file holds nulls in must stay nullable, or the
-        // vectorized reader silently serves epoch-0/zero for those
-        // nulls under the narrower declaration (hit live: an all-NULL
-        // first commit followed by a non-null append); genuinely NEW
-        // trailing columns publish nullable — carried files read NULL
-        publishSchema = StructType(
-          pf.indices.map(i => nf(i).copy(nullable = pf(i).nullable || nf(i).nullable)) ++
-            nf.drop(pf.length).map(_.copy(nullable = true)))
-        (parent.segments, parent.inline)
-      } else (Vector.empty, Vector.empty)
     // an identity-clustered table STAYS clustered: appends inherit the
     // parent's cluster column (a writer may restate it, never change it
     // — the spec is table-level, like an Iceberg partition spec);
     // overwrite resets to whatever the new commit declares
+    val parentCluster = clusterKeyOf(parent)
     require(clusterBy.isEmpty || parentCluster.isEmpty || clusterBy == parentCluster,
       s"append clusterBy=${clusterBy.get} conflicts with table cluster key " +
         s"${parentCluster.get} — an identity cluster spec is table-level (overwrite to change)")
@@ -778,177 +863,25 @@ object SnapshotTable {
         (clusterExact(df, k), if (statsColumns.contains(k)) statsColumns else statsColumns :+ k)
       case None => (df, statsColumns)
     }
-    publishVersion(
-      data, table, current + 1, current, carriedSegs, carriedFiles,
-      if (append) "append" else "overwrite", stats,
-      extra ++ dvCarry ++ cluster.map(ClusterK -> _), io,
-      publishSchema = Some(publishSchema))
+    val c = Change(if (append) "append" else "overwrite", schema = Some(df.schema),
+      sets = cluster.map(ClusterK -> _).toMap, extra = extra)
+    commitOn(table, parent, c.copy(added = writeFor(data, table, parent, c, stats)), io)
   }
 
   /** A write carries the layout of the manifest it was planned against
-    * (its routing, cuts and stamps); [[publishFiles]]/[[publishReplace]]
-    * compare it with the CURRENT manifest at commit: a long-lived writer
-    * (a streaming epoch, a planned INSERT) built before an evolveLayout
-    * would otherwise publish files stamped under the OLD transforms at a
-    * sequence the generation rule reads as NEW-spec — silently poisoning
-    * SPJ grouping. Divergence refuses loudly: restart the writer. */
-  private def requireLayoutUnmoved(
-      m: Manifest, table: String, stamped: Option[Map[String, String]]): Unit =
-    stamped.foreach { sl =>
-      val cur = declaredLayout(m)
-      require(cur == sl,
-        s"$table's layout evolved mid-write (the writer routed/stamped under " +
-          s"${if (sl.isEmpty) "no layout" else sl.mkString(", ")}, the table now " +
-          s"declares ${if (cur.isEmpty) "no layout" else cur.mkString(", ")}) — " +
-          "the commit would mis-stamp the new generation; restart the writer")
-    }
-
-  /** Spec hook: drive [[publishFiles]] with an explicit stamped-layout
-    * claim (the mid-write evolution race is otherwise a plan/execute
-    * interleaving no deterministic test can schedule). */
-  private[graft] def publishFilesForSpec(
-      table: String,
-      schema: StructType,
-      entries: Seq[FileEntry],
-      stale: Map[String, String]): Long =
-    publishFiles(table, schema, entries, append = true,
-      stampedLayout = Some(stale))
-
-  /** Publish a commit from ALREADY-WRITTEN data files — the tail the
-    * DSv2 BatchWrite needs: executors wrote the files (and computed
-    * their stats) task-side, the driver holds only the file ENTRIES,
-    * and this turns them into an append/overwrite manifest under the
-    * same rules as [[commit]] (extend-only schema on append, parent
-    * segments carried by reference, DV state + table-level extras —
-    * cluster spec, declared stats columns — carried verbatim; one
-    * atomic publication, CME to the loser of a race). The files must
-    * already live under `$table/data/` (vacuum's in-flight rule
-    * protects `v<N>_<token>` dirs above the current version). */
-  private[sources] def publishFiles(
-      table: String,
-      schema: StructType,
-      entries: Seq[FileEntry],
-      append: Boolean,
-      extra: Map[String, String] = Map.empty,
-      io: SnapshotIO = LocalSnapshotIO,
-      stampedLayout: Option[Map[String, String]] = None): Long = {
-    val current = currentVersion(table, io)
-    if (current > 0) requireLayoutUnmoved(manifest(table, current, io), table, stampedLayout)
-    var carryExtra = Map.empty[String, String]
-    var publishSchema = schema
-    val (carriedSegs, carriedFiles): (Seq[SegmentRef], Seq[FileEntry]) =
-      if (append && current > 0) {
-        val parent = manifest(table, current, io)
-        val pf = parent.schema.fields
-        val nf = schema.fields
-        require(
-          nf.length >= pf.length &&
-            pf.indices.forall(i => nf(i).name == pf(i).name && nf(i).dataType == pf(i).dataType),
-          s"append schema ${schema.simpleString} does not extend " +
-            s"snapshot $current's ${parent.schema.simpleString}")
-        // the manifest keeps the PARENT's nullability (the write
-        // query's schema often marks literal columns non-null — but
-        // carried files predate this write and answer for themselves);
-        // genuinely NEW trailing columns publish nullable: every
-        // carried file reads NULL in them
-        publishSchema = StructType(
-          pf ++ nf.drop(pf.length).map(_.copy(nullable = true)))
-        carryExtra = dvExtra(parent) ++ tableDecls(parent)
-        (parent.segments, parent.inline)
-      } else if (current > 0) {
-        // overwrite keeps the table-level declarations, drops the data
-        val parent = manifest(table, current, io)
-        carryExtra = tableDecls(parent)
-        (Vector.empty, Vector.empty)
-      } else (Vector.empty, Vector.empty)
-    publishManifest(table, current + 1, current, publishSchema,
-      carriedSegs, carriedFiles ++ entries,
-      if (append) "append" else "overwrite", carryExtra ++ extra, io)
-  }
-
-  /** Metadata-only FILE DROP — the manifest republished with `kept`
-    * entries only (fresh segments; the parent's can't be carried — the
-    * dropped files lived inside them): zero data files opened or
-    * moved, one atomic commit, prior versions time-travel-intact until
-    * vacuum. mode=delete so incremental readers refuse to scan across
-    * it. DV state and table-level declarations ride verbatim. The tail
-    * of the V2 `DELETE FROM` (SnapshotV2Table.deleteWhere). */
-  private[sources] def publishDrop(
-      table: String,
-      m: Manifest,
-      kept: Seq[FileEntry],
-      io: SnapshotIO = LocalSnapshotIO): Long = {
-    val carry = dvExtra(m) ++ tableDecls(m)
-    publishManifest(table, m.version + 1, m.version, m.schema,
-      Nil, kept, "delete", carry, io)
-  }
-
-  /** Metadata-only SCHEMA EVOLUTION: republish the current file set
-    * under a WIDENED schema (trailing nullable columns — the caller
-    * validates extend-only). Zero data I/O; every segment carried by
-    * reference; mode=append with zero new files, so incremental
-    * readers scan across it (the file-diff contract holds exactly).
-    * The SQL tail of ALTER TABLE ADD COLUMN. */
-  private[sources] def publishEvolve(
-      table: String,
-      m: Manifest,
-      widened: StructType,
-      io: SnapshotIO = LocalSnapshotIO): Long = {
-    val pf = m.schema.fields
-    require(widened.fields.length >= pf.length &&
-      pf.indices.forall(i => widened.fields(i).name == pf(i).name &&
-        widened.fields(i).dataType == pf(i).dataType),
-      s"evolve schema ${widened.simpleString} does not extend ${m.schema.simpleString}")
-    widened.fields.drop(pf.length).foreach(f =>
-      require(!historicalNames(m).contains(f.name),
-        s"added column ${f.name} collides with a PREVIOUS name of another " +
-          "column (a live file may still carry it physically); pick a fresh name"))
-    val carry = dvExtra(m) ++ tableDecls(m)
-    publishManifest(table, m.version + 1, m.version, widened,
-      m.segments, m.inline, "append", carry, io)
-  }
-
-  /** Metadata-only PROPERTY EVOLUTION: republish the current file set
-    * with updated non-layout declarations (statsColumns / maxRowsPerFile
-    * / morKey — the caller validates). Zero data I/O; every segment
-    * carried by reference; mode=props with the file set provably
-    * unchanged, so incremental readers scan across it like a
-    * metadata-only rewrite. The SQL tail of ALTER TABLE SET/UNSET
-    * TBLPROPERTIES. */
-  private[sources] def publishProps(
-      table: String,
-      m: Manifest,
-      sets: Map[String, String],
-      unsets: Set[String],
-      io: SnapshotIO = LocalSnapshotIO): Long = {
-    val carry = (tableDecls(m) -- unsets) ++ sets ++ dvExtra(m)
-    publishManifest(table, m.version + 1, m.version, m.schema,
-      m.segments, m.inline, "props", carry, io)
-  }
-
-  /** GROUP-REPLACE commit — the tail of a V2 row-level operation
-    * (UPDATE / MERGE INTO / rewritten DELETE): the files the
-    * operation's scan READ are replaced by the files its write
-    * produced; every unscanned file is carried verbatim. Published as
-    * mode=merge (a rewrite breaks new-files == new-rows, so
-    * incremental readers refuse across it, exactly like the API
-    * [[merge]]). Soundness is the group-based copy-on-write contract:
-    * the write's rows are EVERYTHING the scan read, post-mutation —
-    * Spark's ReplaceData plan constructs exactly that. */
-  private[sources] def publishReplace(
-      table: String,
-      scanned: Set[String],
-      entries: Seq[FileEntry],
-      io: SnapshotIO = LocalSnapshotIO,
-      stampedLayout: Option[Map[String, String]] = None): Long = {
-    val cur = currentVersion(table, io)
-    val m = manifest(table, cur, io)
-    requireLayoutUnmoved(m, table, stampedLayout)
-    requireNoDv(m, table, "a row-level rewrite")
-    val kept = m.files.filterNot(f => scanned(f.path))
-    val carry = tableDecls(m)
-    publishManifest(table, cur + 1, cur, m.schema, Nil, kept ++ entries,
-      "merge", carry, io)
+    * (its routing, cuts and stamps); the commit tail compares it with
+    * the PARENT's: a long-lived writer (a streaming epoch, a planned
+    * INSERT) built before an evolveLayout would otherwise publish files
+    * stamped under the OLD transforms at a sequence the generation rule
+    * reads as NEW-spec — silently poisoning SPJ grouping. Divergence
+    * refuses loudly: restart the writer. */
+  private def requireLayoutUnmoved(parent: Manifest, table: String, planned: Manifest): Unit = {
+    val (cur, sl) = (declaredLayout(parent), declaredLayout(planned))
+    require(cur == sl,
+      s"$table's layout evolved mid-write (the writer routed/stamped under " +
+        s"${if (sl.isEmpty) "no layout" else sl.mkString(", ")}, the table now " +
+        s"declares ${if (cur.isEmpty) "no layout" else cur.mkString(", ")}) — " +
+        "the commit would mis-stamp the new generation; restart the writer")
   }
 
   /** Reserved manifest key: the table's DECLARED stats columns (the
@@ -960,17 +893,6 @@ object SnapshotTable {
   def statsColumnsOf(m: Manifest): Seq[String] =
     m.extra.get(StatsColsK).map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
 
-  /** Create an EMPTY table: version 1 is a manifest with the schema,
-    * the table-level declarations (cluster spec, stats columns), and
-    * zero data files — the CREATE TABLE of the SQL surface. */
-  private[sources] def createEmpty(
-      table: String,
-      schema: StructType,
-      extra: Map[String, String],
-      io: SnapshotIO = LocalSnapshotIO): Long = {
-    require(currentVersion(table, io) == 0, s"table $table already exists")
-    publishManifest(table, 1L, 0L, schema, Nil, Nil, "create", extra, io)
-  }
 
   /** Copy-on-write row-level MERGE — the Delta/Iceberg upsert: apply a
     * CDC batch (inserts + updates, plus deletes flagged in `deleteCol`)
@@ -1001,20 +923,20 @@ object SnapshotTable {
       deleteCol: Option[String] = None,
       statsColumns: Seq[String] = Nil,
       io: SnapshotIO = LocalSnapshotIO): (Int, Int, Long) =
-    mergeWithExtra(batch, table, key, deleteCol, statsColumns, Map.empty, io)
+    mergeOn(batch, table, headOf(table, io), key, deleteCol, statsColumns, Map.empty, io)
 
-  private def mergeWithExtra(
+  /** [[merge]] on head manifest `m`. */
+  private def mergeOn(
       batch: DataFrame,
       table: String,
+      m: Manifest,
       key: String,
       deleteCol: Option[String],
       statsColumns: Seq[String],
       extra: Map[String, String],
       io: SnapshotIO): (Int, Int, Long) = {
     val spark = batch.sparkSession
-    val current = currentVersion(table, io)
-    require(current > 0, s"cannot merge into non-existent table $table")
-    val m = manifest(table, current, io)
+    require(m.version > 0, s"cannot merge into non-existent table $table")
     requireNoDv(m, table, "merge")
     requireNotBucketed(m, table, "merge")
     val dataCols = batch.schema.fieldNames.filterNot(deleteCol.contains)
@@ -1028,11 +950,11 @@ object SnapshotTable {
     val keyExpr = if (stringKey) col(key) else col(key).cast("long")
     val keys = graft.GraftCache.register(
       batch.select(keyExpr.as("__k")).distinct().persist())
-    // the unpersist must also run on the THROW path: commitRetry
-    // re-invokes mergeBatch on a lost publish race, and each attempt
-    // persists a fresh keys frame — success-path-only cleanup would
-    // leak one cached DataFrame per retry, the exact class this
-    // cleanup exists to prevent
+    // the unpersist must also run on the THROW path: a caller that
+    // retries a lost publish race (a ConcurrentModificationException)
+    // re-invokes merge, and each attempt persists a fresh keys frame —
+    // success-path-only cleanup would leak one cached DataFrame per
+    // retry, the exact class this cleanup exists to prevent
     try {
     // stats routing, TWO levels: ranges are manifest metadata —
     // broadcast them under the batch keys; collecting the touched
@@ -1103,13 +1025,13 @@ object SnapshotTable {
     val newData = kept.unionByName(upserts)
       .repartitionByRange(nOut, col(key))
       .sortWithinPartitions(key)
-    val v = publishVersion(
-      newData, table, current + 1, current, carriedSegs, survivors, "merge",
-      if (statsColumns.isEmpty) Seq(key) else statsColumns,
-      extra + ("merged-files" -> touched.size.toString), io)
+    val c = Change("merge", kept = Some((carriedSegs, survivors)),
+      schema = Some(newData.schema), extra = extra + ("merged-files" -> touched.size.toString))
+    val v = commitOn(table, m, c.copy(added = writeFor(newData, table, m, c,
+      if (statsColumns.isEmpty) Seq(key) else statsColumns)), io)
     (touched.size, m.fileCount.toInt, v)
     } finally {
-      // publishVersion materialized every consumer of the keys frame — a
+      // the write materialized every consumer of the keys frame — a
       // long-running mergeBatch loop must not accumulate one cached
       // DataFrame per micro-batch until harness-level cleanup
       keys.unpersist(blocking = false)
@@ -1143,16 +1065,14 @@ object SnapshotTable {
     require(
       toVersion >= 1 && toVersion <= current,
       s"rollback target $toVersion outside published range [1, $current] of $table")
-    val target = manifest(table, toVersion, io)
-    // the restored state includes the TARGET's table declarations —
-    // its layout (and generation history), stats columns, morKey: a
-    // rollback across a spec evolution restores the old spec exactly;
-    // dropping them would demote a bucketed table to unlaid-out
-    publishManifest(
-      table, current + 1, current, target.schema, target.segments, target.inline,
-      mode = "rollback",
-      extra = Map("restored-from" -> toVersion.toString) ++
-        tableDecls(target) ++ dvExtra(target), io)
+    // the restored state is the TARGET's whole state, its table
+    // declarations included — its layout (and generation history),
+    // stats columns, morKey: a rollback across a spec evolution restores
+    // the old spec exactly; dropping them would demote a bucketed table
+    // to unlaid-out
+    commitOn(table, manifest(table, toVersion, io),
+      Change("rollback", extra = Map("restored-from" -> toVersion.toString),
+        onto = Some(current)), io)
   }
 
   // ---- tags: named immutable snapshot references (Iceberg tags) ----
@@ -1245,13 +1165,11 @@ object SnapshotTable {
     require(cur > 0, s"cannot branch non-existent table $table")
     val bp = branchPath(table, name)
     require(currentVersion(bp, io) == 0, s"branch $name of $table already exists")
-    val m = manifest(table, cur, io)
-    // the branch inherits main's table declarations — a fork of a
-    // bucketed table must keep writing STAMPED files or the
-    // fast-forward publish would demote main's layout
-    publishManifest(bp, 1L, 0L, m.schema, m.segments, m.inline,
-      mode = "fork", extra = Map("fork-of" -> cur.toString) ++
-        tableDecls(m) ++ dvExtra(m), io)
+    // the branch inherits main's whole state, its table declarations
+    // included — a fork of a bucketed table must keep writing STAMPED
+    // files or the fast-forward publish would demote main's layout
+    commitOn(bp, manifest(table, cur, io),
+      Change("fork", extra = Map("fork-of" -> cur.toString), onto = Some(0L)), io)
   }
 
   /** PUBLISH the branch head back onto main — the write-audit-publish
@@ -1281,10 +1199,9 @@ object SnapshotTable {
     val pureAppend = (2L to bcur).forall(v =>
       manifest(bp, v, io).extra.getOrElse("mode", "?") == "append")
     // the audited branch head's declarations come back with its data
-    publishManifest(table, cur + 1, cur, head.schema, head.segments, head.inline,
-      mode = if (pureAppend) "append" else "publish",
-      extra = Map("wap-branch" -> name, "wap-commits" -> (bcur - 1).toString)
-        ++ tableDecls(head) ++ dvExtra(head), io)
+    commitOn(table, head, Change(if (pureAppend) "append" else "publish",
+      extra = Map("wap-branch" -> name, "wap-commits" -> (bcur - 1).toString),
+      onto = Some(cur)), io)
   }
 
   /** Drop a branch: delete its manifest chain, then any data file under
@@ -1717,10 +1634,8 @@ object SnapshotTable {
         "evolve the declaration first, then rename")
     val renamed = StructType(
       m.schema.fields.updated(idx, m.schema.fields(idx).copy(name = newName)))
-    publishManifest(table, cur + 1, cur, renamed, m.segments, m.inline, "props",
-      tableDecls(m) ++ dvExtra(m) ++
-        Map(RenamesK -> renamesEncode(renamesOf(m) :+ ((cur + 1, idx, oldName)))),
-      io)
+    commitOn(table, m, Change("props", schema = Some(renamed),
+      sets = Map(RenamesK -> renamesEncode(renamesOf(m) :+ ((cur + 1, idx, oldName))))), io)
   }
 
   /** The version since which the current layout keys apply. */
@@ -1814,7 +1729,9 @@ object SnapshotTable {
     * post-images), and its recorded key count (-1 = unrecorded legacy;
     * counts let the V2 reader budget its in-memory delete set). Legacy
     * entries (bare hex path) read as seq = MaxValue: they predate
-    * sequencing and applied to every file — semantics preserved.
+    * sequencing and applied to every file — semantics preserved. A ref
+    * built with seq = -1 (a task-written sidecar) is stamped with its
+    * commit's sequence by the commit tail, like [[FileEntry.seq]].
     * `rangeL`/`rangeS` record the delete keys' observed [min, max] at
     * write time (same pass as the count — integral keys widened to
     * Long, string keys raw):
@@ -1910,13 +1827,7 @@ object SnapshotTable {
       }
     }.mkString(";")
 
-  /** The DV state a descendant commit must carry forward verbatim —
-    * equality-delete chain AND position-delete sidecars. */
-  private def dvExtra(m: Manifest): Map[String, String] =
-    m.extra.view.filterKeys(k =>
-      k == DvKeyK || k == DvFilesK || k == PosDvFilesK).toMap
-
-  private def requireNoDv(m: Manifest, table: String, op: String): Unit = {
+  private[sources] def requireNoDv(m: Manifest, table: String, op: String): Unit = {
     require(dvPaths(m).isEmpty,
       s"$table carries ${dvPaths(m).size} outstanding deletion-vector file(s) — " +
         s"$op does not carry delete state into its commit and would resurrect " +
@@ -1928,19 +1839,6 @@ object SnapshotTable {
         "deletes) first")
   }
 
-  /** MERGE-ON-READ DELETE BY POSITION — the Iceberg-v2 position-delete
-    * format, the row-level delete for tables with NO natural row key:
-    * `pos` holds (_file, _pos) pairs (exactly what a provenance scan of
-    * the V2 table's metadata columns yields — `SELECT _file, _pos FROM t
-    * WHERE <pred>`), recorded as a tiny parquet sidecar + one manifest
-    * pointer, touching ZERO data files. The V2 reader drops the listed
-    * ordinals per file (raw physical positions — pos-bearing scans
-    * disable parquet filter pushdown so ordinals never shift); batches
-    * accumulate until [[compactSnapshot]] materializes them. Positions
-    * must name files LIVE in the current manifest — positions taken
-    * against a version whose files were since rewritten are UNSOUND by
-    * construction and refuse loudly. mode=delete: incremental readers
-    * refuse across it, like deleteKeys. Returns the published version. */
   /** WRITE-TIME CHANGE CAPTURE for a position-delta commit: while the
     * deleted rows are still physically addressable (the batch was
     * scanned from the live view, so every named ordinal is a live row),
@@ -1986,109 +1884,92 @@ object SnapshotTable {
     Map(ChangePreK -> FileEntry.hex(dir))
   }
 
+  /** MERGE-ON-READ DELETE BY POSITION — the Iceberg-v2 position-delete
+    * format, the row-level delete for tables with NO natural row key:
+    * `pos` holds (_file, _pos) pairs (exactly what a provenance scan of
+    * the V2 table's metadata columns yields — `SELECT _file, _pos FROM t
+    * WHERE <pred>`), recorded as a tiny parquet sidecar + one manifest
+    * pointer, touching ZERO data files. The V2 reader drops the listed
+    * ordinals per file (raw physical positions — pos-bearing scans
+    * disable parquet filter pushdown so ordinals never shift); batches
+    * accumulate until [[compactSnapshot]] materializes them. Positions
+    * must name files LIVE in the current manifest — positions taken
+    * against a version whose files were since rewritten are UNSOUND by
+    * construction and refuse loudly. mode=delete: incremental readers
+    * refuse across it, like deleteKeys.
+    *
+    * `dropPaths` drops whole files in the same commit — the tail of a
+    * SQL `DELETE FROM t WHERE pred` under deleteMode=positions: files
+    * the manifest PROVED all-match drop whole (fresh segments: the
+    * dropped entries lived inside the parent's), the unprovable
+    * remainder's matching rows land as the sidecar. Returns the
+    * published version (the current one when nothing matched). */
   def deletePositions(
       pos: DataFrame,
       table: String,
-      io: SnapshotIO = LocalSnapshotIO): Long = {
-    val current = currentVersion(table, io)
-    require(current > 0, s"cannot delete from non-existent table $table")
-    val m = manifest(table, current, io)
+      io: SnapshotIO = LocalSnapshotIO,
+      dropPaths: Set[String] = Set.empty): Long = {
+    val m = headOf(table, io)
+    require(m.version > 0, s"cannot delete from non-existent table $table")
     require(pos.schema.fieldNames.contains("_file") &&
       pos.schema.fieldNames.contains("_pos"),
       s"deletePositions takes (_file, _pos) columns — the V2 metadata-column " +
         s"provenance shape; got ${pos.schema.fieldNames.mkString(", ")}")
     val batch = pos.select(col("_file").cast("string"), col("_pos").cast("long"))
       .na.drop().distinct()
-    val live = m.files.map(_.path).toSet
-    val named = batch.select("_file").distinct().collect().map(_.getString(0))
+    val named = batch.select("_file").distinct().collect().map(_.getString(0)).toSeq
     // a predicate that matched nothing is a NO-OP, not a commit: an
     // empty sidecar would still flip posDvPaths non-empty — refusing
     // every subset reader, disabling SPJ/pushdowns, and breaking
     // incremental readers across a delete that deleted nothing
-    if (named.isEmpty) return current
+    if (named.isEmpty && dropPaths.isEmpty) return m.version
+    val kept = if (dropPaths.isEmpty) None else Some(m.files.filterNot(f => dropPaths(f.path)))
+    val live = kept.getOrElse(m.files).map(_.path).toSet
     val stale = named.filterNot(live)
     require(stale.isEmpty,
-      s"position deletes name files not live in snapshot $current of $table " +
+      s"position deletes name files not live in snapshot ${m.version} of $table " +
         s"(${stale.take(3).mkString(", ")}…) — positions are only sound against " +
-        "the files they were scanned from; re-scan at head")
-    val next = current + 1
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dir = s"$table/data/v${next}_${token}_posdv"
-    batch.coalesce(1).write.mode("errorifexists").parquet(dir)
-    // exact count via a driver-thread pass over the tiny sidecar —
-    // zero Spark jobs (the old read.parquet(dir).count() paid schema
-    // inference + a count job per position commit, r18)
-    val sidecarFiles = io.list(dir).filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$dir/$n")
-    var cnt = 0L
-    SnapshotV2.foreachSidecarRow(
-      pos.sparkSession, SnapshotV2.PosSidecarSchema, sidecarFiles, io)(_ => cnt += 1)
-    // the ref carries the byte-wise path range of the files this batch
-    // names (free — `named` is already in hand): the scoped reader's
-    // per-file attachment prunes on it
-    val fLo = named.reduce((a, b) => if (FileEntry.bytesLe(a, b)) a else b)
-    val fHi = named.reduce((a, b) => if (FileEntry.bytesLe(a, b)) b else a)
-    val refs = sidecarFiles.map(p => PosDvRef(p, cnt, Some((fLo, fHi))))
-    val chpre = writeChangePre(
-      pos.sparkSession, m, batch, named.toSeq, table, next, io)
-    publishManifest(table, next, current, m.schema, m.segments, m.inline,
-      mode = "delete",
-      extra = tableDecls(m) ++ dvExtra(m) ++ chpre ++
-        Map(PosDvFilesK -> posDvEncode(posDvRefs(m) ++ refs)), io)
-  }
-
-  /** The commit tail of a SQL `DELETE FROM t WHERE pred` routed through
-    * POSITION deletes (TBLPROPERTIES('deleteMode'='positions'), the
-    * morKey-less MoR DELETE): files the manifest PROVED all-match drop
-    * whole, the unprovable remainder's matching rows land as ONE
-    * (_file,_pos) sidecar — one atomic commit, zero data files opened
-    * for writing. `dropPaths` empty degenerates to [[deletePositions]]
-    * (segments carried verbatim); a non-empty drop set forces fresh
-    * segments (the dropped entries lived inside the parent's). */
-  private[sources] def deletePositionsAndDrop(
-      pos: DataFrame,
-      table: String,
-      dropPaths: Set[String],
-      io: SnapshotIO = LocalSnapshotIO): Long = {
-    if (dropPaths.isEmpty) return deletePositions(pos, table, io)
-    val current = currentVersion(table, io)
-    require(current > 0, s"cannot delete from non-existent table $table")
-    val m = manifest(table, current, io)
-    val kept = m.files.filterNot(f => dropPaths(f.path))
-    val batch = pos.select(col("_file").cast("string"), col("_pos").cast("long"))
-      .na.drop().distinct()
-    val named = batch.select("_file").distinct().collect().map(_.getString(0))
-    val live = kept.map(_.path).toSet
-    val stale = named.filterNot(live)
-    require(stale.isEmpty,
-      s"position deletes name files not kept in snapshot $current of $table " +
-        s"(${stale.take(3).mkString(", ")}…)")
-    val next = current + 1
-    val posExtra: Map[String, String] =
-      if (named.isEmpty) m.extra.view.filterKeys(_ == PosDvFilesK).toMap
-      else {
-        val token = java.util.UUID.randomUUID().toString.take(8)
-        val dir = s"$table/data/v${next}_${token}_posdv"
-        batch.coalesce(1).write.mode("errorifexists").parquet(dir)
-        // driver-thread count over the tiny sidecar — zero Spark jobs
-        val sidecarFiles = io.list(dir).filter(_.endsWith(".parquet")).sorted
-          .map(n => s"$dir/$n")
-        var cnt = 0L
-        SnapshotV2.foreachSidecarRow(
-          pos.sparkSession, SnapshotV2.PosSidecarSchema, sidecarFiles, io)(_ => cnt += 1)
-        val fLo = named.reduce((a, b) => if (FileEntry.bytesLe(a, b)) a else b)
-        val fHi = named.reduce((a, b) => if (FileEntry.bytesLe(a, b)) b else a)
-        val refs = sidecarFiles.map(p => PosDvRef(p, cnt, Some((fLo, fHi))))
-        Map(PosDvFilesK -> posDvEncode(posDvRefs(m) ++ refs))
-      }
+        "the files they were scanned from (and a file the commit drops takes " +
+        "no positions); re-scan at head")
+    val next = m.version + 1
+    val refs = if (named.isEmpty) Nil else writePosSidecar(batch, table, next, "posdv", io)
     // change capture covers only the FUZZY remainder: the whole-dropped
     // files' pre-images stay attributable from the parent manifest (the
     // feed's removed-files arm reads them position-applied)
-    val chpre =
-      if (named.isEmpty) Map.empty[String, String]
-      else writeChangePre(pos.sparkSession, m, batch, named.toSeq, table, next, io)
-    publishManifest(table, next, current, m.schema, Nil, kept, "delete",
-      tableDecls(m) ++ dvExtra(m) ++ posExtra ++ chpre, io)
+    val chpre = writeChangePre(pos.sparkSession, m, batch, named, table, next, io)
+    commitOn(table, m, Change("delete", kept = kept.map(ks => (Nil, ks)),
+      posDeletes = if (refs.isEmpty) None else Some(posDvRefs(m) ++ refs), extra = chpre), io)
+  }
+
+  /** Write `rows` ((_file, _pos) pairs) as ONE position-delete sidecar
+    * of commit `next` and return its refs, each with the exact row count
+    * and the byte-wise range of the data-file paths it names — the
+    * scoped reader's per-file attachment prunes on it. Counted in one
+    * driver-thread pass over the tiny sidecar: zero Spark jobs (the old
+    * read.parquet(dir).count() paid schema inference + a count job per
+    * position commit, r18). Nil when it holds no row. */
+  private def writePosSidecar(
+      rows: DataFrame,
+      table: String,
+      next: Long,
+      suffix: String,
+      io: SnapshotIO): Seq[PosDvRef] = {
+    val token = java.util.UUID.randomUUID().toString.take(8)
+    val dir = s"$table/data/v${next}_${token}_$suffix"
+    rows.coalesce(1).write.mode("errorifexists").parquet(dir)
+    val parts = io.list(dir).filter(_.endsWith(".parquet")).sorted.map(n => s"$dir/$n")
+    var cnt = 0L
+    var lo: String = null; var hi: String = null
+    SnapshotV2.foreachSidecarRow(
+      rows.sparkSession, SnapshotV2.PosSidecarSchema, parts, io) { row =>
+      cnt += 1
+      if (!row.isNullAt(0)) {
+        val f = row.getUTF8String(0).toString
+        if (lo == null || FileEntry.bytesLe(f, lo)) lo = f
+        if (hi == null || FileEntry.bytesLe(hi, f)) hi = f
+      }
+    }
+    if (cnt == 0L) Nil else parts.map(PosDvRef(_, cnt, Some((lo, hi))))
   }
 
   /** Maintenance that rewrites data files OUTSIDE the bucketed write
@@ -2133,50 +2014,22 @@ object SnapshotTable {
       table: String,
       key: String,
       io: SnapshotIO = LocalSnapshotIO): Long = {
-    val current = currentVersion(table, io)
-    require(current > 0, s"cannot delete from non-existent table $table")
-    val m = manifest(table, current, io)
+    val m = headOf(table, io)
+    require(m.version > 0, s"cannot delete from non-existent table $table")
     require(m.schema.fieldNames.contains(key), s"no column $key in $table")
-    require(m.extra.get(DvKeyK).forall(_ == key),
-      s"table $table already carries deletion vectors keyed on " +
-        s"${m.extra(DvKeyK)} — one delete key per DV chain (materialize first)")
-    val next = current + 1
+    requireDvKey(m, table, key)
     val newDv = writeDvSidecar(keys.sparkSession, keys.select(col(key)),
-      table, key, next, io)
-    publishManifest(table, next, current, m.schema, m.segments, m.inline,
-      mode = "delete",
-      extra = tableDecls(m) ++
-        m.extra.view.filterKeys(_ == PosDvFilesK).toMap ++
-        Map(DvKeyK -> key, DvFilesK -> dvEncode(dvRefs(m) ++ newDv)), io)
+      table, key, m.version + 1, io)
+    commitOn(table, m, Change("delete", dvKey = Some(key),
+      eqDeletes = Some(dvRefs(m) ++ newDv)), io)
   }
 
-  /** The commit tail of a SQL DELTA write ([[SupportsDelta]] — MoR
-    * UPDATE / MERGE / row-level DELETE): ONE manifest carrying the
-    * parent's segments verbatim, the post-image entries (stamped at
-    * this commit's sequence by publishManifest), and the task-written
-    * DV sidecars stamped likewise — zero existing data files touched.
-    * mode=merge: incremental readers refuse across it, changeFeed
-    * (state-based) emits the pre/post-images unchanged. */
-  private[sources] def publishDeltaCommit(
-      table: String,
-      key: String,
-      entries: Seq[FileEntry],
-      dvFiles: Seq[DvSidecarInfo],
-      io: SnapshotIO = LocalSnapshotIO): Long = {
-    val cur = currentVersion(table, io)
-    require(cur > 0, s"cannot delta-commit into non-existent table $table")
-    val m = manifest(table, cur, io)
-    require(m.extra.get(DvKeyK).forall(_ == key),
+  /** One delete key per equality-DV chain: a chain keyed on another
+    * column must be materialized (compacted) first. */
+  private[sources] def requireDvKey(m: Manifest, table: String, key: String): Unit =
+    require(dvKeyOf(m).forall(_ == key),
       s"table $table already carries deletion vectors keyed on " +
         s"${m.extra(DvKeyK)} — one delete key per DV chain (materialize first)")
-    val next = cur + 1
-    val newRefs = dvFiles.map(d => DvRef(d.path, next, d.count, d.rangeL, d.rangeS))
-    publishManifest(table, next, cur, m.schema,
-      m.segments, m.inline ++ entries, "merge",
-      tableDecls(m) ++
-        m.extra.view.filterKeys(_ == PosDvFilesK).toMap ++
-        Map(DvKeyK -> key, DvFilesK -> dvEncode(dvRefs(m) ++ newRefs)), io)
-  }
 
   /** The commit tail of a SQL POSITION-delta write ([[SupportsDelta]]
     * with (_file,_pos) row identity — MoR UPDATE / MERGE / row-level
@@ -2191,9 +2044,8 @@ object SnapshotTable {
       entries: Seq[FileEntry],
       sidecars: Seq[PosDvRef],
       io: SnapshotIO = LocalSnapshotIO): Long = {
-    val cur = currentVersion(table, io)
-    require(cur > 0, s"cannot delta-commit into non-existent table $table")
-    val m = manifest(table, cur, io)
+    val m = headOf(table, io)
+    require(m.version > 0, s"cannot delta-commit into non-existent table $table")
     // write-time change capture for the DML's position deletes: the
     // sidecars are already on disk (task-written), batch-sized; one
     // O(touched files) pass recovers the pre-images while the ordinals
@@ -2214,36 +2066,23 @@ object SnapshotTable {
           .select(col("_file").cast("string"), col("_pos").cast("long"))
         val named = batch.select("_file").distinct().collect()
           .map(_.getString(0)).toSeq
-        writeChangePre(spark, m, batch, named, table, cur + 1, io)
+        writeChangePre(spark, m, batch, named, table, m.version + 1, io)
       }
-    publishManifest(table, cur + 1, cur, m.schema,
-      m.segments, m.inline ++ entries, "merge",
-      tableDecls(m) ++ dvExtra(m) ++ chpre ++
-        Map(PosDvFilesK -> posDvEncode(posDvRefs(m) ++ sidecars)), io)
+    commitOn(table, m, Change("merge", entries,
+      posDeletes = Some(posDvRefs(m) ++ sidecars), extra = chpre), io)
   }
-
-  /** A task-written DV sidecar: path, exact key count, and the keys'
-    * observed range (computed task-side over the same pass that wrote
-    * the file — no extra job anywhere). */
-  private[sources] final case class DvSidecarInfo(
-      path: String,
-      count: Long,
-      rangeL: Option[(Long, Long)] = None,
-      rangeS: Option[(String, String)] = None)
 
   /** Every table-level DECLARATION key a descendant commit must carry
     * forward verbatim: layout (cluster/bucket/trunc/temporal + the spec-
     * evolution generation markers), stats columns, MoR key, per-file row
-    * cap, delete routing. One list — the r15 carry-drift class of bug
-    * (a commit path silently stripping a declaration) can only recur by
-    * forgetting a NEW key here, not by missing one of nine sites. */
-  private[sources] val DeclKeys: Set[String] = Set(
+    * cap, delete routing, rename log, advisory write size. One list, read
+    * by one commit tail ([[commitOn]]) — the carry-drift class of bug (a
+    * commit path silently stripping a declaration) can only recur by
+    * forgetting a NEW key here. */
+  private[graft] val DeclKeys: Set[String] = Set(
     ClusterK, BucketK, TruncK, TemporalK, LayoutSinceK, LayoutHistK,
     StatsColsK, MorKeyK, MaxRowsK, DeleteModeK, ChangeCaptureK, RenamesK,
     AdvisoryBytesK)
-
-  private def tableDecls(m: Manifest): Map[String, String] =
-    m.extra.view.filterKeys(DeclKeys).toMap
 
   /** Write one deletion-vector sidecar (the batch's DISTINCT keys,
     * one small parquet) stamped at commit sequence `seq`, and return
@@ -2327,39 +2166,28 @@ object SnapshotTable {
       deleteCol: Option[String] = None,
       io: SnapshotIO = LocalSnapshotIO): (Long, Int, Long) = {
     val spark = batch.sparkSession
-    val current = currentVersion(table, io)
-    require(current > 0, s"cannot merge into non-existent table $table")
-    val m = manifest(table, current, io)
+    val m = headOf(table, io)
+    require(m.version > 0, s"cannot merge into non-existent table $table")
     val dataCols = batch.schema.fieldNames.filterNot(deleteCol.contains)
     require(
       dataCols.sameElements(m.schema.fieldNames),
       s"merge batch columns ${dataCols.mkString(",")} do not match table " +
         s"columns ${m.schema.fieldNames.mkString(",")}")
     require(m.schema.fieldNames.contains(key), s"no column $key in $table")
-    require(m.extra.get(DvKeyK).forall(_ == key),
-      s"table $table already carries deletion vectors keyed on " +
-        s"${m.extra(DvKeyK)} — one delete key per DV chain (materialize first)")
+    requireDvKey(m, table, key)
     require(clusterKeyOf(m).isEmpty,
       s"mergeMoR refused on identity-clustered $table — post-image appends " +
         "break the one-key-per-file invariant; copy-on-write merge maintains it")
     requireNotBucketed(m, table, "mergeMoR")
-    val next = current + 1
-    val newDv = writeDvSidecar(spark, batch.select(col(key)), table, key, next, io)
+    val newDv = writeDvSidecar(spark, batch.select(col(key)), table, key, m.version + 1, io)
     val upserts = deleteCol match {
       case Some(d) => batch.filter(!coalesce(col(d), lit(false))).drop(d)
       case None    => batch
     }
-    val statsCols = {
-      val declared = statsColumnsOf(m)
-      if (declared.contains(key)) declared else declared :+ key
-    }
-    val v = publishVersion(
-      upserts, table, next, current, m.segments, m.inline, "merge", statsCols,
-      tableDecls(m) ++
-        m.extra.view.filterKeys(_ == PosDvFilesK).toMap ++
-        Map(DvKeyK -> key, DvFilesK -> dvEncode(dvRefs(m) ++ newDv)), io)
-    val appended = (manifest(table, v, io).fileCount - m.fileCount).toInt
-    (newDv.map(_.count).sum, appended, v)
+    val c = Change("merge", schema = Some(upserts.schema), dvKey = Some(key),
+      eqDeletes = Some(dvRefs(m) ++ newDv))
+    val added = writeFor(upserts, table, m, c, Seq(key))
+    (newDv.map(_.count).sum, added.size, commitOn(table, m, c.copy(added = added), io))
   }
 
   /** DELETION-VECTOR CONSOLIDATION — the maintenance mid-point between
@@ -2384,55 +2212,28 @@ object SnapshotTable {
       spark: SparkSession,
       table: String,
       io: SnapshotIO = LocalSnapshotIO): (Int, Int, Long) = {
-    val cur = currentVersion(table, io)
-    require(cur > 0, s"cannot consolidate non-existent table $table")
-    val m = manifest(table, cur, io)
+    val m = headOf(table, io)
+    require(m.version > 0, s"cannot consolidate non-existent table $table")
     val refs = dvRefs(m)
     val posRefs = posDvRefs(m)
     require(refs.nonEmpty || posRefs.nonEmpty,
       s"$table carries no outstanding deletion vectors — nothing to consolidate")
+    val next = m.version + 1
     // POSITION sidecars consolidate trivially (no sequence semantics —
     // a position names its file by path): all batches dedupe into ONE
-    // (_file, _pos) sidecar
-    val posExtra: Map[String, String] =
-      if (posRefs.size <= 1) m.extra.view.filterKeys(_ == PosDvFilesK).toMap
-      else {
-        val token = java.util.UUID.randomUUID().toString.take(8)
-        val dir = s"$table/data/v${cur + 1}_${token}_posdvc"
-        spark.read.schema(SnapshotV2.PosSidecarSchema)
-          .parquet(posRefs.map(_.path): _*)
-          .distinct().coalesce(1).write.mode("errorifexists").parquet(dir)
-        // count + named-file range in one DRIVER-THREAD pass over the
-        // consolidated (delete-state-sized, coalesce(1)) sidecar —
-        // zero Spark jobs; the consolidated ref scopes at least as
-        // tightly as the originals
-        val parts = io.list(dir).filter(_.endsWith(".parquet")).sorted
-          .map(n => s"$dir/$n")
-        var cnt = 0L
-        var mnF: String = null; var mxF: String = null
-        SnapshotV2.foreachSidecarRow(
-          spark, SnapshotV2.PosSidecarSchema, parts, io) { row =>
-          cnt += 1
-          if (!row.isNullAt(0)) {
-            val v = row.getUTF8String(0).toString
-            if (mnF == null || FileEntry.bytesLe(v, mnF)) mnF = v
-            if (mxF == null || FileEntry.bytesLe(mxF, v)) mxF = v
-          }
-        }
-        val range = Some((mnF, mxF))
-        Map(PosDvFilesK -> posDvEncode(parts.map(p => PosDvRef(p, cnt, range))))
-      }
+    // (_file, _pos) sidecar, whose ref scopes at least as tightly as
+    // the originals
+    val posNew: Option[Seq[PosDvRef]] =
+      if (posRefs.size <= 1) None
+      else Some(writePosSidecar(spark.read.schema(SnapshotV2.PosSidecarSchema)
+        .parquet(posRefs.map(_.path): _*).distinct(), table, next, "posdvc", io))
     if (refs.isEmpty) {
       // positions only: one metadata commit, data files verbatim
-      publishManifest(table, cur + 1, cur, m.schema, m.segments, m.inline,
-        "dvrewrite", tableDecls(m) ++
-          m.extra.view.filterKeys(k => k == DvKeyK || k == DvFilesK).toMap ++
-          posExtra, io)
+      commitOn(table, m, Change("dvrewrite", posDeletes = posNew), io)
       return (posRefs.size, 1, posRefs.map(_.count).sum)
     }
     val key = m.extra(DvKeyK)
     val keyType = m.schema(m.schema.fieldIndex(key)).dataType
-    val next = cur + 1
     val token = java.util.UUID.randomUUID().toString.take(8)
     val dir = s"$table/data/v${next}_${token}_dvc"
     // effective state in one job: key -> max seq, laid out one file per
@@ -2450,8 +2251,7 @@ object SnapshotTable {
     if (all.isEmpty) {
       // the whole chain was NULL keys — no row can ever match, so the
       // consolidated state is NO state: clear the chain outright
-      publishManifest(table, next, cur, m.schema, m.segments, m.inline,
-        "dvrewrite", tableDecls(m) ++ posExtra, io)
+      commitOn(table, m, Change("dvrewrite", eqDeletes = Some(Nil), posDeletes = posNew), io)
       return (refs.size + posRefs.size, math.min(posRefs.size, 1), 0L)
     }
     all.groupBy(col(key)).agg(max(col("__seq")).as("__seq"))
@@ -2486,10 +2286,7 @@ object SnapshotTable {
         }
       DvRef(s"$seqDir/${parts.head}", seq, r.getAs[Long]("__n"), rl, rs)
     }.sortBy(_.seq)
-    publishManifest(table, next, cur, m.schema, m.segments, m.inline,
-      "dvrewrite",
-      tableDecls(m) ++ posExtra ++
-        Map(DvKeyK -> key, DvFilesK -> dvEncode(newRefs)), io)
+    commitOn(table, m, Change("dvrewrite", eqDeletes = Some(newRefs), posDeletes = posNew), io)
     (refs.size + posRefs.size, newRefs.size + math.min(posRefs.size, 1),
       newRefs.map(_.count).sum)
   }
@@ -2690,22 +2487,21 @@ object SnapshotTable {
     * sized), drop the rows naming rewritten files (those deletes
     * materialized in the rewrite's position-applied read), and their
     * kept-file remainder re-lands as ONE consolidated, range-tagged
-    * sidecar. Returns the replacement `PosDvFilesK` entry — absent when
-    * nothing survives (the whole chain was consumed by the rewrite). */
+    * sidecar. Returns the replacement refs — empty when nothing
+    * survives (the whole chain was consumed by the rewrite). */
   private def splitPosSidecars(
       spark: SparkSession,
       m: Manifest,
       rewritten: Set[String],
       table: String,
       next: Long,
-      io: SnapshotIO): Map[String, String] = {
+      io: SnapshotIO): Seq[PosDvRef] = {
     val refs = posDvRefs(m)
-    if (refs.isEmpty) return Map.empty
     val (overlap, disjoint) = refs.partition(r => r.range.forall {
       case (lo, hi) => rewritten.exists(p =>
         FileEntry.bytesLe(lo, p) && FileEntry.bytesLe(p, hi))
     })
-    if (overlap.isEmpty) return Map(PosDvFilesK -> posDvEncode(refs))
+    if (overlap.isEmpty) return refs
     import spark.implicits._
     // the rewritten-path side is manifest-subset-sized and driver-held
     // already — broadcast is structural here, not an estimate
@@ -2714,29 +2510,7 @@ object SnapshotTable {
       .parquet(overlap.map(_.path): _*)
       .join(broadcast(rw), col("_file") === col("__graft_rwp"), "left_anti")
       .select(col("_file").cast("string"), col("_pos").cast("long"))
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dir = s"$table/data/v${next}_${token}_posdv"
-    remain.coalesce(1).write.mode("errorifexists").parquet(dir)
-    // driver-thread count + named-file range over the tiny rewritten
-    // sidecar — zero Spark jobs (was footer inference + an agg job)
-    val parts0 = io.list(dir).filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$dir/$n")
-    var rCnt = 0L
-    var rMn: String = null; var rMx: String = null
-    SnapshotV2.foreachSidecarRow(
-      spark, SnapshotV2.PosSidecarSchema, parts0, io) { row =>
-      rCnt += 1
-      if (!row.isNullAt(0)) {
-        val v = row.getUTF8String(0).toString
-        if (rMn == null || FileEntry.bytesLe(v, rMn)) rMn = v
-        if (rMx == null || FileEntry.bytesLe(rMx, v)) rMx = v
-      }
-    }
-    val newRefs =
-      if (rCnt == 0L) Nil
-      else parts0.map(p => PosDvRef(p, rCnt, Some((rMn, rMx))))
-    val all = disjoint ++ newRefs
-    if (all.isEmpty) Map.empty else Map(PosDvFilesK -> posDvEncode(all))
+    disjoint ++ writePosSidecar(remain, table, next, "posdv", io)
   }
 
   /** The one LAYOUT-PRESERVING rewrite behind every compaction entry
@@ -2854,15 +2628,14 @@ object SnapshotTable {
         // kept files re-land as one consolidated sidecar, and sidecars
         // provably disjoint from the rewrite carry verbatim.
         val selPaths = sel.map(_.path).toSet
-        val kept = m.files.filterNot(f => selPaths(f.path))
-        val posCarry = splitPosSidecars(spark, m, selPaths, table, cur + 1, io)
-        publishManifest(table, cur + 1, cur, schema, Vector.empty, kept ++ entries,
-          "merge", tableDecls(m) ++
-            (dvExtra(m) - PosDvFilesK) ++ posCarry ++
-            Map("compacted-groups-from" -> cur.toString), io)
+        commitOn(table, m, Change("merge", entries,
+          kept = Some((Nil, m.files.filterNot(f => selPaths(f.path)))),
+          posDeletes = Some(splitPosSidecars(spark, m, selPaths, table, cur + 1, io)),
+          extra = Map("compacted-groups-from" -> cur.toString)), io)
       case None =>
-        publishManifest(table, cur + 1, cur, schema, Vector.empty, entries,
-          "overwrite", tableDecls(m) ++ Map("compacted-from" -> cur.toString), io)
+        commitOn(table, m, Change("overwrite", entries, kept = Some((Nil, Nil)),
+          eqDeletes = Some(Nil), posDeletes = Some(Nil),
+          extra = Map("compacted-from" -> cur.toString)), io)
     }
   }
 
@@ -3048,10 +2821,8 @@ object SnapshotTable {
     // entries carried verbatim — the consolidated segments' aggregated
     // bounds are recomputed by writeSegments from these exact stats
     val entries = m.inline ++ small.flatMap(m.loadSegment)
-    val v = publishManifest(table, cur + 1, cur, m.schema, big, entries,
-      mode = "rewrite",
-      extra = Map("rewritten-segments" -> small.size.toString) ++
-        tableDecls(m) ++ dvExtra(m), io)
+    val v = commitOn(table, m, Change("rewrite", kept = Some((big, entries)),
+      extra = Map("rewritten-segments" -> small.size.toString)), io)
     (m.segments.size, manifest(table, v, io).segments.size, v)
   }
 
@@ -3098,19 +2869,12 @@ object SnapshotTable {
       table: String,
       batchId: Long,
       io: SnapshotIO = LocalSnapshotIO): Boolean = {
-    val cur = currentVersion(table, io)
-    val last =
-      if (cur == 0) -1L
-      else manifest(table, cur, io).extra.get("batchid").map(_.toLong).getOrElse(-1L)
-    if (batchId <= last) false
+    // the batch commits on the head it checked for a replay
+    val head = headOf(table, io)
+    if (batchId <= lastBatchId(head)) false
     else {
-      commit(
-        df,
-        table,
-        append = cur > 0,
-        expectedCurrent = Some(cur),
-        extra = Map("batchid" -> batchId.toString),
-        io = io)
+      commitFrame(df, table, head, append = head.version > 0, Nil,
+        Map("batchid" -> batchId.toString), None, io)
       true
     }
   }
@@ -3426,12 +3190,9 @@ object SnapshotTable {
       batchId: Long,
       deleteCol: Option[String] = None,
       io: SnapshotIO = LocalSnapshotIO): Option[(Int, Int, Long)] = {
-    val cur = currentVersion(table, io)
-    val last =
-      if (cur == 0) -1L
-      else manifest(table, cur, io).extra.get("batchid").map(_.toLong).getOrElse(-1L)
-    if (batchId <= last) None
-    else Some(mergeWithExtra(batch, table, key, deleteCol, Nil,
+    val head = headOf(table, io)
+    if (batchId <= lastBatchId(head)) None
+    else Some(mergeOn(batch, table, head, key, deleteCol, Nil,
       Map("batchid" -> batchId.toString), io))
   }
 

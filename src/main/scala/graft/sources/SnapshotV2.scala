@@ -312,7 +312,7 @@ private[sources] class SnapshotV2Table(
   override def deleteWhere(filters: Array[Filter]): Unit = {
     if (provableWhole(filters)) {
       val kept = m.files.filter(f => filters.exists(!ManifestPruning.keeps(m.schema, f, _)))
-      SnapshotTable.publishDrop(table, m, kept)
+      SnapshotTable.commitOn(table, m, SnapshotTable.Change("delete", kept = Some((Nil, kept))))
       return
     }
     require(SnapshotTable.deleteModeOf(m).contains("positions"),
@@ -334,8 +334,7 @@ private[sources] class SnapshotV2Table(
     if (dropped.nonEmpty)
       scan = scan.where(!org.apache.spark.sql.functions.col("_file")
         .isin(dropped.toSeq: _*))
-    SnapshotTable.deletePositionsAndDrop(
-      scan.select("_file", "_pos"), table, dropped)
+    SnapshotTable.deletePositions(scan.select("_file", "_pos"), table, dropPaths = dropped)
   }
 }
 

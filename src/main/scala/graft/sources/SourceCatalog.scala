@@ -1795,7 +1795,7 @@ object SourceCatalog extends QueryModule {
       // SupportsRuntimeV2Filtering) narrows it to files that can hold
       // matching rows — applies the mutation, writes every surviving
       // row back, and the commit REPLACES exactly the scanned files
-      // (publishReplace, mode=merge): untouched files ride VERBATIM
+      // (the group-replace commit, mode=merge): untouched files ride VERBATIM
       // (REQUIREd below on the manifest diff — the O(touched files +
       // batch) contract of the API merge, now reachable from plain
       // SQL). The selective UPDATE hits the lower half of a 4-file

@@ -296,12 +296,12 @@ class Round42Spec extends AnyFunSuite {
       .createOrReplaceTempView("g42_race")
     spark.sql(s"INSERT INTO $cat.t SELECT * FROM g42_race")
     spark.sql(s"ALTER TABLE $cat.t SET TBLPROPERTIES('evolveLayout'='hours(ts)')")
-    // a write built pre-evolution carries the layout it STAMPED under —
-    // the commit tail compares it to the table's current declaration
+    // a write built pre-evolution was planned on the v2 manifest it
+    // STAMPED under — the commit tail compares its layout to the head's
+    val stale = SnapshotTable.manifest(table, 2L)
     val e = intercept[Exception] {
-      graft.sources.SnapshotTable.publishFilesForSpec(table,
-        SnapshotTable.manifest(table, 2L).schema, Nil,
-        stale = Map("temporal" -> "ts:days"))
+      SnapshotTable.commitOn(table, SnapshotTable.headOf(table),
+        SnapshotTable.Change("append", schema = Some(stale.schema), plannedOn = Some(stale)))
     }
     assert(e.getMessage.contains("evolved mid-write"))
   }

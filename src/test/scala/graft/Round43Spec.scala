@@ -12,7 +12,7 @@ import graft.sources.{SnapshotCatalog, SnapshotTable}
   * the unified DeclKeys list existed. A rollback of a bucketed table
   * demoted it to unlaid-out; a WAP publish dropped main's layout; a
   * manifest maintenance pass dropped everything. All three now carry
-  * tableDecls and are pinned here.
+  * every DeclKeys declaration and are pinned here.
   */
 class Round43Spec extends AnyFunSuite {
   import TestSpark._

@@ -11,17 +11,22 @@ import graft.sources.{SnapshotSourceProvider, SnapshotTable, SnapshotV2Provider}
 
 /** Generated operation sequences against the snapshot table format,
   * checked against an in-memory model: one row multiset per version.
-  * Each sequence starts from one base commit of (k, v) rows and applies
-  * up to five operations drawn from append, merge-on-read upsert,
+  * Each sequence starts from one base commit of (k, v) rows that
+  * declares `statscols=k` and a small `maxrowsperfile`, and applies up
+  * to five operations drawn from append, merge-on-read upsert,
   * copy-on-write merge, key delete, position delete, metadata-only
-  * value-column rename, compaction and two-column Z-order compaction
-  * on (k, current value column). The properties: `read` at every
-  * version holds exactly the model's rows (as a multiset),
-  * `readIncremental` over every append-only range holds exactly the
-  * rows appended in it, and a fresh-checkpoint AvailableNow drain holds
-  * the head's rows. A copy-on-write merge while deletes are outstanding
-  * must refuse. Fixed seed, bounded sizes; a failing sequence shrinks
-  * to a shorter one, printed in the failure.
+  * value-column rename, compaction, two-column Z-order compaction on
+  * (k, current value column), rollback to an earlier version (modelled
+  * as that version's rows) and deletion-vector consolidation. After
+  * every operation the head declares exactly the base's declarations
+  * (the rename log aside) and every live file carries `k` stats and a
+  * row count within the cap. The properties: `read` at every version
+  * holds exactly the model's rows (as a multiset), `readIncremental`
+  * over every append-only range holds exactly the rows appended in it,
+  * and a fresh-checkpoint AvailableNow drain holds the head's rows. A
+  * copy-on-write merge while deletes are outstanding must refuse, and
+  * so must a consolidation with none. Fixed seed, bounded sizes; a
+  * failing sequence shrinks to a shorter one, printed in the failure.
   */
 class SnapshotModelSpec extends AnyFunSuite {
   import TestSpark._
@@ -37,6 +42,8 @@ class SnapshotModelSpec extends AnyFunSuite {
   case object RenameValue extends Op
   case object Compact extends Op
   case object ZOrder extends Op
+  case class Rollback(toVersion: Long) extends Op
+  case object ConsolidateDVs extends Op
 
   private val key = Gen.choose(0L, 11L)
   private val rows: Gen[List[(Long, Long)]] = for {
@@ -51,16 +58,24 @@ class SnapshotModelSpec extends AnyFunSuite {
     1 -> key.map(DeletePositions(_)),
     3 -> Gen.const(RenameValue),
     2 -> Gen.const(Compact),
-    2 -> Gen.const(ZOrder))
+    2 -> Gen.const(ZOrder),
+    2 -> Gen.choose(1L, 5L).map(Rollback(_)),
+    3 -> Gen.const(ConsolidateDVs))
   private val ops: Gen[List[Op]] = Gen.choose(1, 5).flatMap(Gen.listOfN(_, op))
 
   private def kv(r: Row): (Long, Option[Long]) =
     (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
 
-  /** The model after each published version: its rows, and the rows
-    * the version appended when it only appended (Some(Nil) for a
-    * rename, which changes no rows; None for every other commit). */
-  private case class Version(rows: Rows, appended: Option[Rows])
+  /** The model after each published version: its rows, the rows the
+    * version appended when it only appended (Some(Nil) for a rename,
+    * which changes no rows; None for every other commit), the value
+    * column's name and whether deletes are outstanding. */
+  private case class Version(
+      rows: Rows, appended: Option[Rows], value: String, deletes: Boolean)
+
+  /** The base commit's declarations: every later head must carry them. */
+  private val MaxRows = 3L
+  private val declared = Map("statscols" -> "k", "maxrowsperfile" -> MaxRows.toString)
 
   /** Apply `ops` to a fresh table and to the model, version by version.
     * Returns the table path, the value column's current name and the
@@ -73,65 +88,82 @@ class SnapshotModelSpec extends AnyFunSuite {
     val table = s"$root/t"
     SnapshotTable.commit(
       spark.range(8).coalesce(1).select(col("id").as("k"), (col("id") * 10).as("v")),
-      table, append = false, statsColumns = Seq("k"))
-    var value = "v"
+      table, append = false, statsColumns = Seq("k"), extra = declared)
     var renames = 0
-    var deletesOutstanding = false
-    var model = Vector(Version((0L until 8L).map(k => (k, Some(k * 10))), None))
+    var model = Vector(Version((0L until 8L).map(k => (k, Some(k * 10))), None, "v", false))
+    def value: String = model.last.value
+    def deletesOutstanding: Boolean = model.last.deletes
     def frame(rs: List[(Long, Long)]): DataFrame = rs.toDF("k", value).coalesce(1)
     def head: Rows = model.last.rows
     def without(ks: Set[Long]): Rows = head.filterNot(r => ks(r._1))
     def some(rs: List[(Long, Long)]): Rows = rs.map { case (k, v) => (k, Some(v)) }
+    // a commit that leaves the head's value name and delete state as is
+    def same(rows: Rows, appended: Option[Rows] = None): Option[Version] =
+      Some(Version(rows, appended, value, deletesOutstanding))
+    def deleting(rows: Rows): Option[Version] = Some(Version(rows, None, value, true))
     ops.foreach { o =>
       val next: Option[Version] = o match {
         case Append(rs) =>
           SnapshotTable.commit(frame(rs), table, append = true)
-          Some(Version(head ++ some(rs), Some(some(rs))))
+          same(head ++ some(rs), Some(some(rs)))
         case MergeMoR(rs) =>
           SnapshotTable.mergeMoR(frame(rs), table, "k")
-          deletesOutstanding = true
-          Some(Version(without(rs.map(_._1).toSet) ++ some(rs), None))
+          deleting(without(rs.map(_._1).toSet) ++ some(rs))
         case MergeCoW(rs) =>
           val refused =
             try { SnapshotTable.merge(frame(rs), table, "k"); false }
             catch { case _: IllegalArgumentException => true }
           if (refused != deletesOutstanding)
             return Left(s"$o: refused=$refused with deletes outstanding=$deletesOutstanding")
-          if (refused) None
-          else Some(Version(without(rs.map(_._1).toSet) ++ some(rs), None))
+          if (refused) None else same(without(rs.map(_._1).toSet) ++ some(rs))
         case DeleteKeys(ks) =>
           SnapshotTable.deleteKeys(ks.toDF("k"), table, "k")
-          deletesOutstanding = true
-          Some(Version(without(ks.toSet), None))
+          deleting(without(ks.toSet))
         case DeletePositions(k) =>
           SnapshotTable.deletePositions(
             spark.read.format(SnapshotV2Provider.format).option("path", table).load()
               .where(col("k") === k).select("_file", "_pos"), table)
           // a delete that matches no row publishes nothing
-          if (!head.exists(_._1 == k)) None
-          else {
-            deletesOutstanding = true
-            Some(Version(without(Set(k)), None))
-          }
+          if (!head.exists(_._1 == k)) None else deleting(without(Set(k)))
         case RenameValue =>
           renames += 1
           SnapshotTable.renameColumn(table, value, s"v$renames")
-          value = s"v$renames"
-          Some(Version(head, Some(Nil)))
+          Some(Version(head, Some(Nil), s"v$renames", deletesOutstanding))
         case Compact | ZOrder =>
           // an empty table has nothing to compact: not generated into
           if (head.isEmpty) None
           else {
             if (o == Compact) SnapshotTable.compactSnapshot(spark, table)
             else SnapshotTable.compactZOrder(spark, table, Seq("k", value))
-            deletesOutstanding = false
-            Some(Version(head, None))
+            Some(Version(head, None, value, false))
           }
+        case Rollback(to) =>
+          // the head becomes the target's state: its rows, names and deletes
+          val target = math.min(to, model.size.toLong)
+          SnapshotTable.rollback(table, target)
+          Some(model((target - 1).toInt).copy(appended = None))
+        case ConsolidateDVs =>
+          val refused =
+            try { SnapshotTable.consolidateDeleteVectors(spark, table); false }
+            catch { case _: IllegalArgumentException => true }
+          if (refused == deletesOutstanding)
+            return Left(s"$o: refused=$refused with deletes outstanding=$deletesOutstanding")
+          if (refused) None else same(head)
       }
       model = model ++ next
       val published = SnapshotTable.currentVersion(table)
       if (published != model.size)
         return Left(s"after $o: version $published, the model expects ${model.size}")
+      val m = SnapshotTable.manifest(table, published)
+      val decls = m.extra.view.filterKeys(k =>
+        SnapshotTable.DeclKeys(k) && k != "renames").toMap
+      if (decls != declared)
+        return Left(s"after $o: the head declares $decls, the base $declared")
+      val uncapped = m.files.filterNot(f =>
+        f.stats.contains("k") && f.nstats.get("k").exists(_._2 <= MaxRows))
+      if (uncapped.nonEmpty)
+        return Left(s"after $o: ${uncapped.size} live file(s) without k stats or " +
+          s"over $MaxRows rows: ${uncapped.map(_.line).mkString("; ")}")
     }
     Right((table, value, model))
   }
