@@ -36,17 +36,32 @@ object Stage {
     * a "zero shuffle" claim against it would be vacuous. Execute the
     * frame first (the AQE-final plan exists only after execution). */
   def executedNodes(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    nodes(df.queryExecution.executedPlan)
+
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan)
       : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def expand(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => expand(a.executedPlan)
-      case q: QueryStageExec => expand(q.plan)
+    p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
       case _: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => Seq.empty
-      case other => other +: other.children.flatMap(expand)
+      case other => other +: other.children.flatMap(nodes)
     }
-    expand(df.queryExecution.executedPlan)
   }
+
+  /** Data files the graft-snapshot V2 scans of `plan` planned — files,
+    * not partitions: a clean read packs several files into one split
+    * and a key group bundles files. Pass `queryExecution.sparkPlan` for
+    * the static plan or `executedPlan` for the AQE-final one. */
+  def plannedFiles(plan: org.apache.spark.sql.execution.SparkPlan): Int =
+    nodes(plan).collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if b.scan.isInstanceOf[graft.sources.SnapshotV2Scan] =>
+        b.inputPartitions.collect {
+          case fp: org.apache.spark.sql.execution.datasources.FilePartition => fp.files.length
+        }.sum
+    }.sum
 
   /** Shuffle exchanges in the executed plan (reused ones excluded). */
   def shuffleCount(df: org.apache.spark.sql.DataFrame): Int =

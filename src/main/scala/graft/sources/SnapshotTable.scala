@@ -1420,9 +1420,9 @@ object SnapshotTable {
     * (TBLPROPERTIES('maxRowsPerFile'='N')). The rolling writers cut a
     * new file when the open one reaches it — what keeps a hot bucket
     * or a huge identity-cluster key from concentrating into one
-    * unsplittable multi-GB file at scale (the scan plans one partition
-    * per file, so the cap IS the read-parallelism floor; bucket/cluster
-    * grouping is unaffected — groups simply hold several files). */
+    * unsplittable multi-GB file at scale (the scan never splits a file,
+    * so the cap bounds one read task's file; bucket/cluster grouping is
+    * unaffected — groups simply hold several files). */
   private[sources] val MaxRowsK = "maxrowsperfile"
 
   /** The declared per-file row cap, if any. */

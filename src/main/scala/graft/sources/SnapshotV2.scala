@@ -16,6 +16,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -604,9 +605,8 @@ private[sources] class KeyedFilePartition(
   * back to that epoch's name POSITIONALLY (`InternalRow`s carry no
   * names — the translated read schema only steers the parquet column
   * resolution; the output rows align with the current projection by
-  * construction). Partitions are epoch-homogeneous: the scan disables
-  * key grouping while live files span epochs, and the single-file
-  * default partitioning is homogeneous trivially. */
+  * construction). Partitions are epoch-homogeneous: while live files
+  * span epochs the scan plans one file per partition. */
 private[sources] class RenameDispatchReaderFactory(
     current: PartitionReaderFactory,
     byEpoch: Map[Seq[String], PartitionReaderFactory],
@@ -618,7 +618,7 @@ private[sources] class RenameDispatchReaderFactory(
         epochOf.getOrElse(f.filePath.toPath.toUri.getPath, currentNames)
       val names = epoch(fp.files.head)
       require(fp.files.forall(f => epoch(f) == names),
-        "mixed rename epochs in one partition — grouping must be off under renames")
+        "mixed rename epochs in one partition — plan single files under renames")
       if (names == currentNames) current else byEpoch(names)
     case _ => current
   }
@@ -671,7 +671,7 @@ private[graft] class SnapshotV2Scan(
     * DPP. */
   @volatile private var runtime: Array[Filter] = Array.empty
 
-  /** Spec hook: the partition count of the LAST plan — proves runtime
+  /** Spec hook: the data-file count of the LAST plan — proves runtime
     * filters actually narrowed the file set (the static
     * inputPartitions on the exec node never reflects them). */
   @volatile private[graft] var lastPlanned: Int = -1
@@ -827,11 +827,11 @@ private[graft] class SnapshotV2Scan(
   }
 
   /** Do the surviving files span COLUMN-RENAME epochs? Key grouping
-    * bundles multiple files into one partition, and the rename
-    * dispatch needs every partition epoch-homogeneous — so grouping
-    * (SPJ) switches off while pre-rename files are live, exactly like
-    * [[mixedLayoutGens]]; a compaction (which rewrites every file
-    * under the current names) restores it. Pruning is unaffected: an
+    * and packing bundle files into one partition, and the rename
+    * dispatch needs every partition epoch-homogeneous — so both switch
+    * off while pre-rename files are live ([[singleFile]]); a compaction
+    * (which rewrites every file under the current names) restores
+    * them. Pruning is unaffected: an
     * old file's stats live under its old names, so current-name
     * lookups simply never skip it (sound). */
   private lazy val renamedEpochMixed: Boolean = {
@@ -858,109 +858,75 @@ private[graft] class SnapshotV2Scan(
       ManifestPruning.prunedEntries(m, m.schema, filters ++ runtime),
       filters ++ runtime))
 
-  /** File groups by exact cluster-key value, when the manifest proves
-    * one: the table declares a cluster column AND every surviving file
-    * records min == max for it (a pre-clustering legacy file without
-    * the guarantee degrades the whole scan to unknown partitioning —
-    * soundness over optimism). Values are Catalyst-typed to match the
-    * column (an IntegerType key must compare as Int on both join
-    * sides), sorted so co-clustered scans emit aligned partitions. */
-  private lazy val keyGroups: Option[Seq[(Any, Seq[SnapshotTable.FileEntry])]] =
-    // a limit/TopN-truncated scan plans a file SUBSET — reporting the
-    // full key-group partitioning over it would lie to SPJ; a limit
-    // query has no use for the clustering anyway. Metadata-column
-    // scans need single-FILE partitions (the `_file` constant and the
-    // `_pos` counter are per-file notions), so they opt out too.
-    // Outstanding deletion vectors opt out too: the DV row filter needs
-    // SINGLE-file partitions (the file's commit sequence scopes the
-    // filter), while a key group bundles files — losing SPJ until
-    // compaction is merge-on-read's documented read tax.
-    (if (limit.isDefined || topN.isDefined || metaFields.nonEmpty ||
-       anyDv || mixedLayoutGens || renamedEpochMixed) None
-     else SnapshotTable.clusterKeyOf(m)).flatMap { k =>
-      val dt = m.schema.fields.find(_.name == k).map(_.dataType)
-      def keyOf(f: SnapshotTable.FileEntry): Option[Any] = dt match {
-        case Some(ByteType | ShortType | IntegerType | LongType) =>
-          f.stats.get(k).collect { case (mn, mx) if mn == mx =>
-            dt.get match {
-              case ByteType    => mn.toByte
-              case ShortType   => mn.toShort
-              case IntegerType => mn.toInt
-              case _           => mn
+  /** Does a reader need SINGLE-FILE partitions? `_file`/`_pos` are
+    * per-file notions (a partition constant and a counter), an
+    * outstanding delete scopes by the file's commit sequence (equality
+    * DVs) or raw ordinals (position sidecars), and the rename dispatch
+    * picks one name epoch per partition. */
+  private lazy val singleFile: Boolean = metaFields.nonEmpty || anyDv || renamedEpochMixed
+
+  /** The one partition planner's layout: the declared layout
+    * ([[SnapshotTable.declaredLayout]]) as `(transform, key groups)`,
+    * when the manifest PROVES it. The arms try in precedence order —
+    * cluster, bucket, truncate, temporal — and the first whose stamp
+    * every surviving file carries wins (the cluster column's min == max
+    * value in its Catalyst type, else the arm's synthetic min == max
+    * stat). One unstamped file (written outside the layout's write
+    * path) degrades its arm — soundness over optimism — and the next
+    * declared arm tries; temporal never reports while a bucket is
+    * declared, so a compound (temporal x bucket) layout reports its join
+    * dimension (periods still prune through the raw timestamp stats).
+    * Spark's `groupPartitions` orders the key groups.
+    *
+    * Off — [[planInputPartitions]] then plans the ungrouped arm —
+    * wherever a reader needs single-file partitions ([[singleFile]]),
+    * under a limit/TopN file subset (reporting the full layout over a
+    * subset would lie to SPJ), and across layout generations (stamps
+    * from different transforms share one stat channel); a compaction
+    * (every file rewritten under the current names and spec, deletes
+    * applied) restores it after deletes, renames and spec evolution. */
+  private lazy val layout: Option[(Transform, Seq[(Any, Seq[SnapshotTable.FileEntry])])] =
+    if (singleFile || limit.isDefined || topN.isDefined || mixedLayoutGens || entries.isEmpty)
+      None
+    else {
+      val decl = SnapshotTable.declaredLayout(m)
+      def stamp(stat: String)(f: SnapshotTable.FileEntry): Option[Long] =
+        f.stats.get(stat).collect { case (lo, hi) if lo == hi => lo }
+      def clusterStamp(k: String)(f: SnapshotTable.FileEntry): Option[Any] =
+        m.schema.fields.find(_.name == k).map(_.dataType) match {
+          case Some(dt @ (ByteType | ShortType | IntegerType | LongType)) =>
+            f.stats.get(k).collect { case (mn, mx) if mn == mx =>
+              dt match {
+                case ByteType    => mn.toByte
+                case ShortType   => mn.toShort
+                case IntegerType => mn.toInt
+                case _           => mn
+              }
             }
-          }
-        case Some(StringType) =>
-          f.sstats.get(k).collect { case (mn, mx) if mn == mx =>
-            UTF8String.fromString(mn)
-          }
-        case _ => None
-      }
-      val keyed = entries.map(f => keyOf(f).map(_ -> f))
-      if (keyed.exists(_.isEmpty)) None
-      else Some(keyed.flatten.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq.sortBy {
-        case (key, _) => key match {
-          case u: UTF8String => u.toString
-          case n             => f"${n.toString.toLong}%020d" // numeric order, fixed width
+          case Some(StringType) =>
+            f.sstats.get(k).collect { case (mn, mx) if mn == mx => UTF8String.fromString(mn) }
+          case _ => None
         }
-      })
-    }.filter(_.nonEmpty)
-
-  /** File groups by hash-bucket id on a bucketed table — the bucket
-    * analogue of [[keyGroups]], same opt-outs (limit/TopN subsets,
-    * metadata columns, outstanding DVs) and the same soundness rule:
-    * one unstamped file (written outside the bucketed path) degrades
-    * the whole scan to unknown partitioning rather than lie to SPJ. */
-  private lazy val bucketGroups: Option[Seq[(Int, Seq[SnapshotTable.FileEntry])]] =
-    (if (limit.isDefined || topN.isDefined || metaFields.nonEmpty ||
-       anyDv || mixedLayoutGens || renamedEpochMixed) None
-     else SnapshotTable.bucketSpecOf(m)).flatMap { _ =>
-      val keyed = entries.map(f => f.stats.get(SnapshotTable.BucketStat).collect {
-        case (lo, hi) if lo == hi => lo.toInt -> f
-      })
-      if (keyed.exists(_.isEmpty)) None
-      else Some(keyed.flatten.groupBy(_._1).view.mapValues(_.map(_._2))
-        .toSeq.sortBy(_._1))
-    }.filter(_.nonEmpty)
-
-  /** File groups by truncate group on a width-grouped table — the
-    * order-preserving sibling of [[bucketGroups]], same opt-outs and
-    * the same one-unstamped-file-degrades-all soundness rule. */
-  private lazy val truncGroups: Option[Seq[(Long, Seq[SnapshotTable.FileEntry])]] =
-    (if (limit.isDefined || topN.isDefined || metaFields.nonEmpty ||
-       anyDv || mixedLayoutGens || renamedEpochMixed) None
-     else SnapshotTable.truncSpecOf(m)).flatMap { _ =>
-      val keyed = entries.map(f => f.stats.get(SnapshotTable.TruncStat).collect {
-        case (lo, hi) if lo == hi => lo -> f
-      })
-      if (keyed.exists(_.isEmpty)) None
-      else Some(keyed.flatten.groupBy(_._1).view.mapValues(_.map(_._2))
-        .toSeq.sortBy(_._1))
-    }.filter(_.nonEmpty)
-
-  /** File groups by temporal period on a time-partitioned table — the
-    * calendar sibling of [[truncGroups]], same opt-outs and the same
-    * one-unstamped-file-degrades-all soundness rule. On a COMPOUND
-    * (temporal × bucket) layout the bucket grouping wins the reported
-    * partitioning (the join dimension); periods still prune reads via
-    * the raw timestamp stats. */
-  private lazy val temporalGroups: Option[Seq[(Long, Seq[SnapshotTable.FileEntry])]] =
-    (if (limit.isDefined || topN.isDefined || metaFields.nonEmpty ||
-       anyDv || mixedLayoutGens || renamedEpochMixed || SnapshotTable.bucketSpecOf(m).nonEmpty) None
-     else SnapshotTable.temporalSpecOf(m)).flatMap { _ =>
-      val keyed = entries.map(f => f.stats.get(SnapshotTable.TemporalStat).collect {
-        case (lo, hi) if lo == hi => lo -> f
-      })
-      if (keyed.exists(_.isEmpty)) None
-      else Some(keyed.flatten.groupBy(_._1).view.mapValues(_.map(_._2))
-        .toSeq.sortBy(_._1))
-    }.filter(_.nonEmpty)
-
-  /** Any grouping arm, uniformly typed for partition planning. */
-  private lazy val grouped: Option[Seq[(Any, Seq[SnapshotTable.FileEntry])]] =
-    keyGroups
-      .orElse(bucketGroups.map(_.map { case (b, fs) => (b: Any, fs) }))
-      .orElse(truncGroups.map(_.map { case (t, fs) => (t: Any, fs) }))
-      .orElse(temporalGroups.map(_.map { case (t, fs) => (t: Any, fs) }))
+      val arms: Seq[(Transform, SnapshotTable.FileEntry => Option[Any])] = Seq(
+        decl.get(SnapshotTable.ClusterK).map(k => Expressions.identity(k) -> clusterStamp(k) _),
+        SnapshotTable.bucketSpecFromLayout(decl).map { case (c, n) =>
+          Expressions.bucket(n, c) -> ((f: SnapshotTable.FileEntry) =>
+            stamp(SnapshotTable.BucketStat)(f).map(_.toInt))
+        },
+        SnapshotTable.truncSpecFromLayout(decl).map { case (c, w) =>
+          Expressions.apply(s"truncate_$w", Expressions.column(c)) ->
+            stamp(SnapshotTable.TruncStat) _
+        },
+        SnapshotTable.temporalSpecFromLayout(decl)
+          .filterNot(_ => decl.contains(SnapshotTable.BucketK)).map { case (c, u) =>
+            Expressions.apply(u, Expressions.column(c)) -> stamp(SnapshotTable.TemporalStat) _
+          }).flatten
+      arms.iterator.flatMap { case (t, keyOf) =>
+        val keyed = entries.map(f => keyOf(f).map(_ -> f))
+        if (keyed.exists(_.isEmpty)) None
+        else Some(t -> keyed.flatten.groupMap(_._1)(_._2).toSeq)
+      }.nextOption()
+    }
 
   private def partitionedFile(f: SnapshotTable.FileEntry): PartitionedFile =
     SnapshotV2.partitionedFile(f, m.io)
@@ -1040,16 +1006,20 @@ private[graft] class SnapshotV2Scan(
     }
   }
 
+  /** Plans the key groups of [[layout]] when it holds; otherwise one
+    * file per partition where [[singleFile]] says a reader needs it,
+    * else files packed into splits with Spark's own file-scan packing
+    * (`maxPartitionBytes`, `openCostInBytes`; sized from the manifest's
+    * recorded file sizes, never split). Packing keeps manifest order,
+    * not Spark's largest-first, so rows stream in the order single-file
+    * partitions give and a write fed by the read stays byte-identical.
+    * Deletes and provenance compose inside a single-file partition: the
+    * metadata append is 1:1 over the raw stream and assigns raw ordinals
+    * BEFORE any delete filter drops rows, exactly what a stacked
+    * deletePositions batch must address. */
   override def planInputPartitions(): Array[InputPartition] = {
-    // deletion vectors apply reader-side (see createReaderFactory);
-    // BOTH delete formats COMPOSE with provenance reads: the
-    // metadata append is 1:1 over the raw stream and assigns raw
-    // ordinals BEFORE any delete filter drops rows — exactly what a
-    // stacked deletePositions batch must address (positions r16,
-    // equality DVs r17: the DV filter wraps outside the append with
-    // its key ordinal resolved in the appended layout)
-    val planned: Array[InputPartition] = grouped match {
-      case Some(groups) =>
+    val (files, planned): (Seq[SnapshotTable.FileEntry], Array[InputPartition]) = layout match {
+      case Some((_, groups)) =>
         // runtime filters narrow files WITHIN the static key groups
         // (they only ever remove files, so surviving keys ⊆ reported
         // keys — the alignment SPJ's pushPartValues machinery expects)
@@ -1060,15 +1030,11 @@ private[graft] class SnapshotV2Scan(
             groups.map { case (k, fs) => (k, fs.filter(f => keep(f.path))) }
               .filter(_._2.nonEmpty)
           }
-        live.zipWithIndex.map { case ((key, fs), i) =>
+        (live.flatMap(_._2), live.zipWithIndex.map { case ((key, fs), i) =>
           new KeyedFilePartition(i, fs.map(partitionedFile).toArray,
             new GenericInternalRow(Array[Any](key))): InputPartition
-        }.toArray
+        }.toArray)
       case None =>
-        // one partition per data file — the commit path already sizes
-        // files (one per shuffle partition); Spark's scan does not
-        // re-split single-row-group zstd parquet profitably.
-        //
         // A pushed LIMIT / TopN shrinks the set to the manifest-proven
         // bound — but only on the static plan: runtime filters reject
         // rows, so a truncated prefix could under-deliver under them.
@@ -1077,62 +1043,43 @@ private[graft] class SnapshotV2Scan(
           else topN.map(t => SnapshotV2.topNSubset(entries, m.schema, t))
             .orElse(limit.map(l => SnapshotV2.limitSubset(entries, l)))
             .getOrElse(entries)
-        bounded.zipWithIndex.map { case (f, i) =>
-          FilePartition(i, Array(partitionedFile(f))): InputPartition
-        }.toArray
+        val pfs = bounded.map(partitionedFile)
+        val parts =
+          if (singleFile) pfs.zipWithIndex.map { case (pf, i) => FilePartition(i, Array(pf)) }
+          else {
+            val spark = SparkSession.active
+            val open = SQLConf.get.filesOpenCostInBytes
+            FilePartition.getFilePartitions(spark, pfs,
+              FilePartition.maxSplitBytes(spark, pfs.map(_.length + open).sum))
+          }
+        (bounded, parts.toArray[InputPartition])
     }
-    lastPlanned = planned.length
+    lastPlanned = files.size
     // a row-level operation listens here: the planned entries ARE the
     // groups its commit will replace. The flag says whether RUNTIME
     // predicates shaped this plan — BatchScanExec may touch the STATIC
     // inputPartitions for partitioning bookkeeping AFTER the
     // runtime-filtered planning, so the listener must distinguish the
     // executed (filtered) plan from bookkeeping passes.
-    onPlanned(planned.toSeq.flatMap {
-      case fp: FilePartition => fp.files.toSeq.map(pf =>
-        SnapshotTable.FileEntry(pf.filePath.toPath.toUri.getPath, Map.empty))
-      case _ => Seq.empty[SnapshotTable.FileEntry]
-    }, runtime.nonEmpty)
+    onPlanned(files, runtime.nonEmpty)
     planned
   }
 
-  override def outputPartitioning(): Partitioning = keyGroups match {
-    case Some(groups) =>
-      new KeyGroupedPartitioning(
-        Array(Expressions.identity(SnapshotTable.clusterKeyOf(m).get)), groups.size)
-    case None => bucketGroups match {
-      case Some(groups) =>
-        val (c, n) = SnapshotTable.bucketSpecOf(m).get
-        new KeyGroupedPartitioning(Array(Expressions.bucket(n, c)), groups.size)
-      case None => truncGroups match {
-        case Some(groups) =>
-          val (c, w) = SnapshotTable.truncSpecOf(m).get
-          new KeyGroupedPartitioning(Array(
-            Expressions.apply(s"truncate_$w", Expressions.column(c))), groups.size)
-        case None => temporalGroups match {
-          case Some(groups) =>
-            val (c, u) = SnapshotTable.temporalSpecOf(m).get
-            new KeyGroupedPartitioning(Array(
-              Expressions.apply(u, Expressions.column(c))), groups.size)
-          case None => new UnknownPartitioning(entries.size)
-        }
-      }
-    }
-  }
+  override def outputPartitioning(): Partitioning =
+    layout.map { case (t, groups) => new KeyGroupedPartitioning(Array(t), groups.size) }
+      .getOrElse(new UnknownPartitioning(entries.size))
 
-  /** Each key-grouped partition holds exactly ONE cluster-key value, so
-    * it is trivially sorted by that key in every direction — reported
-    * as ascending (SupportsReportOrdering), which is what a sort-merge
+  /** Each cluster-key group holds exactly ONE key value, so it is
+    * trivially sorted by that key in every direction — reported as
+    * ascending (SupportsReportOrdering), which is what a sort-merge
     * join's required child ordering asks for: two co-clustered tables
     * join with zero exchange AND zero sort. Only reported when the key
     * survives column pruning (the ordering must resolve against this
     * scan's output). */
-  override def outputOrdering(): Array[V2SortOrder] = keyGroups match {
-    case Some(_) if SnapshotTable.clusterKeyOf(m).exists(k =>
-        requiredSchema.fieldNames.contains(k)) =>
-      Array(Expressions.sort(
-        Expressions.identity(SnapshotTable.clusterKeyOf(m).get),
-        SortDirection.ASCENDING, NullOrdering.NULLS_FIRST))
+  override def outputOrdering(): Array[V2SortOrder] = layout match {
+    case Some((t, _)) if t.name == "identity" &&
+        SnapshotTable.clusterKeyOf(m).exists(requiredSchema.fieldNames.contains) =>
+      Array(Expressions.sort(t, SortDirection.ASCENDING, NullOrdering.NULLS_FIRST))
     case _ => Array.empty
   }
 

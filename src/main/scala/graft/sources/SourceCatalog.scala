@@ -1407,10 +1407,7 @@ object SourceCatalog extends QueryModule {
         // the structural contract: the V2 scan planned a strict subset
         // of the 8 range-clustered files — pruned at the MANIFEST,
         // inside Catalyst's scan planning (static plan, pre-execution)
-        val planned = sel.queryExecution.sparkPlan.collect {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            b.inputPartitions.size
-        }.sum
+        val planned = graft.Stage.plannedFiles(sel.queryExecution.sparkPlan)
         val total = SnapshotTable.manifest(table, 2L).fileCount
         require(planned > 0 && planned < total,
           s"v2 manifest pruning planned $planned of $total files — want a strict subset")
@@ -1952,10 +1949,7 @@ object SourceCatalog extends QueryModule {
         def v2() =
           s.read.format(SnapshotV2Provider.format).option("path", table).load()
         def plannedOf(df: org.apache.spark.sql.DataFrame): Int =
-          df.queryExecution.sparkPlan.collect {
-            case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-              b.inputPartitions.size
-          }.sum
+          graft.Stage.plannedFiles(df.queryExecution.sparkPlan)
         val small = v2().limit(600)
         val over = v2().limit(1000000000)
         val m = SnapshotTable.manifest(table, 1L)
@@ -2010,10 +2004,7 @@ object SourceCatalog extends QueryModule {
         def v2() =
           s.read.format(SnapshotV2Provider.format).option("path", table).load()
         def plannedOf(df: org.apache.spark.sql.DataFrame): Int =
-          df.queryExecution.sparkPlan.collect {
-            case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-              b.inputPartitions.size
-          }.sum
+          graft.Stage.plannedFiles(df.queryExecution.sparkPlan)
         val total = SnapshotTable.manifest(table, 1L).fileCount
         val asc = v2().orderBy(col("o_orderkey")).limit(50)
         val desc = v2().orderBy(col("o_orderkey").desc).limit(50)
@@ -2798,10 +2789,7 @@ object SourceCatalog extends QueryModule {
           .where(col("ts") >= expr(s"timestamp_micros(${T0 + 24L * H})") &&
             col("ts") < expr(s"timestamp_micros(${T0 + 48L * H})"))
         day1.collect()
-        val planned = graft.Stage.executedNodes(day1).collect {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            b.inputPartitions.size
-        }.sum
+        val planned = graft.Stage.plannedFiles(day1.queryExecution.executedPlan)
         require(planned == 1, s"a one-day read plans ONE file, got $planned")
         def agg(df: org.apache.spark.sql.DataFrame, arm: String) =
           df.agg(
@@ -2998,10 +2986,7 @@ object SourceCatalog extends QueryModule {
         val nFiles = SnapshotTable.manifest(s"$wh/z", 3L).fileCount
         require(nFiles >= 4, s"need a multi-file layout to prove pruning, got $nFiles")
         def planned(df: org.apache.spark.sql.DataFrame): Int =
-          df.queryExecution.sparkPlan.collect {
-            case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-              b.inputPartitions.size
-          }.sum
+          graft.Stage.plannedFiles(df.queryExecution.sparkPlan)
         val byCk = s.sql(s"SELECT * FROM $cat.z WHERE ck BETWEEN 100 AND 299")
         val byYr = s.sql(s"SELECT * FROM $cat.z WHERE yr = 1995")
         require(planned(byCk) < nFiles && planned(byYr) < nFiles,
@@ -3079,10 +3064,7 @@ object SourceCatalog extends QueryModule {
         } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
         // point lookup prunes to bucket(371)'s files only
         val eq = s.sql(s"SELECT * FROM $cat.o WHERE ck = 371")
-        val planned = eq.queryExecution.sparkPlan.collect {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            b.inputPartitions.size
-        }.sum
+        val planned = graft.Stage.plannedFiles(eq.queryExecution.sparkPlan)
         val total = SnapshotTable.manifest(s"$wh/o", 2L).fileCount
         require(planned < total,
           s"bucket equality pruning must plan a strict file subset ($planned/$total)")
@@ -3266,10 +3248,7 @@ object SourceCatalog extends QueryModule {
         // grouping): a window inside roughly one group
         val (rlo, rhi) = (w / 2L, w / 2L + w / 4L)
         val rq = s.sql(s"SELECT * FROM $cat.o WHERE ck BETWEEN $rlo AND $rhi")
-        val planned = rq.queryExecution.sparkPlan.collect {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            b.inputPartitions.size
-        }.sum
+        val planned = graft.Stage.plannedFiles(rq.queryExecution.sparkPlan)
         val total = SnapshotTable.manifest(s"$wh/o", 2L).fileCount
         require(planned < total,
           s"the width grouping must prune range reads ($planned/$total)")
@@ -3401,10 +3380,7 @@ object SourceCatalog extends QueryModule {
             "one key per partition: the reported ordering must kill the SMJ sorts")
         } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
         val one = s.sql(s"SELECT * FROM $cat.c WHERE nk = 7")
-        val planned = one.queryExecution.sparkPlan.collect {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            b.inputPartitions.size
-        }.sum
+        val planned = graft.Stage.plannedFiles(one.queryExecution.sparkPlan)
         require(planned == 1, s"a one-key read of a clustered table plans ONE " +
           s"partition, got $planned")
         s.table(s"$cat.c").join(s.table(s"$cat.s"), Seq("nk"))
@@ -3486,10 +3462,7 @@ object SourceCatalog extends QueryModule {
         val (rlo, rhi) = (mn + (mx - mn) / 3, mn + (mx - mn) / 2)
         val rq = s.sql(s"SELECT * FROM $cat.a WHERE ts BETWEEN " +
           s"timestamp_micros(${rlo}L) AND timestamp_micros(${rhi}L)")
-        val planned = rq.queryExecution.sparkPlan.collect {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            b.inputPartitions.size
-        }.sum
+        val planned = graft.Stage.plannedFiles(rq.queryExecution.sparkPlan)
         val total = SnapshotTable.manifest(s"$wh/a", 2L).fileCount
         require(planned < total,
           s"the period grouping must prune date-range reads ($planned/$total)")
@@ -3583,10 +3556,7 @@ object SourceCatalog extends QueryModule {
             "the compacted layout must still SPJ with zero exchanges")
         } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
         val eq = s.sql(s"SELECT * FROM $cat.o WHERE ck = 371")
-        val planned = eq.queryExecution.sparkPlan.collect {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            b.inputPartitions.size
-        }.sum
+        val planned = graft.Stage.plannedFiles(eq.queryExecution.sparkPlan)
         require(planned < m.files.size,
           s"bucket pruning must survive the compact ($planned/${m.files.size})")
         def agg(df: org.apache.spark.sql.DataFrame, arm: String) =
@@ -3849,10 +3819,7 @@ object SourceCatalog extends QueryModule {
           t
         } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
         def planned(df: org.apache.spark.sql.DataFrame): Int =
-          df.queryExecution.sparkPlan.collect {
-            case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-              b.inputPartitions.size
-          }.sum
+          graft.Stage.plannedFiles(df.queryExecution.sparkPlan)
         val bnd = ev.agg(
           min(unix_micros(col("ts"))).as("mn"),
           max(unix_micros(col("ts"))).as("mx")).collect()(0)
@@ -3999,10 +3966,7 @@ object SourceCatalog extends QueryModule {
           unix_micros(col("mx")).as("max_us"))
         // oldest-five probe: the θ-bounded TopN plans a strict subset
         val oldest = s.table(s"$cat.e").orderBy(col("ts"), col("eid")).limit(5)
-        val planned = oldest.queryExecution.sparkPlan.collect {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            b.inputPartitions.size
-        }.sum
+        val planned = graft.Stage.plannedFiles(oldest.queryExecution.sparkPlan)
         val total = SnapshotTable.manifest(s"$wh/e", 2L).fileCount
         require(planned < total,
           s"ORDER BY ts LIMIT must plan a strict file subset ($planned/$total)")

@@ -3,7 +3,6 @@ package graft.tools
 import graft.GraftSession
 import graft.sources.{SnapshotTable, SnapshotV2Provider}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 /** SURVEY §5 scale-stress for the round-13 V2 scan-planning features:
@@ -16,12 +15,11 @@ import org.apache.spark.sql.functions._
   *
   * Measures, on the fragmented table and again after the metadata-only
   * rewrite_segments pass:
-  *   - full-scan static planning: partitions + wall (the baseline)
+  *   - full-scan static planning: planned files + wall (the baseline)
   *   - LIMIT 100: planned files (manifest-bounded prefix — want 1)
   *   - ORDER BY key LIMIT 50, both directions: planned files (θ-bounded
   *     — want ~1; commits write disjoint key ranges)
-  *   - COUNT(*): input partitions (manifest-served — want 1 metadata
-  *     row, 0 data files) + wall
+  *   - COUNT(*): planned files (manifest-served — want 0) + wall
   * The point is the SHAPE: planned work for limit/TopN/agg stays O(1)
   * in the file count, and segment consolidation shrinks planning wall
   * without touching a data file.
@@ -34,10 +32,8 @@ object V2PlanStress {
     (a, (System.nanoTime() - t0) / 1e9)
   }
 
-  private def planParts(df: DataFrame): Int =
-    df.queryExecution.sparkPlan.collect {
-      case b: BatchScanExec => b.inputPartitions.size
-    }.sum
+  private def planFiles(df: DataFrame): Int =
+    graft.Stage.plannedFiles(df.queryExecution.sparkPlan)
 
   def main(args: Array[String]): Unit = {
     val commits = args.headOption.map(_.toInt).getOrElse(60)
@@ -63,15 +59,15 @@ object V2PlanStress {
 
     def report(tag: String): Unit = {
       val m = SnapshotTable.manifest(table, SnapshotTable.currentVersion(table))
-      val (full, fullS) = time(planParts(v2()))
-      val (lim, limS) = time(planParts(v2().limit(100)))
-      val (tAsc, tAscS) = time(planParts(v2().orderBy(col("o_orderkey")).limit(50)))
-      val (tDesc, tDescS) = time(planParts(v2().orderBy(col("o_orderkey").desc).limit(50)))
-      val (agg, aggS) = time(planParts(v2().agg(count(lit(1)))))
+      val (full, fullS) = time(planFiles(v2()))
+      val (lim, limS) = time(planFiles(v2().limit(100)))
+      val (tAsc, tAscS) = time(planFiles(v2().orderBy(col("o_orderkey")).limit(50)))
+      val (tDesc, tDescS) = time(planFiles(v2().orderBy(col("o_orderkey").desc).limit(50)))
+      val (agg, aggS) = time(planFiles(v2().agg(count(lit(1)))))
       println(f"V2PLAN $tag files=${m.fileCount} segments=${m.segments.size} | " +
         f"full=$full (${fullS}%.2fs) limit100=$lim (${limS}%.2fs) " +
         f"topnAsc=$tAsc (${tAscS}%.2fs) topnDesc=$tDesc (${tDescS}%.2fs) " +
-        f"aggParts=$agg (${aggS}%.2fs)")
+        f"aggFiles=$agg (${aggS}%.2fs)")
     }
     report("fragmented")
     val ((before, after, _), rwS) = time(SnapshotTable.rewriteSegments(table))

@@ -95,8 +95,7 @@ class Round18Spec extends AnyFunSuite {
     // a selective year hits a strict subset of the 8 range-clustered files
     val sel = full.filter(col("o_year") === 1995)
     val res = sel.collect()
-    val scanned = PlanCheck.collectNodes[BatchScanExec](sel)
-      .map(_.inputPartitions.size).sum
+    val scanned = graft.Stage.plannedFiles(sel.queryExecution.executedPlan)
     assert(scanned > 0 && scanned < 8,
       s"expected manifest pruning to skip files (scanned $scanned of 8)")
     assert(res.toSeq.sortBy(_.getLong(0))

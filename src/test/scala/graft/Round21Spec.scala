@@ -33,9 +33,7 @@ class Round21Spec extends AnyFunSuite {
     spark.read.format(SnapshotV2Provider.format).option("path", path).load()
 
   private def plannedOf(df: DataFrame): Int =
-    df.queryExecution.sparkPlan.collect {
-      case b: BatchScanExec => b.inputPartitions.size
-    }.sum
+    graft.Stage.plannedFiles(df.queryExecution.sparkPlan)
 
   private def fe(
       path: String,

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -125,9 +124,7 @@ class Round24Spec extends AnyFunSuite {
   }
 
   private def plannedOf(df: DataFrame): Int =
-    df.queryExecution.sparkPlan.collect {
-      case b: BatchScanExec => b.inputPartitions.size
-    }.sum
+    graft.Stage.plannedFiles(df.queryExecution.sparkPlan)
 
   test("CALL compact(zorder_by): selective reads on BOTH dims plan strict subsets") {
     val (cat, wh) = newCat()

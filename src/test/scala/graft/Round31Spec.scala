@@ -156,10 +156,7 @@ class Round31Spec extends AnyFunSuite {
       val rq = spark.table(s"$cat.a")
         .filter(col("ts") < expr("timestamp'2024-01-02 00:00:00'"))
       assert(rq.count() === 24)
-      val planned = rq.queryExecution.sparkPlan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.inputPartitions.size
-      }.sum
+      val planned = graft.Stage.plannedFiles(rq.queryExecution.sparkPlan)
       val total = SnapshotTable.manifest(s"$wh/a",
         SnapshotTable.currentVersion(s"$wh/a")).fileCount
       assert(planned < total,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,9 +58,7 @@ class Round32Spec extends AnyFunSuite {
     val rq = spark.table(s"$cat.t")
       .filter(col("ts") < expr("timestamp'2024-01-02 00:00:00'"))
     assert(rq.count() === 24)
-    val planned = rq.queryExecution.sparkPlan.collect {
-      case b: BatchScanExec => b.inputPartitions.size
-    }.sum
+    val planned = graft.Stage.plannedFiles(rq.queryExecution.sparkPlan)
     assert(planned === 1, s"a one-day read plans one file, got $planned")
     assert(spark.table(s"$cat.t").agg(sum("v")).collect()(0).getLong(0) ===
       (0L until 96L).sum)

@@ -136,10 +136,7 @@ class Round35Spec extends AnyFunSuite {
     val rq = spark.table(s"$cat.e")
       .filter(col("ts") < expr("timestamp'2024-01-02 00:00:00'"))
     assert(rq.count() === 24)
-    val planned = rq.queryExecution.sparkPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.size
-    }.sum
+    val planned = graft.Stage.plannedFiles(rq.queryExecution.sparkPlan)
     val total = SnapshotTable.manifest(s"$wh/e",
       SnapshotTable.currentVersion(s"$wh/e")).fileCount
     assert(planned < total)

@@ -77,10 +77,7 @@ class Round37Spec extends AnyFunSuite {
       val q = spark.table(s"$cat.t")
         .filter(col("ts") < expr("timestamp'2024-01-02 00:00:00'"))
       assert(q.count() === 26)
-      q.queryExecution.sparkPlan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.inputPartitions.size
-      }.sum
+      graft.Stage.plannedFiles(q.queryExecution.sparkPlan)
     }
     assert(planned === 1, s"a one-day read plans one file post-compact, got $planned")
   }

@@ -51,9 +51,7 @@ class Round39Spec extends AnyFunSuite {
     // DESC TopN prunes too (the newest-n probe)
     val newest = spark.table(s"$cat.t").orderBy(col("ts").desc).limit(3)
     assert(newest.count() === 3)
-    val planned = newest.queryExecution.sparkPlan.collect {
-      case b: BatchScanExec => b.inputPartitions.size
-    }.sum
+    val planned = graft.Stage.plannedFiles(newest.queryExecution.sparkPlan)
     val total = SnapshotTable.manifest(s"$wh/t", 2L).fileCount
     assert(planned < total, s"DESC TopN must plan a strict subset ($planned/$total)")
   }
@@ -133,9 +131,7 @@ class Round39Spec extends AnyFunSuite {
     // pruning converts the pushed java.sql.Date/LocalDate literal
     val rq = spark.table(s"$cat.t").filter(col("d") < lit("2024-01-05").cast("date"))
     assert(rq.count() === 4)
-    val planned = rq.queryExecution.sparkPlan.collect {
-      case b: BatchScanExec => b.inputPartitions.size
-    }.sum
+    val planned = graft.Stage.plannedFiles(rq.queryExecution.sparkPlan)
     assert(planned < m.files.size,
       s"date-range pruning must plan a strict subset ($planned/${m.files.size})")
   }

@@ -108,10 +108,7 @@ class Round42Spec extends AnyFunSuite {
     def plannedFor(k: Long): Int = {
       val q = spark.table(s"$cat.t").where(col("k") === k)
       assert(q.collect().map(_.getLong(0)).toSeq === Seq(k))
-      graft.Stage.executedNodes(q).collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.inputPartitions.size
-      }.sum
+      graft.Stage.plannedFiles(q.queryExecution.executedPlan)
     }
     assert(plannedFor(5L) === 1,
       "a gen-0 lookup must prune to ONE file under the OLD bucket(8) spec")
@@ -346,18 +343,12 @@ class Round42Spec extends AnyFunSuite {
       t2, append = true, statsColumns = Seq("ts2"))
     val q = spark.table(s"$cat.n").where(col("ts2").isNotNull)
     assert(q.count() === 10L)
-    val planned = graft.Stage.executedNodes(q).collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.size
-    }.sum
+    val planned = graft.Stage.plannedFiles(q.queryExecution.executedPlan)
     assert(planned === 1,
       s"IS NOT NULL must skip the all-NULL timestamp file, planned $planned")
     val qn = spark.table(s"$cat.n").where(col("ts2").isNull)
     assert(qn.count() === 10L)
-    val plannedN = graft.Stage.executedNodes(qn).collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.size
-    }.sum
+    val plannedN = graft.Stage.plannedFiles(qn.queryExecution.executedPlan)
     assert(plannedN === 1,
       s"IS NULL must skip the no-NULL timestamp file, planned $plannedN")
   }

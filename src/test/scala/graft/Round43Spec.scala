@@ -51,10 +51,7 @@ class Round43Spec extends AnyFunSuite {
     val day0 = spark.table(s"$cat.t")
       .where(col("ts") < expr("timestamp'2024-01-02 00:00:00'"))
     assert(day0.count() === 24)
-    val planned = graft.Stage.executedNodes(day0).collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.size
-    }.sum
+    val planned = graft.Stage.plannedFiles(day0.queryExecution.executedPlan)
     assert(planned === 1, s"the restored days layout must prune, got $planned")
   }
 

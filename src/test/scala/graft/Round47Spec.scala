@@ -77,10 +77,7 @@ class Round47Spec extends AnyFunSuite {
     def plannedFor(k: Long): Int = {
       val q = spark.table(s"$cat.t").where(col("k") === k)
       assert(q.collect().map(_.getLong(0)).toSeq === Seq(k))
-      graft.Stage.executedNodes(q).collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.inputPartitions.size
-      }.sum
+      graft.Stage.plannedFiles(q.queryExecution.executedPlan)
     }
     assert(plannedFor(5L) === 1 && plannedFor(205L) === 1)
     // reads exact, and the pass is idempotent

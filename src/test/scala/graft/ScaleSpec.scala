@@ -215,10 +215,7 @@ class ScaleSpec extends AnyFunSuite {
       .filter(col("ts") >= expr("timestamp'2024-01-18 00:00:00'") &&
         col("ts") < expr("timestamp'2024-01-19 00:00:00'"))
     assert(day17.count() === 4000)
-    val planned = day17.queryExecution.sparkPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.size
-    }.sum
+    val planned = graft.Stage.plannedFiles(day17.queryExecution.sparkPlan)
     assert(planned === 1, s"a one-day read plans ONE file at volume, got $planned")
   }
 
@@ -331,10 +328,7 @@ class ScaleSpec extends AnyFunSuite {
       val q = spark.table(s"$cat.e")
         .where(col("ts") >= expr(lo) && col("ts") < expr(hi))
       assert(q.count() === 3)
-      graft.Stage.executedNodes(q).collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.inputPartitions.size
-      }.sum
+      graft.Stage.plannedFiles(q.queryExecution.executedPlan)
     }
     assert(planned(catS, 10) === 3 && planned(catB, 100) === 3,
       "a pruned post-evolution read plans O(touched files) at 10x")
@@ -345,10 +339,7 @@ class ScaleSpec extends AnyFunSuite {
         .where(col("ts") >= expr("timestamp'2024-01-03 00:00:00'") &&
           col("ts") < expr("timestamp'2024-01-04 00:00:00'"))
       q.collect()
-      graft.Stage.executedNodes(q).collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.inputPartitions.size
-      }.sum
+      graft.Stage.plannedFiles(q.queryExecution.executedPlan)
     }
     assert(plannedOld(catS) === 1 && plannedOld(catB) === 1,
       "old-generation day reads stay 1-file at 10x")

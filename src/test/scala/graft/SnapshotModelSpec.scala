@@ -14,8 +14,9 @@ import graft.sources.{SnapshotSourceProvider, SnapshotTable, SnapshotV2Provider}
   * Each sequence starts from one base commit of (k, v) rows that
   * declares `statscols=k` and a small `maxrowsperfile`, and applies up
   * to five operations drawn from append, merge-on-read upsert,
-  * copy-on-write merge, key delete, position delete, metadata-only
-  * value-column rename, compaction, two-column Z-order compaction on
+  * copy-on-write merge, key delete, position deletes of one or two
+  * keys (one batch each), metadata-only value-column rename,
+  * compaction, two-column Z-order compaction on
   * (k, current value column), rollback to an earlier version (modelled
   * as that version's rows) and deletion-vector consolidation. After
   * every operation the head declares exactly the base's declarations
@@ -38,7 +39,7 @@ class SnapshotModelSpec extends AnyFunSuite {
   case class MergeMoR(rows: List[(Long, Long)]) extends Op
   case class MergeCoW(rows: List[(Long, Long)]) extends Op
   case class DeleteKeys(keys: List[Long]) extends Op
-  case class DeletePositions(key: Long) extends Op
+  case class DeletePositions(keys: List[Long]) extends Op
   case object RenameValue extends Op
   case object Compact extends Op
   case object ZOrder extends Op
@@ -55,7 +56,7 @@ class SnapshotModelSpec extends AnyFunSuite {
     2 -> rows.map(MergeMoR(_)),
     4 -> rows.map(MergeCoW(_)),
     1 -> Gen.nonEmptyListOf(key).map(ks => DeleteKeys(ks.distinct.take(3))),
-    1 -> key.map(DeletePositions(_)),
+    1 -> Gen.choose(1, 2).flatMap(Gen.listOfN(_, key)).map(ks => DeletePositions(ks.distinct)),
     3 -> Gen.const(RenameValue),
     2 -> Gen.const(Compact),
     2 -> Gen.const(ZOrder),
@@ -102,7 +103,7 @@ class SnapshotModelSpec extends AnyFunSuite {
       Some(Version(rows, appended, value, deletesOutstanding))
     def deleting(rows: Rows): Option[Version] = Some(Version(rows, None, value, true))
     ops.foreach { o =>
-      val next: Option[Version] = o match {
+      val next: IterableOnce[Version] = o match {
         case Append(rs) =>
           SnapshotTable.commit(frame(rs), table, append = true)
           same(head ++ some(rs), Some(some(rs)))
@@ -119,12 +120,17 @@ class SnapshotModelSpec extends AnyFunSuite {
         case DeleteKeys(ks) =>
           SnapshotTable.deleteKeys(ks.toDF("k"), table, "k")
           deleting(without(ks.toSet))
-        case DeletePositions(k) =>
-          SnapshotTable.deletePositions(
-            spark.read.format(SnapshotV2Provider.format).option("path", table).load()
-              .where(col("k") === k).select("_file", "_pos"), table)
-          // a delete that matches no row publishes nothing
-          if (!head.exists(_._1 == k)) None else deleting(without(Set(k)))
+        case DeletePositions(ks) =>
+          // one batch per key, so two keys leave two position sidecars;
+          // a batch that matches no row publishes nothing
+          ks.foldLeft(Vector.empty[Version]) { (vs, k) =>
+            val rows = vs.lastOption.fold(head)(_.rows)
+            SnapshotTable.deletePositions(
+              spark.read.format(SnapshotV2Provider.format).option("path", table).load()
+                .where(col("k") === k).select("_file", "_pos"), table)
+            if (!rows.exists(_._1 == k)) vs
+            else vs :+ Version(rows.filterNot(_._1 == k), None, value, true)
+          }
         case RenameValue =>
           renames += 1
           SnapshotTable.renameColumn(table, value, s"v$renames")
