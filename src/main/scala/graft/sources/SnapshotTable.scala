@@ -1299,62 +1299,15 @@ object SnapshotTable {
     * time travel. Loads exactly the manifest's file list under the
     * manifest's schema — never a directory listing. Files committed
     * under an older (narrower) schema yield nulls in since-added
-    * columns. */
+    * columns. A `filter` on the result prunes files at the manifest:
+    * the scan's pushed filters skip every file whose stats prove it
+    * holds no match ([[ManifestPruning]]). */
   def read(
       spark: SparkSession,
       table: String,
       version: Option[Long] = None,
       io: SnapshotIO = LocalSnapshotIO): DataFrame =
     readFiles(spark, table, manifest(table, version.getOrElse(currentVersion(table, io)), io))
-
-  /** Manifest-level file pruning: load only the files whose recorded
-    * [min, max] for `column` intersects [lo, hi] (files without stats
-    * are read — stats may only ever SKIP provably-absent files). The
-    * residual row filter still applies downstream; what the manifest
-    * eliminates is opening the non-matching files at all. */
-  def readPruned(
-      spark: SparkSession,
-      table: String,
-      column: String,
-      lo: Long,
-      hi: Long,
-      version: Option[Long] = None,
-      io: SnapshotIO = LocalSnapshotIO): DataFrame = {
-    val m = manifest(table, version.getOrElse(currentVersion(table, io)), io)
-    readFiles(spark, table, m, Some(m.filesFor(column, lo, hi)))
-  }
-
-  /** String-key variant of [[readPruned]] — date strings, ID prefixes:
-    * the common cluster dimensions that are not integers. */
-  def readPrunedString(
-      spark: SparkSession,
-      table: String,
-      column: String,
-      lo: String,
-      hi: String,
-      version: Option[Long] = None,
-      io: SnapshotIO = LocalSnapshotIO): DataFrame = {
-    val m = manifest(table, version.getOrElse(currentVersion(table, io)), io)
-    readFiles(spark, table, m, Some(m.filesForString(column, lo, hi)))
-  }
-
-  /** NULL-membership pruning off the manifest's (nullCount, rowCount)
-    * stats: `wantNull = false` reads only files that can hold a
-    * non-NULL row of `column` (an all-NULL file — e.g. every
-    * pre-evolution file of an added column — is skipped without
-    * opening), `wantNull = true` the complement. The residual row
-    * filter still applies downstream, as with every stats prune. */
-  def readPrunedNulls(
-      spark: SparkSession,
-      table: String,
-      column: String,
-      wantNull: Boolean,
-      version: Option[Long] = None,
-      io: SnapshotIO = LocalSnapshotIO): DataFrame = {
-    val m = manifest(table, version.getOrElse(currentVersion(table, io)), io)
-    readFiles(spark, table, m,
-      Some(if (wantNull) m.filesForNull(column) else m.filesForNotNull(column)))
-  }
 
   /** Every batch read of a snapshot: ONE V2 scan of manifest `m`
     * (all of its files, or the `files` subset), which applies the

@@ -5,7 +5,7 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -17,21 +17,22 @@ import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning,
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The snapshot table through Spark's DataSource V2 API — the arm that
-  * unlocks what V1 `PrunedFilteredScan` structurally cannot express:
+/** The snapshot table through Spark's DataSource V2 API — the one
+  * batch read path of the table format:
   *
   *   - **Manifest pruning inside V2 scan planning**: pushed filters
-  *     route through the same [[ManifestPruning]] predicate as the V1
-  *     relation (segment bounds first, then file bounds), so the
-  *     `BatchScan` plans exactly the surviving files — before any
-  *     parquet footer is opened. All filters are reported back as
-  *     residual (stats prove file-level ABSENCE only), so Spark
-  *     re-applies them row-wise and pruning can never change results.
+  *     route through [[ManifestPruning]] (segment bounds first, then
+  *     file bounds), so the `BatchScan` plans exactly the surviving
+  *     files — before any parquet footer is opened. It is the only
+  *     stats pruning a read gets: a pruned read is `read(...)` plus a
+  *     `filter`. All filters are reported back as residual (stats prove
+  *     file-level ABSENCE only), so Spark re-applies them row-wise and
+  *     pruning can never change results.
   *   - **Storage-partitioned joins** (`SupportsReportPartitioning`):
   *     a table committed with `clusterBy = k` holds exactly one value
   *     of `k` per data file (recorded as min == max in the file's
@@ -48,9 +49,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[Bridge.parquetReaderFactory]] wraps `ParquetPartitionReaderFactory`):
   * vectorized/columnar batches, parquet row-group pruning from the
   * pushed filters, missing-column → NULL schema clipping (add-column
-  * evolution). Options mirror the V1 arm: `path`, `versionAsOf`,
-  * `timestampAsOf`. The table is also writable (the transactional
-  * DSv2 BatchWrite/StreamingWrite in SnapshotCatalog.scala), streams
+  * evolution). Options: `path`, `versionAsOf`, `timestampAsOf`. The
+  * table is also writable (the transactional DSv2
+  * BatchWrite/StreamingWrite in SnapshotCatalog.scala), streams
   * ([[SnapshotMicroBatchStream]]), and takes metadata-only DELETE /
   * TRUNCATE — the full four-quadrant V2 surface, usually consumed
   * through [[SnapshotCatalog]]'s SQL front. Outstanding deletion
@@ -77,8 +78,8 @@ object SnapshotV2Provider {
   /** `spark.read.format(...)` needs the provider CLASS name. */
   val format: String = classOf[SnapshotV2Provider].getName
 
-  /** Resolve (table root, pinned manifest) from read options — the same
-    * version rules as the V1 relation: `versionAsOf` exact,
+  /** Resolve (table root, pinned manifest) from read options:
+    * `versionAsOf` exact (a version or a tag),
     * `timestampAsOf` = newest stamped version at or before the stamp
     * (version order authoritative), else current head. */
   private[sources] def resolve(
@@ -146,6 +147,85 @@ object SnapshotSourceProvider {
 
   /** `spark.readStream.format(...)` needs the provider CLASS name. */
   val format: String = classOf[SnapshotSourceProvider].getName
+}
+
+/** The `graft-snapshot-batch` format —
+  * `spark.read.format(SnapshotRelationProvider.format).option("path",
+  * root)` — an alias of [[SnapshotV2Provider]] for reads: the same
+  * options (`path`, `versionAsOf`, `timestampAsOf`), the same V2 scan
+  * and the same manifest pruning of pushed filters. It is also the
+  * format's `df.write.format(...).mode(...).save()`, through the V1
+  * write contract below. Its table advertises reads only: `save()`
+  * takes Spark's V2 write path for a table with BATCH_WRITE, and that
+  * path refuses ErrorIfExists and Ignore; without it `save()` falls
+  * back to [[createRelation]], which honors every SaveMode. */
+class SnapshotRelationProvider extends SnapshotV2Provider with CreatableRelationProvider {
+
+  override def shortName(): String = "graft-snapshot-batch"
+
+  /** `save()` then passes the frame's schema to [[getTable]] instead of
+    * inferring the table's, so writing a table not yet published works. */
+  override def supportsExternalMetadata(): Boolean = true
+
+  /** A read-only view that resolves the pinned manifest on first use:
+    * `save()` only asks it for its capabilities. */
+  override def getTable(
+      schema: StructType,
+      partitioning: Array[Transform],
+      properties: JMap[String, String]): Table = {
+    val options = new CaseInsensitiveStringMap(properties)
+    new Table with SupportsRead {
+      private lazy val t = {
+        val (table, m) = SnapshotV2Provider.resolve(options)
+        new SnapshotV2Table(table, m)
+      }
+      override def name(): String = t.name()
+      override def schema(): StructType = t.schema()
+      override def capabilities(): java.util.Set[TableCapability] =
+        java.util.EnumSet.of(TableCapability.BATCH_READ)
+      override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
+        t.newScanBuilder(o)
+    }
+  }
+
+  /** The WRITE path — `df.write.format(...).mode(...).save()`:
+    * SaveMode.Append → transactional append commit (schema-evolution
+    * rules apply), SaveMode.Overwrite → overwrite commit (history
+    * intact, time travel alive), ErrorIfExists/Ignore honor the
+    * table's existence the way the SaveMode contract reads. Options:
+    * `statsColumns` (comma-separated) records per-file pruning stats
+    * at write, exactly like the API commit. */
+  override def createRelation(
+      sqlContext: SQLContext,
+      mode: SaveMode,
+      parameters: Map[String, String],
+      data: DataFrame): BaseRelation = {
+    import SaveMode._
+    val table = parameters.getOrElse("path",
+      throw new IllegalArgumentException("snapshot write needs .option(\"path\", <table root>)"))
+    val stats = parameters.get("statsColumns")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+    val exists = SnapshotTable.currentVersion(table) > 0
+    mode match {
+      case ErrorIfExists if exists =>
+        throw new IllegalStateException(s"snapshot table $table already exists (ErrorIfExists)")
+      case Ignore if exists => // SaveMode contract: silently keep existing data
+      case Append =>
+        SnapshotTable.commit(data, table, append = exists, statsColumns = stats)
+      case _ => // Overwrite, or first write under any mode
+        SnapshotTable.commit(data, table, append = false, statsColumns = stats)
+    }
+    val ctx = sqlContext
+    new BaseRelation { // schema only: save() reads nothing back
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = data.schema
+    }
+  }
+}
+
+object SnapshotRelationProvider {
+  /** `spark.read.format(...)` needs the provider CLASS name. */
+  val format: String = classOf[SnapshotRelationProvider].getName
 }
 
 private[sources] class SnapshotV2Table(
@@ -363,9 +443,9 @@ private[sources] class SnapshotScanBuilder(
   /** Accept everything for manifest pruning, return EVERYTHING as
     * residual: min/max/null-count stats prove a file can hold no
     * matching row — never that every surviving row matches — so Spark
-    * must re-evaluate each filter row-wise (the exact contract the V1
-    * arm documents). The accepted set also reaches the parquet reader
-    * for row-group pruning, pruning at a third granularity for free. */
+    * must re-evaluate each filter row-wise. The accepted set also
+    * reaches the parquet reader for row-group pruning, pruning at a
+    * third granularity for free. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters
     filters
@@ -629,6 +709,135 @@ private[sources] class RenameDispatchReaderFactory(
     pick(p).createColumnarReader(p)
   override def supportColumnarReads(p: InputPartition): Boolean =
     pick(p).supportColumnarReads(p)
+}
+
+/** The manifest-bounds pruning predicate of the V2 scan's pushed
+  * filters — the one stats pruning a snapshot read gets — and the
+  * metadata-only DELETE's proof. */
+private[graft] object ManifestPruning {
+
+  import org.apache.spark.sql.sources._
+  import SnapshotTable.FileEntry.bytesLe
+
+  /** Columns whose manifest stats ride the LONG channel: integral
+    * values verbatim, timestamps as epoch micros, dates as epoch days
+    * (both exactly the physical InternalRow value the writers folded
+    * — one unit end to end). */
+  private def isIntegral(schema: StructType, c: String): Boolean =
+    schema.fields.find(_.name == c).exists(f =>
+      f.dataType == LongType || f.dataType == IntegerType ||
+        f.dataType == TimestampType || f.dataType == DateType)
+  private def isString(schema: StructType, c: String): Boolean =
+    schema.fields.find(_.name == c).exists(_.dataType == StringType)
+
+  /** A pushed literal converted to the column's stat channel — pushed
+    * timestamp/date predicates arrive as java.sql or java.time values
+    * depending on spark.sql.datetime.java8API.enabled; both convert. */
+  private def longOf(v: Any): Option[Long] = v match {
+    case l: Long                  => Some(l)
+    case i: Int                   => Some(i.toLong)
+    case t: java.sql.Timestamp    =>
+      Some(org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t))
+    case i: java.time.Instant     =>
+      Some(org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(i))
+    case d: java.sql.Date         =>
+      Some(org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(d).toLong)
+    case d: java.time.LocalDate   => Some(d.toEpochDay)
+    case _                        => None
+  }
+
+  /** May `f` hold a row matching `filter`? false PROVES absence; stats
+    * missing for a column always answers true (must read).
+    *
+    * Written against StatRanges, so the SAME predicate first skips
+    * whole manifest segments via their aggregated bounds (a missed
+    * segment's file list is never loaded), then files inside the
+    * segments that survived — planning stays O(segments + hit files)
+    * on a 1M-file table. */
+  def keeps(schema: StructType, f: SnapshotTable.StatRanges, filter: Filter): Boolean = {
+    def keep(filter: Filter): Boolean = filter match {
+      case EqualTo(c, v) if isIntegral(schema, c) =>
+        longOf(v).forall(l => f.stats.get(c).forall { case (mn, mx) => l >= mn && l <= mx })
+      case GreaterThan(c, v) if isIntegral(schema, c) =>
+        longOf(v).forall(l => f.stats.get(c).forall { case (_, mx) => mx > l })
+      case GreaterThanOrEqual(c, v) if isIntegral(schema, c) =>
+        longOf(v).forall(l => f.stats.get(c).forall { case (_, mx) => mx >= l })
+      case LessThan(c, v) if isIntegral(schema, c) =>
+        longOf(v).forall(l => f.stats.get(c).forall { case (mn, _) => mn < l })
+      case LessThanOrEqual(c, v) if isIntegral(schema, c) =>
+        longOf(v).forall(l => f.stats.get(c).forall { case (mn, _) => mn <= l })
+      case In(c, vs) if isIntegral(schema, c) =>
+        val ls = vs.flatMap(longOf)
+        ls.length != vs.length ||
+          f.stats.get(c).forall { case (mn, mx) => ls.exists(l => l >= mn && l <= mx) }
+      // string bounds compare byte-wise over UTF-8, Spark's string order
+      case EqualTo(c, v: String) if isString(schema, c) =>
+        f.sstats.get(c).forall { case (mn, mx) => bytesLe(mn, v) && bytesLe(v, mx) }
+      case GreaterThan(c, v: String) if isString(schema, c) =>
+        f.sstats.get(c).forall { case (_, mx) => !bytesLe(mx, v) }
+      case GreaterThanOrEqual(c, v: String) if isString(schema, c) =>
+        f.sstats.get(c).forall { case (_, mx) => bytesLe(v, mx) }
+      case LessThan(c, v: String) if isString(schema, c) =>
+        f.sstats.get(c).forall { case (mn, _) => !bytesLe(v, mn) }
+      case LessThanOrEqual(c, v: String) if isString(schema, c) =>
+        f.sstats.get(c).forall { case (mn, _) => bytesLe(mn, v) }
+      // null-count stats: Catalyst emits IsNotNull(c) beside ANY
+      // predicate on c, so an all-NULL file (the add-column evolution
+      // shape) is pruned for every query touching the column
+      case IsNotNull(c) => f.nstats.get(c).forall { case (n, r) => n < r }
+      case IsNull(c)    => f.nstats.get(c).forall { case (n, _) => n > 0 }
+      case And(l, r) => keep(l) && keep(r)
+      case _         => true // unsupported shapes never prune
+    }
+    keep(filter)
+  }
+
+  /** Does the manifest PROVE every live row of `f` matches `filter`?
+    * The inverse obligation of [[keeps]], and deliberately stricter:
+    * a proof needs BOTH the value bounds fully inside the predicate
+    * AND (for value predicates) a zero null count — min/max say
+    * nothing about NULL rows, which never match a value predicate.
+    * false means "not provable", never "no row matches". What the
+    * metadata-only DELETE drops whole files by. */
+  def provesAll(schema: StructType, f: SnapshotTable.StatRanges, filter: Filter): Boolean = {
+    def noNulls(c: String): Boolean = f.nstats.get(c).exists { case (n, _) => n == 0 }
+    def all(filter: Filter): Boolean = filter match {
+      case AlwaysTrue() => true
+      case EqualTo(c, v) if isIntegral(schema, c) =>
+        longOf(v).exists(l => noNulls(c) &&
+          f.stats.get(c).exists { case (mn, mx) => mn == l && mx == l })
+      case GreaterThan(c, v) if isIntegral(schema, c) =>
+        longOf(v).exists(l => noNulls(c) && f.stats.get(c).exists { case (mn, _) => mn > l })
+      case GreaterThanOrEqual(c, v) if isIntegral(schema, c) =>
+        longOf(v).exists(l => noNulls(c) && f.stats.get(c).exists { case (mn, _) => mn >= l })
+      case LessThan(c, v) if isIntegral(schema, c) =>
+        longOf(v).exists(l => noNulls(c) && f.stats.get(c).exists { case (_, mx) => mx < l })
+      case LessThanOrEqual(c, v) if isIntegral(schema, c) =>
+        longOf(v).exists(l => noNulls(c) && f.stats.get(c).exists { case (_, mx) => mx <= l })
+      case In(c, vs) if isIntegral(schema, c) =>
+        val ls = vs.flatMap(longOf)
+        ls.length == vs.length && noNulls(c) &&
+          f.stats.get(c).exists { case (mn, mx) => mn == mx && ls.contains(mn) }
+      case EqualTo(c, v: String) if isString(schema, c) =>
+        noNulls(c) && f.sstats.get(c).exists { case (mn, mx) => mn == v && mx == v }
+      case IsNull(c)    => f.nstats.get(c).exists { case (n, r) => n == r }
+      case IsNotNull(c) => noNulls(c)
+      case And(l, r)    => all(l) && all(r)
+      case Or(l, r)     => all(l) || all(r) // sufficient, not necessary — conservative
+      case _            => false // unprovable shapes never prove
+    }
+    all(filter)
+  }
+
+  /** The file entries that can hold rows matching ALL pushed filters —
+    * each filter independently shrinks the candidate set through the
+    * manifest bounds; files without stats for a column always survive
+    * (stats prove absence, never presence). */
+  def prunedEntries(
+      m: SnapshotTable.Manifest,
+      schema: StructType,
+      filters: Array[Filter]): Seq[SnapshotTable.FileEntry] =
+    m.filesMatching(f => filters.forall(keeps(schema, f, _)))
 }
 
 private[graft] class SnapshotV2Scan(

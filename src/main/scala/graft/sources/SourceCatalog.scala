@@ -18,6 +18,28 @@ import org.apache.spark.sql.types._
   */
 object SourceCatalog extends QueryModule {
 
+  /** `SnapshotTable.read` of `table` (at `version`, else the head)
+    * filtered by `pred`, REQUIRED to plan a strict subset of the
+    * manifest's files: the V2 scan's pushed filters prune at the
+    * manifest, and the oracle compares rows only, so a pushdown that
+    * silently stopped pruning would otherwise still pass. A one-file
+    * table has nothing to prune (src_snapshot_optimize compacts to one
+    * file at sf0.001). */
+  private def prunedRead(
+      s: org.apache.spark.sql.SparkSession,
+      table: String,
+      pred: Column,
+      version: Option[Long] = None): org.apache.spark.sql.DataFrame = {
+    val df = SnapshotTable.read(s, table, version).filter(pred)
+    val planned = graft.Stage.plannedFiles(df.queryExecution.sparkPlan)
+    val total = SnapshotTable.manifest(
+      table, version.getOrElse(SnapshotTable.currentVersion(table))).fileCount
+    require(planned > 0 && (planned < total || total == 1),
+      s"manifest pruning of $table on $pred planned $planned of $total files — " +
+        "want a strict subset")
+    df
+  }
+
   def queries: Seq[Q] = Seq(
     Q(
       "src_parquet",
@@ -480,8 +502,8 @@ object SourceCatalog extends QueryModule {
           table,
           append = false,
           statsColumns = Seq("o_year"))
-        SnapshotTable.readPruned(s, table, "o_year", 1995L, 1995L)
-          .filter(col("o_year") === 1995) // residual row filter: stats prune files, not rows
+        // the filter prunes files at the manifest, then rows
+        prunedRead(s, table, col("o_year") === 1995)
           .groupBy("o_orderpriority")
           .agg(
             count(lit(1)).as("n_orders"),
@@ -651,8 +673,7 @@ object SourceCatalog extends QueryModule {
         SnapshotTable.commit(
           o.repartitionByRange(8, col("o_day")).sortWithinPartitions("o_day"),
           table, append = false, statsColumns = Seq("o_day"))
-        SnapshotTable.readPrunedString(s, table, "o_day", "1995-01-01", "1995-12-31")
-          .filter(col("o_day").between("1995-01-01", "1995-12-31"))
+        prunedRead(s, table, col("o_day").between("1995-01-01", "1995-12-31"))
           .groupBy("o_orderpriority")
           .agg(
             count(lit(1)).as("n_orders"),
@@ -809,10 +830,10 @@ object SourceCatalog extends QueryModule {
     Q(
       "src_snapshot_format",
       // The snapshot table through Spark's PUBLIC data-source API
-      // (`spark.read.format(...)`) — the integration that moves
-      // manifest pruning INSIDE Catalyst's scan planning: the query's
-      // pushed-down predicate (o_orderkey <= 2000) reaches
-      // SnapshotRelation.buildScan as a sources.Filter and routes
+      // (`spark.read.format(SnapshotRelationProvider.format)`, an alias
+      // of the V2 provider) — manifest pruning INSIDE Catalyst's scan
+      // planning: the query's pushed-down predicate (o_orderkey <=
+      // 2000) reaches the V2 scan as a sources.Filter and routes
       // through the per-file stats before any footer is opened; Spark
       // re-applies the filter row-wise downstream (stats prove
       // file-level absence only). The head read must ALSO apply the
@@ -820,7 +841,8 @@ object SourceCatalog extends QueryModule {
       // DV path would resurrect deleted rows and break the hash — and
       // the versionAsOf arm pins time travel through the same option
       // surface Delta users know. Round15Spec pins the pruning
-      // decisions per filter shape directly on prunedEntries.
+      // decisions per filter shape directly on
+      // ManifestPruning.prunedEntries.
       (s, dir) => {
         val table = graft.Stage.dir("graft_snapfmt_", dir).getPath
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(table))
@@ -1032,8 +1054,7 @@ object SourceCatalog extends QueryModule {
             table, append = m > 0, statsColumns = Seq("o_orderkey"))
         SnapshotTable.compactSnapshot(
           s, table, targetBytes = 64L << 10, clusterBy = Seq("o_orderkey"))
-        SnapshotTable.readPruned(s, table, "o_orderkey", 0L, 2000L)
-          .filter(col("o_orderkey") <= 2000L)
+        prunedRead(s, table, col("o_orderkey") <= 2000L)
           .groupBy("o_orderpriority")
           .agg(
             count(lit(1)).as("n_orders"),
@@ -1089,12 +1110,8 @@ object SourceCatalog extends QueryModule {
               count(lit(1)).as("n_orders"),
               sum(col("o_totalprice").cast("decimal(38,4)")).cast("double").as("sum_price"))
             .withColumn("arm", lit(arm))
-        agg(
-          SnapshotTable.readPruned(s, table, "o_custkey", 100L, 299L)
-            .filter(col("o_custkey").between(100, 299)), "cust")
-          .unionByName(agg(
-            SnapshotTable.readPruned(s, table, "o_year", 1995L, 1995L)
-              .filter(col("o_year") === 1995), "year"))
+        agg(prunedRead(s, table, col("o_custkey").between(100, 299)), "cust")
+          .unionByName(agg(prunedRead(s, table, col("o_year") === 1995), "year"))
           .select("arm", "n_orders", "sum_price")
           .orderBy("arm")
       },
@@ -1156,9 +1173,7 @@ object SourceCatalog extends QueryModule {
               count(lit(1)).as("n_orders"),
               sum(col("o_totalprice").cast("decimal(38,4)")).cast("double").as("sum_price"))
             .withColumn("arm", lit(arm))
-        agg(
-          SnapshotTable.readPruned(s, table, "o_mod", 3L, 5L)
-            .filter(col("o_mod").between(3, 5)), "pruned")
+        agg(prunedRead(s, table, col("o_mod").between(3, 5)), "pruned")
           .unionByName(agg(
             SnapshotTable.readIncremental(s, table, fromVersion = 6L, toVersion = 12L),
             "incr"))
@@ -1180,10 +1195,10 @@ object SourceCatalog extends QueryModule {
       // per-file (nullCount, rowCount) beside [min,max] — nulls == 0
       // proves no NULL row, nulls == rows proves no non-NULL row — so
       // `IS [NOT] NULL` prunes at the manifest before any footer opens
-      // (and through SnapshotRelation's pushdown, where Catalyst emits
-      // IsNotNull beside EVERY predicate on a column — an all-NULL
-      // file, the add-column-evolution shape, is skipped by every
-      // query touching the column). The fixture clusters orders on a
+      // (through the V2 scan's pushdown, where Catalyst emits IsNotNull
+      // beside EVERY predicate on a column — an all-NULL file, the
+      // add-column-evolution shape, is skipped by every query touching
+      // the column). The fixture clusters orders on a
       // nullability flag so whole files are all-NULL / no-NULL in
       // o_disc (NULL unless o_orderkey%5=0); both membership reads are
       // REQUIREd to be strict file subsets, and the two arms aggregate
@@ -1199,25 +1214,14 @@ object SourceCatalog extends QueryModule {
           o.repartitionByRange(8, col("o_disc").isNull, col("o_orderkey"))
             .sortWithinPartitions(col("o_disc").isNull, col("o_orderkey")),
           table, append = false, statsColumns = Seq("o_orderkey", "o_disc"))
-        val m = SnapshotTable.manifest(table, 1L)
-        val notNull = m.filesForNotNull("o_disc")
-        val isNull = m.filesForNull("o_disc")
-        require(notNull.nonEmpty && notNull.size < m.files.size,
-          s"IS NOT NULL pruning inert: ${notNull.size} of ${m.files.size}")
-        require(isNull.nonEmpty && isNull.size < m.files.size,
-          s"IS NULL pruning inert: ${isNull.size} of ${m.files.size}")
         def agg(df: org.apache.spark.sql.DataFrame, arm: String) =
           df.groupBy("o_orderpriority")
             .agg(
               count(lit(1)).as("n_orders"),
               sum(col("o_totalprice").cast("decimal(38,4)")).cast("double").as("sum_price"))
             .withColumn("arm", lit(arm))
-        agg(
-          SnapshotTable.readPrunedNulls(s, table, "o_disc", wantNull = false)
-            .filter(col("o_disc").isNotNull), "notnull")
-          .unionByName(agg(
-            SnapshotTable.readPrunedNulls(s, table, "o_disc", wantNull = true)
-              .filter(col("o_disc").isNull), "null"))
+        agg(prunedRead(s, table, col("o_disc").isNotNull), "notnull")
+          .unionByName(agg(prunedRead(s, table, col("o_disc").isNull), "null"))
           .select("arm", "o_orderpriority", "n_orders", "sum_price")
           .orderBy("arm", "o_orderpriority")
       },
@@ -1284,12 +1288,9 @@ object SourceCatalog extends QueryModule {
               count(lit(1)).as("n_orders"),
               sum(col("o_totalprice").cast("decimal(38,4)")).cast("double").as("sum_price"))
             .withColumn("arm", lit(arm))
-        agg(
-          SnapshotTable.readPruned(s, table, "o_mod", 3L, 5L, version = Some(12L))
-            .filter(col("o_mod").between(3, 5)), "before")
+        agg(prunedRead(s, table, col("o_mod").between(3, 5), Some(12L)), "before")
           .unionByName(agg(
-            SnapshotTable.readPruned(s, table, "o_mod", 3L, 5L, version = Some(13L))
-              .filter(col("o_mod").between(3, 5)), "after"))
+            prunedRead(s, table, col("o_mod").between(3, 5), Some(13L)), "after"))
           .unionByName(agg(
             // (6, 13]: crosses the rewrite boundary — resolves to the
             // appends' files via the path-set diff, never refuses
@@ -1376,10 +1377,10 @@ object SourceCatalog extends QueryModule {
     Q(
       "src_snapshot_dsv2",
       // The snapshot format through Spark's DataSource V2 API
-      // (SnapshotV2Provider): pushed filters route through the SAME
-      // manifest predicate as the V1 arm (ManifestPruning — segment
-      // bounds, then file bounds) but now inside V2 scan planning, so
-      // the BatchScan PLANS only the surviving files; all filters are
+      // (SnapshotV2Provider): pushed filters route through the
+      // manifest predicate (ManifestPruning — segment bounds, then
+      // file bounds) inside V2 scan planning, so the BatchScan PLANS
+      // only the surviving files; all filters are
       // reported residual (stats prove absence, never presence) and
       // Spark re-applies them row-wise, so pruning can never change
       // results. Reading is Spark's own vectorized parquet factory
@@ -1387,8 +1388,8 @@ object SourceCatalog extends QueryModule {
       // Two arms: the head read with a selective o_year filter —
       // REQUIREd to plan a strict subset of the table's files — and a
       // versionAsOf time travel through the V2 options. Round18Spec
-      // pins column pruning (readSchema), the DV refusal, and
-      // V1-vs-V2 result identity.
+      // pins column pruning (readSchema), the pruned rows against the
+      // source filter, and DVs applied reader-side.
       (s, dir) => {
         val table = graft.Stage.dir("graft_snapdsv2_", dir).getPath
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(table))

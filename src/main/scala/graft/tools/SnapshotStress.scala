@@ -54,8 +54,8 @@ object SnapshotStress {
         val tt = time { SnapshotTable.read(spark, table, Some(1L)).count() }
         val lo = 1L * 10000000L
         val pruned = time {
-          SnapshotTable
-            .readPruned(spark, table, "o_orderkey", lo, lo + 5000000L)
+          SnapshotTable.read(spark, table)
+            .filter(col("o_orderkey").between(lo, lo + 5000000L))
             .count()
         }
         val mkb = java.nio.file.Files

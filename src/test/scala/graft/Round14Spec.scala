@@ -258,12 +258,12 @@ class Round14Spec extends AnyFunSuite {
     val hit = m.filesForString("o_day", "1995-01-01", "1995-12-31")
     assert(hit.nonEmpty && hit.size < m.files.size,
       s"string pruning inert: ${hit.size} of ${m.files.size} files")
-    val pruned = SnapshotTable
-      .readPrunedString(spark, table, "o_day", "1995-01-01", "1995-12-31")
-      .filter(col("o_day").between("1995-01-01", "1995-12-31")).count()
-    val full = SnapshotTable.read(spark, table)
-      .filter(col("o_day").between("1995-01-01", "1995-12-31")).count()
-    assert(pruned === full && full > 0)
+    // the pushed string range plans exactly the manifest's hit files
+    val pruned = SnapshotTable.read(spark, table)
+      .filter(col("o_day").between("1995-01-01", "1995-12-31"))
+    assert(graft.Stage.plannedFiles(pruned.queryExecution.sparkPlan) === hit.size)
+    val want = o.filter(col("o_day").between("1995-01-01", "1995-12-31"))
+    assert(pruned.count() === want.count() && keys(pruned) === keys(want) && keys(want).nonEmpty)
     // a range before every recorded day prunes to zero files
     assert(m.filesForString("o_day", "1800-01-01", "1800-12-31").isEmpty)
   }

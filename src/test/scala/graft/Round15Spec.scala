@@ -153,9 +153,13 @@ class Round15Spec extends AnyFunSuite {
     // time travel: v1 still shows the pre-delete state
     assert(keys(SnapshotTable.read(spark, table, Some(1L))) ===
       keys(o.filter(col("o_orderkey") % 3 === 0)))
-    // pruned reads flow through the same DV-applied path
-    val pruned = SnapshotTable.readPruned(spark, table, "o_orderkey", 0L, 1000000L)
-    assert(keys(pruned) === keys(SnapshotTable.read(spark, table)))
+    // filtered reads flow through the same DV-applied path
+    val pruned = SnapshotTable.read(spark, table)
+      .filter(col("o_orderkey").between(0L, 1000000L))
+    assert(graft.Stage.plannedFiles(pruned.queryExecution.sparkPlan) ===
+      SnapshotTable.manifest(table, 3L).filesFor("o_orderkey", 0L, 1000000L).size)
+    assert(keys(pruned) ===
+      (expect2 ++ keys(o.filter(col("o_orderkey") % 3 === 1))).filter(_ <= 1000000L))
   }
 
   test("deletion vectors: merge refuses while outstanding; compaction materializes") {
@@ -343,14 +347,17 @@ class Round15Spec extends AnyFunSuite {
     val cells = SnapshotTable.read(spark, table)
       .select("cell").distinct().collect().map(_.getLong(0))
     assert(cells.length > 1)
+    // the source rows: every committed data file, read raw (no deletes)
+    val source = spark.read.parquet(m.files.map(_.path): _*)
     cells.foreach { c =>
       val hit = m.filesFor("cell", c, c)
       assert(hit.size < m.files.size, s"cell $c read does not prune at the manifest")
+      val pruned = SnapshotTable.read(spark, table).filter(col("cell") === c)
+      assert(graft.Stage.plannedFiles(pruned.queryExecution.sparkPlan) === hit.size,
+        s"cell $c read plans other files than the manifest's hit")
       // soundness: the pruned subset still holds every row of the cell
-      val pruned = SnapshotTable.readPruned(spark, table, "cell", c, c)
-        .filter(col("cell") === c).count()
-      val full = SnapshotTable.read(spark, table).filter(col("cell") === c).count()
-      assert(pruned === full, s"cell $c pruned read lost rows")
+      assert(pruned.count() === source.filter(col("cell") === c).count(),
+        s"cell $c pruned read lost rows")
     }
   }
 
@@ -439,29 +446,42 @@ class Round15Spec extends AnyFunSuite {
   }
 
   test("format relation: pushed filters prune at the manifest, per filter shape") {
-    import graft.sources.{SnapshotRelation, SnapshotTable}
+    import graft.sources.{ManifestPruning, SnapshotTable}
     import org.apache.spark.sql.sources._
     val table = tmpTable()
-    val o = ordersNarrow
+    // o_skey: the key as a zero-padded string, clustered like the key
+    val o = ordersNarrow.withColumn("o_skey", format_string("%08d", col("o_orderkey")))
     SnapshotTable.commit(
       o.repartitionByRange(8, col("o_orderkey")).sortWithinPartitions("o_orderkey"),
-      table, append = false, statsColumns = Seq("o_orderkey"))
-    val rel = new SnapshotRelation(spark, table, None)
-    val total = SnapshotTable.manifest(table, 1L).files.size
-    def n(fs: Filter*): Int = rel.prunedEntries(fs.toArray).size
+      table, append = false, statsColumns = Seq("o_orderkey", "o_skey"))
+    val m = SnapshotTable.manifest(table, 1L)
+    val total = m.files.size
+    def n(fs: Filter*): Int = ManifestPruning.prunedEntries(m, m.schema, fs.toArray).size
     // every supported shape prunes strictly on the clustered key
     assert(n(EqualTo("o_orderkey", 5L)) < total)
     assert(n(LessThanOrEqual("o_orderkey", 100L)) < total)
     assert(n(GreaterThan("o_orderkey", 14000L)) < total)
     assert(n(In("o_orderkey", Array(1L, 2L, 3L))) < total)
     assert(n(And(GreaterThanOrEqual("o_orderkey", 0L), LessThan("o_orderkey", 50L))) < total)
+    assert(n(LessThan("o_skey", "00000100")) < total)
+    assert(n(LessThanOrEqual("o_skey", "00000100")) < total)
+    assert(n(GreaterThan("o_skey", "00005000")) < total)
+    assert(n(GreaterThanOrEqual("o_skey", "00005000")) < total)
+    // string bounds: a strict shape drops the file holding the bound,
+    // an inclusive one keeps it
+    val lo = m.files.map(_.sstats("o_skey")._1).min
+    val hi = m.files.map(_.sstats("o_skey")._2).max
+    assert(n(LessThan("o_skey", lo)) === 0 && n(LessThanOrEqual("o_skey", lo)) === 1)
+    assert(n(GreaterThan("o_skey", hi)) === 0 && n(GreaterThanOrEqual("o_skey", hi)) === 1)
     // unsupported shapes and stat-less columns never prune (soundness)
     assert(n(EqualTo("o_orderpriority", "1-URGENT")) === total)
     assert(n(StringContains("o_orderpriority", "URGENT")) === total)
-    // a pruned format read equals the API read under the same predicate
+    // a format read prunes through the same pushdown and keeps every row
     val fmt = spark.read.format(graft.sources.SnapshotRelationProvider.format)
       .option("path", table).load().filter(col("o_orderkey") <= 100)
-    assert(keys(fmt) === keys(SnapshotTable.read(spark, table).filter(col("o_orderkey") <= 100)))
+    assert(graft.Stage.plannedFiles(fmt.queryExecution.sparkPlan) ===
+      m.filesFor("o_orderkey", Long.MinValue, 100L).size)
+    assert(keys(fmt) === keys(o.filter(col("o_orderkey") <= 100)))
   }
 
   test("format relation: the write path maps SaveModes onto the commit protocol") {

@@ -255,21 +255,20 @@ class Round16Spec extends AnyFunSuite {
     val nu = m.filesForNull("o_disc")
     assert(nn.nonEmpty && nn.size < m.files.size, s"NOT NULL inert: ${nn.size}/${m.files.size}")
     assert(nu.nonEmpty && nu.size < m.files.size, s"NULL inert: ${nu.size}/${m.files.size}")
-    // result equality against the full-scan filters
-    assert(keys(SnapshotTable.readPrunedNulls(spark, table, "o_disc", wantNull = false)
-      .filter(col("o_disc").isNotNull))
-      === keys(SnapshotTable.read(spark, table).filter(col("o_disc").isNotNull)))
-    assert(keys(SnapshotTable.readPrunedNulls(spark, table, "o_disc", wantNull = true)
-      .filter(col("o_disc").isNull))
-      === keys(SnapshotTable.read(spark, table).filter(col("o_disc").isNull)))
-    // the PUBLIC relation prunes the same way from pushed-down filters
-    val rel = new graft.sources.SnapshotRelation(spark, table, None)
-    assert(rel.prunedEntries(Array(IsNotNull("o_disc"))).map(_.path).toSet
-      === nn.map(_.path).toSet)
-    assert(rel.prunedEntries(Array(IsNull("o_disc"))).map(_.path).toSet
-      === nu.map(_.path).toSet)
+    // the filtered reads plan exactly the hit files, result-equal to
+    // the source filters
+    for ((pred, hit) <- Seq((col("o_disc").isNotNull, nn), (col("o_disc").isNull, nu))) {
+      val df = SnapshotTable.read(spark, table).filter(pred)
+      assert(graft.Stage.plannedFiles(df.queryExecution.sparkPlan) === hit.size, s"$pred")
+      assert(keys(df) === keys(o.filter(pred)), s"$pred")
+    }
+    // the pushed-filter predicate prunes the same way
+    def pruned(f: org.apache.spark.sql.sources.Filter) =
+      graft.sources.ManifestPruning.prunedEntries(m, m.schema, Array(f))
+    assert(pruned(IsNotNull("o_disc")).map(_.path).toSet === nn.map(_.path).toSet)
+    assert(pruned(IsNull("o_disc")).map(_.path).toSet === nu.map(_.path).toSet)
     // soundness: a column with no null stats never prunes
-    assert(rel.prunedEntries(Array(IsNotNull("o_orderpriority"))).size === m.files.size)
+    assert(pruned(IsNotNull("o_orderpriority")).size === m.files.size)
   }
 
   // ---- wedge cap: planted hub stays out of the join -----------------

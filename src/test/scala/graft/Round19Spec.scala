@@ -66,8 +66,10 @@ class Round19Spec extends AnyFunSuite {
       case _                     => true
     }, "range-clustered inserts must record disjoint ranges")
     val lo = sorted.head._2 // prune to the first file only
-    val pruned = SnapshotTable.readPruned(spark, s"$wh/o", "k", 0L, lo)
-    assert(pruned.filter(col("k") <= lo).count()
+    val pruned = SnapshotTable.read(spark, s"$wh/o").filter(col("k") <= lo)
+    assert(graft.Stage.plannedFiles(pruned.queryExecution.sparkPlan) ===
+      m.filesFor("k", 0L, lo).size)
+    assert(pruned.count()
       === Tables(spark, sf).orders.filter(col("o_orderkey") <= lo).count())
   }
 

@@ -151,14 +151,18 @@ class Round44Spec extends AnyFunSuite {
     // trickle-positions table KEEPING its incremental consumers
     assert(SnapshotTable.readIncremental(spark, table, 3L, 4L).count() === 10)
     // a pruned read that only touches the new file serves too
-    assert(SnapshotTable.readPruned(spark, table, "k", 100L, 200L).count() === 10)
-    // one over a named file applies the positions: it answers what the
-    // full read answers over the same range
-    def keysIn(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.where(col("k").between(0L, 5L)).select("k").collect().map(_.getLong(0)).sorted.toSeq
-    assert(keysIn(SnapshotTable.readPruned(spark, table, "k", 0L, 5L)) ===
-      keysIn(SnapshotTable.read(spark, table)))
-    assert(keysIn(SnapshotTable.read(spark, table)) === Seq(0L, 1L, 2L, 3L, 4L))
+    val m4 = SnapshotTable.manifest(table, 4L)
+    def planned(df: org.apache.spark.sql.DataFrame): Int =
+      graft.Stage.plannedFiles(df.queryExecution.sparkPlan)
+    val fresh = SnapshotTable.read(spark, table).where(col("k").between(100L, 200L))
+    assert(planned(fresh) === 1 && m4.filesFor("k", 100L, 200L).size === 1)
+    assert(fresh.count() === 10)
+    // one over a named file applies the positions: it answers the
+    // source range minus the deleted key 5
+    val near = SnapshotTable.read(spark, table).where(col("k").between(0L, 5L))
+    assert(planned(near) === m4.filesFor("k", 0L, 5L).size)
+    assert(near.select("k").collect().map(_.getLong(0)).sorted.toSeq ===
+      Seq(0L, 1L, 2L, 3L, 4L))
     // the incremental change feed SERVES the pos commit now — the
     // commit captured its delete pre-images at write time (Round48Spec
     // owns the capture anatomy; the refusal survives only for

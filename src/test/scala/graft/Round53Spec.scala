@@ -99,12 +99,13 @@ class Round53Spec extends AnyFunSuite {
     val live = (0L until 50L).filterNot(Set(3L, 7L))
     val reads: Seq[(String, DataFrame, Seq[Long])] = Seq(
       ("read", SnapshotTable.read(spark, table), live),
-      ("readPruned", SnapshotTable.readPruned(spark, table, "k", 0L, 9L)
-        .where(col("k") <= 9L), live.filter(_ <= 9L)),
-      ("readPrunedString", SnapshotTable.readPrunedString(spark, table, "s", "1", "1")
-        .where(col("s") === "1"), Seq(1L)),
-      ("readPrunedNulls", SnapshotTable.readPrunedNulls(spark, table, "m", wantNull = true)
-        .where(col("m").isNull), live.filter(_ % 2 == 1)),
+      ("read k <= 9", SnapshotTable.read(spark, table).where(col("k") <= 9L),
+        live.filter(_ <= 9L)),
+      ("read s = '1'", SnapshotTable.read(spark, table).where(col("s") === "1"), Seq(1L)),
+      ("read m IS NULL", SnapshotTable.read(spark, table).where(col("m").isNull),
+        live.filter(_ % 2 == 1)),
+      ("v1 format", spark.read.format(SnapshotRelationProvider.format)
+        .option("path", table).load(), live),
       ("readAsOf", SnapshotTable.readAsOf(spark, table, 100L), 0L until 40L),
       ("readIncremental", SnapshotTable.readIncremental(spark, table, 4L, 5L), 40L until 50L))
     reads.foreach { case (name, df, want) =>
