@@ -63,6 +63,19 @@ object Stage {
         }.sum
     }.sum
 
+  /** (data file → delete sidecar) attachments the graft-snapshot V2
+    * scans of `df` planned, summed over the scans that apply deletes;
+    * -1 when none does (no delete outstanding, or none left after a
+    * selection). The reader factory builds with the physical plan. */
+  def deleteAttachments(df: org.apache.spark.sql.DataFrame): Long = {
+    val built = executedNodes(df).collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.collect { case s: graft.sources.SnapshotV2Scan if s.lastAttachments >= 0 =>
+      s.lastAttachments
+    }
+    if (built.isEmpty) -1L else built.sum
+  }
+
   /** Shuffle exchanges in the executed plan (reused ones excluded). */
   def shuffleCount(df: org.apache.spark.sql.DataFrame): Int =
     executedNodes(df).count(

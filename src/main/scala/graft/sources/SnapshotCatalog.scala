@@ -1301,7 +1301,8 @@ private[sources] class SnapshotGroupReplaceWrite(
 
 /** Commit message of a DELTA write: the post-image data-file entries
   * plus the task's deletion-vector sidecar(s) with their exact key
-  * counts (the V2 reader budgets its broadcast delete set from them). */
+  * counts and key range (the V2 reader attaches it to the files that
+  * range can hit). */
 private[sources] case class SnapshotDeltaMessage(
     entries: Seq[SnapshotTable.FileEntry],
     dvFiles: Seq[SnapshotTable.DvRef]) extends WriterCommitMessage
@@ -1526,7 +1527,7 @@ private[sources] class SnapshotPosDeltaWriterFactory(
   * rolling stats-folding writer; delete ids — (_file, _pos) pairs —
   * dedupe into a task-local set and flush as ONE two-column sidecar at
   * commit, with the named-file byte-range folded for the ref (what the
-  * over-budget SCOPED reader prunes per-file attachments by). */
+  * reader prunes per-file attachments by). */
 private[sources] class SnapshotPosDeltaWriter(
     pathFor: Int => String,
     posPath: String,

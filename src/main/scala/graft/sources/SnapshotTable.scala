@@ -1679,8 +1679,8 @@ object SnapshotTable {
     * it was stamped at (applies only to rows from files with
     * `FileEntry.seq` < `seq` — Iceberg's equality-delete sequencing,
     * what keeps a merge-on-read commit from deleting its own
-    * post-images), and its recorded key count (-1 = unrecorded legacy;
-    * counts let the V2 reader budget its in-memory delete set). Legacy
+    * post-images), and its recorded key count (-1 = unrecorded legacy).
+    * Legacy
     * entries (bare hex path) read as seq = MaxValue: they predate
     * sequencing and applied to every file — semantics preserved. A ref
     * built with seq = -1 (a task-written sidecar) is stamped with its
@@ -1689,8 +1689,9 @@ object SnapshotTable {
     * write time (same pass as the count — integral keys widened to
     * Long, string keys raw):
     * consumers that only need "which carried files CAN this DV hit"
-    * (the incremental change feed's pre-image prune) answer from the
-    * manifest line alone, zero sidecar reads. Absent on legacy refs —
+    * (the V2 reader's per-file attachment, the incremental change
+    * feed's pre-image prune) answer from the manifest line alone, zero
+    * sidecar reads. Absent on legacy refs —
     * every consumer must fall back to reading the sidecar. */
   private[graft] final case class DvRef(
       path: String,
@@ -1752,8 +1753,8 @@ object SnapshotTable {
   /** An outstanding position-delete sidecar: path, recorded row count,
     * and the byte-wise [min, max] range of the DATA-FILE PATHS it names
     * — recorded at write time for free (the stale check already
-    * collected the named files) and what lets the over-budget SCOPED
-    * reader attach to each data file only the sidecars that can hit it.
+    * collected the named files) and what lets the reader attach to
+    * each data file only the sidecars that can hit it.
     * Legacy 2-token refs carry no range (= may hit any file). */
   final case class PosDvRef(
       path: String, count: Long, range: Option[(String, String)] = None)
@@ -2039,8 +2040,7 @@ object SnapshotTable {
 
   /** Write one deletion-vector sidecar (the batch's DISTINCT keys,
     * one small parquet) stamped at commit sequence `seq`, and return
-    * its refs with exact key counts (the V2 reader budgets its
-    * in-memory delete set from these). */
+    * its refs with exact key counts and key ranges. */
   private def writeDvSidecar(
       spark: SparkSession,
       keyCol: DataFrame,
@@ -2158,8 +2158,8 @@ object SnapshotTable {
     * commit carrying the data file set VERBATIM; the change feed
     * recognizes the mode and emits zero rows; old sidecars stay
     * referenced by prior manifests until retention reclaims them.
-    * Readers win twice: the broadcast path loads a deduped set, the
-    * scoped path attaches fewer, range-tagged sidecars per file.
+    * Readers win twice: each file attaches fewer, range-tagged
+    * sidecars, and each holds a deduped set.
     * Returns (sidecarsBefore, sidecarsAfter, distinctKeys). */
   def consolidateDeleteVectors(
       spark: SparkSession,

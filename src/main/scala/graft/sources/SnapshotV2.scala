@@ -61,15 +61,39 @@ class SnapshotV2Provider extends TableProvider with DataSourceRegister {
 
   override def shortName(): String = "graft-snapshot"
 
+  /** The last resolution and the options it was made from. Spark builds
+    * one provider per load and asks it for [[inferSchema]] and then
+    * [[getTable]], so both see the version resolved first: a commit
+    * between them cannot swap the table under the schema, and the
+    * manifest (and, for `timestampAsOf`, the history) is read once. */
+  private var last: Option[(Map[String, String], (String, SnapshotTable.Manifest))] = None
+
+  /** (table root, pinned manifest) for `options`, resolved once per
+    * instance and options. */
+  protected final def pinned(
+      options: CaseInsensitiveStringMap): (String, SnapshotTable.Manifest) = synchronized {
+    val key = options.asScala.toMap
+    last.collect { case (k, r) if k == key => r }.getOrElse {
+      val r = pinManifest(options)
+      last = Some(key -> r)
+      r
+    }
+  }
+
+  protected def pinManifest(
+      options: CaseInsensitiveStringMap): (String, SnapshotTable.Manifest) = {
+    val (table, v) = SnapshotV2Provider.resolve(options)
+    (table, SnapshotTable.manifest(table, v))
+  }
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    SnapshotV2Provider.resolve(options)._2.schema
+    pinned(options)._2.schema
 
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
       properties: JMap[String, String]): Table = {
-    val (table, m) = SnapshotV2Provider.resolve(
-      new CaseInsensitiveStringMap(properties))
+    val (table, m) = pinned(new CaseInsensitiveStringMap(properties))
     new SnapshotV2Table(table, m)
   }
 }
@@ -78,12 +102,12 @@ object SnapshotV2Provider {
   /** `spark.read.format(...)` needs the provider CLASS name. */
   val format: String = classOf[SnapshotV2Provider].getName
 
-  /** Resolve (table root, pinned manifest) from read options:
+  /** Resolve (table root, version) from read options:
     * `versionAsOf` exact (a version or a tag),
     * `timestampAsOf` = newest stamped version at or before the stamp
-    * (version order authoritative), else current head. */
-  private[sources] def resolve(
-      options: CaseInsensitiveStringMap): (String, SnapshotTable.Manifest) = {
+    * (version order authoritative), else current head (0 when nothing
+    * is published). */
+  private[sources] def resolve(options: CaseInsensitiveStringMap): (String, Long) = {
     val table = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException(
         "snapshot v2 read needs .option(\"path\", <table root>)"))
@@ -96,7 +120,7 @@ object SnapshotV2Provider {
         SnapshotTable.versionAsOf(table, ts.toLong).fold(
           why => throw new IllegalArgumentException(why), identity)
       }).getOrElse(SnapshotTable.currentVersion(table))
-    (table, SnapshotTable.manifest(table, version))
+    (table, version)
   }
 }
 
@@ -112,39 +136,41 @@ class SnapshotSourceProvider extends SnapshotV2Provider {
 
   override def supportsExternalMetadata(): Boolean = true
 
+  /** Nothing published: an empty version-0 manifest, which the stream
+    * follows from the first commit on under the query's given schema. */
+  override protected def pinManifest(
+      options: CaseInsensitiveStringMap): (String, SnapshotTable.Manifest) = {
+    val (table, v) = SnapshotV2Provider.resolve(options)
+    if (v > 0L) (table, SnapshotTable.manifest(table, v))
+    else (table, SnapshotTable.Manifest(0L, null, Nil, Nil, Map.empty)(LocalSnapshotIO))
+  }
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val table = SnapshotSourceProvider.tableOf(options)
-    require(SnapshotTable.currentVersion(table) > 0,
+    val (table, m) = pinned(options)
+    require(m.version > 0L,
       s"snapshot table $table has no published version yet — pass an explicit schema")
-    super.inferSchema(options)
+    m.schema
   }
 
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
       properties: JMap[String, String]): Table = {
-    val table = SnapshotSourceProvider.tableOf(new CaseInsensitiveStringMap(properties))
-    if (SnapshotTable.currentVersion(table) == 0L)
-      // nothing published: an empty version-0 table of the given
-      // schema, which the stream follows from the first commit on
+    val (table, m) = pinned(new CaseInsensitiveStringMap(properties))
+    if (m.version == 0L)
       new SnapshotV2Table(table,
         SnapshotTable.Manifest(0L, schema, Nil, Nil, Map.empty)(LocalSnapshotIO))
     else {
-      val t = super.getTable(schema, partitioning, properties)
       def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
-      require(schema == null || shape(schema) == shape(t.schema()),
+      require(schema == null || shape(schema) == shape(m.schema),
         s"the given schema ${schema.simpleString} differs from table $table's " +
-          s"${t.schema().simpleString} — drop .schema(...) and select columns instead")
-      t
+          s"${m.schema.simpleString} — drop .schema(...) and select columns instead")
+      new SnapshotV2Table(table, m)
     }
   }
 }
 
 object SnapshotSourceProvider {
-  private def tableOf(options: CaseInsensitiveStringMap): String =
-    Option(options.get("path")).getOrElse(throw new IllegalArgumentException(
-      "snapshot source needs .option(\"path\", <table root>)"))
-
   /** `spark.readStream.format(...)` needs the provider CLASS name. */
   val format: String = classOf[SnapshotSourceProvider].getName
 }
@@ -176,7 +202,7 @@ class SnapshotRelationProvider extends SnapshotV2Provider with CreatableRelation
     val options = new CaseInsensitiveStringMap(properties)
     new Table with SupportsRead {
       private lazy val t = {
-        val (table, m) = SnapshotV2Provider.resolve(options)
+        val (table, m) = pinned(options)
         new SnapshotV2Table(table, m)
       }
       override def name(): String = t.name()
@@ -885,20 +911,14 @@ private[graft] class SnapshotV2Scan(
     * inputPartitions on the exec node never reflects them). */
   @volatile private[graft] var lastPlanned: Int = -1
 
-  /** Spec hook: which delete application path the last reader factory
-    * chose — "broadcast" (driver-loaded map, under the budget) or
-    * "scoped" (per-file manifest-range-pruned sidecar loads, the
-    * over-budget fallback), for either delete format. When BOTH formats
-    * are outstanding, reflects the equality chain (assigned last).
-    * Empty when no deletes were outstanding. */
-  @volatile private[graft] var lastDvMode: String = ""
-
-  /** Spec hook: total (data file → sidecar) attachments the last SCOPED
-    * reader factory planned — the "per-task cost scales with the
-    * sidecars that OVERLAP a file, not the chain total" invariant as a
-    * countable: k single-file-ranged sidecars over n files attach k
-    * times, not n·k. -1 until a scoped factory builds. */
-  @volatile private[graft] var lastScopedAttach: Long = -1L
+  /** Spec hook: total (data file → sidecar) attachments the last
+    * [[DeleteReaderFactory]] planned, over both delete formats — the
+    * "per-task cost scales with the sidecars that OVERLAP a file, not
+    * the chain total" invariant as a countable: k single-file-ranged
+    * sidecars over n files attach k times, not n·k. -1 until a delete
+    * factory builds (a scan with no outstanding deletes never builds
+    * one). [[graft.Stage.deleteAttachments]] reads it off a plan. */
+  @volatile private[graft] var lastAttachments: Long = -1L
 
   /** Columns a runtime predicate could prune on: any column with a
     * recorded stat anywhere in the manifest that is ALSO in this scan's
@@ -939,8 +959,9 @@ private[graft] class SnapshotV2Scan(
     only.map(paths => m.files.filter(f => paths(f.path)))
 
   /** Outstanding deletion-vector sidecars — when non-empty, rows are
-    * filtered READER-side against the broadcast delete set (the
-    * Iceberg equality-delete application shape). Under a selection,
+    * filtered READER-side, each file against the sidecars that can hit
+    * it (the Iceberg equality-delete application shape, see
+    * [[DeleteReaderFactory]]). Under a selection,
     * only refs that can hit one of its files: a ref kills rows of
     * files with a LOWER seq, so a clean append slice plans as a plain
     * columnar scan instead of loading every sidecar per micro-batch. */
@@ -954,7 +975,7 @@ private[graft] class SnapshotV2Scan(
 
   /** Outstanding POSITION-delete sidecars (Iceberg v2's second delete
     * format): rows drop by raw file ordinal; each ref carries the path
-    * range of the data files it names (the scoped path's prune key).
+    * range of the data files it names (what a file attaches it by).
     * Under a selection, only refs whose range covers one of its files
     * (a rangeless legacy ref may name any file and always stays). */
   private lazy val posDv: Seq[SnapshotTable.PosDvRef] = {
@@ -1350,209 +1371,90 @@ private[graft] class SnapshotV2Scan(
         val names = m.schema.fieldNames.toSet
         (filters ++ runtime).filter(_.references.forall(names))
       }
-    // POSITION-delete application (Iceberg v2's second delete format):
-    // sidecars are delete-batch sized — they enumerate dropped rows one
-    // by one, so the common case mirrors the broadcast DV path (one
-    // budgeted driver load); each single-file partition then drops its
-    // listed ordinals against a raw-row counter. PAST the budget the
-    // scan switches — instead of refusing — to the SCOPED path: pos
-    // refs record the path range of the data files they name, so each
-    // file attaches only the sidecars whose range covers it, loaded
-    // task-side (zero driver memory; per-task memory scales with the
-    // deletes that overlap ONE file — simpler than the eq-DV range
-    // intersection because a position names its file by PATH). Either
-    // way wraps INSIDE any equality-DV filter (the counter must see
-    // the raw stream).
-    val posWrap: PartitionReaderFactory => PartitionReaderFactory =
-      if (posDv.isEmpty) identity
-      else {
-        val spark0 = SparkSession.active
-        val maxLoad = spark0.conf
-          .getOption(SnapshotV2.DvBroadcastMaxKeysConf).map(_.toLong)
-          .getOrElse(SnapshotV2.DvReaderMaxKeys)
-        val declared = posDv.map(_.count).sum
-        if (declared <= maxLoad) {
-          lastDvMode = "broadcast" // eq-DV branch below overwrites when both formats ride
-          // driver-THREAD sidecar read (SnapshotV2.foreachSidecarRow):
-          // the old spark.read.parquet(...).collect() paid 2 Spark jobs
-          // per reader-factory build — schema inference + collect —
-          // and a DML chain re-pays them on every scan (r18)
-          val acc = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Long]]()
-          SnapshotV2.foreachSidecarRow(
-            spark0, SnapshotV2.PosSidecarSchema, posDv.map(_.path), m.io) { row =>
-            if (!row.isNullAt(0) && !row.isNullAt(1)) {
-              val k = row.getUTF8String(0).toString
-              var b = acc.get(k)
-              if (b == null) {
-                b = scala.collection.mutable.ArrayBuffer.empty[Long]
-                acc.put(k, b)
-              }
-              b += row.getLong(1)
-            }
-          }
-          val posMap = new java.util.HashMap[String, Array[Long]]()
-          acc.forEach((k, b) => posMap.put(k, b.toArray.distinct.sorted))
-          val bc = spark0.sparkContext.broadcast(posMap)
-          inner => new PosDeleteReaderFactory(inner, bc)
-        } else {
-          lastDvMode = "scoped"
-          val sidecarPf: Map[String, PartitionedFile] = posDv.map { r =>
-            val len = m.io.size(r.path)
-            r.path -> PartitionedFile(InternalRow.empty,
-              SparkPath.fromPathString(r.path), 0L, len, Array.empty, 0L, len)
-          }.toMap
-          val byFile: Map[String, Array[PartitionedFile]] =
-            entries.map { f =>
-              f.path -> posDv.filter(SnapshotV2.covers(_, f.path))
-                .map(r => sidecarPf(r.path)).toArray
-            }.toMap
-          lastScopedAttach = byFile.valuesIterator.map(_.length.toLong).sum
-          val posSchema = StructType(Seq(
-            StructField("_file", StringType), StructField("_pos", LongType)))
-          val posReader = Bridge.parquetReaderFactory(
-            spark0, posSchema, posSchema, Array.empty)
-          inner => new PosScopedReaderFactory(inner, posReader, byFile)
-        }
-      }
-    if (dv.isEmpty && posDv.isEmpty) {
+    if (!anyDv) {
       val inner = parquetBase(dataSchema, pushed)
       if (metaFields.isEmpty) inner
       else new MetadataAppendReaderFactory(inner, requiredSchema, dataSchema)
-    } else if (dv.isEmpty) {
-      // positions only. The metadata append is 1:1 over the raw
-      // parquet stream, so wrapping the ordinal filter AROUND it keeps
-      // both sound at once: `_pos` values are assigned at raw ordinals
-      // (what a second deletePositions batch must address — the
-      // STACKING workflow), and the filter's counter walks the same
-      // raw stream. Filter pushdown is already disabled under posDv.
-      val base = parquetBase(dataSchema, pushed)
-      if (metaFields.isEmpty) posWrap(base)
-      else posWrap(new MetadataAppendReaderFactory(base, requiredSchema, dataSchema))
-    } else {
-      // MERGE-ON-READ application, the Iceberg equality-delete shape:
-      // the accumulated delete keys (batch-sized sidecars, counts
-      // recorded in the manifest) load ONCE driver-side into a
-      // key -> max-commit-sequence map and broadcast; each reader
-      // drops a row iff its key's max DV sequence exceeds the row's
-      // FILE sequence — so a MoR commit's own post-images survive the
-      // DV that kills their pre-images. Row-based readers only (the
-      // filter is per-row); compaction materializes and re-zeros all
-      // of this, restoring columnar reads, SPJ and pushdowns.
-      val spark = SparkSession.active
+    } else deleteReaderFactory(pushed)
+  }
+
+  /** MERGE-ON-READ application of both delete formats, per file and
+    * task-side (the Iceberg delete-file application shape): nothing
+    * loads on the driver. Each file attaches, from manifest lines alone,
+    * the position sidecars whose recorded path range covers it and the
+    * deletion-vector sidecars whose key range overlaps its key stats and
+    * whose commit sequence exceeds its own — so a MoR commit's
+    * post-images survive the DV that kills their pre-images. Memory
+    * scales with the deletes that OVERLAP one file, at any chain length.
+    * Row-based readers only (the filter is per row); compaction
+    * materializes and re-zeros all of this, restoring columnar reads,
+    * SPJ and pushdowns.
+    *
+    * PROVENANCE COMPOSITION: the metadata append is 1:1 over the RAW
+    * parquet stream — `_pos` values are raw ordinals, exactly what a
+    * stacked deletePositions batch must address — and the delete filter
+    * wraps OUTSIDE it, so its position counter walks the same raw
+    * stream and dropping a row never compacts `_pos`. A DV key the
+    * projection dropped is force-read LAST, so the post-filter
+    * projection strips it by prefix. */
+  private def deleteReaderFactory(pushed: Array[Filter]): PartitionReaderFactory = {
+    val spark = SparkSession.active
+    val kf: Option[StructField] = if (dv.isEmpty) None else Some {
       val key = SnapshotTable.dvKeyOf(m).getOrElse(throw new IllegalStateException(
         s"$table carries deletion vectors but no recorded delete key"))
-      val kf = m.schema.fields.find(_.name == key).getOrElse(
+      val f = m.schema.fields.find(_.name == key).getOrElse(
         throw new IllegalStateException(s"$table: DV key $key not in schema"))
-      val supported = kf.dataType match {
-        case ByteType | ShortType | IntegerType | LongType | StringType => true
-        case _                                                          => false
-      }
-      require(supported, s"DV key $key: ${kf.dataType.simpleString} is not a " +
-        "supported delete-key type for the v2 reader (integral or string)")
-      val innerSchema =
-        if (dataSchema.fieldNames.contains(key)) dataSchema
-        else StructType(dataSchema.fields :+ kf) // force-read the key, project after
-      // PROVENANCE COMPOSITION (`_file`/`_pos` under an equality-DV
-      // chain): the metadata append is 1:1 over the RAW parquet stream
-      // — `_pos` values are assigned at raw ordinals, exactly what a
-      // stacked deletePositions batch must address — and the DV filter
-      // wraps OUTSIDE it, dropping dead rows without compacting the
-      // counter (the same wrap order the position format uses). A
-      // force-read key appends LAST so the post-filter projection
-      // strips it by prefix.
-      val outSchema =
-        if (metaFields.isEmpty) innerSchema
-        else if (requiredSchema.fieldNames.contains(key)) requiredSchema
-        else StructType(requiredSchema.fields :+ kf)
-      val target = if (metaFields.isEmpty) dataSchema else requiredSchema
-      val keyOrd = outSchema.fieldIndex(key)
-      val projectTo =
-        if (outSchema.length == target.length) None else Some(target)
-      val parquetInner = parquetBase(innerSchema, pushed)
-      val inner = posWrap(
-        if (metaFields.isEmpty) parquetInner
-        else new MetadataAppendReaderFactory(parquetInner, outSchema, innerSchema))
-      val declared = dv.map(_.count)
-      val budget = if (declared.forall(_ >= 0)) declared.sum else -1L
-      val maxBroadcast = spark.conf
-        .getOption(SnapshotV2.DvBroadcastMaxKeysConf).map(_.toLong)
-        .getOrElse(SnapshotV2.DvReaderMaxKeys)
-      if (budget >= 0 && budget <= maxBroadcast) {
-        // BROADCAST path (the common case): the accumulated delete keys
-        // load ONCE driver-side into a key -> max-commit-sequence map —
-        // declared counts bound the load before it starts
-        lastDvMode = "broadcast"
-        // driver-THREAD sidecar reads (SnapshotV2.foreachSidecarRow):
-        // the old per-ref spark.read.parquet(...).collect() paid 2
-        // Spark jobs PER SIDECAR per reader-factory build (r18). Key
-        // normalization identical to the old boxed-Row path: integral
-        // types widen to Long, strings stay java Strings — the exact
-        // key space DvFilterReaderFactory probes with.
-        val deletes = new java.util.HashMap[Any, java.lang.Long]()
-        val kSchema = StructType(Seq(kf.copy(nullable = true)))
-        dv.foreach { r =>
-          SnapshotV2.foreachSidecarRow(spark, kSchema, Seq(r.path), m.io) { row =>
-            if (!row.isNullAt(0)) {
-              val k: Any = kf.dataType match {
-                case StringType  => row.getUTF8String(0).toString
-                case ByteType    => row.getByte(0).toLong
-                case ShortType   => row.getShort(0).toLong
-                case IntegerType => row.getInt(0).toLong
-                case _           => row.getLong(0)
-              }
-              val prev = deletes.get(k)
-              if (prev == null || prev < r.seq) deletes.put(k, r.seq)
-            }
-          }
-        }
-        val bc = spark.sparkContext.broadcast(deletes)
-        new DvFilterReaderFactory(inner, bc, keyOrd, kf.dataType, projectTo)
-      } else {
-        // SCOPED fallback (over budget or unrecorded legacy counts):
-        // nothing loads driver-side. Each single-file partition reads
-        // only the sidecars that CAN hit it — pruned from manifest
-        // lines alone (DV refs carry seq + key range, files carry seq
-        // + key stats), loaded executor-side into a sorted array /
-        // hash set per task. Memory scales with the deletes that
-        // OVERLAP one file, not the chain total — a trickle-CDC table
-        // that can't compact on schedule keeps reading instead of
-        // hitting a ceiling. Cost honesty: the per-task sidecar reads
-        // re-run per file; compaction remains the cure, this is the
-        // bridge.
-        lastDvMode = "scoped"
-        def fileRange(f: SnapshotTable.FileEntry): (Option[(Long, Long)], Option[(String, String)]) =
-          (f.stats.get(key), f.sstats.get(key))
-        def relevant(r: SnapshotTable.DvRef, f: SnapshotTable.FileEntry): Boolean =
-          r.seq > math.max(f.seq, 0L) && {
-            val (fl, fs) = fileRange(f)
-            (r.rangeL, fl, r.rangeS, fs) match {
-              case (Some((lo, hi)), Some((fmn, fmx)), _, _) =>
-                hi >= fmn && lo <= fmx
-              case (_, _, Some((lo, hi)), Some((fmn, fmx))) =>
-                SnapshotTable.FileEntry.bytesLe(lo, fmx) &&
-                  SnapshotTable.FileEntry.bytesLe(fmn, hi)
-              case _ => true // rangeless ref or statless file: must read
-            }
-          }
-        val sidecarPf: Map[String, PartitionedFile] = dv.map { r =>
-          val len = m.io.size(r.path)
-          r.path -> PartitionedFile(InternalRow.empty,
-            SparkPath.fromPathString(r.path), 0L, len, Array.empty, 0L, len)
-        }.toMap
-        // keyed over the STATIC survivors — runtime filters only ever
-        // remove files, so every planned partition has its entry
-        val byFile: Map[String, Array[PartitionedFile]] =
-          entries.map { f =>
-            f.path -> dv.filter(relevant(_, f)).map(r => sidecarPf(r.path)).toArray
-          }.toMap
-        lastScopedAttach = byFile.valuesIterator.map(_.length.toLong).sum
-        val keySchema = StructType(Seq(kf.copy(nullable = true)))
-        val dvReader = Bridge.parquetReaderFactory(
-          spark, keySchema, keySchema, Array.empty)
-        new DvScopedReaderFactory(inner, dvReader, byFile, keyOrd, kf.dataType,
-          projectTo)
-      }
+      require(DeleteReaderFactory.keyTypes(f.dataType), s"DV key $key: " +
+        s"${f.dataType.simpleString} is not a supported delete-key type for the " +
+        "v2 reader (integral or string)")
+      f
     }
+    def withKey(s: StructType): StructType =
+      kf.filterNot(f => s.fieldNames.contains(f.name)).fold(s)(f => StructType(s.fields :+ f))
+    val innerSchema = withKey(dataSchema)
+    val target = if (metaFields.isEmpty) dataSchema else requiredSchema
+    val outSchema = withKey(target)
+    val parquetInner = parquetBase(innerSchema, pushed)
+    val inner =
+      if (metaFields.isEmpty) parquetInner
+      else new MetadataAppendReaderFactory(parquetInner, outSchema, innerSchema)
+    def relevant(r: SnapshotTable.DvRef, f: SnapshotTable.FileEntry): Boolean =
+      r.seq > math.max(f.seq, 0L) && {
+        val key = kf.get.name
+        (r.rangeL, f.stats.get(key), r.rangeS, f.sstats.get(key)) match {
+          case (Some((lo, hi)), Some((fmn, fmx)), _, _) =>
+            hi >= fmn && lo <= fmx
+          case (_, _, Some((lo, hi)), Some((fmn, fmx))) =>
+            SnapshotTable.FileEntry.bytesLe(lo, fmx) &&
+              SnapshotTable.FileEntry.bytesLe(fmn, hi)
+          case _ => true // rangeless ref or statless file: must read
+        }
+      }
+    val sidecar: Map[String, PartitionedFile] =
+      (posDv.map(_.path) ++ dv.map(_.path)).distinct.map { p =>
+        val len = m.io.size(p)
+        p -> PartitionedFile(InternalRow.empty, SparkPath.fromPathString(p), 0L, len,
+          Array.empty, 0L, len)
+      }.toMap
+    // keyed over the STATIC survivors — runtime filters only ever
+    // remove files, so every planned partition has its entry
+    val byFile: Map[String, Array[DeleteReaderFactory.Attachment]] =
+      entries.map { f =>
+        val positions = posDv.filter(SnapshotV2.covers(_, f.path))
+          .map(r => DeleteReaderFactory.Attachment(sidecar(r.path), positions = true))
+        val keys = dv.filter(relevant(_, f))
+          .map(r => DeleteReaderFactory.Attachment(sidecar(r.path), positions = false))
+        f.path -> (positions ++ keys).toArray
+      }.toMap
+    lastAttachments = byFile.valuesIterator.map(_.length.toLong).sum
+    def sidecarReader(schema: StructType) =
+      Bridge.parquetReaderFactory(spark, schema, schema, Array.empty)
+    new DeleteReaderFactory(inner, byFile,
+      if (posDv.isEmpty) None else Some(sidecarReader(SnapshotV2.PosSidecarSchema)),
+      kf.map(f => sidecarReader(StructType(Seq(f.copy(nullable = true))))),
+      kf.fold(-1)(f => outSchema.fieldIndex(f.name)),
+      kf.fold[DataType](NullType)(_.dataType),
+      if (outSchema.length == target.length) None else Some(target))
   }
 
   /** Streaming read (`spark.readStream.table(...)`, or the
@@ -1721,12 +1623,6 @@ private[graft] object SnapshotV2 {
     }
   }
 
-  /** Rides each [[PartitionedFile]]'s constant-metadata map: the file's
-    * COMMIT SEQUENCE, which scopes the reader-side deletion-vector
-    * filter (a DV stamped at s deletes only rows with file seq < s).
-    * Parquet's own reader never consults unknown keys here. */
-  private[sources] val FileSeqMetaKey = "__graft_fseq"
-
   private[sources] def partitionedFile(
       f: SnapshotTable.FileEntry, io: SnapshotIO): PartitionedFile = {
     // manifest-recorded size; one fs stat per file only for legacy
@@ -1734,23 +1630,8 @@ private[graft] object SnapshotV2 {
     val len = if (f.size >= 0) f.size else io.size(f.path)
     PartitionedFile(
       InternalRow.empty, SparkPath.fromPathString(f.path), 0L, len,
-      Array.empty, 0L, len, Map(FileSeqMetaKey -> math.max(f.seq, 0L)))
+      Array.empty, 0L, len)
   }
-
-  /** Default ceiling on the delete set the v2 reader materializes
-    * driver-side and broadcasts (the Iceberg equality-delete
-    * application shape). Beyond it the scan no longer refuses: it
-    * falls back to the SCOPED application path — per-file sidecar
-    * loads pruned from manifest ranges, zero driver materialization
-    * ([[DvScopedReaderFactory]]). Override per session with
-    * [[DvBroadcastMaxKeysConf]]. Compaction still re-zeros the state
-    * and restores columnar reads/SPJ/pushdowns. */
-  private[sources] val DvReaderMaxKeys = 8000000L
-
-  /** Session conf key overriding [[DvReaderMaxKeys]] — how many
-    * outstanding delete keys the v2 reader may load driver-side and
-    * broadcast before switching to the scoped per-file path. */
-  private[graft] val DvBroadcastMaxKeysConf = "spark.graft.dv.broadcastMaxKeys"
 
   /** The (_file, _pos) sidecar schema — shared by every position-delete
     * consumer so none of them pays parquet schema inference. */
@@ -1759,17 +1640,11 @@ private[graft] object SnapshotV2 {
 
   /** Drive the shared parquet reader factory on the CALLING thread —
     * ZERO Spark jobs — over tiny driver-side sidecar files (DV /
-    * position-delete parquet, coalesce(1)-written by construction).
+    * position-delete parquet, coalesce(1)-written by construction): the
+    * sidecar writers count and range what they just wrote through it.
     * `spark.read.parquet(p).collect()` costs TWO jobs per load (footer
-    * schema inference + the collect itself), and the under-budget
-    * broadcast delete paths re-pay them on every reader-factory build
-    * — a DML chain re-loads the whole outstanding chain per scan
-    * (guide §5: the driver should do almost no data work; these loads
-    * are bounded by the declared-count budget BEFORE they start, so a
-    * driver-thread read is the same memory and none of the job/stage/
-    * scheduler overhead; r18). The distributed application paths are
-    * untouched. Rows are reader-owned and reused: `f` must extract
-    * fields, never retain the row. */
+    * schema inference + the collect itself). Rows are reader-owned and
+    * reused: `f` must extract fields, never retain the row. */
   private[sources] def foreachSidecarRow(
       spark: SparkSession,
       schema: StructType,
@@ -1845,185 +1720,31 @@ private[sources] class MetadataAppendReaderFactory(
   }
 }
 
-/** Applies the broadcast deletion-vector set around an inner row
-  * reader (merge-on-read, Iceberg equality-delete application): a row
-  * is dropped iff its delete-key's max DV commit sequence exceeds the
-  * row's FILE commit sequence (rode in on the partition's constant-
-  * metadata map) — so post-images appended by the same MoR commit
-  * survive the DV that kills their pre-images. When the scan had to
-  * force-read the key past column pruning, `projectTo` strips it back
-  * off. NULL keys never match a DV (the key column's delete semantics
-  * are equality). */
-private[sources] class DvFilterReaderFactory(
+/** Applies a file's outstanding deletes around an inner row reader.
+  * Partitions hold exactly ONE data file (the scan plans them that way
+  * whenever a delete format is outstanding). `byFile` maps each data
+  * file's path to the sidecars attached to it, pruned driver-side from
+  * manifest lines at zero I/O (see [[SnapshotV2Scan]]'s
+  * `deleteReaderFactory`); the task loads only those:
+  *
+  *   - position sidecars (`posReader`) contribute the raw ordinals they
+  *     list for THIS file — a position names its file by path, so the
+  *     filter is exact and needs no sequence scoping;
+  *   - deletion-vector sidecars (`keyReader`) contribute their keys — a
+  *     sorted long array for integral keys (widened to Long), a hash set
+  *     for strings. Sequence scoping rode the attachment (only refs with
+  *     seq > the file's seq attach). NULL keys never match.
+  *
+  * One loop drops by raw ordinal first — the counter walks the
+  * UNFILTERED stream (the scan disabled parquet filter pushdown under
+  * position deletes for exactly this reason) — then by key. When the
+  * scan force-read the key past column pruning, `projectTo` strips it
+  * back off. */
+private[sources] class DeleteReaderFactory(
     inner: PartitionReaderFactory,
-    deletes: org.apache.spark.broadcast.Broadcast[java.util.HashMap[Any, java.lang.Long]],
-    keyOrd: Int,
-    keyType: DataType,
-    projectTo: Option[StructType]) extends PartitionReaderFactory {
-
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fseq: Long = p match {
-      case fp: FilePartition =>
-        require(fp.files.length == 1,
-          s"DV-filtered partitions hold one file each, got ${fp.files.length}")
-        fp.files.head.otherConstantMetadataColumnValues
-          .get(SnapshotV2.FileSeqMetaKey) match {
-          case Some(s: Long) => s
-          case _             => 0L
-        }
-      case _ => 0L
-    }
-    val in = inner.createReader(p)
-    val proj = projectTo.map(s =>
-      org.apache.spark.sql.catalyst.ProjectingInternalRow(s, 0 until s.length))
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      override def next(): Boolean = {
-        while (in.next()) {
-          val r = in.get()
-          val dead = !r.isNullAt(keyOrd) && {
-            val k: Any = keyType match {
-              case StringType  => r.getUTF8String(keyOrd).toString
-              case ByteType    => r.getByte(keyOrd).toLong
-              case ShortType   => r.getShort(keyOrd).toLong
-              case IntegerType => r.getInt(keyOrd).toLong
-              case _           => r.getLong(keyOrd)
-            }
-            val s = deletes.value.get(k)
-            s != null && s > fseq
-          }
-          if (!dead) {
-            cur = proj match {
-              case Some(pr) => pr.project(r); pr
-              case None     => r
-            }
-            return true
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = cur
-      override def close(): Unit = in.close()
-    }
-  }
-}
-
-/** Applies broadcast POSITION deletes around an inner row reader: a
-  * row is dropped iff its raw ordinal within its data file is listed
-  * for that file. Partitions hold exactly ONE file (the scan plans
-  * them that way whenever any delete format is outstanding), so the
-  * ordinal is a plain reader-side counter over the UNFILTERED stream —
-  * the scan disabled parquet filter pushdown for exactly this reason.
-  * Files with no listed positions pass through at one map lookup. */
-private[sources] class PosDeleteReaderFactory(
-    inner: PartitionReaderFactory,
-    deletes: org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, Array[Long]]])
-    extends PartitionReaderFactory {
-
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fp = p.asInstanceOf[FilePartition]
-    require(fp.files.length == 1,
-      s"position-delete partitions hold one file each, got ${fp.files.length}")
-    val path = fp.files.head.filePath.toPath.toUri.getPath
-    val dead: Array[Long] = deletes.value.getOrDefault(path, Array.empty)
-    val in = inner.createReader(p)
-    if (dead.isEmpty) in
-    else new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      private var pos = -1L
-      override def next(): Boolean = {
-        while (in.next()) {
-          pos += 1
-          if (java.util.Arrays.binarySearch(dead, pos) < 0) {
-            cur = in.get()
-            return true
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = cur
-      override def close(): Unit = in.close()
-    }
-  }
-}
-
-/** The SCOPED position-delete application — the over-budget fallback
-  * to [[PosDeleteReaderFactory]]'s broadcast map: each single-file
-  * partition loads ONLY the sidecars whose recorded data-file path
-  * range covers its file (pruned driver-side from manifest refs at
-  * zero I/O), keeps the positions naming exactly this file, and drops
-  * those raw ordinals against the same counter the broadcast path
-  * uses. Nothing loads driver-side; per-task memory scales with the
-  * deletes that overlap ONE file. A position names its file by PATH,
-  * so the per-file filter is exact — no sequence scoping needed
-  * (files appended after a delete have different paths by
-  * construction). Compaction remains the cure; this is the bridge
-  * that keeps a morKey-less trickle-delete table readable. */
-private[sources] class PosScopedReaderFactory(
-    inner: PartitionReaderFactory,
-    posReader: PartitionReaderFactory,
-    byFile: Map[String, Array[PartitionedFile]]) extends PartitionReaderFactory {
-
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fp = p.asInstanceOf[FilePartition]
-    require(fp.files.length == 1,
-      s"position-delete partitions hold one file each, got ${fp.files.length}")
-    val path = fp.files.head.filePath.toPath.toUri.getPath
-    val sidecars = byFile.getOrElse(path, Array.empty)
-    val posB = Array.newBuilder[Long]
-    sidecars.foreach { sc =>
-      val r = posReader.createReader(FilePartition(0, Array(sc)))
-      try while (r.next()) {
-        val row = r.get()
-        if (!row.isNullAt(0) && !row.isNullAt(1) &&
-            row.getUTF8String(0).toString == path)
-          posB += row.getLong(1)
-      } finally r.close()
-    }
-    val dead = posB.result()
-    java.util.Arrays.sort(dead) // dupes across stacked batches are harmless to the search
-    val in = inner.createReader(p)
-    if (dead.isEmpty) in
-    else new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      private var pos = -1L
-      override def next(): Boolean = {
-        while (in.next()) {
-          pos += 1
-          if (java.util.Arrays.binarySearch(dead, pos) < 0) {
-            cur = in.get()
-            return true
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = cur
-      override def close(): Unit = in.close()
-    }
-  }
-}
-
-/** The SCOPED deletion-vector application — the over-budget fallback
-  * to [[DvFilterReaderFactory]]'s broadcast map: each single-file
-  * partition loads ONLY the sidecars whose manifest-recorded key range
-  * and commit sequence can hit its file (pruned driver-side from
-  * manifest lines at zero I/O; `byFile` maps data-file path → relevant
-  * sidecar reads), builds the delete set task-side — a sorted long
-  * array for integral keys (8 bytes/key: 50M deletes overlapping one
-  * file ≈ 400 MB, far past any sane pre-compaction state), a hash set
-  * for strings — and drops matching rows. Sequence scoping rode the
-  * driver-side pruning (only refs with seq > file seq are attached),
-  * so a MoR commit's post-images still survive their own DV. */
-private[sources] class DvScopedReaderFactory(
-    inner: PartitionReaderFactory,
-    dvReader: PartitionReaderFactory,
-    byFile: Map[String, Array[PartitionedFile]],
+    byFile: Map[String, Array[DeleteReaderFactory.Attachment]],
+    posReader: Option[PartitionReaderFactory],
+    keyReader: Option[PartitionReaderFactory],
     keyOrd: Int,
     keyType: DataType,
     projectTo: Option[StructType]) extends PartitionReaderFactory {
@@ -2043,42 +1764,56 @@ private[sources] class DvScopedReaderFactory(
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val fp = p.asInstanceOf[FilePartition]
     require(fp.files.length == 1,
-      s"DV-filtered partitions hold one file each, got ${fp.files.length}")
+      s"delete-applying partitions hold one file each, got ${fp.files.length}")
     val path = fp.files.head.filePath.toPath.toUri.getPath
-    val sidecars = byFile.getOrElse(path, Array.empty)
-    // task-side delete set over this file's RELEVANT sidecars only
+    val pathU = UTF8String.fromString(path)
+    val posB = Array.newBuilder[Long]
     val longsB = Array.newBuilder[Long]
-    val strings = new java.util.HashSet[String]()
-    sidecars.foreach { sc =>
-      val r = dvReader.createReader(FilePartition(0, Array(sc)))
+    val strings = new java.util.HashSet[UTF8String]()
+    byFile.getOrElse(path, Array.empty).foreach { a =>
+      val reader = if (a.positions) posReader.get else keyReader.get
+      val r = reader.createReader(FilePartition(0, Array(a.file)))
       try while (r.next()) {
         val row = r.get()
-        if (!row.isNullAt(0)) {
-          if (isString) strings.add(row.getUTF8String(0).toString)
+        if (a.positions) {
+          if (!row.isNullAt(0) && !row.isNullAt(1) && row.getUTF8String(0) == pathU)
+            posB += row.getLong(1)
+        } else if (!row.isNullAt(0)) {
+          // the reader reuses its buffers: keep a copy of a string key
+          if (isString) strings.add(row.getUTF8String(0).clone())
           else longsB += longAt(row, 0)
         }
       } finally r.close()
     }
+    // dupes across stacked batches are harmless to the searches
+    val dead = posB.result()
+    java.util.Arrays.sort(dead)
     val longs = longsB.result()
     java.util.Arrays.sort(longs)
+    val byKey = longs.nonEmpty || !strings.isEmpty
     val in = inner.createReader(p)
+    if (dead.isEmpty && !byKey && projectTo.isEmpty) return in
     val proj = projectTo.map(s =>
       org.apache.spark.sql.catalyst.ProjectingInternalRow(s, 0 until s.length))
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _
+      private var pos = -1L
       override def next(): Boolean = {
         while (in.next()) {
-          val r = in.get()
-          val dead = !r.isNullAt(keyOrd) && {
-            if (isString) strings.contains(r.getUTF8String(keyOrd).toString)
-            else java.util.Arrays.binarySearch(longs, longAt(r, keyOrd)) >= 0
-          }
-          if (!dead) {
-            cur = proj match {
-              case Some(pr) => pr.project(r); pr
-              case None     => r
+          pos += 1
+          if (dead.isEmpty || java.util.Arrays.binarySearch(dead, pos) < 0) {
+            val r = in.get()
+            val killed = byKey && !r.isNullAt(keyOrd) && {
+              if (isString) strings.contains(r.getUTF8String(keyOrd))
+              else java.util.Arrays.binarySearch(longs, longAt(r, keyOrd)) >= 0
             }
-            return true
+            if (!killed) {
+              cur = proj match {
+                case Some(pr) => pr.project(r); pr
+                case None     => r
+              }
+              return true
+            }
           }
         }
         false
@@ -2087,6 +1822,16 @@ private[sources] class DvScopedReaderFactory(
       override def close(): Unit = in.close()
     }
   }
+}
+
+private[sources] object DeleteReaderFactory {
+
+  /** One sidecar attached to a data file: a position sidecar
+    * (`_file`, `_pos`) or a deletion-vector key sidecar. */
+  case class Attachment(file: PartitionedFile, positions: Boolean)
+
+  /** The delete-key types the reader applies (integral or string). */
+  val keyTypes: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType, StringType)
 }
 
 /** Stream offsets are manifest VERSIONS, serialized as the bare

@@ -3581,22 +3581,19 @@ object SourceCatalog extends QueryModule {
     ),
     Q(
       "src_snapshot_dv_scoped",
-      // DISTRIBUTED DELETION-VECTOR FALLBACK (the r14 verdict's 8M-key
-      // ceiling, lifted): when the outstanding delete keys exceed the
-      // v2 reader's broadcast budget (spark.graft.dv.broadcastMaxKeys),
-      // the scan switches — instead of refusing — to the SCOPED path:
-      // per-file sidecar loads pruned from manifest lines alone (DV
-      // refs carry seq + key range, files carry seq + key stats),
-      // applied task-side as a sorted long array / string hash set, so
-      // driver memory is ZERO and per-task memory scales with the
-      // deletes overlapping ONE file — a trickle-CDC table that can't
-      // compact on schedule keeps serving reads instead of hitting a
-      // cliff. The chain: INSERT → MoR UPDATE (+500 on a window) → MoR
-      // DELETE, then the read runs with the budget forced to 4 keys and
-      // REQUIREs the scoped path engaged (structural pin on the scan)
-      // while producing the same relational answer the oracle replays.
-      // Round33Spec pins path-selection equivalence, sequence scoping
-      // under the scoped filter, string keys, and range-bounded loads.
+      // MERGE-ON-READ DELETION VECTORS APPLIED PER FILE: nothing loads
+      // driver-side. Each data file attaches, from manifest lines alone
+      // (DV refs carry seq + key range, files carry seq + key stats),
+      // only the sidecars that can hit it; the task loads them into a
+      // sorted long array / string hash set, so per-task memory scales
+      // with the deletes overlapping ONE file and a trickle-CDC table
+      // that can't compact on schedule keeps serving reads. The chain:
+      // INSERT → MoR UPDATE (+500 on a window) → MoR DELETE, then the
+      // read REQUIREs every pre-chain file to attach a sidecar
+      // (structural pin on the scan) while producing the same
+      // relational answer the oracle replays. Round33Spec pins the
+      // answer against the source, sequence scoping, string keys, and
+      // range-bounded loads.
       (s, dir) => {
         val wh = graft.Stage.dir("graft_dvsc_", dir).getPath
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(wh))
@@ -3616,23 +3613,17 @@ object SourceCatalog extends QueryModule {
         require(before.subsetOf(SnapshotTable.manifest(s"$wh/t",
           SnapshotTable.currentVersion(s"$wh/t")).files.map(_.path).toSet),
           "the MoR chain must rewrite ZERO existing data files")
-        s.conf.set(graft.sources.SnapshotV2.DvBroadcastMaxKeysConf, "4")
-        try {
-          val df = s.table(s"$cat.t")
-          df.collect() // materialize so the reader factory picks the path
-          val mode = graft.Stage.executedNodes(df).collect {
-            case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-              b.scan
-          }.collectFirst { case sc: SnapshotV2Scan => sc.lastDvMode }.getOrElse("")
-          require(mode == "scoped",
-            s"an over-budget DV chain must engage the scoped path, got '$mode'")
-          s.table(s"$cat.t")
-            .groupBy((col("k") % 10).as("bucket"))
-            .agg(
-              count(lit(1)).as("n_rows"),
-              sum(col("price").cast("decimal(38,4)")).cast("double").as("sum_price"))
-            .orderBy("bucket")
-        } finally s.conf.unset(graft.sources.SnapshotV2.DvBroadcastMaxKeysConf)
+        val df = s.table(s"$cat.t")
+        df.collect()
+        val attached = graft.Stage.deleteAttachments(df)
+        require(attached >= before.size,
+          s"each of the ${before.size} pre-chain files must attach a DV sidecar, got $attached")
+        s.table(s"$cat.t")
+          .groupBy((col("k") % 10).as("bucket"))
+          .agg(
+            count(lit(1)).as("n_rows"),
+            sum(col("price").cast("decimal(38,4)")).cast("double").as("sum_price"))
+          .orderBy("bucket")
       },
       Some("""WITH t AS (SELECT o_orderkey AS k,
              |  CASE WHEN o_orderkey % 10 = 3 THEN o_totalprice + 500.0
@@ -3695,24 +3686,21 @@ object SourceCatalog extends QueryModule {
             .select("arm", "n_rows", "sum_price")
         val head = agg(s.table(s"$cat.t"), "head")
         val asof = agg(s.sql(s"SELECT * FROM $cat.t VERSION AS OF 2"), "asof")
-        // OVER-BUDGET arm: past spark.graft.dv.broadcastMaxKeys the scan
-        // switches — instead of refusing (the r15 verdict's last hard
-        // read cliff) — to the SCOPED path: each file attaches only the
-        // sidecars whose recorded data-file path range covers it, loaded
-        // task-side (zero driver memory). REQUIREd engaged structurally;
-        // the answer must equal the broadcast head's.
-        s.conf.set(graft.sources.SnapshotV2.DvBroadcastMaxKeysConf, "4")
-        val scoped = try {
+        // 'scoped' arm: each data file attaches only the sidecars whose
+        // recorded data-file path range covers it, loaded task-side
+        // (zero driver memory). REQUIREd structurally: every file that
+        // lost a row attaches, and no file attaches twice (one sidecar).
+        val named = s.sql(s"SELECT _file FROM $cat.t VERSION AS OF 2 WHERE k % 10 = 7")
+          .distinct().count()
+        val scoped = {
           val df = s.table(s"$cat.t")
-          df.collect() // materialize so the reader factory picks the path
-          val mode = graft.Stage.executedNodes(df).collect {
-            case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-              b.scan
-          }.collectFirst { case sc: SnapshotV2Scan => sc.lastDvMode }.getOrElse("")
-          require(mode == "scoped",
-            s"an over-budget position-delete read must engage the scoped path, got '$mode'")
-          agg(s.table(s"$cat.t"), "scoped")
-        } finally s.conf.unset(graft.sources.SnapshotV2.DvBroadcastMaxKeysConf)
+          df.collect()
+          val attached = graft.Stage.deleteAttachments(df)
+          require(attached >= named && attached <= m3.files.size,
+            s"the position sidecar must attach to the $named files it names and " +
+              s"at most once to each of ${m3.files.size}, got $attached")
+          agg(df, "scoped")
+        }
         // compaction materializes the positions and re-zeros the state
         val (_, v) = SnapshotTable.compactSnapshot(s, table)
         require(SnapshotTable.posDvPaths(SnapshotTable.manifest(table, v)).isEmpty,

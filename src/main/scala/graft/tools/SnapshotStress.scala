@@ -101,7 +101,7 @@ object SnapshotStress {
     require(f1 == f0, s"deleteKeys rewrote data files ($f0 -> $f1)")
     println(f"SNAP_META delete_mor | $tDel%6.2f | ${n / 2} keys, $f0 files untouched")
     val tReadDv = time { SnapshotTable.read(spark, table).count() }
-    println(f"SNAP_META read_with_dv | $tReadDv%6.2f | anti-join overhead on head read")
+    println(f"SNAP_META read_with_dv | $tReadDv%6.2f | per-file DV application on head read")
     val tRb = time { SnapshotTable.rollback(table, toVersion = cur0) }
     println(f"SNAP_META rollback | $tRb%6.2f | to v$cur0 at history depth ${cur0 + 1}")
     val tFork = time { SnapshotTable.createBranch(table, "stress") }

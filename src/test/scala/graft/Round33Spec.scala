@@ -1,21 +1,18 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{SnapshotCatalog, SnapshotTable, SnapshotV2, SnapshotV2Scan}
+import graft.sources.{SnapshotCatalog, SnapshotTable}
 
-/** Round-33 wave: the DISTRIBUTED deletion-vector fallback — when the
-  * outstanding delete-key count exceeds the v2 reader's broadcast
-  * budget (spark.graft.dv.broadcastMaxKeys, default 8M), the scan no
-  * longer refuses: it switches to the SCOPED path (per-file sidecar
-  * loads pruned from manifest seq + key ranges, task-side sorted-array
-  * /hash-set application, zero driver materialization). This spec pins
-  * path selection, result identity between the two paths, sequence
-  * scoping (MoR post-images survive their own DV) under the scoped
-  * path, string keys, and that the under-budget path still broadcasts.
+/** Round-33 wave: per-file deletion-vector application — the scan
+  * loads nothing driver-side: each file attaches, from manifest seq +
+  * key ranges alone, only the sidecars that can hit it, and its task
+  * applies them as a sorted array / hash set. This spec pins the answer
+  * against rows computed from the source, sequence scoping (MoR
+  * post-images survive their own DV), string keys, and range-bounded
+  * attachment.
   */
 class Round33Spec extends AnyFunSuite {
   import TestSpark._
@@ -28,36 +25,25 @@ class Round33Spec extends AnyFunSuite {
     (cat, wh)
   }
 
-  private def dvMode(df: DataFrame): String = {
-    df.collect() // the reader factory (which picks the path) builds at execution
-    Stage.executedNodes(df).collect {
-      case b: BatchScanExec => b.scan
-    }.collectFirst { case s: SnapshotV2Scan => s.lastDvMode }.getOrElse("")
+  /** Runs `df` and returns its scan's delete attachments. */
+  private def attached(df: DataFrame): Long = {
+    df.collect()
+    Stage.deleteAttachments(df)
   }
 
-  private def withBudget[A](n: Long)(body: => A): A = {
-    spark.conf.set(SnapshotV2.DvBroadcastMaxKeysConf, n.toString)
-    try body finally spark.conf.unset(SnapshotV2.DvBroadcastMaxKeysConf)
-  }
-
-  test("path selection: under budget broadcasts, over budget scopes — " +
-      "results identical either way") {
-    val (cat, _) = freshCatalog()
+  test("the per-file path answers exactly the source minus the deleted " +
+      "keys, and every file that lost keys attaches") {
+    val (cat, wh) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT NOT NULL, v BIGINT) " +
       "TBLPROPERTIES('morKey'='k', 'statsColumns'='k')")
     spark.sql(s"INSERT INTO $cat.t SELECT id, id * 10 FROM range(200)")
     spark.sql(s"DELETE FROM $cat.t WHERE k % 4 = 1") // 50 DV keys
-    val base = spark.table(s"$cat.t")
-    assert(dvMode(base) === "broadcast", "50 keys fit the default budget")
-    val want = base.orderBy("k").collect().toSeq
-    assert(want.size === 150)
-    withBudget(5) {
-      val scoped = spark.table(s"$cat.t")
-      assert(dvMode(scoped) === "scoped",
-        "50 keys over a budget of 5 must take the scoped path")
-      assert(scoped.orderBy("k").collect().toSeq === want,
-        "the two application paths must agree row for row")
-    }
+    val m = SnapshotTable.manifest(s"$wh/t", SnapshotTable.currentVersion(s"$wh/t"))
+    val df = spark.table(s"$cat.t")
+    // every file lost keys, so each attaches at least one sidecar
+    assert(attached(df) >= m.files.size.toLong)
+    val want = (0L until 200L).filterNot(_ % 4 == 1).map(k => (k, k * 10))
+    assert(df.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq === want)
   }
 
   test("sequence scoping under the scoped path: MoR post-images survive " +
@@ -68,16 +54,14 @@ class Round33Spec extends AnyFunSuite {
     spark.sql(s"INSERT INTO $cat.t SELECT id, id FROM range(100)")
     spark.sql(s"UPDATE $cat.t SET v = v + 1000 WHERE k % 10 = 3") // 10 keys
     spark.sql(s"DELETE FROM $cat.t WHERE k % 10 = 7")             // 10 more
-    withBudget(3) {
-      val df = spark.table(s"$cat.t")
-      assert(dvMode(df) === "scoped")
-      assert(df.count() === 90)
-      val updated = df.filter(col("k") % 10 === 3).orderBy("k")
-        .select("v").collect().map(_.getLong(0)).toSeq
-      assert(updated === (3L until 100L by 10L).map(_ + 1000L),
-        "post-images must serve exactly once under the scoped filter")
-      assert(df.filter(col("k") % 10 === 7).count() === 0)
-    }
+    val df = spark.table(s"$cat.t")
+    assert(attached(df) > 0)
+    assert(df.count() === 90)
+    val updated = df.filter(col("k") % 10 === 3).orderBy("k")
+      .select("v").collect().map(_.getLong(0)).toSeq
+    assert(updated === (3L until 100L by 10L).map(_ + 1000L),
+      "post-images must serve exactly once under the per-file filter")
+    assert(df.filter(col("k") % 10 === 7).count() === 0)
   }
 
   test("string delete keys ride the scoped path's hash set") {
@@ -88,13 +72,11 @@ class Round33Spec extends AnyFunSuite {
     SnapshotTable.deleteKeys(
       spark.range(20).select(concat(lit("key-"), col("id")).as("name")),
       s"$wh/t", "name")
-    withBudget(2) {
-      val df = spark.table(s"$cat.t")
-      assert(dvMode(df) === "scoped")
-      assert(df.count() === 80)
-      assert(df.filter(col("name") === "key-5").count() === 0)
-      assert(df.filter(col("name") === "key-50").count() === 1)
-    }
+    val df = spark.table(s"$cat.t")
+    assert(attached(df) > 0)
+    assert(df.count() === 80)
+    assert(df.filter(col("name") === "key-5").count() === 0)
+    assert(df.filter(col("name") === "key-50").count() === 1)
   }
 
   test("manifest-range pruning bounds the per-file sidecar loads: a file " +
@@ -109,13 +91,13 @@ class Round33Spec extends AnyFunSuite {
       s"$wh/t", append = false, statsColumns = Seq("k"),
       extra = Map("morkey" -> "k"))
     spark.sql(s"DELETE FROM $cat.t WHERE k < 20") // DV range [0, 19]
-    withBudget(1) {
-      // compaction still materializes through the same read
-      assert(spark.table(s"$cat.t").count() === 180)
-      val (_, v) = SnapshotTable.compactSnapshot(spark, s"$wh/t")
-      val m = SnapshotTable.manifest(s"$wh/t", v)
-      assert(m.extra.get("dvfiles").forall(_.isEmpty))
-      assert(spark.table(s"$cat.t").count() === 180)
-    }
+    // only the first file's key range meets the sidecar's
+    assert(attached(spark.table(s"$cat.t")) === 1L)
+    // compaction still materializes through the same read
+    assert(spark.table(s"$cat.t").count() === 180)
+    val (_, v) = SnapshotTable.compactSnapshot(spark, s"$wh/t")
+    val m = SnapshotTable.manifest(s"$wh/t", v)
+    assert(m.extra.get("dvfiles").forall(_.isEmpty))
+    assert(spark.table(s"$cat.t").count() === 180)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{SnapshotCatalog, SnapshotTable, SnapshotV2}
+import graft.sources.{SnapshotCatalog, SnapshotTable}
 
 /** Round-34 wave: POSITION DELETES (Iceberg v2's second delete format;
   * src_snapshot_pos_delete carries the oracled lifecycle — provenance
@@ -94,14 +94,11 @@ class Round34Spec extends AnyFunSuite {
     assert(pruned.collect().map(_.getLong(0)).sorted.toSeq ===
       (0L to 10L).filterNot(deleted))
     assert(SnapshotTable.read(spark, table).count() === 47L)
-    // over-budget loads no longer refuse (the r15 verdict's last read
-    // cliff): the scan falls back to the SCOPED per-file attachment and
-    // still answers exactly — Round41Spec pins the full path algebra
-    spark.conf.set(SnapshotV2.DvBroadcastMaxKeysConf, "2")
-    try {
-      assert(spark.table(s"$cat.t").count() === 47L,
-        "past the budget the read must keep serving (scoped), not refuse")
-    } finally spark.conf.unset(SnapshotV2.DvBroadcastMaxKeysConf)
+    // the catalog read applies the sidecar per file too: it attaches to
+    // the one file it names — Round41Spec pins the full path algebra
+    val df = spark.table(s"$cat.t")
+    assert(df.count() === 47L)
+    assert(graft.Stage.deleteAttachments(df) === 1L)
   }
 
   test("position deletes STACK: provenance reads under outstanding pos " +

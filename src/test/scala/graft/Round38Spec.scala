@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{SnapshotCatalog, SnapshotTable, SnapshotV2}
+import graft.sources.{SnapshotCatalog, SnapshotTable}
 
 /** Round-38 wave: DELETION-VECTOR CONSOLIDATION
   * (src_snapshot_dv_consolidate carries the oracled flow). The
@@ -127,11 +127,9 @@ class Round38Spec extends AnyFunSuite {
     val row = spark.sql(s"CALL $cat.system.consolidate_dvs('t')").collect()(0)
     assert(row.getInt(0) > row.getInt(1), "sidecars must shrink")
     assert(row.getLong(2) > 0)
-    spark.conf.set(SnapshotV2.DvBroadcastMaxKeysConf, "1")
-    try {
-      assert(spark.table(s"$cat.t").count() ===
-        (0L until 100L).count(k => k % 5 != 0 && k % 7 != 1))
-    } finally spark.conf.unset(SnapshotV2.DvBroadcastMaxKeysConf)
+    val df = spark.table(s"$cat.t")
+    assert(df.count() === (0L until 100L).count(k => k % 5 != 0 && k % 7 != 1))
+    assert(graft.Stage.deleteAttachments(df) > 0)
     // consolidating an already-clean table refuses
     spark.sql(s"CREATE TABLE $cat.clean (k BIGINT)")
     val e = intercept[Exception] {

@@ -3,12 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{SnapshotCatalog, SnapshotTable, SnapshotV2}
+import graft.sources.{SnapshotCatalog, SnapshotTable}
 
-/** Round-41 wave A: the last hard read cliff in the table format is
-  * gone — position-delete reads past the broadcast budget switch to a
-  * SCOPED per-file sidecar attachment instead of refusing (mirroring
-  * Round33Spec's equality-DV fallback), plus the round's safety fixes:
+/** Round-41 wave A: position deletes apply per file — each data file
+  * attaches the sidecars whose recorded path range covers it (mirroring
+  * Round33Spec's equality DVs) — plus the round's safety fixes:
   * the temporal stats-unit marker (unmarked manifests' timestamp/date
   * stats are served absent, never reinterpreted), the empty
   * position-delete batch no-op, null-key DV consolidation, and
@@ -25,17 +24,10 @@ class Round41Spec extends AnyFunSuite {
     (cat, wh)
   }
 
-  private def withBudget[A](n: Long)(body: => A): A = {
-    spark.conf.set(SnapshotV2.DvBroadcastMaxKeysConf, n.toString)
-    try body finally spark.conf.unset(SnapshotV2.DvBroadcastMaxKeysConf)
-  }
-
-  private def dvMode(df: org.apache.spark.sql.DataFrame): String = {
+  /** Runs `df` and returns its scan's delete attachments. */
+  private def attached(df: org.apache.spark.sql.DataFrame): Long = {
     df.collect()
-    graft.Stage.executedNodes(df).collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
-    }.collectFirst { case sc: graft.sources.SnapshotV2Scan => sc.lastDvMode }
-      .getOrElse("")
+    graft.Stage.deleteAttachments(df)
   }
 
   /** 3 deterministic single-task files: file i holds k = 20*i ..< 20*(i+1). */
@@ -49,8 +41,8 @@ class Round41Spec extends AnyFunSuite {
     SnapshotTable.manifest(table, 3L).files.map(_.path)
   }
 
-  test("over-budget position deletes engage the SCOPED path and answer " +
-      "row-for-row like the broadcast path") {
+  test("position deletes attach per file by the sidecar's path range and " +
+      "answer the source minus the listed ordinals") {
     val (cat, wh) = freshCatalog()
     val table = s"$wh/t"
     val files = fill3(table)
@@ -62,19 +54,13 @@ class Round41Spec extends AnyFunSuite {
       table)
     val expect = (0L until 60L)
       .filterNot(Seq(0L, 3L, 19L, 45L, 46L, 47L).contains)
-    val broad = spark.table(s"$cat.t")
-    assert(dvMode(broad) === "broadcast")
-    assert(broad.orderBy("k").collect().map(_.getLong(0)).toSeq === expect)
-    withBudget(1L) {
-      val scoped = spark.table(s"$cat.t")
-      assert(dvMode(scoped) === "scoped",
-        "past the budget the scan must fall back, not refuse")
-      assert(scoped.orderBy("k").collect().map(_.getLong(0)).toSeq === expect,
-        "scoped and broadcast application must be row-for-row identical")
-      // residual filters still answer exactly (pushdown disabled, so
-      // ordinals never shift)
-      assert(spark.table(s"$cat.t").filter(col("k") < 5).count() === 3)
-    }
+    val df = spark.table(s"$cat.t")
+    // the one sidecar's range spans files 0..2: each attaches it once
+    assert(attached(df) === 3L)
+    assert(df.orderBy("k").collect().map(_.getLong(0)).toSeq === expect)
+    // residual filters still answer exactly (pushdown disabled, so
+    // ordinals never shift)
+    assert(spark.table(s"$cat.t").filter(col("k") < 5).count() === 3)
   }
 
   test("pos refs record the named-file path range; scoped stacking and " +
@@ -98,13 +84,12 @@ class Round41Spec extends AnyFunSuite {
     // both formats apply on one scoped-pos read
     SnapshotTable.deleteKeys(Seq(50L, 51L).toDF("k"), table, "k")
     val expect = (0L until 60L).filterNot(Seq(0L, 1L, 22L, 23L, 50L, 51L).contains)
-    assert(spark.table(s"$cat.t").orderBy("k").collect()
-      .map(_.getLong(0)).toSeq === expect)
-    withBudget(3L) { // pos declared = 4 > 3; eq declared = 2 <= 3
-      assert(spark.table(s"$cat.t").orderBy("k").collect()
-        .map(_.getLong(0)).toSeq === expect,
-        "scoped positions must compose with broadcast equality DVs")
-    }
+    // both formats apply on one read: file 0 and file 1 attach their
+    // tight-range position sidecar, file 2 the DV's (keys 50, 51)
+    val df = spark.table(s"$cat.t")
+    assert(attached(df) === 3L)
+    assert(df.orderBy("k").collect().map(_.getLong(0)).toSeq === expect,
+      "position deletes must compose with equality DVs")
   }
 
   test("a legacy 2-token pos ref (no range) still parses and applies — " +
@@ -128,13 +113,10 @@ class Round41Spec extends AnyFunSuite {
     val refs = SnapshotTable.posDvRefs(SnapshotTable.manifest(table, 4L))
     assert(refs.size === 1 && refs.head.range.isEmpty)
     val expect = (0L until 60L).filterNot(Seq(20L, 21L).contains)
-    assert(spark.table(s"$cat.t").orderBy("k").collect()
-      .map(_.getLong(0)).toSeq === expect)
-    withBudget(1L) {
-      assert(spark.table(s"$cat.t").orderBy("k").collect()
-        .map(_.getLong(0)).toSeq === expect,
-        "a rangeless ref must attach everywhere and still apply exactly")
-    }
+    val df = spark.table(s"$cat.t")
+    assert(attached(df) === 3L, "a rangeless ref must attach to every file")
+    assert(df.orderBy("k").collect().map(_.getLong(0)).toSeq === expect,
+      "a rangeless ref must still apply exactly")
   }
 
   test("a position-delete batch that matched nothing is a NO-OP — no " +

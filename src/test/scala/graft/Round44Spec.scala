@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{SnapshotCatalog, SnapshotTable, SnapshotV2}
+import graft.sources.{SnapshotCatalog, SnapshotTable}
 
 /** Round-44 wave: POSITION-DELTA SQL DML — SupportsDelta with the
   * (_file, _pos) metadata row identity (Iceberg's position-delta
@@ -116,17 +116,11 @@ class Round44Spec extends AnyFunSuite {
     def got() = spark.table(s"$cat.t").orderBy("k").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got() === expect, "mixed API/SQL position chains compose exactly")
-    spark.conf.set(SnapshotV2.DvBroadcastMaxKeysConf, "1")
-    try {
-      val df = spark.table(s"$cat.t")
-      assert(df.orderBy("k").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq === expect,
-        "the scoped fallback serves the mixed chain")
-      val mode = graft.Stage.executedNodes(df).collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
-      }.collectFirst { case sc: graft.sources.SnapshotV2Scan => sc.lastDvMode }
-      assert(mode.contains("scoped"))
-    } finally spark.conf.unset(SnapshotV2.DvBroadcastMaxKeysConf)
+    val df = spark.table(s"$cat.t")
+    assert(df.orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq === expect,
+      "the per-file reader serves the mixed chain")
+    assert(graft.Stage.deleteAttachments(df) > 0)
     // compaction materializes everything and re-zeros the state
     SnapshotTable.compactSnapshot(spark, table)
     assert(SnapshotTable.posDvRefs(SnapshotTable.manifest(table,

@@ -160,10 +160,10 @@ class Round48Spec extends AnyFunSuite {
       .collect().map(r => (r.getLong(1), r.getLong(2))).sorted.toSeq
     assert(prov() === (0L until 10L).filterNot(_ == 3L).map(k => (k, k)),
       "raw ordinals with a gap at the equality-deleted row")
-    spark.conf.set(graft.sources.SnapshotV2.DvBroadcastMaxKeysConf, "0")
-    try assert(prov() === (0L until 10L).filterNot(_ == 3L).map(k => (k, k)),
-      "the scoped fallback composes identically")
-    finally spark.conf.unset(graft.sources.SnapshotV2.DvBroadcastMaxKeysConf)
+    val provDf = spark.table(s"$cat.t").select("_file", "_pos", "k")
+    provDf.collect()
+    assert(graft.Stage.deleteAttachments(provDf) === 1L,
+      "the provenance read applies the DV through the per-file reader")
     // the unlocked workflow: a position batch STACKED on the eq chain
     SnapshotTable.deletePositions(
       spark.table(s"$cat.t").where(col("k") === 7).select("_file", "_pos"), table)

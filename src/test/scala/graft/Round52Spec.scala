@@ -230,12 +230,13 @@ class Round52Spec extends AnyFunSuite {
     val stream = SnapshotStreams.of(new SnapshotSourceProvider(), Map("path" -> table))
       .asInstanceOf[graft.sources.SnapshotMicroBatchStream]
     def off(v: Long) = stream.deserializeOffset(v.toString)
-    def dvMode(from: Long): String = {
+    def attachments(from: Long): Long = {
       stream.planInputPartitions(off(from), off(head))
       stream.createReaderFactory()
-      stream.slice.get.lastDvMode
+      stream.slice.get.lastAttachments
     }
-    assert(dvMode(head - 1) === "", "the appended file's slice must read as a plain scan")
-    assert(dvMode(0L) === "broadcast", "the full snapshot still applies both delete formats")
+    assert(attachments(head - 1) === -1L,
+      "the appended file's slice must read as a plain scan, no delete reader built")
+    assert(attachments(0L) > 0L, "the full snapshot still applies both delete formats")
   }
 }

@@ -81,6 +81,36 @@ class Round53Spec extends AnyFunSuite {
     }
   }
 
+  test("a format load resolves once: a commit between inferSchema and " +
+      "getTable leaves the table at the version inferSchema resolved") {
+    import org.apache.spark.sql.connector.catalog.SupportsRead
+    import org.apache.spark.sql.connector.catalog.TableProvider
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Files.createTempDirectory("graft53_r").toString
+    val table = s"$root/t"
+    import spark.implicits._
+    SnapshotTable.commit(Seq(1L, 2L).toDF("k").coalesce(1), table, append = false)
+    val providers: Seq[(String, () => TableProvider)] = Seq(
+      "v2 format" -> (() => new SnapshotV2Provider()),
+      "v1 format" -> (() => new SnapshotRelationProvider()),
+      "stream format" -> (() => new graft.sources.SnapshotSourceProvider()))
+    providers.foreach { case (name, make) =>
+      val v = SnapshotTable.currentVersion(table)
+      val pinnedFiles = SnapshotTable.manifest(table, v).files.map(_.path).toSet
+      val opts = Map("path" -> table)
+      val o = new CaseInsensitiveStringMap(opts.asJava)
+      val p = make()
+      val schema = p.inferSchema(o)
+      // a writer commits between the two calls of one load
+      SnapshotTable.commit(Seq(v + 10L).toDF("k").coalesce(1), table, append = true)
+      val t = p.getTable(schema, Array.empty, opts.asJava)
+      val served = SnapshotStreams.files(t.asInstanceOf[SupportsRead].newScanBuilder(o)
+        .build().toBatch.planInputPartitions())
+      assert(served === pinnedFiles, s"$name must serve v$v")
+    }
+  }
+
   test("every SnapshotTable batch read plans one graft-snapshot V2 scan " +
       "per manifest it reads, with deletes and renames outstanding") {
     val (cat, wh) = freshCatalog()

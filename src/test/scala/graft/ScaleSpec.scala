@@ -347,7 +347,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("scoped-DV read cost is proportional to the sidecars OVERLAPPING " +
       "each file, not files x chain: counted attachments, not wall-clock") {
-    import graft.sources.{SnapshotCatalog, SnapshotTable, SnapshotV2}
+    import graft.sources.{SnapshotCatalog, SnapshotTable}
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_scale_dv").toString
     val cat = "gsd" + wh.takeRight(8).replaceAll("[^0-9a-zA-Z]", "")
@@ -364,19 +364,12 @@ class ScaleSpec extends AnyFunSuite {
     (0 until 5).foreach { i =>
       SnapshotTable.deleteKeys(Seq(i * 4000L + 10L).toDF("k"), table, "k")
     }
-    spark.conf.set(SnapshotV2.DvBroadcastMaxKeysConf, "1")
-    try {
-      val df = spark.table(s"$cat.t")
-      assert(df.count() === 20000L - 5L)
-      val scan = graft.Stage.executedNodes(df).collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
-      }.collectFirst { case sc: graft.sources.SnapshotV2Scan => sc }.get
-      assert(scan.lastDvMode === "scoped")
-      // 5 single-file-ranged sidecars over 20 files: 5 attachments, not
-      // 100 — the manifest range prune is what makes a 10x-more-files
-      // table pay the SAME per-file sidecar cost
-      assert(scan.lastScopedAttach === 5L,
-        s"attachments must equal OVERLAPS (5), got ${scan.lastScopedAttach}")
-    } finally spark.conf.unset(SnapshotV2.DvBroadcastMaxKeysConf)
+    val df = spark.table(s"$cat.t")
+    assert(df.count() === 20000L - 5L)
+    // 5 single-file-ranged sidecars over 20 files: 5 attachments, not
+    // 100 — the manifest range prune is what makes a 10x-more-files
+    // table pay the SAME per-file sidecar cost
+    val attached = graft.Stage.deleteAttachments(df)
+    assert(attached === 5L, s"attachments must equal OVERLAPS (5), got $attached")
   }
 }
